@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -51,4 +52,10 @@ object Bridge {
         exp.extraStrategies = exp.extraStrategies :+ s
     }
   }
+
+  /** The live conf of the active SparkContext, if one is running
+    * (`SparkContext.getActive` and `sc.conf` are `private[spark]`).
+    * Settings written here reach sessions whose state is built later.
+    */
+  def activeConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 }

@@ -1,18 +1,29 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+import java.util.Locale
+
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.MapReduce
 
-/** Reference-parity: tokenizer semantics and golden word counts over the
-  * reference's own Project Gutenberg corpus
-  * (/root/reference/main/pg-*.txt, read-only fixtures).
+/** Reference-parity: tokenizer semantics and golden word counts over a
+  * Gutenberg-like corpus (see [[PgCorpus]]).
   */
-class CoreParitySpec extends AnyFunSuite {
+class CoreParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  val pgGlob = "/root/reference/main/pg-*.txt"
+  val pgDir: Path = Files.createTempDirectory("pg-corpus")
+  PgCorpus.write(pgDir)
+  val pgGlob = s"$pgDir/pg-*.txt"
+
+  override def afterAll(): Unit = {
+    pgDir.toFile.listFiles().foreach(_.delete())
+    Files.delete(pgDir)
+  }
 
   test("tokenizer: split on any non-letter, case preserved, empties dropped") {
     // semantics of /root/reference/mrapps/wc.go:21-31
@@ -29,14 +40,14 @@ class CoreParitySpec extends AnyFunSuite {
     val wc = MapReduce.wordCount(docs, "contents")
       .as[(String, Long)].collect().toMap
     // independent oracle: plain-Scala tokenization of the same bytes
-    val expected = new java.io.File("/root/reference/main").listFiles()
-      .filter(_.getName.matches("pg-.*\\.txt")).sortBy(_.getName)
-      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    val expected = pgDir.toFile.listFiles().sortBy(_.getName)
+      .map(f => new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
       .flatMap(_.split("[^\\p{L}]+")).filter(_.nonEmpty)
       .groupBy(identity).map { case (w, ws) => w -> ws.length.toLong }
+    assert(expected.size > 2000)
     assert(wc.size == expected.size)
     assert(wc("the") == expected("the"))
-    assert(wc("Huckleberry") == expected("Huckleberry"))
+    assert(wc(PgCorpus.Title) == PgCorpus.FileCount)
     expected.take(2000).foreach { case (w, n) => assert(wc(w) == n, s"word $w") }
   }
 
@@ -87,5 +98,52 @@ class CoreParitySpec extends AnyFunSuite {
     val doclist = row.getAs[String]("doclist").split(",")
     assert(row.getAs[Long]("ndocs") == doclist.length)
     assert(doclist.toSeq == doclist.sorted.toSeq)
+  }
+}
+
+/** Deterministic stand-in for the reference's Project Gutenberg corpus:
+  * `pg-*.txt` files of Zipf-distributed words in mixed case, with
+  * punctuation, apostrophes, digits, blank lines and non-ASCII letters.
+  * The vocabulary's most frequent word is "the".
+  */
+object PgCorpus {
+  val FileCount = 8
+  /** Opens every file's title line and appears nowhere else. */
+  val Title = "Ærøskøbing"
+  private val common = Seq("the", "and", "of", "to", "a", "in", "was", "he")
+  private val syllables = Vector("an", "ber", "cor", "dél", "ek", "fro",
+    "gär", "hol", "ïn", "jor", "kel", "løn", "mor", "ñu", "ost", "prä",
+    "qui", "ras", "ßel", "tor", "ur", "val", "wen", "yç", "zan")
+  private val separators = Vector(" ", " ", " ", " ", " ", ", ", ". ",
+    "; ", "! ", "? ", " -- ", "'s ", "’ ", " (1884) ", " \"", "_ ")
+
+  def write(dir: Path): Unit = {
+    val rnd = new java.util.Random(42)
+    val vocab = scala.collection.mutable.LinkedHashSet(common: _*)
+    while (vocab.size < 4000)
+      vocab += (0 to rnd.nextInt(3))
+        .map(_ => syllables(rnd.nextInt(syllables.size))).mkString
+    val words = vocab.toVector
+    // Zipf(1.05) cumulative weights over vocabulary ranks
+    val cdf = words.indices.scanLeft(0.0)((acc, r) =>
+      acc + 1.0 / math.pow(r + 1, 1.05)).tail.toArray
+    (1 to FileCount).foreach { f =>
+      val sb = new StringBuilder(s"$Title, Volume $f\n\n")
+      while (sb.length < 48000) {
+        (0 to 5 + rnd.nextInt(9)).foreach { _ =>
+          var i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble() * cdf.last)
+          if (i < 0) i = -i - 1
+          val w = words(math.min(i, words.size - 1))
+          val c = rnd.nextInt(100)
+          sb ++= (if (c < 12) w.capitalize
+            else if (c < 15) w.toUpperCase(Locale.ROOT) else w)
+          sb ++= separators(rnd.nextInt(separators.size))
+        }
+        sb += '\n'
+        if (rnd.nextInt(6) == 0) sb += '\n'
+      }
+      Files.write(dir.resolve(s"pg-$f.txt"),
+        sb.toString.getBytes(StandardCharsets.UTF_8))
+    }
   }
 }
