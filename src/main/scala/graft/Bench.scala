@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: times the headline queries (SparkEntry.benchQueries)
   * on SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is run once
   * to warm the JVM/codegen caches, then timed — the driver compares the
@@ -34,19 +32,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // planner flag for storage-partitioned joins (q85); harness-level
-      // so no QueryDef mutates the shared session mid-run
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // custom functions + planner strategy + persisted-view resolution
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // fixed data-independent CPU probe, timed at start and end: round-2
     // showed uniform ~+40% drift on byte-identical queries (shared-box

@@ -10,10 +10,11 @@ import org.apache.spark.sql.internal.StaticSQLConf
 import graft.functions.{ArrayCosine, Fnv1a32, RollingHash31, ShingleArray}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
-  * Catalyst expressions as SQL functions. Activate with
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  * or spark.sql.extensions=graft.GraftExtensions, after which
-  * `SELECT rolling_hash31(text), array_cosine(a, b) ...` parse natively.
+  * Catalyst expressions as SQL functions. [[graft.Session.builder]]
+  * activates it through spark.sql.extensions=graft.GraftExtensions
+  * (`withExtensions(new GraftExtensions)` on a builder works too), after
+  * which `SELECT rolling_hash31(text), array_cosine(a, b) ...` parse
+  * natively.
   * (Session-local alternative: graft.functions.Fns.ensureRegistered.)
   *
   * It also raises Spark's codegen cache

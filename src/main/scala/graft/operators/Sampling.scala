@@ -200,8 +200,8 @@ object Sampling {
   /** The 80/10/10 bucket-to-split rule — fnv1a32(group_id) % 10 → 0-7
     * train, 8 val, 9 test. ONE definition shared by [[leakageSafeSplit]]
     * and the pipeline compositions that split over already-computed
-    * components (PipelineDemo, p92_pipeline_e2e), so a policy change
-    * here cannot silently desynchronize them. (p92's DuckDB oracle pins
+    * components (p92_pipeline_e2e), so a policy change here cannot
+    * silently desynchronize them. (p92's DuckDB oracle pins
     * the same rule independently in SQL.)
     */
   def splitForGroup(groupId: Column): Column = {

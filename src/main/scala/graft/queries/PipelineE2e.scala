@@ -6,16 +6,15 @@ import graft.operators.{BloomPrune, ConnectedComponents, Decontaminate,
   Dedup, IdAssign, Sampling, TextAnalysis}
 
 /** The COMPOSED end-to-end curation pipeline as one oracle-checked
-  * query (p92): PipelineDemo's exact chain — cross-corpus dedup →
-  * exact dedup → MinHash near-dup components keep-rep → benchmark
-  * decontamination → quality/repetition gate → mixture quotas →
-  * contiguous ids → leakage-safe split → per-(split, lang) accounting
-  * — re-expressed as a pure DataFrame and mirrored stage-for-stage in
-  * one DuckDB CTE chain assembled from the individual stage oracles
+  * query (p92), the engine's one copy of that chain: cross-corpus
+  * dedup → exact dedup → MinHash near-dup components keep-rep →
+  * benchmark decontamination → quality/repetition gate → mixture
+  * quotas → contiguous ids → leakage-safe split → per-(split, lang)
+  * accounting — a pure DataFrame, mirrored stage-for-stage in one
+  * DuckDB CTE chain assembled from the individual stage oracles
   * (p29/p01/p14/p17/p07/p18/p26/p28). Every stage was already
   * oracle-checked in isolation; this query pins that their
-  * COMPOSITION is too — the demo-grade row promoted to the same gate
-  * as everything else. The recursive-CTE closure makes the oracle an
+  * COMPOSITION is too. The recursive-CTE closure makes the oracle an
   * sf0.01-regime check (p14's documented regime); the engine side is
   * the same banded/bucketed/component machinery that scales.
   */

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Demo main: drives the streaming transforms over the static fixture
   * directory (file source -> watermark -> windowed agg -> memory sink)
   * and prints row counts. Correctness is established by batch
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val tumbling = EventStreams.runToMemory(spark, dir, "demo_tumbling")(
       EventStreams.tumblingCounts)

@@ -2,27 +2,22 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Bridge
+import graft.Session
 
 /** Dev tool: per-stage empirical profile of a registered query under
   * the Bench session shape — runs the query warm, then once timed with
   * a stage listener, and prints each stage's wall time, task count,
   * task-time sum, shuffle read/write bytes and records, sorted by
-  * task-time (`runMain graft.tools.DbgStages <name> [sfDir]`). The
-  * guide §1.1 empirical loop (UI → slowest stage) without the UI.
+  * task-time (`runMain graft.tools.DbgStages <name> [sfDir]`), on
+  * SPARK_GRAFT_CPUS cores (default 4). The empirical loop (UI → slowest
+  * stage) without the UI.
   */
 object DbgStages {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: DbgStages <queryName> [sfDir]")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.builder(Session.envCpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     val q = graft.api.Registry.byName(args(0))
     q.run(s, dir).count() // warm
@@ -49,8 +44,8 @@ object DbgStages {
     val t0 = System.nanoTime()
     q.run(s, dir).count()
     val wall = (System.nanoTime() - t0) / 1e9
+    Bridge.waitForListeners(s)
     s.sparkContext.removeSparkListener(listener)
-    Thread.sleep(500) // let the listener bus drain
     import scala.jdk.CollectionConverters._
     val all = rows.asScala.toSeq.sortBy(-_.wallMs)
     println(f"TOTAL wall ${wall}%.3f s, ${all.size} stages, " +

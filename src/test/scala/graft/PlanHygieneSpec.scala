@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.Registry
+import PlanHygieneSpec.{counts, sweep}
 
 /** Whole-registry plan audit: no query may regress into a cross product.
   * Planning only — nothing executes — so this sweeps all queries in
@@ -78,7 +84,7 @@ class PlanHygieneSpec extends AnyFunSuite {
   // two stacked windows"), so an edit that silently adds a shuffle or
   // de-stacks a window fails HERE, not in a bench regression three rounds
   // later. Counted with AQE off (static plans — AQE re-plans at runtime
-  // but from exactly this starting shape) via tools.PlanCounts; totals
+  // but from exactly this starting shape) via PlanHygieneSpec.counts; totals
   // INCLUDE each query's deterministic output-sort range exchange.
   // (query -> (shuffle, broadcast, reused-exchange, window))
   private val pinnedCounts: Map[String, (Int, Int, Int, Int)] = Map(
@@ -156,8 +162,7 @@ class PlanHygieneSpec extends AnyFunSuite {
     val byName = Registry.all.map(q => q.name -> q).toMap
     val drifted = pinnedCounts.toSeq.sortBy(_._1).flatMap { case (name, want) =>
       val q = byName.getOrElse(name, fail(s"pinned query $name not registered"))
-      val got = graft.tools.PlanCounts.counts(
-        q.run(s, TestSpark.sf0001).queryExecution.executedPlan)
+      val got = counts(q.run(s, TestSpark.sf0001).queryExecution.executedPlan)
       if (got != want) Some(s"$name: got $got, pinned $want") else None
     }
     assert(drifted.isEmpty,
@@ -173,10 +178,8 @@ class PlanHygieneSpec extends AnyFunSuite {
   // regression that silently un-prunes a scan or adds an exchange to a
   // probe fails here by number, not in a bench three rounds later.
   test("persistence probes: exchange and scanned-file counts stay pinned") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions._
     import graft.operators.{AnnIndex, IncrementalDedup}
-    import graft.tools.PlanCounts
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     val root = java.nio.file.Files.createTempDirectory("graft_probe_pins").toString
@@ -193,8 +196,7 @@ class PlanHygieneSpec extends AnyFunSuite {
     //     The candidate phase runs inside the probe's own localCheckpoint
     //     job, so its band scan is observed through a QueryExecutionListener
     //     rather than the returned frame's (post-checkpoint) plan.
-    val seen = new java.util.concurrent.CopyOnWriteArrayList[
-      org.apache.spark.sql.execution.SparkPlan]()
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
@@ -223,20 +225,17 @@ class PlanHygieneSpec extends AnyFunSuite {
       "doc_id", "text", dedupP, s"$root/dedup")
     dedupProbe.collect()
     pin("p46_narrow_probe verify-phase counts",
-      PlanCounts.counts(dedupProbe.queryExecution.executedPlan), (4, 0, 1, 0))
-    // the listener bus is asynchronous: poll until the candidate phase's
-    // band scan shows up (bounded — fail after 10 s, never hang)
-    def bandScans(): Seq[FileSourceScanExec] = {
+      counts(dedupProbe.queryExecution.executedPlan), (4, 0, 1, 0))
+    // the listener bus is asynchronous: drain it before reading the
+    // candidate phase's band scan
+    org.apache.spark.sql.graftshim.Bridge.waitForListeners(s)
+    val scans = {
       import scala.jdk.CollectionConverters._
       seen.asScala.toSeq.flatMap(_.collect {
         case f: FileSourceScanExec
           if f.metadata.get("Location").exists(_.contains("/bands")) => f
       })
     }
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (bandScans().isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    val scans = bandScans()
     assert(scans.nonEmpty, "candidate phase's band scan never observed")
     val selectedBuckets = scans.flatMap(_.optionalBucketSet)
       .map(_.cardinality())
@@ -254,7 +253,7 @@ class PlanHygieneSpec extends AnyFunSuite {
       s"$root/ann")
     annProbe.collect()
     pin("p58_pruned_probe counts",
-      PlanCounts.counts(annProbe.queryExecution.executedPlan), (3, 2, 0, 0))
+      counts(annProbe.queryExecution.executedPlan), (3, 2, 0, 0))
     val cellFilesTotal = s.read.parquet(s"$root/ann/postings").inputFiles.length
     val cellFilesRead = scanFiles(annProbe, "/postings")
     assert(cellFilesRead < cellFilesTotal && cellFilesRead >= 1,
@@ -272,7 +271,7 @@ class PlanHygieneSpec extends AnyFunSuite {
       .groupBy().agg(count(lit(1)).as("n"), sum("id").as("s"))
     fullRead.collect()
     pin("q78_manifest_read counts",
-      PlanCounts.counts(fullRead.queryExecution.executedPlan), (1, 0, 0, 0))
+      counts(fullRead.queryExecution.executedPlan), (1, 0, 0, 0))
     pin("q78_manifest_read files",
       "files=(\\d+)/(\\d+)".r.findFirstMatchIn(
         fullRead.queryExecution.executedPlan.toString).map(_.matched),
@@ -291,7 +290,7 @@ class PlanHygieneSpec extends AnyFunSuite {
       .groupBy().agg(count(lit(1)).as("n"), sum("id").as("s"))
     skipRead.collect()
     pin("q80_manifest_skip counts",
-      PlanCounts.counts(skipRead.queryExecution.executedPlan), (1, 0, 0, 0))
+      counts(skipRead.queryExecution.executedPlan), (1, 0, 0, 0))
     val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(
       skipRead.queryExecution.executedPlan.toString)
     assert(m.exists(mm => mm.group(2).toInt == 8 && mm.group(1).toInt <= 2),
@@ -312,8 +311,6 @@ class PlanHygieneSpec extends AnyFunSuite {
   // component phase materializes inside localCheckpoint, so the final
   // frame's plan alone undercounts).
   test("p92 scan budget: documents is scanned a pinned number of times end-to-end") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val s = spark.newSession()
     val seen = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -416,11 +413,25 @@ class PlanHygieneSpec extends AnyFunSuite {
   // alias-inlined into size(shingle_array(...)) > 0 below a
   // non-checkpointed caller.
   test("no expensive expression in any scan or Filter predicate (FilterSweep)") {
-    val hits = graft.tools.FilterSweep.sweep(spark, TestSpark.sf0001)
+    val hits = sweep(spark, TestSpark.sf0001)
     assert(hits.isEmpty,
       "expensive expressions reached filter predicates:\n" +
         hits.map { case (n, h) => s"$n\n  ${h.mkString("\n  ")}" }
           .mkString("\n"))
+  }
+
+  // the positive control: a matcher that never fires would pass the
+  // zero-hit gate above, so a plan that re-runs a shingle encode inside
+  // its scan predicate must be flagged
+  test("FilterSweep flags a shingle encode pushed into a scan predicate") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan = s.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .where("size(shingle_array(split(text, ' '), 3)) > 0")
+      .queryExecution.executedPlan
+    val hits = sweep(plan)
+    assert(hits.exists(_.contains("shingle_array")),
+      s"the sweep missed an expensive filter predicate:\n$plan")
   }
 
   test("no cartesian product or unexpected BNLJ in any registered query") {
@@ -437,4 +448,53 @@ class PlanHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+}
+
+object PlanHygieneSpec {
+  /** (shuffle, broadcast, reused-exchange, window) node counts of a
+    * physical plan — the numbers behind the pinned-count tables above.
+    */
+  def counts(plan: SparkPlan): (Int, Int, Int, Int) = {
+    val all = plan.collect { case p => p }
+    (all.count(_.isInstanceOf[ShuffleExchangeExec]),
+      all.count(_.isInstanceOf[BroadcastExchangeExec]),
+      all.count(_.isInstanceOf[ReusedExchangeExec]),
+      all.count(_.isInstanceOf[WindowExec]))
+  }
+
+  /** Expressions too costly to re-run per row inside a scan: the p02/p73
+    * round-18 finding, where predicate pushdown copied
+    * `isnotnull(minhash_sigs(...))` / `size(bpe_encode_array(...)) > 0`
+    * into the parquet scan's Filter and re-ran a full encode per row.
+    */
+  private val Expensive = Seq("minhash_sigs", "bpe_encode", "wordpiece",
+    "shingle_array", "shingle_rows", "sign_projections", "simhash",
+    "array_int_dot", "cosine_similarity", "bloom_might_contain",
+    "zorder_key", "fnv1a32", "rolling_hash31", "sq_dist")
+
+  /** Filter fragments of `plan` that carry an expensive expression inside
+    * a FilterExec condition or a scan's data filters.
+    */
+  def sweep(plan: SparkPlan): Seq[String] =
+    plan.collect {
+      case f: FilterExec if Expensive.exists(f.condition.toString.contains) =>
+        "Filter: " + f.condition.toString.take(160)
+      case sc: FileSourceScanExec if Expensive.exists(e =>
+          sc.dataFilters.exists(_.toString.contains(e))) =>
+        "ScanFilter: " + sc.dataFilters.mkString(";").take(160)
+    }.distinct
+
+  /** (query, filter fragments) for every registered query whose executed
+    * plan has a [[sweep]] hit. Queries whose plan fails to build are
+    * reported under "[failed] <name>" so a sweep can never silently skip.
+    */
+  def sweep(s: SparkSession, dir: String): Seq[(String, Seq[String])] =
+    Registry.all.flatMap { q =>
+      try {
+        val hits = sweep(q.run(s, dir).queryExecution.executedPlan)
+        if (hits.nonEmpty) Some(q.name -> hits) else None
+      } catch { case e: Throwable =>
+        Some(s"[failed] ${q.name}" -> Seq(String.valueOf(e.getMessage)))
+      }
+    }
 }

@@ -5,17 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Session.builder(4)
       .master("local[4, 2]") // 2 task-failure retries: FaultToleranceSpec
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // planner flag for storage-partitioned joins (q85); a harness-level
-      // conf so no QueryDef mutates the shared session mid-run
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // custom functions + planner strategy + persisted-view resolution
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
