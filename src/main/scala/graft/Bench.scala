@@ -1,518 +1,316 @@
 package graft
 
-/** Benchmark entry: times the headline queries (SparkEntry.benchQueries)
-  * on SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is run once
-  * to warm the JVM/codegen caches, then timed — the driver compares the
-  * totals round-over-round against BASELINE.md.
+import java.lang.management.{ManagementFactory, MemoryType}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.{AnnIndex, Similarity}
+import graft.queries.{PipelineE2e, StorageLayout}
+
+/** Benchmark entry: times the bench groups on SPARK_GRAFT_SF_DIR
+  * (default sf0.1) and prints one JSON line, also written to
+  * SPARK_GRAFT_BENCH_OUT (default `bench_result.json`).
   *
-  * Three reported groups (round-12 consolidation): the LEGACY 12
-  * (unchanged since round 1, the round-over-round comparability anchor
-  * — `value`/`legacy_total`), the EXTENDED group (`extended_total`)
-  * covering everything newer — including the former r9/r10 per-round
-  * groups, folded in round 12 — and the STORAGE group
-  * (`storage`, per-query `{build_s, read_s}`): tables build once per
-  * process, the pruned read is timed min-of-3.
+  * Groups, in run order:
+  *  - legacy (`SparkEntry.benchQueries`; `value`, `queries`, ...) and
+  *    extended (`SparkEntry.benchQueriesExtended`; `extended*`): each
+  *    query warm + min-of-3;
+  *  - storage (`StorageLayout.benchPairs`; `storage*`): one timed build,
+  *    then the pruned read warm + min-of-3;
+  *  - ANN (`ann`): cost and recall@5 of each LSH/IVF setting, min-of-2;
+  *  - e2e (`e2e_pipeline`): the p92 curation chain, warm + min-of-2;
+  *  - the second pass of legacy, extended, storage and e2e;
+  *  - the e2e stage sweep (`e2e_pipeline.stages`): each cumulative
+  *    prefix of the chain, min-of-2;
+  *  - q87's read legs (`q87_legs`), min-of-3;
+  *  - scaling (`scaling`, only for an sf0.1 dir with an sf0.01 sibling):
+  *    legacy + top-5 extended + p92 at sf0.01, warm + min-of-5, as the
+  *    slope t(sf0.1)/t(sf0.01) against the 10x data ratio.
   *
-  * Round-16: the legacy + extended groups run TWICE end-to-end (the
-  * storage/ANN groups between the passes as a multi-minute spacer) and
-  * report the per-query MIN across passes plus `pass_max` /
-  * `extended_pass_max` (the losing pass's minimum) — so a box-load
-  * phantom (hot one pass, cold the other) is adjudicated BY the
-  * artifact instead of by a post-hoc re-measure.
-  *
-  * Round-17: the same cross-pass discipline reaches the LAST two
-  * groups that lacked it — storage (both builds AND reads run as two
-  * passes minutes apart; `build_max_s`/`read_pass_max_s` carry the
-  * losing pass, `storage_build_pass_max`/`storage_read_pass_max` the
-  * losing totals) and `e2e_pipeline` (`pass_max`). Plus a `scaling`
-  * block: the headline queries re-timed at sf0.01 in the same session,
-  * reporting per-query slope t(sf0.1)/t(sf0.01) against the 10x data
-  * ratio — the measured near-linearity evidence behind SCALE.md.
+  * The two-pass groups report the winning pass and the losing pass's
+  * minimum (`pass_max`, `*_pass_max*`). A query that fails in either pass
+  * reports null, is listed in `failed` and is left out of every total.
   */
 object Bench {
+  /** One timed measurement: the fastest and the median run, the CPU probe
+    * taken right after the runs, and the GC time and heap peak of the runs.
+    */
+  final case class Sample(min: Double, median: Double, probe: Double,
+    gcMs: Long, peakMb: Long)
+
+  private val E2e = "p92_pipeline_e2e"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.builder(Session.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // fixed data-independent CPU probe, timed at start and end: round-2
-    // showed uniform ~+40% drift on byte-identical queries (shared-box
-    // load); the probe pair lets the driver normalize round-over-round
-    // totals and spot a noisy run.
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(100000000L).selectExpr("sum(id * 3 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    probe() // warm codegen for the probe itself
-    val probeStart = probe()
     val fns = SparkEntry.queries
+    def run(name: String, dir: String): Long = fns(name)(spark, dir).count()
     var failed = List.empty[String]
 
-    // Per-query JVM telemetry (round-13 verdict: the p84 closing
-    // reading was 14x its quiet value with flat probes — a CPU probe
-    // can't see an allocation storm or a GC wall). gc_ms is the GC-time
-    // DELTA across the query's three timed runs (all collector beans);
-    // peak_mb is the heap peak-usage high-water across the same window
-    // (pools reset before the runs). A slow reading with flat gc/peak
-    // is environmental; gc_ms rivaling wall time is an allocation
-    // problem in the query itself.
-    import java.lang.management.{ManagementFactory, MemoryType}
-    import scala.jdk.CollectionConverters._
+    // A CPU probe can't see an allocation storm or a GC wall, so every
+    // sample also carries the GC time and heap peak of its runs: a slow
+    // reading with flat gc/peak is environmental, gc rivaling wall time
+    // is the query's own allocation.
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getType == MemoryType.HEAP)
     def gcMs(): Long = gcBeans.map(_.getCollectionTime).sum
-    def resetPeaks(): Unit = heapPools.foreach(_.resetPeakUsage())
-    def peakMb(): Long =
-      heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
 
-    final case class QTime(min: Double, median: Double, probe: Double,
-      gcMs: Long, peakMb: Long)
-
-    def timeGroup(names: Seq[String]): Seq[(String, QTime)] =
-      names.map { name =>
-        val fn = fns(name)
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () } // warm
-        val gc0 = gcMs(); resetPeaks()
-        // three timed runs — min absorbs GC/compile jitter on a shared box,
-        // median is the robust companion signal
-        val times = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch {
-            case e: Throwable => // a broken query must not read as a fast one
-              if (!failed.contains(name)) failed ::= name
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          }
-          (System.nanoTime() - t0) / 1e9
-        }
-        // probe right after each query: round 4's driver bench read as a
-        // fake 3.2x regression purely from box load mid-run; a per-query
-        // probe timestamps the contamination so the compare self-corrects
-        name -> QTime(times.min, times.sorted.apply(times.size / 2),
-          probe(), gcMs() - gc0, peakMb())
+    def secs(f: => Any): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    }
+    // A fixed, data-independent CPU probe: the same code reads up to
+    // +40% slower on a loaded shared box, and a probe next to each
+    // reading lets the totals be normalized for that load.
+    def probe(): Double =
+      secs(spark.range(100000000L).selectExpr("sum(id * 3 + 1)").collect())
+    // min absorbs GC/compile jitter on a shared box; the median is the
+    // robust companion signal
+    def measure(runs: Int, probed: Boolean = true)(f: => Any): Sample = {
+      val gc0 = gcMs()
+      heapPools.foreach(_.resetPeakUsage())
+      val times = Seq.fill(runs)(secs(f)).sorted
+      val gc = gcMs() - gc0
+      val peak = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
+      Sample(times.head, times(runs / 2),
+        if (probed) probe() else Double.NaN, gc, peak)
+    }
+    // a failed query must neither read as fast nor distort a total:
+    // it is listed in failed[] and reported as null
+    def attempt[A](what: String, query: Boolean = true)(f: => A): Option[A] =
+      try Some(f) catch { case e: Throwable =>
+        if (query && !failed.contains(what)) failed ::= what
+        System.err.println(s"[bench] $what FAILED: ${e.getMessage}")
+        None
       }
 
-    // CROSS-PASS minima (round-16): each group runs TWICE end-to-end,
-    // with the storage/ANN groups between the passes as a time spacer.
-    // Three consecutive rounds (p84 r13, q91 r14, p84/p86/p89 r15) a
-    // driver-artifact reading was 3-14x its quiet value with FLAT
-    // probes and flat gc — box load that spans one pass's three timed
-    // runs and ends before the after-the-fact probe is invisible to
-    // every per-pass signal. Two passes minutes apart make the
-    // artifact self-adjudicating: a phantom is hot in one pass and
-    // cold in the other (min stays at design level, pass_max carries
-    // the evidence); a real regression is hot in BOTH.
+    probe() // warm codegen for the probe itself
+    val probeStart = probe()
+
+    type Pass = Seq[(String, Option[Sample])]
+    def timeGroup(names: Seq[String]): Pass = names.map { name =>
+      // a failed warm-up stays silent: the timed runs report the failure
+      try run(name, sfDir) catch { case _: Throwable => () }
+      name -> attempt(name)(measure(3)(run(name, sfDir)))
+    }
+    // Every group except ANN runs in two passes minutes apart. Box load
+    // that spans one pass's runs and ends before its probe is invisible
+    // to every per-pass signal; across two passes such a phantom is slow
+    // in one and fast in the other, while a real regression is slow in
+    // both, so the artifact itself tells them apart.
+    def crossPass(p1: Pass, p2: Pass): Seq[(String, Option[(Sample, Double)])] =
+      p1.zip(p2).map { case ((k, a), (_, b)) =>
+        k -> (for (x <- a; y <- b)
+          yield if (y.min < x.min) (y, x.min) else (x, y.min))
+      }
+
+    // every storage builder deletes and recreates its sink, so each pass
+    // builds once; the pruned read is the signal that must stay flat
+    def storagePass(): (Pass, Pass) =
+      StorageLayout.benchPairs.map { case (name, mk) =>
+        val s = attempt(name) {
+          var read: () => DataFrame = null
+          val build = measure(1) { read = mk(spark, sfDir) }
+          read().count() // warm
+          (build, measure(3)(read().count()))
+        }
+        (name -> s.map(_._1), name -> s.map(_._2))
+      }.unzip
+    def e2ePass(): Option[Sample] =
+      attempt(E2e) { run(E2e, sfDir); measure(2)(run(E2e, sfDir)) }
+
     val legacyP1 = timeGroup(SparkEntry.benchQueries)
     val extP1 = timeGroup(SparkEntry.benchQueriesExtended)
+    val (buildsP1, readsP1) = storagePass()
 
-    // Storage-layout group: the pruned READ is the signal that must
-    // stay flat round-over-round (at 100 TB you write once and read
-    // many); build_s is reported alongside (it includes the COW
-    // merge/delete for q88/q89).
-    // Round-17: the whole group runs as TWO PASSES with the ANN/e2e
-    // groups and the legacy/extended second pass between them as a
-    // multi-minute spacer — each pass builds every table ONCE (they
-    // are idempotent: every builder deletes and recreates its /tmp
-    // sink) and times the read min-of-3, then per table the winning
-    // pass is reported with the losing pass's numbers as
-    // build_max_s / read_pass_max_s. Same total build count as the
-    // old in-window min-of-2, but minutes apart: r16's
-    // storage_build_total read 20.91 s in the driver artifact while
-    // quiet-box runs of the same code sat at 12.8-14.5 s — min-of-2
-    // inside ONE loaded window is the r13-r15 read-side blind spot,
-    // and the cross-pass split adjudicates it inside the artifact.
-    final case class SPass(build: Double, buildProbe: Double,
-      buildGcMs: Long, buildPeakMb: Long, min: Double, median: Double,
-      probe: Double, gcMs: Long, peakMb: Long)
-    def storagePass(): Seq[(String, SPass)] =
-      graft.queries.StorageLayout.benchPairs.map { case (name, mk) =>
-        try {
-          val bgc0 = gcMs(); resetPeaks()
-          val tb = System.nanoTime()
-          val read = mk(spark, sfDir)
-          val build = (System.nanoTime() - tb) / 1e9
-          val (buildGc, buildPeak) = (gcMs() - bgc0, peakMb())
-          val buildProbe = probe()
-          read().count() // warm
-          val gc0 = gcMs(); resetPeaks()
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            read().count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          name -> SPass(build, buildProbe, buildGc, buildPeak,
-            times.min, times.sorted.apply(times.size / 2), probe(),
-            gcMs() - gc0, peakMb())
-        } catch { case e: Throwable =>
-          if (!failed.contains(name)) failed ::= name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          name -> SPass(0.0, probe(), 0L, 0L, 0.0, 0.0, probe(), 0L, 0L)
-        }
-      }
-    val storageP1 = storagePass()
-
-    // ANN cost-recall group: p10/p13 have no SQL oracle (approximate by
-    // design), so their accuracy lives in spec-only recall sweeps —
-    // invisible round-over-round. This group makes the cost-recall
-    // frontier a diffable bench artifact: each knob setting is timed AND
-    // scored for recall@5 against the exact brute-force baseline (fixed
-    // seeds, so recall is deterministic; a recall regression is a code
-    // change, never noise). ~250 (qid, nid) pairs collect to the driver —
-    // calibration-scale, same as the probe.
-    val annJson = try {
+    // p10/p13 have no SQL oracle (approximate by design), so each knob
+    // setting is timed and scored for recall@5 against the exact
+    // brute-force top-k (fixed seeds: a recall change is a code change)
+    val annJson = attempt("ann group", query = false) {
       import org.apache.spark.sql.functions._
-      import graft.operators.Similarity
       val uniform = graft.api.Tables.t(spark, sfDir, "embeddings")
-      // second fixture: mixture of 16 Gaussians over the SAME ids/dims —
-      // the uniform-random testdata is the adversarial floor for any
-      // partition-based ANN (no cluster structure to exploit); real
-      // embedding spaces are clustered, so the ladder is reported on both
-      // geometries. Deterministic (murmur3-hash pseudo-noise keyed on
-      // (cluster|id, dim) — identical across runs and boxes).
+      // uniform random vectors are the adversarial floor for any
+      // partition-based ANN; real embedding spaces are clustered, so the
+      // ladder also runs on 16 deterministic Gaussian-like clusters over
+      // the same ids and dims
       val dims = uniform.select(size(col("embedding"))).first().getInt(0)
-      def h01(cols: org.apache.spark.sql.Column*) =
+      def h01(cols: Column*) =
         (pmod(hash(cols: _*), lit(20001)) - lit(10000)).cast("double") / 10000.0
       val clustered = uniform.select(col("vec_id"),
         transform(sequence(lit(0), lit(dims - 1)),
           d => (h01(col("vec_id") % 16, d) +
             h01(col("vec_id"), d, lit(7)) * lit(0.15)).cast("float"))
           .as("embedding"))
-      def ladder(e: org.apache.spark.sql.DataFrame): String = {
+      def ladder(e: DataFrame): String = {
         val q = e.filter(col("vec_id") % 50 === 0)
-        def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        def pairs(df: DataFrame): Set[(Long, Long)] =
           df.select("qid", "nid").collect()
             .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
             .toSet
         val exact = pairs(Similarity.bruteForceTopK(q, e, 5))
-        def setting(name: String, f: () => org.apache.spark.sql.DataFrame): String = {
-          // exact can only be empty on a degenerate fixture (no embeddings
-          // survive the query filter); recall 0.0 keeps the JSON parseable
-          // instead of interpolating NaN into the artifact
-          val recall = if (exact.isEmpty) 0.0
-            else (pairs(f()).intersect(exact).size.toDouble /
-              exact.size * 1e4).round / 1e4 // warm run doubles as recall probe
-          val secs = (1 to 2).map { _ =>
-            val t0 = System.nanoTime(); f().count(); (System.nanoTime() - t0) / 1e9
-          }.min
-          s""""$name":{"sec":$secs,"recall":$recall}"""
-        }
-        // persisted-index probes (p58): build once per fixture, then time
-        // the stored-layout path at each nprobe — the round-over-round
-        // ledger for the index family, beside the transient LSH/IVF paths
         val idxPath = java.nio.file.Files
           .createTempDirectory("graft_bench_annidx").toString
-        val ip = graft.operators.AnnIndex.Params(nlist = 16, dims = dims)
-        val tb0 = System.nanoTime()
-        graft.operators.AnnIndex.buildIndex(e, "vec_id", "embedding", ip,
-          idxPath)
-        val buildSec = (System.nanoTime() - tb0) / 1e9
-        def idxProbe(np: Int) = () => graft.operators.AnnIndex
-          .topKAgainstIndex(spark, q, "vec_id", "embedding", 5, np, ip,
-            idxPath)
+        val ip = AnnIndex.Params(nlist = 16, dims = dims)
+        val buildSec =
+          secs(AnnIndex.buildIndex(e, "vec_id", "embedding", ip, idxPath))
+        def idxProbe(np: Int) = () =>
+          AnnIndex.topKAgainstIndex(spark, q, "vec_id", "embedding", 5, np, ip, idxPath)
         val settings = Seq(
-          ("lsh_t2_p1", () => Similarity.lshTopK(q, e, 5, tables = 2, probeBits = 1)),
-          ("lsh_t4_p2", () => Similarity.lshTopK(q, e, 5, tables = 4, probeBits = 2)),
-          ("lsh_t6_p2", () => Similarity.lshTopK(q, e, 5)), // p10's defaults
-          ("ivf_np1", () => Similarity.ivfTopK(q, e, 5, nprobe = 1)),
-          ("ivf_np2", () => Similarity.ivfTopK(q, e, 5, nprobe = 2)),
-          ("ivf_np4", () => Similarity.ivfTopK(q, e, 5)), // p13's defaults
-          ("ivfidx_np1", idxProbe(1)),
-          ("ivfidx_np2", idxProbe(2)),
-          ("ivfidx_np4", idxProbe(4)))
-          .map { case (n, f) => setting(n, f) }.mkString(",")
-        s"""{$settings,"ivfidx_build_sec":$buildSec}"""
+          "lsh_t2_p1" -> (() => Similarity.lshTopK(q, e, 5, tables = 2, probeBits = 1)),
+          "lsh_t4_p2" -> (() => Similarity.lshTopK(q, e, 5, tables = 4, probeBits = 2)),
+          "lsh_t6_p2" -> (() => Similarity.lshTopK(q, e, 5)), // p10's defaults
+          "ivf_np1" -> (() => Similarity.ivfTopK(q, e, 5, nprobe = 1)),
+          "ivf_np2" -> (() => Similarity.ivfTopK(q, e, 5, nprobe = 2)),
+          "ivf_np4" -> (() => Similarity.ivfTopK(q, e, 5)), // p13's defaults
+          "ivfidx_np1" -> idxProbe(1),
+          "ivfidx_np2" -> idxProbe(2),
+          "ivfidx_np4" -> idxProbe(4)
+        ).map { case (name, f) =>
+          // the recall run doubles as the warm-up; an empty exact set
+          // (degenerate fixture) reports recall 0.0, not NaN
+          val recall = if (exact.isEmpty) 0.0
+            else (pairs(f()).intersect(exact).size.toDouble /
+              exact.size * 1e4).round / 1e4
+          name -> obj("sec" -> measure(2, probed = false)(f().count()).min,
+            "recall" -> recall)
+        }
+        obj(settings :+ ("ivfidx_build_sec" -> buildSec): _*)
       }
-      s"""{"uniform":${ladder(uniform)},"clustered":${ladder(clustered)}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ann group FAILED: ${e.getMessage}")
-      "null"
-    }
-    // flagship composition: the end-to-end curation chain (p92) as its
-    // own tracked metric — OUTSIDE the extended total so the legacy/
-    // extended groups stay round-over-round comparable. Round-17: the
-    // same cross-pass discipline as every other group (r16's artifact
-    // read 8.19 min vs 16.53 max inside ONE window — the build group's
-    // adjudicability gap): each pass is warm + min-of-2, pass 2 runs
-    // after the legacy/extended/storage second passes, and the report
-    // carries the cross-pass min with the losing pass's min as
-    // pass_max. The chain is the sum of ~9 audited stages, so this one
-    // number is the regression canary for their composition.
-    def e2ePass(): Option[(Double, Double)] = try {
-      val fn = fns("p92_pipeline_e2e")
-      fn(spark, sfDir).count() // warm
-      val secs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime(); fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Some((secs.min, probe()))
-    } catch { case e: Throwable =>
-      if (!failed.contains("p92_pipeline_e2e"))
-        failed ::= "p92_pipeline_e2e"
-      System.err.println(s"[bench] p92_pipeline_e2e FAILED: ${e.getMessage}")
-      None
+      obj("uniform" -> ladder(uniform), "clustered" -> ladder(clustered))
     }
     val e2eP1 = e2ePass()
-    // second pass of the legacy + extended groups (cross-pass minima)
+
     val legacyP2 = timeGroup(SparkEntry.benchQueries)
     val extP2 = timeGroup(SparkEntry.benchQueriesExtended)
-    // second pass of the storage + e2e groups, minutes after their
-    // first (the ANN group and the legacy/extended second passes are
-    // the spacer)
-    val storageP2 = storagePass()
-    val e2eP2 = e2ePass()
-    // Round-18: per-stage attribution INSIDE the artifact — the r17
-    // e2e readings spread 6.8-10.7 across load windows while every
-    // component the chain composes got faster; one cumulative-prefix
-    // sweep (everything is warm after four full e2e runs) makes the
-    // next drift argument self-carrying instead of needing a DbgP92
-    // side run. Each prefix is min-of-2: stage SHARES are the
-    // signal, the headline `sec` stays the cross-pass min above.
-    val e2eStages =
-      if (failed.contains("p92_pipeline_e2e")) "null"
-      else try {
-        graft.queries.PipelineE2e.stageThunks(spark, sfDir).map {
-          case (label, f) =>
-            // min-of-2: a single-timed prefix under a load spike reads
-            // as a stage regression (r18's first two artifacts showed
-            // non-monotone cumulative stages from exactly this)
-            val secs = (1 to 2).map { _ =>
-              val t0 = System.nanoTime(); f()
-              (System.nanoTime() - t0) / 1e9
-            }.min
-            s""""$label":$secs"""
-        }.mkString("{", ",", "}")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] e2e stage sweep FAILED: ${e.getMessage}")
-        "null"
+    val (buildsP2, readsP2) = storagePass()
+    val e2e = crossPass(Seq(E2e -> e2eP1), Seq(E2e -> e2ePass())).head._2
+    val legacy = crossPass(legacyP1, legacyP2)
+    val ext = crossPass(extP1, extP2)
+    val builds = crossPass(buildsP1, buildsP2)
+    val reads = crossPass(readsP1, readsP2)
+
+    val e2eJson = e2e.map { case (s, passMax) =>
+      // stage shares are the signal here (everything is warm after four
+      // chain runs); min-of-2 because a single-timed prefix under a load
+      // spike reads as a stage regression
+      val stages = attempt("e2e stage sweep", query = false) {
+        obj(PipelineE2e.stageThunks(spark, sfDir).map { case (label, f) =>
+          label -> measure(2, probed = false)(f()).min
+        }: _*)
       }
-    // same discipline as every other group: a query that failed in
-    // EITHER pass reports null (it is already in failed[]) — a
-    // single-pass reading must not fabricate the pass_max==sec
-    // "two passes agreed" signal the field exists to carry
-    val e2eBest: Option[(Double, Double, Double)] = (e2eP1, e2eP2) match {
-      case (Some((a, pa)), Some((b, pb)))
-          if !failed.contains("p92_pipeline_e2e") =>
-        Some(if (b < a) (b, a, pb) else (a, b, pa))
-      case _ => None
+      obj("sec" -> s.min, "pass_max" -> passMax, "probe" -> s.probe,
+        "stages" -> stages.getOrElse("null"))
     }
-    val e2e = e2eBest.map { case (min, mx, pr) =>
-      s"""{"sec":$min,"pass_max":$mx,"probe":$pr,"stages":$e2eStages}"""
-    }.getOrElse("null")
-    // q87's read decomposed in-artifact (round-17 verdict #6): the DPP
-    // read's cost splits into the DIM leg (orders scan + month filter +
-    // distinct — irreducible per read, DPP recomputes it to know the
-    // partitions) and the FACT floor (pruned partitions aggregated with
-    // static literals — what a clairvoyant reader would pay); full read
-    // minus the two legs is the DPP subquery/broadcast machinery.
-    val q87Legs = try {
-      val dim = () => graft.queries.StorageLayout.q87Dim(spark, sfDir)
+    // q87's DPP read splits into the dim leg (orders scan + month filter +
+    // distinct, recomputed by DPP on every read) and the fact floor (the
+    // pruned partitions with static literals); the rest of the full read
+    // is the DPP subquery/broadcast machinery
+    val q87Legs = attempt("q87 leg sweep", query = false) {
+      def best(f: => Any): Double = { f; measure(3, probed = false)(f).min }
+      val dim = () => StorageLayout.q87Dim(spark, sfDir)
       val months = dim().collect().map(_.getString(0)).toSeq.sorted
-      def t3(f: () => Long): Double = { f(); (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-      }.min }
-      val dimS = t3(() => dim().count())
-      val factS = t3(() =>
-        graft.queries.StorageLayout.q87FactStatic(spark, sfDir, months)
-          .count())
-      s"""{"dim_s":$dimS,"fact_static_s":$factS}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] q87 leg sweep FAILED: ${e.getMessage}")
-      "null"
+      obj("dim_s" -> best(dim().count()),
+        "fact_static_s" ->
+          best(StorageLayout.q87FactStatic(spark, sfDir, months).count()))
     }
-    // per query: the WINNING pass's full telemetry (its min, median,
-    // probe, gc, peak) plus the max of the two pass-minima — the
-    // cross-pass split the adjudication rides on
-    def crossPass(p1: Seq[(String, QTime)], p2: Seq[(String, QTime)])
-        : Seq[(String, (QTime, Double))] =
-      p1.zip(p2).map { case ((k, t1), (k2, t2)) =>
-        require(k == k2, s"pass order diverged: $k vs $k2")
-        k -> (if (t2.min < t1.min) (t2, t1.min) else (t1, t2.min))
-      }
-    val crossLegacy = crossPass(legacyP1, legacyP2)
-    val crossExt = crossPass(extP1, extP2)
-    val results = crossLegacy.map { case (k, (t, _)) => (k, t) }
-    val extResults = crossExt.map { case (k, (t, _)) => (k, t) }
-    def passMaxJson(rs: Seq[(String, (QTime, Double))]) =
-      rs.map { case (k, (_, mx)) =>
-        "\"" + k + "\":" + (if (failed.contains(k)) "null" else mx.toString)
-      }.mkString("{", ",", "}")
-    // SCALING SLOPES (round-17 — the measured 100x evidence): the
-    // legacy 12 + p92 + the 5 most expensive extended queries re-timed
-    // at the sibling sf0.01 in the SAME session; slope =
-    // t(sf0.1)/t(sf0.01) against the 10x data ratio. Near-linear
-    // (slope <= ~13, i.e. 1.3x the data growth) is the pass bar; a
-    // superlinear slope names a query whose cost grows faster than its
-    // input — the check that caught p84's re-keying in round 12, now a
-    // per-round artifact instead of an ad-hoc run. Fixed overheads
-    // (job launch, planning) deflate small-sf times, so slopes well
-    // BELOW 10 are expected and fine.
-    // Round-18 stabilization (r17 verdict #7: q26's slope read 2.9 vs
-    // 3.57, wc 1.29 vs 3.09 across artifacts — the sf0.01 denominator
-    // is overhead-dominated and load-sensitive): the small side is now
-    // MIN-of-5 (load and GC only ever ADD time to a 30-150 ms reading,
-    // so the min is the stable estimator — median-of-3 still moved
-    // slopes 0.5-1.5 across load windows) and `slope_norm`
-    // probe-normalizes BOTH sides (each reading scaled by its nearest
-    // CPU probe, the small/big probe ratio clamped to [0.5, 2] so a
-    // query-aftermath probe can't overcorrect). slope stays the raw
-    // round-over-round comparable; slope_norm is the superlinearity
-    // arbiter.
+
     val scalingJson = {
       val smallDir = new java.io.File(sfDir).getParent + "/sf0.01"
-      if (!sfDir.endsWith("sf0.1") ||
-          !new java.io.File(smallDir).isDirectory) "null"
+      if (!sfDir.endsWith("sf0.1") || !new java.io.File(smallDir).isDirectory) None
       else {
-        val e2eMin = Seq(e2eP1, e2eP2).flatten.map(_._1)
-          .minOption.filterNot(_ => failed.contains("p92_pipeline_e2e"))
-        val bigMins = (crossLegacy ++ crossExt)
-          .map { case (k, (t, _)) => k -> t.min }.toMap ++
-          e2eMin.map("p92_pipeline_e2e" -> _).toMap
-        val bigProbes = (crossLegacy ++ crossExt)
-          .map { case (k, (t, _)) => k -> t.probe }.toMap ++
-          e2eBest.map { case (_, _, pr) => "p92_pipeline_e2e" -> pr }.toMap
-        val top5Ext = crossExt
-          .filterNot { case (k, _) => failed.contains(k) }
-          .sortBy { case (_, (t, _)) => -t.min }.take(5).map(_._1)
-        val names = SparkEntry.benchQueries ++ top5Ext ++
-          e2eMin.map(_ => "p92_pipeline_e2e").toSeq
-        val rows = names.filterNot(failed.contains).flatMap { name =>
-          try {
-            val fn = fns(name)
-            fn(spark, smallDir).count() // warm
-            val runs = (1 to 5).map { _ =>
-              val t0 = System.nanoTime(); fn(spark, smallDir).count()
-              (System.nanoTime() - t0) / 1e9
-            }.sorted
-            // MIN-of-5: load only ever ADDS time, so the min is the
-            // stable estimator of the 30-150 ms small-sf readings —
-            // the r18 median-of-3 still moved slopes 0.5-1.5 across
-            // load windows; the big side is already a cross-pass min
-            val small = runs.head
-            val smallProbe = probe()
-            bigMins.get(name).map { big =>
-              def r2(x: Double) = (x * 100).round / 100.0
-              val slope = if (small > 0) r2(big / small) else -1.0
-              val pRatio = math.max(0.5, math.min(2.0,
-                smallProbe / bigProbes.getOrElse(name, smallProbe)))
-              val slopeNorm =
-                if (small > 0) r2(big / small * pRatio) else -1.0
-              s""""$name":{"small_s":$small,"small_probe":$smallProbe,""" +
-                s""""big_s":$big,"slope":$slope,"slope_norm":$slopeNorm}"""
-            }
-          } catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] scaling $name FAILED: ${e.getMessage}")
-            None
+        def won(rs: Seq[(String, Option[(Sample, Double)])]) =
+          rs.collect { case (k, Some((s, _))) => k -> s }
+        val big = won(legacy) ++ won(ext).sortBy(-_._2.min).take(5) ++
+          won(Seq(E2e -> e2e))
+        def r2(x: Double) = (x * 100).round / 100.0
+        val rows = big.flatMap { case (name, b) =>
+          attempt(s"scaling $name", query = false) {
+            run(name, smallDir) // warm
+            // min-of-5: load and GC only ever add time to a 30-150 ms
+            // small-sf reading, so the min is its stable estimator (a
+            // median-of-3 still moved slopes by 0.5-1.5 across load
+            // windows); the big side is already a cross-pass min
+            val s = measure(5)(run(name, smallDir))
+            // slope_norm scales both sides by their own probes; the ratio
+            // is clamped to [0.5, 2] so a probe inflated by a query's
+            // aftermath cannot overcorrect
+            val pRatio = clamp(0.5, 2.0)(s.probe / b.probe)
+            name -> obj("small_s" -> s.min, "small_probe" -> s.probe,
+              "big_s" -> b.min,
+              "slope" -> (if (s.min > 0) r2(b.min / s.min) else -1.0),
+              "slope_norm" -> (if (s.min > 0) r2(b.min / s.min * pRatio) else -1.0))
           }
         }
-        s"""{"small_sf":"$smallDir","data_ratio":10,""" +
-          s""""queries":${rows.mkString("{", ",", "}")},"probe":${probe()}}"""
+        Some(obj("small_sf" -> str(smallDir), "data_ratio" -> 10,
+          "queries" -> obj(rows: _*), "probe" -> probe()))
       }
     }
     val probeEnd = probe()
-    // a failed query reports null and is excluded from the total, so
-    // totals stay comparable across rounds (a broken query must neither
-    // read as fast nor distort the sum with exception-path timings)
-    def qJson(rs: Seq[(String, QTime)])(
-        pick: QTime => Double) = rs.map { case (k, v) =>
-      "\"" + k + "\":" + (if (failed.contains(k)) "null" else pick(v).toString)
-    }.mkString("{", ",", "}")
-    def qJsonL(rs: Seq[(String, QTime)])(
-        pick: QTime => Long) = rs.map { case (k, v) =>
-      "\"" + k + "\":" + (if (failed.contains(k)) "null" else pick(v).toString)
-    }.mkString("{", ",", "}")
-    def rawTotal(rs: Seq[(String, QTime)]) =
-      rs.collect { case (k, t) if !failed.contains(k) => t.min }.sum
-    val total = rawTotal(results)
-    val extTotal = rawTotal(extResults)
-    // merge the two storage passes: per table the cross-pass build min
-    // with the losing pass's build as build_max_s (one build per pass,
-    // so the pass's build IS its minimum), the cross-pass read min with
-    // the losing pass's min-of-3 as read_pass_max_s, and the winning
-    // pass's telemetry alongside
-    final case class STime(build: Double, buildMax: Double,
-      buildProbe: Double, buildGcMs: Long, buildPeakMb: Long,
-      min: Double, readPassMax: Double, median: Double,
-      probe: Double, gcMs: Long, peakMb: Long)
-    val storageResults: Seq[(String, STime)] =
-      storageP1.zip(storageP2).map { case ((k, a), (k2, b)) =>
-        require(k == k2, s"storage pass order diverged: $k vs $k2")
-        val bw = if (b.build < a.build) b else a // build winner
-        val rw = if (b.min < a.min) b else a // read winner
-        k -> STime(math.min(a.build, b.build), math.max(a.build, b.build),
-          bw.buildProbe, bw.buildGcMs, bw.buildPeakMb,
-          math.min(a.min, b.min), math.max(a.min, b.min),
-          rw.median, rw.probe, rw.gcMs, rw.peakMb)
-      }
-    val storageJson = storageResults.map { case (k, t) =>
-      "\"" + k + "\":" + (if (failed.contains(k)) "null"
-        else s"""{"build_s":${t.build},"build_max_s":${t.buildMax},""" +
-          s""""build_probe":${t.buildProbe},""" +
-          s""""build_gc_ms":${t.buildGcMs},""" +
-          s""""build_peak_mb":${t.buildPeakMb},"read_s":${t.min},""" +
-          s""""read_pass_max_s":${t.readPassMax},""" +
-          s""""read_median_s":${t.median},"probe":${t.probe},""" +
-          s""""gc_ms":${t.gcMs},"peak_mb":${t.peakMb}}""")
-    }.mkString("{", ",", "}")
-    val storageBuildTotal = storageResults
-      .collect { case (k, t) if !failed.contains(k) => t.build }.sum
-    // the losing passes' sums, so the artifact itself shows the split a
-    // box-load phantom produces (hot one pass, cold the other)
-    val storageBuildPassMax = storageResults
-      .collect { case (k, t) if !failed.contains(k) => t.buildMax }.sum
-    val storageReadTotal = storageResults
-      .collect { case (k, t) if !failed.contains(k) => t.min }.sum
-    val storageReadPassMax = storageResults
-      .collect { case (k, t) if !failed.contains(k) => t.readPassMax }.sum
-    // normalized_total: each query's min scaled by (cleanest probe this
-    // run / its nearest probe) — a query timed while the box was loaded
-    // is deflated by the probe's own slowdown, so a loaded run no longer
-    // reads as a code regression. On a quiet box all ratios are ~1 and
-    // normalized_total ≈ total. The ratio is CLAMPED to [0.5, 1.0]:
-    // a probe can also be inflated by the query's own aftermath (GC
-    // pressure, page-cache eviction), and an unclamped ratio would let a
-    // self-inflicted regression masquerade as box noise — at most 2x of
-    // a query's time can be attributed to the environment. Raw total
-    // stays the primary signal.
-    // the r16/r17 basis, UNCHANGED: legacy/extended normalized totals
-    // must stay round-over-round comparable, so their reference probe
-    // draws from the same pool those rounds used (widening it to the
-    // storage probes would redefine the existing totals — a quieter
-    // storage instant would deflate every legacy ratio)
-    val probeMin = (probeStart +: probeEnd +:
-      (legacyP1 ++ legacyP2 ++ extP1 ++ extP2).map(_._2.probe)).min
-    // the storage group's own reference additionally sees its per-build/
-    // per-read probes (new in r18 with the group's normalized totals)
-    val probeMinStorage = math.min(probeMin,
-      (storageP1 ++ storageP2).flatMap(p =>
-        Seq(p._2.buildProbe, p._2.probe)).min)
-    def normTotal(rs: Seq[(String, QTime)]) = rs.collect {
-      case (k, t) if !failed.contains(k) =>
-        t.min * math.max(0.5, math.min(1.0, probeMin / t.probe))
-    }.sum
-    val normalizedTotal = normTotal(results)
-    val extNormalizedTotal = normTotal(extResults)
-    // the storage group gets the same treatment (round-17 verdict #4:
-    // three r17 readings of identical code spanned 13.3-23.3 s on
-    // builds — cross-pass minima bound the damage inside one artifact
-    // but can't cancel a loaded EPOCH across artifacts; the per-build
-    // probes can): each build/read scaled by its own probe's clamped
-    // ratio to the run's cleanest probe
-    def normRatio(p: Double) =
-      math.max(0.5, math.min(1.0, probeMinStorage / p))
-    val storageBuildNormTotal = storageResults.collect {
-      case (k, t) if !failed.contains(k) => t.build * normRatio(t.buildProbe)
-    }.sum
-    val storageReadNormTotal = storageResults.collect {
-      case (k, t) if !failed.contains(k) => t.min * normRatio(t.probe)
-    }.sum
-    val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(results)(_.min)},"medians":${qJson(results)(_.median)},"probes":${qJson(results)(_.probe)},"gc_ms":${qJsonL(results)(_.gcMs)},"peak_mb":${qJsonL(results)(_.peakMb)},"legacy_total":$total,"normalized_total":$normalizedTotal,"pass_max":${passMaxJson(crossLegacy)},"extended":${qJson(extResults)(_.min)},"extended_pass_max":${passMaxJson(crossExt)},"extended_probes":${qJson(extResults)(_.probe)},"extended_gc_ms":${qJsonL(extResults)(_.gcMs)},"extended_peak_mb":${qJsonL(extResults)(_.peakMb)},"extended_total":$extTotal,"extended_normalized_total":$extNormalizedTotal,"storage":$storageJson,"storage_build_total":$storageBuildTotal,"storage_build_pass_max":$storageBuildPassMax,"storage_build_normalized_total":$storageBuildNormTotal,"storage_read_total":$storageReadTotal,"storage_read_pass_max":$storageReadPassMax,"storage_read_normalized_total":$storageReadNormTotal,"q87_legs":$q87Legs,"ann":$annJson,"e2e_pipeline":$e2e,"scaling":$scalingJson,"noise_floor":{"probe_start":$probeStart,"probe_end":$probeEnd},"failed":$failedJson,"sf":"$sfDir"}"""
+
+    // normalized totals scale each min by (cleanest probe of the run /
+    // its own probe). The ratio is clamped to [0.5, 1.0]: a probe can be
+    // inflated by the query's own aftermath (GC pressure, page-cache
+    // eviction), so at most half of a reading is put down to the box.
+    // The legacy/extended reference probe stays off the storage probes so
+    // those totals stay comparable with earlier artifacts.
+    def probes(ps: Pass*) = ps.flatten.flatMap(_._2).map(_.probe)
+    val probeMin = (Seq(probeStart, probeEnd) ++
+      probes(legacyP1, legacyP2, extP1, extP2)).min
+    val probeMinStorage =
+      (probeMin +: probes(buildsP1, readsP1, buildsP2, readsP2)).min
+    def total(rs: Seq[(String, Option[(Sample, Double)])])(
+        f: ((Sample, Double)) => Double) = rs.flatMap(_._2).map(f).sum
+    def normalized(ref: Double)(w: (Sample, Double)) =
+      w._1.min * clamp(0.5, 1.0)(ref / w._1.probe)
+    def perQuery[A](rs: Seq[(String, Option[A])])(f: A => Any) =
+      obj(rs.map { case (k, v) => k -> v.fold("null")(f(_).toString) }: _*)
+    val legacyTotal = total(legacy)(_._1.min)
+
+    val json = obj(
+      "metric" -> str("total"), "value" -> legacyTotal, "unit" -> str("sec"),
+      "queries" -> perQuery(legacy)(_._1.min),
+      "medians" -> perQuery(legacy)(_._1.median),
+      "probes" -> perQuery(legacy)(_._1.probe),
+      "gc_ms" -> perQuery(legacy)(_._1.gcMs),
+      "peak_mb" -> perQuery(legacy)(_._1.peakMb),
+      "legacy_total" -> legacyTotal,
+      "normalized_total" -> total(legacy)(normalized(probeMin)),
+      "pass_max" -> perQuery(legacy)(_._2),
+      "extended" -> perQuery(ext)(_._1.min),
+      "extended_pass_max" -> perQuery(ext)(_._2),
+      "extended_probes" -> perQuery(ext)(_._1.probe),
+      "extended_gc_ms" -> perQuery(ext)(_._1.gcMs),
+      "extended_peak_mb" -> perQuery(ext)(_._1.peakMb),
+      "extended_total" -> total(ext)(_._1.min),
+      "extended_normalized_total" -> total(ext)(normalized(probeMin)),
+      "storage" -> perQuery(builds.zip(reads).map {
+        case ((k, b), (_, r)) => k -> b.zip(r) }) {
+        case ((b, bMax), (r, rMax)) => obj("build_s" -> b.min,
+          "build_max_s" -> bMax, "build_probe" -> b.probe,
+          "build_gc_ms" -> b.gcMs, "build_peak_mb" -> b.peakMb,
+          "read_s" -> r.min, "read_pass_max_s" -> rMax,
+          "read_median_s" -> r.median, "probe" -> r.probe,
+          "gc_ms" -> r.gcMs, "peak_mb" -> r.peakMb)
+      },
+      "storage_build_total" -> total(builds)(_._1.min),
+      "storage_build_pass_max" -> total(builds)(_._2),
+      "storage_build_normalized_total" ->
+        total(builds)(normalized(probeMinStorage)),
+      "storage_read_total" -> total(reads)(_._1.min),
+      "storage_read_pass_max" -> total(reads)(_._2),
+      "storage_read_normalized_total" ->
+        total(reads)(normalized(probeMinStorage)),
+      "q87_legs" -> q87Legs.getOrElse("null"),
+      "ann" -> annJson.getOrElse("null"),
+      "e2e_pipeline" -> e2eJson.getOrElse("null"),
+      "scaling" -> scalingJson.getOrElse("null"),
+      "noise_floor" -> obj("probe_start" -> probeStart, "probe_end" -> probeEnd),
+      "failed" -> failed.reverse.map(str).mkString("[", ",", "]"),
+      "sf" -> str(sfDir))
     println(json)
-    // belt-and-braces for the driver: also drop the line in a file, immune
-    // to any log-prefixing of stdout. Stdout stays the primary channel —
-    // an unwritable path must not turn a successful bench into a nonzero
-    // exit after the line was already printed.
+    // also drop the line in a file, immune to any log-prefixing of
+    // stdout; an unwritable path must not turn a successful bench into a
+    // nonzero exit after the line was already printed
     try {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(
@@ -523,4 +321,11 @@ object Bench {
     }
     spark.stop()
   }
+
+  private def clamp(lo: Double, hi: Double)(x: Double): Double =
+    math.max(lo, math.min(hi, x))
+  private def str(s: String): String = "\"" + s + "\""
+  /** A JSON object; values are already rendered (numbers print as-is). */
+  private def obj(fields: (String, Any)*): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 }

@@ -15,7 +15,6 @@ import graft.functions.{ArrayCosine, Fnv1a32, RollingHash31, ShingleArray}
   * (`withExtensions(new GraftExtensions)` on a builder works too), after
   * which `SELECT rolling_hash31(text), array_cosine(a, b) ...` parse
   * natively.
-  * (Session-local alternative: graft.functions.Fns.ensureRegistered.)
   *
   * It also raises Spark's codegen cache
   * (`spark.sql.codegen.cache.maxEntries`) from 100 to

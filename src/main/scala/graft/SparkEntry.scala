@@ -24,31 +24,11 @@ object SparkEntry {
   /** Headline queries timed by Bench at sf0.1 (legacy-12 anchor group). */
   def benchQueries: Seq[String] = Registry.all.filter(_.bench).map(_.name)
 
-  /** Extended bench group: everything newer than the legacy 12, ONE
-    * stable set going forward. Round 12 folded the former r9/r10 anchor
-    * groups in here (mapping note in PLANS.md round-12 entry) — four
-    * generations of per-round groups had made round-over-round
-    * comparison a bookkeeping exercise. Storage-layout queries are NOT
-    * here: they get build/read-split accounting in their own group.
+  /** Extended bench group (`benchExt = true`): the surface newer than
+    * the legacy group, reported as its own total. Storage-layout queries
+    * are not here: Bench times their build and read apart
+    * ([[graft.queries.StorageLayout.benchPairs]]).
     */
   def benchQueriesExtended: Seq[String] =
-    Registry.all.filter(_.benchExt).map(_.name) ++ Seq(
-      // former r9 group
-      "p72_quality_classifier", "p73_bpe_encode",
-      "p75_embedding_covariance", "p76_sequence_packing",
-      "p77_kmeans_lloyd", "q84_source_group_pushdown",
-      "q85_storage_partitioned_join",
-      // former r10 group, minus the storage-layout queries
-      "p82_exact_substr_dedup", "p83_bm25_topk", "p84_audio_neardup",
-      "p85_distinct_ngram_diversity", "p86_exact_auc",
-      "p87_retrieval_metrics", "p88_k_anonymity",
-      "p89_tokenizer_fertility", "p90_quality_canonical_keep",
-      "p91_calibration_bins")
-
-  /** Storage-layout queries, timed with build/read SPLIT accounting
-    * ([[graft.queries.StorageLayout]]): tables build once per bench
-    * process, the pruned read is the timed signal.
-    */
-  def benchQueriesStorage: Seq[String] =
-    graft.queries.StorageLayout.benchPairs.map(_._1)
+    Registry.all.filter(_.benchExt).map(_.name)
 }

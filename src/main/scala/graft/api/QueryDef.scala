@@ -12,10 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - computed columns are aliased identically on both sides;
   *   - floating aggregates are rounded on both sides.
   *
-  * `bench = true` marks headline queries timed by [[graft.Bench]] at sf0.1
-  * (the LEGACY group, unchanged since round 1 for round-over-round
-  * comparability); `benchExt = true` marks the EXTENDED bench group
-  * covering the newer surface (reported as a separate total).
+  * `bench = true` marks the legacy bench group timed by [[graft.Bench]]
+  * (the headline total, kept fixed so totals stay comparable across
+  * artifacts); `benchExt = true` marks the extended bench group, the
+  * newer surface reported as a separate total.
   */
 final case class QueryDef(
     name: String,

@@ -67,8 +67,4 @@ object Tables {
         registered.put(key, dir)
       }
     }
-
-  /** Register every table as a temp view. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    register(spark, dir)
 }

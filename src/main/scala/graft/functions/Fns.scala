@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Column-level function surface of the engine: hash fingerprints, vector
@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Fns {
 
-  /** Register the custom Catalyst expressions for SQL + call_function use.
-    * Idempotent; queries call this on their session first.
-    */
   /** Evaluate a literal argument to Int, covering integral, floating and
     * DecimalType literals (Spark's Decimal does not extend j.l.Number).
     */
@@ -23,42 +20,6 @@ object Fns {
       case other => throw new IllegalArgumentException(
         s"expected a numeric literal, got: $other")
     }
-
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "rolling_hash31", exprs => RollingHash31(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fnv1a32", exprs => Fnv1a32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_array",
-      exprs => ShingleArray(exprs.head, intLiteral(exprs(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "array_cosine", exprs => ArrayCosine(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => MinHashSigs(exprs.head, intLiteral(exprs(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "sign_projections",
-      exprs => SignProjections(exprs.head, intLiteral(exprs(1)),
-        intLiteral(exprs(2)), intLiteral(exprs(3))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "zorder_key", exprs => ZOrderKey(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs.head, exprs(1), intLiteral(exprs(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "normalize_nfc", exprs => NormalizeNFC(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "array_int_dot", exprs => ArrayIntDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_rows",
-      exprs => ShingleRows(exprs.head, intLiteral(exprs(1))), "built-in")
-  }
 
   import org.apache.spark.sql.graftshim.Bridge.{toCol, toExpr}
 

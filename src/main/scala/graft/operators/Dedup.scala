@@ -63,13 +63,20 @@ object Dedup {
     * coalescer would merge these byte-small partitions back into one —
     * it optimizes bytes-per-task, and this stage's cost is compute per
     * byte, not bytes.
+    *
+    * Docs with fewer than n tokens (empty shingle set) are dropped by a
+    * guard on the tokens, not on `sh`: Catalyst substitutes the alias and
+    * pushes a filter on `sh` below the repartition, which would shingle
+    * every doc a second time inside the scan. Both guards keep the same
+    * rows, since the shingle array is non-empty exactly when there are
+    * at least n tokens.
     */
   def shingled(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), col(textCol).as("text"))
+    df.filter(size(Fns.tokens(col(textCol))) >= n)
+      .select(col(idCol).as("id"), col(textCol).as("text"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism, col("id"))
       .select(col("id"),
         Fns.shingles(Fns.tokens(col("text")), n).as("sh"))
-      .filter(size(col("sh")) > 0)
 
   /** MinHash signatures: numHashes columns m0..m{k-1}, computed by the
     * native MinHashSigs expression — a pure per-row project, NO explode,
@@ -81,7 +88,7 @@ object Dedup {
     */
   def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame =
     // MinHashSigs returns null exactly for null/empty shingle arrays;
-    // drop those here (not just in shingled's size>0 filter) — a caller
+    // drop those here (not just in shingled's token guard) — a caller
     // bypassing that filter would otherwise feed all-null signatures
     // into lshCandidates, where hash() over nulls is one constant and
     // every such doc collides in every band (quadratic candidate
@@ -265,6 +272,22 @@ object Dedup {
       .filter(col("hamming") <= maxDist)
   }
 
+  /** Inverted-index rows (id, sz, shingle) of [[shingled]]: one row per
+    * distinct shingle, with the doc's shingle count. Catalyst pushes any
+    * filter on a column derived from `sh` into the scan with the alias
+    * inlined, where it would shingle every doc a second time. Two such
+    * filters would be inferred here: `size(sh) > 0 AND isnotnull(sh)`
+    * from an inner explode, and `isnotnull(sz)` from the arithmetic the
+    * callers do on `sz`. explode_outer infers nothing, and a non-nullable
+    * `sz` needs no null check. Neither changes a value, since shingled
+    * already drops null and empty shingle arrays.
+    */
+  private def shingleIndex(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    shingled(df, idCol, textCol, n).select(col("id"),
+      coalesce(size(col("sh")), lit(0)).as("sz"),
+      explode_outer(col("sh")).as("shingle"))
+
   /** Ordered containment pairs: C(a→b) = |sh(a) ∩ sh(b)| / |sh(a)| >=
     * threshold, a ≠ b. Containment, unlike Jaccard, catches ASYMMETRIC
     * duplication — a short doc quoted wholesale inside a long one scores
@@ -278,9 +301,7 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, threshold: Double): DataFrame = {
-    val sh = shingled(df, idCol, textCol, shingleSize)
-    val ex = sh.select(col("id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("shingle"))
+    val ex = shingleIndex(df, idCol, textCol, shingleSize)
     ex.as("a").join(ex.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") =!= col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -298,9 +319,7 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, threshold: Double): DataFrame = {
-    val sh = shingled(df, idCol, textCol, shingleSize)
-    val ex = sh.select(col("id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("shingle"))
+    val ex = shingleIndex(df, idCol, textCol, shingleSize)
     ex.as("a").join(ex.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),

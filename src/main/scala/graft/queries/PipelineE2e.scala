@@ -20,12 +20,6 @@ import graft.operators.{BloomPrune, ConnectedComponents, Decontaminate,
   */
 object PipelineE2e {
 
-  // DuckDB mirror of graft.functions.RollingHash31 (same formula as
-  // PipelineQueries/PipelineExt splice)
-  private def duckRollingHash(expr: String): String =
-    s"list_reduce(list_prepend(0::BIGINT, list_transform(string_split($expr, ''), " +
-      "c -> unicode(c)::BIGINT)), (h, c) -> (h*31 + c) % 2147483648)"
-
   // DuckDB mirror of graft.functions.Fns.fnv1a32 over a VARCHAR cast
   private def duckFnv(expr: String): String =
     s"""(list_reduce(list_prepend(2166136261::BIGINT,
@@ -167,7 +161,7 @@ object PipelineE2e {
       (s, dir) => new Chain(s, dir).account,
       Some(
         s"""WITH RECURSIVE
-           |fpd AS (SELECT *, ${duckRollingHash("substr(text, 1, 200)")} AS fp
+           |fpd AS (SELECT *, ${PipelineQueries.duckRollingHash("substr(text, 1, 200)")} AS fp
            |        FROM documents),
            |docs AS (SELECT * FROM fpd i
            |         WHERE i.doc_id % 7 <> 0

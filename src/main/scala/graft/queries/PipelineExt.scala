@@ -18,12 +18,6 @@ object PipelineExt {
     s"list_distinct([$terms FOR i IN range(1, len(tk) - ${n - 2})])"
   }
 
-  // DuckDB mirror of graft.functions.RollingHash31 (code-point rolling
-  // hash mod 2^31) — same formula PipelineQueries splices for p06.
-  private def duckRollingHash(expr: String): String =
-    s"list_reduce(list_prepend(0::BIGINT, list_transform(string_split($expr, ''), " +
-      "c -> unicode(c)::BIGINT)), (h, c) -> (h*31 + c) % 2147483648)"
-
   val defs: Seq[QueryDef] = Seq(
 
     // --- benchmark decontamination (GPT-3 appendix C procedure): docs
@@ -369,7 +363,7 @@ object PipelineExt {
       },
       Some(
         s"""WITH f AS (SELECT doc_id,
-           |    ${duckRollingHash("substr(text, 1, 200)")} AS fp
+           |    ${PipelineQueries.duckRollingHash("substr(text, 1, 200)")} AS fp
            |  FROM documents)
            |SELECT i.doc_id, i.fp FROM f i
            |WHERE i.doc_id % 3 <> 0

@@ -68,7 +68,8 @@ object PipelineLatest {
           |  coalesce(k.ct, '') AS cleaned_text
           |FROM tok LEFT JOIN agg a USING (doc_id)
           |  LEFT JOIN kept k USING (doc_id)
-          |ORDER BY doc_id""".stripMargin)),
+          |ORDER BY doc_id""".stripMargin),
+      benchExt = true),
 
     // --- BM25 ranked retrieval: queries = tokens 3..6 of docs 0..4
     //     (deduplicated), top-5 docs per query by 6dp-rounded score.
@@ -122,7 +123,8 @@ object PipelineLatest {
            |        ORDER BY score DESC, doc_id) AS rn FROM sc)
            |SELECT query_id, doc_id, score FROM r WHERE rn <= 5
            |ORDER BY query_id, score DESC, doc_id""".stripMargin
-      }),
+      },
+      benchExt = true),
 
     // --- DSv2 TIME TRAVEL (the 7th connector dimension): overwrite a
     //     per-mktsegment customer rollup (version N), append poison rows
@@ -283,7 +285,8 @@ object PipelineLatest {
           |        CAST(bit_count(xor(a.afp, b.afp)) AS INT) AS hamming
           |      FROM hs a JOIN hs b ON a.id < b.id)
           |SELECT id_a, id_b, hamming FROM p WHERE hamming <= 2
-          |ORDER BY id_a, id_b""".stripMargin)),
+          |ORDER BY id_a, id_b""".stripMargin),
+      benchExt = true),
 
     // --- corpus-level distinct-n diversity per language (p85): the
     //     mode-collapse detector per-doc metrics (p18/p32) cannot see —
@@ -319,7 +322,8 @@ object PipelineLatest {
            |    THEN round(n_distinct::DOUBLE / n_grams, 6) END
            |    AS distinct_ratio
            |FROM u ORDER BY slice, n""".stripMargin
-      }),
+      },
+      benchExt = true),
 
     // --- exact distributed AUC-ROC (p86): does mean token length
     //     separate English docs? The score is an exact int/int division
@@ -366,7 +370,8 @@ object PipelineLatest {
           |SELECT p AS n_pos, n AS n_neg, n_scores,
           |  CASE WHEN p > 0 AND n > 0
           |    THEN round(u2::DOUBLE / (2.0::DOUBLE * p * n), 6) END AS auc
-          |FROM u""".stripMargin)),
+          |FROM u""".stripMargin),
+      benchExt = true),
 
     // --- ranked-retrieval metrics (p87): recall@10 / MRR / nDCG@10 of
     //     exact cosine retrieval under label-match relevance — the
@@ -439,7 +444,8 @@ object PipelineLatest {
            |    END AS ndcg_at_10
            |FROM piv p JOIN nr USING (qid)
            |ORDER BY qid""".stripMargin
-      }),
+      },
+      benchExt = true),
 
     // --- k-anonymity audit + suppression (p88): the group-level privacy
     //     release check (Sweeney) — per (nation, segment) quasi group,
@@ -483,7 +489,8 @@ object PipelineLatest {
           |SELECT c_nationkey, seg, n, n >= 5 AS compliant,
           |  CASE WHEN n >= 5 THEN n ELSE 0 END AS n_released
           |FROM g
-          |ORDER BY c_nationkey, seg NULLS FIRST""".stripMargin)),
+          |ORDER BY c_nationkey, seg NULLS FIRST""".stripMargin),
+      benchExt = true),
 
     // --- tokenizer fertility/compression report (p89): the tokenization
     //     family's measurement loop — p68 trains, p73 encodes, this
@@ -534,7 +541,8 @@ object PipelineLatest {
            |  round(n_pieces::DOUBLE / n_words, 6) AS fertility,
            |  round(n_word_chars::DOUBLE / n_pieces, 6) AS chars_per_piece
            |FROM wd JOIN pc USING (slice) ORDER BY slice""".stripMargin
-      }),
+      },
+      benchExt = true),
 
     // --- quality-aware canonical keep (p90): the RefinedWeb release
     //     rule — each SimHash near-dup cluster keeps its HIGHEST-QUALITY
@@ -579,7 +587,8 @@ object PipelineLatest {
            |  r.q AS kept_quality
            |FROM r JOIN sz USING (group_id) WHERE rn = 1
            |ORDER BY group_id""".stripMargin
-      }),
+      },
+      benchExt = true),
 
     // --- calibration bins (p91): the reliability diagram behind ECE —
     //     the same mean-token-length/is-English pairing p86 scores by
@@ -618,7 +627,8 @@ object PipelineLatest {
           |  round(mn + bin * (mx - mn) / 10.0::DOUBLE, 6) AS lo,
           |  round(mn + (bin + 1) * (mx - mn) / 10.0::DOUBLE, 6) AS hi,
           |  n, mean_score, frac_pos
-          |FROM g ORDER BY bin""".stripMargin)),
+          |FROM g ORDER BY bin""".stripMargin),
+      benchExt = true),
 
     // --- layout capstone (q91): the storage-side twin of p79's curate
     //     capstone — ONE table carries every skipping structure the

@@ -13,7 +13,7 @@ object PipelineQueries {
 
   // DuckDB mirror of graft.functions.RollingHash31 (code-point rolling
   // hash mod 2^31) — keeps hash-bearing queries oracle-checkable.
-  private def duckRollingHash(expr: String): String =
+  private[queries] def duckRollingHash(expr: String): String =
     s"list_reduce(list_prepend(0::BIGINT, list_transform(string_split($expr, ''), " +
       "c -> unicode(c)::BIGINT)), (h, c) -> (h*31 + c) % 2147483648)"
 

@@ -585,7 +585,8 @@ object PipelineRecent {
           buckets = 8, rounds = 3, lr = 0.001, k = 100)
       },
       Some(qualityClassifierOracle(buckets = 8, rounds = 3,
-        lr = "0.001", k = 100))),
+        lr = "0.001", k = 100)),
+      benchExt = true),
 
     // --- BPE ENCODING (the inference twin of p68's training): learn 8
     //     merges, encode every document with the native scalar encoder
@@ -628,7 +629,8 @@ object PipelineRecent {
               .as("n_distinct_pieces"))
           .orderBy("id")
       },
-      Some(bpeEncodeOracle(8))),
+      Some(bpeEncodeOracle(8)),
+      benchExt = true),
 
     // --- structured-PII audit + scrub (the redaction pass upstream of
     //     any public corpus release): emails / IPv4s / long id runs
@@ -696,7 +698,8 @@ object PipelineRecent {
           |SELECT a.i - 1 AS i, b.i - 1 AS j,
           |  round(covar_samp(a.x, b.x), 6) AS cov
           |FROM x a JOIN x b USING (id) WHERE a.i <= b.i
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      benchExt = true),
 
     // --- pad-free sequence packing (GPT-style document packing): the
     //     corpus concatenated in id order and sliced into 64-token
@@ -726,7 +729,8 @@ object PipelineRecent {
           |  greatest(0, start - seq * 64) AS seq_from,
           |  least(start + n, (seq + 1) * 64)
           |    - greatest(start, seq * 64) AS n_toks
-          |FROM x ORDER BY seq_id, id""".stripMargin)),
+          |FROM x ORDER BY seq_id, id""".stripMargin),
+      benchExt = true),
 
     // --- k-means (Lloyd) clustering, the loop itself as an operator
     //     (AnnIndex uses a black-box fit; here every round is
@@ -741,7 +745,8 @@ object PipelineRecent {
           Tables.t(s, dir, "embeddings"), "vec_id", "embedding",
           k = 4, iters = 2)
         .orderBy("cell"),
-      Some(kmeansOracle(k = 4, iters = 2))),
+      Some(kmeansOracle(k = 4, iters = 2)),
+      benchExt = true),
 
     // --- MMR diverse selection (Carbonell-Goldstein): 6 picks that
     //     balance relevance to the lowest-id query vector against

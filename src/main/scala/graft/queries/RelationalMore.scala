@@ -340,7 +340,8 @@ object RelationalMore {
           |    AS bucket,
           |  count(*) AS n, min(id) AS min_id, max(id) AS max_id
           |FROM range(100000, 400000) t(id)
-          |GROUP BY 1 ORDER BY bucket""".stripMargin)),
+          |GROUP BY 1 ORDER BY bucket""".stripMargin),
+      benchExt = true),
 
     // --- storage-partitioned join (the Iceberg bucket-join mechanism):
     //     two GenKeyedSource tables report KeyGroupedPartitioning on
@@ -377,7 +378,8 @@ object RelationalMore {
           |  CAST(count(*) AS BIGINT) AS n,
           |  CAST(sum(a.id + b.id) AS BIGINT) AS sid
           |FROM a JOIN b USING (bucket)
-          |GROUP BY 1 ORDER BY bucket""".stripMargin)),
+          |GROUP BY 1 ORDER BY bucket""".stripMargin),
+      benchExt = true),
 
     // --- DSv2 WRITE path (sources.ManifestTable): per-nation customer
     //     rollup written through the manifest-committed connector (4

@@ -1500,16 +1500,6 @@ object ManifestTable {
     -1L // unreachable
   }
 
-  /** Live-file column-name census: which column names do the CURRENT
-    * manifest's files still physically carry? DDL guards use it — a
-    * DROPPED column's data lines remain in place until a compaction
-    * rewrites them, so re-ADDing the same name (possibly with another
-    * type) would make readers parse stale encodings under the new type.
-    */
-  private[graft] def liveFileCols(dir: String): Set[String] =
-    readManifest(dir).map(_.files.flatMap(_.cols).toSet)
-      .getOrElse(Set.empty)
-
   /** Publish the next version with `removeNames` dropped from the file
     * list and `added` appended — the commit primitive of the
     * copy-on-write row-level operations ([[CowOps]]): untouched files

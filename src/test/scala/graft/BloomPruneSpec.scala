@@ -52,7 +52,6 @@ class BloomPruneSpec extends AnyFunSuite {
   }
 
   test("bloom_might_contain parses as a SQL function") {
-    graft.functions.Fns.ensureRegistered(spark)
     val words = new Array[Long](8)
     BloomUtil.set(words, 42L, 7)
     Seq(words.toSeq).toDF("bloom").createOrReplaceTempView("bloom_v")

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.Registry
-import graft.functions.Fns
 import graft.operators.SkewJoin
 import graft.streaming.{EventStreams, StatefulOps}
 
@@ -12,7 +11,6 @@ class ExtensionsSkewSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("registered SQL functions parse and match the column API") {
-    Fns.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT rolling_hash31('hello') AS rh, fnv1a32('hello') AS fnv,
         |       shingle_array(array('a','b','c','b','c'), 2) AS sh,
@@ -29,7 +27,6 @@ class ExtensionsSkewSpec extends AnyFunSuite {
   }
 
   test("sign_projections rejects non-floating arrays at analysis time") {
-    Fns.ensureRegistered(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT sign_projections(array(1, 2, 3), 4, 2, 3)").collect()
     }
@@ -38,14 +35,16 @@ class ExtensionsSkewSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects the function set") {
+    // applying the extension to a bare extensions object must not throw
     val e = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(e)
-    // injection is only observable through a new session; assert the
-    // builder path at least wires without throwing, then check the
-    // session-local registration used by queries
-    Fns.ensureRegistered(spark)
-    assert(spark.catalog.functionExists("rolling_hash31"))
-    assert(spark.catalog.functionExists("array_cosine"))
+    // the shared session is built with GraftExtensions, so these are the
+    // functions it injected
+    Seq("rolling_hash31", "fnv1a32", "shingle_array", "array_cosine",
+      "minhash_sigs", "sign_projections", "zorder_key", "bloom_might_contain",
+      "normalize_nfc", "array_int_dot", "shingle_rows").foreach { f =>
+      assert(spark.catalog.functionExists(f), f)
+    }
   }
 
   test("salted join equals plain join (correctness under salting)") {

@@ -68,7 +68,6 @@ class HashExprsSpec extends AnyFunSuite {
     assert(plan.contains("Generate shingle_rows"), plan)
     assert(!plan.contains("shingle_array"), plan)
     // and it parses as a SQL table-generating function
-    Fns.ensureRegistered(spark)
     docs.limit(5).createOrReplaceTempView("sr_docs")
     val n = spark.sql(
       "SELECT doc_id, shingle_rows(split(text, ' '), 3) FROM sr_docs").count()

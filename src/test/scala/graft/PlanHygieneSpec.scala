@@ -434,6 +434,20 @@ class PlanHygieneSpec extends AnyFunSuite {
       s"the sweep missed an expensive filter predicate:\n$plan")
   }
 
+  // the registry-wide sweep above cannot see below an AQE root; these
+  // four queries once ran shingled's `size(sh) > 0` guard, alias-inlined
+  // to a full shingle encode, inside their documents scan
+  test("no expensive predicate in the final AQE plans of the shingling queries") {
+    val hits = Seq("p03_ngram_jaccard", "p43_containment",
+        "p46_incremental_neardup", "p93_index_purge").flatMap { n =>
+      val df = Registry.byName(n).run(spark, TestSpark.sf0001)
+      df.collect()
+      PlanFlatten.flatten(df.queryExecution.executedPlan)
+        .flatMap(sweep).distinct.map(h => s"$n: $h")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("no cartesian product or unexpected BNLJ in any registered query") {
     val offenders = Registry.all.flatMap { q =>
       val plan =

@@ -15,6 +15,14 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.benchQueries.toSet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("the extended bench group is 21 distinct queries outside the other groups") {
+    val ext = SparkEntry.benchQueriesExtended
+    assert(ext.size == 21 && ext.distinct.size == 21, ext)
+    assert(ext.toSet.subsetOf(SparkEntry.queries.keySet))
+    assert(ext.intersect(SparkEntry.benchQueries).isEmpty)
+    assert(ext.intersect(graft.queries.StorageLayout.benchPairs.map(_._1)).isEmpty)
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -31,7 +31,6 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("zorder_key parses as a SQL function") {
-    Fns.ensureRegistered(spark)
     val z = spark.sql("SELECT zorder_key(5L, 3L) AS z").head().getLong(0)
     assert(z == 27L)
   }
