@@ -22,11 +22,13 @@ import graft.sources.FsMeta
   *     probes REJECT a params mismatch instead of silently mixing
   *     index families (IncrementalDedup's contract).
   *
-  * Metric discipline: cell ASSIGNMENT (build and append) and cell
-  * PROBE selection both use squared euclidean distance — the k-means
-  * training metric — so an appended vector lands exactly where the
-  * build would have put it, and a query's nprobe cells are the cells
-  * whose members the quantizer considers closest. Final ranking inside
+  * Metric discipline: cell ASSIGNMENT (build and append) is
+  * [[Clustering.cellOf]], the expression every [[Clustering.lloyd]]
+  * round assigns with, so an appended vector lands exactly where the
+  * build would have put it; cell PROBE selection uses squared
+  * euclidean distance too — the k-means training metric — so a query's
+  * nprobe cells are the cells whose members the quantizer considers
+  * closest. Final ranking inside
   * the probed cells is exact 6dp-rounded cosine (the corpus-wide
   * contract of the Similarity family). With nprobe = nlist the probe
   * is EXHAUSTIVE and the result provably equals brute-force top-k —
@@ -35,7 +37,7 @@ import graft.sources.FsMeta
   *
   * Scale design: build = one k-means over a sampled/full corpus + one
   * assignment pass + one partitioned write. Append = per-batch
-  * assignment against broadcast centroids, appended into the existing
+  * assignment against plan-literal centroids, appended into the existing
   * partition dirs (dynamic overwrite not needed — postings are
   * add-only; dedup/TTL is the caller's policy). Probe = centroids are
   * O(nlist · dims) driver-side (the ONE collect, bounded by the
@@ -50,17 +52,16 @@ object AnnIndex {
   private def paramsJson(p: Params): String =
     s"""{"nlist": ${p.nlist}, "dims": ${p.dims}}"""
 
-  private def centroidsJson(cents: Seq[(Int, Array[Double])]): String =
-    cents.sortBy(_._1).map { case (i, v) =>
-      s"""[${v.mkString(",")}]""" }.mkString("[", ",", "]")
+  private def centroidsJson(cents: Seq[Array[Double]]): String =
+    cents.map(v => s"""[${v.mkString(",")}]""").mkString("[", ",", "]")
 
-  private def readCentroids(path: String): Seq[(Int, Array[Double])] = {
+  /** The stored centroids, cell id = position. */
+  private def readCentroids(path: String): Seq[Array[Double]] = {
     val raw = FsMeta.readString(s"$path/centroids.json").trim
     // [[a,b,...],[...]] — fixed shape written by us; split on "],["
     val inner = raw.stripPrefix("[").stripSuffix("]")
-    inner.split("\\],\\[").zipWithIndex.map { case (s, i) =>
-      (i, s.replaceAll("[\\[\\]]", "").split(",").map(_.toDouble))
-    }.toSeq
+    inner.split("\\],\\[").map(
+      _.replaceAll("[\\[\\]]", "").split(",").map(_.toDouble)).toSeq
   }
 
   private def checkParams(path: String, p: Params): Unit = {
@@ -70,40 +71,23 @@ object AnnIndex {
         s"${paramsJson(p)} — refusing to mix index families")
   }
 
-  /** Nearest-centroid assignment by squared euclidean distance (the
-    * k-means metric): explode the (tiny, broadcast) centroid table per
-    * row, keep the argmin via [[graft.plans.TopKPerGroup]] — map-side
-    * heaps drop nlist − 1 of every row's candidates BEFORE the
-    * exchange, where the previous window formulation shuffled the full
-    * corpus × nlist expansion and sorted it (round 9; the probe plans
-    * pin window = 0 in PlanHygieneSpec). Exact-distance ties break
-    * toward the smaller cell id, matching k-means transform's argmin
-    * order.
+  /** (cell, nid, nv) postings of `df`, each row's cell by
+    * [[Clustering.cellOf]] against `cents` — a per-row expression, so
+    * assignment adds no join and no shuffle.
     */
-  private def assignCells(df: DataFrame, embCol: String,
-      cents: DataFrame): DataFrame =
-    assignCellsTopN(df, embCol, cents, 1).drop("__aid")
+  private def postingsOf(df: DataFrame, idCol: String, embCol: String,
+      cents: Seq[Array[Double]]): DataFrame =
+    df.select(Clustering.cellOf(col(embCol), cents).as("cell"),
+      col(idCol).cast("long").as("nid"), col(embCol).as("nv"))
 
-  /** Fit the coarse quantizer and write the whole index. An EAGER write
-    * job at call time — building an index IS a job.
+  /** Fit the coarse quantizer ([[Clustering.lloyd]], 10 rounds) and
+    * write the whole index. An EAGER write job at call time — building
+    * an index IS a job.
     */
   def buildIndex(corpus: DataFrame, idCol: String, embCol: String,
       p: Params, path: String): Unit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = corpus.sparkSession
-    val c = corpus.select(col(idCol).cast("long").as("nid"),
-      col(embCol).as("nv"),
-      array_to_vector(col(embCol).cast("array<double>")).as("features"))
-    val model = new KMeans().setK(p.nlist).setSeed(42).setMaxIter(10)
-      .fit(c.select("features"))
-    val cents = model.clusterCenters.zipWithIndex.map {
-      case (v, i) => (i, v.toArray) }.toSeq
-    val centsDf = spark.createDataFrame(cents).toDF("cell", "centroid")
-    assignCells(
-        c.select(col("nid").as("__aid"), col("nid"), col("nv")), "nv",
-        centsDf)
-      .select("cell", "nid", "nv")
+    val (_, cents) = Clustering.lloyd(corpus, idCol, embCol, p.nlist, 10)
+    postingsOf(corpus, idCol, embCol, cents)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/postings")
     FsMeta.writeString(s"$path/centroids.json", centroidsJson(cents))
@@ -116,14 +100,7 @@ object AnnIndex {
   def appendBatch(batch: DataFrame, idCol: String, embCol: String,
       p: Params, path: String): Unit = {
     checkParams(path, p)
-    val spark = batch.sparkSession
-    val centsDf = spark.createDataFrame(readCentroids(path))
-      .toDF("cell", "centroid")
-    assignCells(
-        batch.select(col(idCol).cast("long").as("__aid"),
-          col(idCol).cast("long").as("nid"), col(embCol).as("nv")),
-        "nv", centsDf)
-      .select("cell", "nid", "nv")
+    postingsOf(batch, idCol, embCol, readCentroids(path))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$path/postings")
   }
@@ -143,15 +120,8 @@ object AnnIndex {
   def appendBatchExactlyOnce(batch: DataFrame, idCol: String,
       embCol: String, p: Params, path: String, tag: String): Unit = {
     checkParams(path, p)
-    val spark = batch.sparkSession
     val stage = s"$path/staging/$tag"
-    val centsDf = spark.createDataFrame(readCentroids(path))
-      .toDF("cell", "centroid")
-    assignCells(
-        batch.select(col(idCol).cast("long").as("__aid"),
-          col(idCol).cast("long").as("nid"), col(embCol).as("nv")),
-        "nv", centsDf)
-      .select("cell", "nid", "nv")
+    postingsOf(batch, idCol, embCol, readCentroids(path))
       // partition count pinned to the INDEX PARAMETER, never the session
       // default: a replay under a different spark.sql.shuffle.partitions
       // would otherwise renumber the staged tasks and break the
@@ -266,17 +236,47 @@ object AnnIndex {
     checkParams(path, p)
     require(nprobe >= 1 && nprobe <= p.nlist,
       s"nprobe must be in [1, ${p.nlist}], got $nprobe")
-    val centsDf = spark.createDataFrame(readCentroids(path))
-      .toDF("cell", "centroid")
-    val q = queries.select(col(idCol).cast("long").as("qid"),
-      col(embCol).as("qv"))
-    val qCells = assignCellsTopN(q.withColumn("__aid", col("qid")), "qv",
-      centsDf, nprobe).select("qid", "qv", "cell")
+    val qCells = probeCells(queries.select(col(idCol).cast("long").as("qid"),
+      col(embCol).as("qv")), readCentroids(path), nprobe)
     val probedCells = qCells.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val postings = spark.read.parquet(s"$path/postings")
-      .filter(col("cell").isin(probedCells: _*))
-    val scored = postings.join(broadcast(qCells), Seq("cell"))
+    rankProbed(qCells, spark.read.parquet(s"$path/postings")
+      .filter(col("cell").isin(probedCells: _*)), k)
+  }
+
+  /** (qid, qv, cell): each query's `nprobe` nearest cells by squared
+    * euclidean distance — the centroid table (nlist rows, a parameter)
+    * is broadcast per query and [[graft.plans.TopKPerGroup]] keeps the
+    * nprobe smallest (map-side heaps drop the rest BEFORE the exchange;
+    * the probe plans pin window = 0 in PlanHygieneSpec). Exact-distance
+    * ties break toward the smaller cell id.
+    */
+  private[operators] def probeCells(q: DataFrame,
+      cents: Seq[Array[Double]], nprobe: Int): DataFrame = {
+    val spark = q.sparkSession
+    val centsDf = spark.createDataFrame(cents.zipWithIndex.map(_.swap))
+      .toDF("cell", "centroid")
+    // native SqDist, not a zip_with/aggregate fold: Spark runs lambdas
+    // interpreted, this stays inside whole-stage codegen
+    val dist = graft.functions.Fns.sqDist(
+      col("qv").cast("array<double>"), col("centroid"))
+    graft.plans.TopKPerGroup.topK(
+        q.crossJoin(broadcast(centsDf)).withColumn("dist", dist),
+        Seq("qid"), Seq(col("dist").asc, col("cell").asc), nprobe)
+      .select("qid", "qv", "cell")
+  }
+
+  /** Top-k (qid, nid, cos, rank) of the probed `postings` (cell, nid, nv)
+    * per query: exact 6dp cosine over each query's cells (`qCells` from
+    * [[probeCells]]), self-matches excluded, ties to the lower nid.
+    */
+  private[operators] def rankProbed(qCells: DataFrame, postings: DataFrame,
+      k: Int): DataFrame = {
+    // null-safe on purpose: `=` would let Catalyst infer isnotnull(cell)
+    // and push it, with ivfTopK's whole distance array, into the corpus
+    // scan's filter; probed cells are never null, so the rows are equal
+    val probes = qCells.withColumnRenamed("cell", "qcell")
+    val scored = postings.join(broadcast(probes), col("cell") <=> col("qcell"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         round(Fns.cosineSimilarity(col("qv"), col("nv")), 6).as("cos"))
@@ -300,21 +300,5 @@ object AnnIndex {
       .select(col("qid"), posexplode(col("arr")))
       .select(col("qid"), col("col.nid").as("nid"), col("col.cos").as("cos"),
         (col("pos") + 1).cast("int").as("rank"))
-  }
-
-  /** Like [[assignCells]] but keeping the `n` nearest cells per row
-    * (and the `__aid` group key — [[assignCells]] drops it).
-    */
-  private def assignCellsTopN(df: DataFrame, embCol: String,
-      cents: DataFrame, n: Int): DataFrame = {
-    // round-19: native SqDist replaces the interpreted zip_with/aggregate
-    // fold — same index-ordered sum, bit-identical distances, and the
-    // assignment projection stays inside whole-stage codegen
-    val dist = graft.functions.Fns.sqDist(
-      col(embCol).cast("array<double>"), col("centroid"))
-    val scored = df.crossJoin(broadcast(cents)).withColumn("dist", dist)
-    graft.plans.TopKPerGroup.topK(scored, Seq("__aid"),
-        Seq(col("dist").asc, col("cell").asc), n)
-      .drop("dist", "centroid")
   }
 }

@@ -4,13 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** K-means clustering (Lloyd's algorithm) over an embedding column —
-  * the standalone member of the centroid family the engine already
-  * uses internally ([[AnnIndex]] fits a coarse quantizer through Spark
-  * ML; [[SemanticDedup]] consumes given centroids): here the loop
-  * itself is the operator, exposed with the determinism contract that
-  * makes it EXACTLY oracle-able — the engine's k-means can be
-  * hash-checked round for round against an independent SQL replay,
-  * which no black-box `KMeans.fit` allows.
+  * the engine's ONE k-means: [[AnnIndex]]'s and [[Similarity.ivfTopK]]'s
+  * coarse quantizers and [[SemanticDedup]]'s multi-cell centroids are
+  * all fit by [[lloyd]], and every single-cell assignment is [[cellOf]].
+  * The loop runs under the determinism contract that makes it EXACTLY
+  * oracle-able: the engine's k-means is hash-checked round for round
+  * against an independent SQL replay (p77), and every quantizer built
+  * on it is a pure, re-executable function of its input.
   *
   * Determinism contract (the p65/q74/p72 unrolled-iteration move):
   * initial centroids = the k lowest-id vectors (k-means++ trades
@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   * centroids (no join, no shuffle for the assignment — SemanticDedup's
   * move), partial-aggregates per-cell (sum, count) — k × dims driver
   * state, a parameter not a data size — and the driver mints the next
-  * round's literals. iters × one-scan total; the assignment output is
-  * computed once more with the final centroids.
+  * round's literals. At most iters × one-scan total (a fixed point ends
+  * the loop early); the assignment output is computed once more with
+  * the final centroids.
   */
 object Clustering {
 
@@ -50,13 +51,24 @@ object Clustering {
     * HALF_UP round BEFORE the argmin, bit-identical trajectory
     * (SqDistsSpec pins the parity; the oracle re-proves it end to end).
     */
-  private def distArr(cents: Seq[Array[Double]]): Column =
-    graft.functions.Fns.sqDistToAll(col("v"), cents, round6 = true)
+  private def distArr(v: Column, cents: Seq[Array[Double]]): Column =
+    graft.functions.Fns.sqDistToAll(v.cast("array<double>"), cents,
+      round6 = true)
 
-  private def cellOf(dArr: Column): Column =
+  /** Argmin index of a distance array, ties to the lower cell id. */
+  private[operators] def argminCell(dArr: Column): Column =
     (array_position(dArr, array_min(dArr)) - 1).cast("int")
 
-  /** `iters` Lloyd rounds from `init` (default: the k lowest-id
+  /** THE single-cell assignment: the nearest of the plan-literal
+    * centroids `cents` by 6dp-rounded squared euclidean distance, ties
+    * to the lower cell id — a pure per-row expression (no join, no
+    * shuffle), identical to the assignment inside every [[lloyd]] round,
+    * so a vector assigned later lands exactly where the fit put it.
+    */
+  def cellOf(v: Column, cents: Seq[Array[Double]]): Column =
+    argminCell(distArr(v, cents))
+
+  /** Up to `iters` Lloyd rounds from `init` (default: the k lowest-id
     * vectors); returns (assignments, centroids) — assignments as
     * (id, cell, dist) under the FINAL centroids, centroids as the
     * final k × dims table (cell, centroid).
@@ -79,26 +91,34 @@ object Clustering {
       }
       require(cents.length == k, "init must carry exactly k centroids")
       val dims = cents.head.length
-      for (_ <- 1 to iters) {
+      var rounds = 0
+      var moved = true
+      // a round that returns its own input centroids is a fixed point:
+      // every later round repeats it, so stopping there returns exactly
+      // what `iters` rounds would (Bench's clustered ladder settles in 2)
+      while (moved && rounds < iters) {
         // one scan: assign + per-cell (sum per coordinate, count)
         val sums = base
-          .withColumn("__d", distArr(cents))
-          .select(cellOf(col("__d")).as("cell"), col("v"))
+          .withColumn("__d", distArr(col("v"), cents))
+          .select(argminCell(col("__d")).as("cell"), col("v"))
           .groupBy("cell")
           .agg(count(lit(1)).as("n"),
             array((0 until dims).map(d =>
               sum(element_at(col("v"), d + 1))): _*).as("s"))
           .as[(Int, Long, Seq[Double])].collect()
           .map(r => r._1 -> ((r._2, r._3))).toMap
-        cents = cents.zipWithIndex.map { case (old, c) =>
+        val next = cents.zipWithIndex.map { case (old, c) =>
           sums.get(c) match {
             case Some((n, s)) => s.map(x => round6(x / n)).toArray
             case None => old // empty cell keeps its centroid
           }
         }
+        moved = !next.corresponds(cents)(_ sameElements _)
+        cents = next
+        rounds += 1
       }
-      val assigned = base.withColumn("__d", distArr(cents))
-        .select(col("id"), cellOf(col("__d")).as("cell"),
+      val assigned = base.withColumn("__d", distArr(col("v"), cents))
+        .select(col("id"), argminCell(col("__d")).as("cell"),
           array_min(col("__d")).as("dist"))
       (assigned, cents)
     } finally base.unpersist(): Unit
@@ -111,16 +131,15 @@ object Clustering {
   def lloydSummary(emb: DataFrame, idCol: String, embCol: String, k: Int,
       iters: Int): DataFrame = {
     val (assigned, cents) = lloyd(emb, idCol, embCol, k, iters)
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val checks = cents.zipWithIndex.map { case (c, i) =>
-      (i, round6(c.zipWithIndex.map { case (x, d) => (d + 1) * x }.sum))
-    }.toDF("cell", "centroid_checksum")
+    // the checksums ride as a plan literal looked up by cell: a join
+    // against a k-row frame would let Catalyst infer isnotnull(cell) and
+    // push the whole distance array into the embeddings scan's filter
+    val checks = typedLit(cents.map(c =>
+      round6(c.zipWithIndex.map { case (x, d) => (d + 1) * x }.sum)))
     assigned.groupBy("cell")
       .agg(count(lit(1)).cast("long").as("n"),
         round(sum("dist"), 6).as("inertia"))
-      .join(checks, Seq("cell"))
       .select(col("cell"), col("n"), col("inertia"),
-        col("centroid_checksum"))
+        element_at(checks, col("cell") + 1).as("centroid_checksum"))
   }
 }

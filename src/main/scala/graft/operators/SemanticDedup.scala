@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 
@@ -26,10 +26,10 @@ import graft.functions.Fns
   * Scale (100 TB of embeddings): the quantizer is the ONE driver-side
   * object (O(nlist · dims), a parameter not a data size — AnnIndex's
   * collect contract); assignment + own-centroid distance are pure
-  * per-row expressions over plan-literal centroids — no join, no
-  * shuffle, no ML-library call at scoring time; the pairwise stage is
-  * an equi-join on (cell, block-pair id) so each task sees one block
-  * pair of ONE cell — cost sum over cells of |c|^2 / blocks^2, bounded
+  * per-row expressions over plan-literal centroids — no join and no
+  * shuffle at scoring time; the pairwise stage is an equi-join on
+  * (cell, block-pair id) so each task sees one block pair of ONE
+  * cell — cost sum over cells of |c|^2 / blocks^2, bounded
   * by the largest cell, never n^2 (hot cells are the standard AQE
   * skew-join case); components run pointer jumping (O(log diameter)
   * rounds, edges never cross cells so components are cell-local); the
@@ -50,11 +50,10 @@ object SemanticDedup {
     * engine-invariant — p48/p52's convention.
     */
   def dedupReport(embeddings: DataFrame, idCol: String, embCol: String,
-      threshold: Double, nlist: Int = 1, blocks: Int = 16,
-      maxIter: Int = 20): DataFrame = {
+      threshold: Double, nlist: Int = 1, blocks: Int = 16): DataFrame = {
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     dedupReportWithCentroids(embeddings, idCol, embCol, threshold,
-      fitCentroids(embeddings, embCol, nlist), blocks)
+      fitCentroids(embeddings, idCol, embCol, nlist), blocks)
   }
 
   /** [[dedupReport]] against CALLER-SUPPLIED centroids — the 100 TB
@@ -79,19 +78,20 @@ object SemanticDedup {
     */
   def semanticPairs(embeddings: DataFrame, idCol: String, embCol: String,
       threshold: Double, nlist: Int = 1, blocks: Int = 16): DataFrame = {
-    val cents = fitCentroids(embeddings, embCol, nlist)
+    val cents = fitCentroids(embeddings, idCol, embCol, nlist)
     inCellPairs(withCellAndDist(embeddings, idCol, embCol, cents),
       threshold, blocks)
   }
 
   /** k-means centroids as plain arrays, cell id = fit order. nlist = 1
     * is the global mean computed by a plain aggregation — k-means with
-    * one cluster converges to exactly that, and the ML fit refuses
-    * k < 2; either way the collect is O(nlist · dims), a parameter not
-    * a data size.
+    * one cluster converges to exactly that, and p61's oracle computes
+    * that UNROUNDED mean (a [[Clustering.lloyd]] round rounds centroids
+    * to 6dp); nlist >= 2 is 10 Lloyd rounds. Either way the collect is
+    * O(nlist · dims), a parameter not a data size.
     */
-  private def fitCentroids(embeddings: DataFrame, embCol: String,
-      nlist: Int): Seq[Array[Double]] = {
+  private def fitCentroids(embeddings: DataFrame, idCol: String,
+      embCol: String, nlist: Int): Seq[Array[Double]] = {
     if (nlist == 1) {
       val mean = embeddings
         .select(posexplode(col(embCol).cast("array<double>"))
@@ -99,20 +99,14 @@ object SemanticDedup {
         .groupBy("i").agg(avg("x").as("c"))
         .orderBy("i").collect().map(_.getDouble(1))
       Seq(mean)
-    } else {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val feats = embeddings.select(
-        array_to_vector(col(embCol).cast("array<double>")).as("features"))
-      new KMeans().setK(nlist).setSeed(42).setMaxIter(10).fit(feats)
-        .clusterCenters.map(_.toArray).toSeq
-    }
+    } else Clustering.lloyd(embeddings, idCol, embCol, nlist, 10)._2
   }
 
   /** (vid, v, cell, dist): nearest-centroid cell and 6dp distance to it,
     * both PURE per-row expressions over plan-literal centroids — the
-    * scoring pass neither joins nor shuffles (first-match
-    * array_position = min-cell-id tie-break, k-means argmin order).
+    * scoring pass neither joins nor shuffles. The argmin is
+    * [[Clustering.argminCell]] (ties to the lower cell id) over the
+    * UNROUNDED distances the 6dp `dist` is taken from.
     */
   private def withCellAndDist(embeddings: DataFrame, idCol: String,
       embCol: String, cents: Seq[Array[Double]]): DataFrame = {
@@ -125,8 +119,7 @@ object SemanticDedup {
     embeddings
       .select(col(idCol).cast("long").as("vid"), col(embCol).as("v"),
         dists.as("d2s"))
-      .withColumn("cell",
-        (array_position(col("d2s"), array_min(col("d2s"))) - 1).cast("int"))
+      .withColumn("cell", Clustering.argminCell(col("d2s")))
       .withColumn("dist",
         round(sqrt(element_at(col("d2s"), col("cell") + 1)), 6))
       .drop("d2s")

@@ -162,43 +162,25 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** IVF-style approximate top-k: a k-means coarse quantizer (spark.ml,
-    * fixed seed) assigns every corpus vector to its nearest centroid;
-    * each query searches only its `nprobe` nearest cells, reranked by
-    * exact cosine. The classic big-corpus ANN layout: the corpus is
+  /** IVF-style approximate top-k: a k-means coarse quantizer
+    * ([[Clustering.lloyd]], 10 rounds) assigns every corpus vector to its
+    * nearest centroid ([[Clustering.cellOf]]); each query searches only
+    * its `nprobe` euclidean-nearest cells, reranked by exact cosine — the
+    * probe-and-rank core [[AnnIndex.topKAgainstIndex]] runs against a
+    * stored index. The classic big-corpus ANN layout: the corpus is
     * partitioned by cell id, a query touches nprobe/nlist of the data.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = corpus.sparkSession
-    val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("nv"),
-      array_to_vector(col("embedding").cast("array<double>")).as("features"))
-    val model = new KMeans().setK(nlist).setSeed(42).setMaxIter(10)
-      .fit(c.select("features"))
-    val assigned = model.transform(c)
-      .select(col("nid"), col("nv"), col("prediction").as("cell"))
-    // nprobe nearest centroids per query, by exact distance to centroids
-    val centroids = model.clusterCenters.zipWithIndex.map {
-      case (v, i) => (i, v.toArray)
-    }.toSeq
-    val cents = spark.createDataFrame(centroids).toDF("cell", "centroid")
+    val (_, cents) = Clustering.lloyd(corpus, "vec_id", "embedding", nlist, 10)
+    // the cell is computed on the corpus frame, not joined back from
+    // lloyd's assignments: that join would push the distance array into
+    // the corpus scan's filter (see AnnIndex.rankProbed)
+    val postings = corpus.select(
+      Clustering.cellOf(col("embedding"), cents).as("cell"),
+      col("vec_id").as("nid"), col("embedding").as("nv"))
     val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val qCells = q.crossJoin(broadcast(cents))
-      .withColumn("dist", -Fns.cosineSimilarity(col("qv"), col("centroid")))
-      .withColumn("cr", row_number().over(
-        Window.partitionBy("qid").orderBy(col("dist"), col("cell"))))
-      .filter(col("cr") <= nprobe)
-      .select("qid", "qv", "cell")
-    val scored = assigned.join(broadcast(qCells), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(Fns.cosineSimilarity(col("qv"), col("nv")), 6).as("cos"))
-      .dropDuplicates("qid", "nid")
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    AnnIndex.rankProbed(AnnIndex.probeCells(q, cents, nprobe), postings, k)
   }
 
   /** All embedding pairs with cosine >= threshold (near-duplicate pairs

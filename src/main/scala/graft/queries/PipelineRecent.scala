@@ -733,12 +733,12 @@ object PipelineRecent {
       benchExt = true),
 
     // --- k-means (Lloyd) clustering, the loop itself as an operator
-    //     (AnnIndex uses a black-box fit; here every round is
-    //     hash-checkable): k=4 from the 4 lowest-id seeds, 2 rounds,
-    //     6dp rounds on distances AND centroid coordinates pin the
-    //     whole trajectory; per-cell (n, inertia, centroid checksum)
-    //     is the registered shape. The oracle unrolls the identical
-    //     rounds (p65/q74/p72's move). ---
+    //     (the same fit behind every IVF and semantic-dedup quantizer;
+    //     here every round is hash-checked): k=4 from the 4 lowest-id
+    //     seeds, 2 rounds, 6dp rounds on distances AND centroid
+    //     coordinates pin the whole trajectory; per-cell (n, inertia,
+    //     centroid checksum) is the registered shape. The oracle
+    //     unrolls the identical rounds (p65/q74/p72's move). ---
     QueryDef(
       "p77_kmeans_lloyd",
       (s, dir) => graft.operators.Clustering.lloydSummary(

@@ -16,7 +16,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   private val p = AnnIndex.Params(nlist = 8, dims = 64)
   private def emb = graft.api.Tables
-    .t(spark, "/root/testdata/sf0.001", "embeddings")
+    .t(spark, TestSpark.sf0001, "embeddings")
   private def tmp(): String =
     Files.createTempDirectory("graft_annidx").toString
 
@@ -51,7 +51,7 @@ class AnnIndexSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     val totalFiles = s.read.parquet(s"$path/postings").inputFiles.length
     val df = AnnIndex.topKAgainstIndex(s,
-      graft.api.Tables.t(s, "/root/testdata/sf0.001", "embeddings")
+      graft.api.Tables.t(s, TestSpark.sf0001, "embeddings")
         .filter(col("vec_id") === 0),
       "vec_id", "embedding", k = 5, nprobe = 1, p, path)
     df.collect()
@@ -98,6 +98,25 @@ class AnnIndexSpec extends AnyFunSuite {
         k = 5, nprobe = p.nlist, p, path)
       .filter(col("nid") % 5 === 0)
     assert(got.count() > 0, "appended vectors must be reachable")
+  }
+
+  test("an appended vector lands in the cell the build gave it") {
+    val path = tmp()
+    AnnIndex.buildIndex(emb.filter(col("vec_id") % 5 =!= 0),
+      "vec_id", "embedding", p, path)
+    // re-append some of the build's own vectors: each must land exactly
+    // where the build put it, so every such nid has two postings in ONE cell
+    val again = emb.filter(col("vec_id") % 5 === 1)
+    AnnIndex.appendBatch(again, "vec_id", "embedding", p, path)
+    val cells = spark.read.parquet(s"$path/postings")
+      .join(again.select(col("vec_id").as("nid")), "nid")
+      .groupBy("nid")
+      .agg(count(lit(1)).as("n"), countDistinct("cell").as("cells"))
+      .select("n", "cells").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cells == Set((2L, 1L)), s"(postings, cells) per nid: $cells")
+    assert(spark.read.parquet(s"$path/postings").select("cell").distinct()
+      .count() > 1, "the quantizer must spread the build over several cells")
   }
 
   test("params mismatch is rejected for append and probe") {

@@ -13,7 +13,7 @@ class ClusteredWriteSpec extends AnyFunSuite {
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
 
   test("file sizing: output file count tracks the byte target") {
-    val df = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
+    val df = spark.read.parquet(s"${TestSpark.sf001}/lineitem.parquet")
     val out = "/tmp/graft-clustered-sizing"
     ClusteredWrite.writeClustered(df, out,
       Seq(col("l_orderkey")), targetBytes = 256L << 10)

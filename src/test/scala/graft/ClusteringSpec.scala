@@ -65,6 +65,35 @@ class ClusteringSpec extends AnyFunSuite {
     assert(cents(2).toSeq == far.toSeq)
   }
 
+  test("a fixed point ends the loop: more rounds return the same centroids with no more queries") {
+    val init = Seq(vec(0, 9.0), vec(3, 9.0), vec(6, 9.0))
+      .map(_.map(_.toDouble))
+    def fit(iters: Int): (Seq[Seq[Double]], Int) = {
+      org.apache.spark.sql.graftshim.Bridge.waitForListeners(spark)
+      val queries = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+          queries.incrementAndGet(): Unit
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val (_, cents) = Clustering.lloyd(planted, "vec_id", "embedding",
+          k = 3, iters = iters, init = Some(init))
+        org.apache.spark.sql.graftshim.Bridge.waitForListeners(spark)
+        (cents.map(_.toSeq), queries.get)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    // the planted clusters settle in two rounds
+    val (c4, n4) = fit(4)
+    val (c40, n40) = fit(40)
+    assert(c40 == c4)
+    assert(n40 == n4, s"40 rounds ran $n40 queries, 4 rounds $n4")
+  }
+
   test("deterministic run-to-run; k beyond the corpus rejected; iters=0 returns init assignment") {
     val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
     def run() = Clustering.lloydSummary(e, "vec_id", "embedding", 4, 2)

@@ -434,12 +434,16 @@ class PlanHygieneSpec extends AnyFunSuite {
       s"the sweep missed an expensive filter predicate:\n$plan")
   }
 
-  // the registry-wide sweep above cannot see below an AQE root; these
-  // four queries once ran shingled's `size(sh) > 0` guard, alias-inlined
-  // to a full shingle encode, inside their documents scan
-  test("no expensive predicate in the final AQE plans of the shingling queries") {
+  // the registry-wide sweep above cannot see below an AQE root. The
+  // four shingling queries once ran shingled's `size(sh) > 0` guard,
+  // alias-inlined to a full shingle encode, inside their documents scan;
+  // the k-means queries once let a join on the computed cell infer
+  // isnotnull(cell), which pushed the whole distance array into the
+  // embeddings scan (p77 evaluated it three times per row)
+  test("no expensive predicate in the final AQE plans of the audited queries") {
     val hits = Seq("p03_ngram_jaccard", "p43_containment",
-        "p46_incremental_neardup", "p93_index_purge").flatMap { n =>
+        "p46_incremental_neardup", "p93_index_purge", "p77_kmeans_lloyd",
+        "p13_ann_ivf", "p58_ann_index_exhaustive").flatMap { n =>
       val df = Registry.byName(n).run(spark, TestSpark.sf0001)
       df.collect()
       PlanFlatten.flatten(df.queryExecution.executedPlan)

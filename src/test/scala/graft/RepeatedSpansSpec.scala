@@ -43,7 +43,7 @@ class RepeatedSpansSpec extends AnyFunSuite {
   }
 
   test("doc-prune is exact: ladder equals the unpruned per-width recompute") {
-    val d = graft.api.Tables.t(spark, "/root/testdata/sf0.001", "documents")
+    val d = graft.api.Tables.t(spark, TestSpark.sf0001, "documents")
     val ladder = TextAnalysis.repeatedSpansLadder(d, "doc_id", "text",
         baseN = 8, minDf = 3, maxN = 32)
       .orderBy("span_len", "span").collect().toSeq
@@ -61,7 +61,7 @@ class RepeatedSpansSpec extends AnyFunSuite {
   }
 
   test("pruneDocs=false (the A/B measurement knob) is row-identical") {
-    val d = graft.api.Tables.t(spark, "/root/testdata/sf0.001", "documents")
+    val d = graft.api.Tables.t(spark, TestSpark.sf0001, "documents")
     def run(prune: Boolean) = TextAnalysis.repeatedSpansLadder(
         d, "doc_id", "text", baseN = 8, minDf = 3, maxN = 32,
         pruneDocs = prune)

@@ -104,8 +104,8 @@ class SemanticDedupSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     // hand the operator the IDEAL centroids for the planted mixture —
     // axis spikes at the three cluster centers; the scoring pass must
-    // produce the same cells, pairs, and GROUPS without ever calling
-    // the ML fit (the keeper may legitimately differ — distance ranks
+    // produce the same cells, pairs, and GROUPS without ever running
+    // the Lloyd fit (the keeper may legitimately differ — distance ranks
     // depend on where the centroid sits, so only grouping is compared)
     val ideal = (0 until 3).map { c =>
       val v = Array.fill(8)(0.0)

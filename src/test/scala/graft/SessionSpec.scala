@@ -5,19 +5,31 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every harness builds its session through [[Session.builder]]: a copied
-  * builder block drifts from the others one config line at a time.
+  * builder block drifts from the others one config line at a time. The
+  * same source scan keeps spark.ml out of the engine: every k-means there
+  * is graft.operators.Clustering.lloyd, a deterministic, oracle-checked
+  * fit, not a seeded black box.
   */
 class SessionSpec extends AnyFunSuite {
+  private def sources(root: String) = {
+    val files = Files.walk(Paths.get(root))
+    try files.iterator.asScala.toList.filter(_.toString.endsWith(".scala"))
+    finally files.close()
+  }
+
   test("sessions are built only in graft/Session.scala") {
     val own = Paths.get("src/main/scala/graft/Session.scala")
     val builderCall = "SparkSession\\s*\\.\\s*builder".r
-    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val files = Files.walk(Paths.get(root))
-      try files.iterator.asScala.toList finally files.close()
-    }.filter(p => p.toString.endsWith(".scala") && p != own)
-      .filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
+    val mlImport = "import\\s+org\\.apache\\.spark\\.ml\\b".r
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap(sources)
+      .filter(p => p != own &&
+        builderCall.findFirstIn(Files.readString(p)).isDefined)
     assert(Files.exists(own), s"$own moved: re-point this guard")
     assert(offenders.isEmpty,
       s"build sessions with graft.Session.builder, not in: ${offenders.mkString(", ")}")
+    val mlUsers = sources("src/main/scala")
+      .filter(p => mlImport.findFirstIn(Files.readString(p)).isDefined)
+    assert(mlUsers.isEmpty,
+      s"fit k-means with graft.operators.Clustering.lloyd, not spark.ml, in: ${mlUsers.mkString(", ")}")
   }
 }
