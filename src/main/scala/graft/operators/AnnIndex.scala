@@ -37,9 +37,9 @@ import graft.sources.FsMeta
   *
   * Scale design: build = one k-means over a sampled/full corpus + one
   * assignment pass + one partitioned write. Append = per-batch
-  * assignment against plan-literal centroids, appended into the existing
-  * partition dirs (dynamic overwrite not needed — postings are
-  * add-only; dedup/TTL is the caller's policy). Probe = centroids are
+  * assignment against plan-literal centroids, staged and published into
+  * the existing partition dirs (postings are add-only; dedup/TTL is the
+  * caller's policy). Probe = centroids are
   * O(nlist · dims) driver-side (the ONE collect, bounded by the
   * parameter, not the data), probed cell ids become partition-pruning
   * literals, and the per-cell join carries only probed slices. No
@@ -95,30 +95,20 @@ object AnnIndex {
   }
 
   /** Assign a new batch against the STORED centroids and append its
-    * postings — no refit, no corpus rescan: the index contract.
+    * postings — no refit, no corpus rescan: the index contract. The
+    * postings are STAGED under `path/staging/<tag>/` (overwrite — a
+    * replay rewrites the stage), then PUBLISHED into the live
+    * cell-partitioned directories by deterministic-name renames that
+    * skip already-published files ([[graft.sources.StagedAppend]]), so
+    * a replay under the same `tag` converges to the same file set with
+    * zero duplicate postings. `tag` names one logical batch: stable
+    * across replays (a stream's `b<batchId>`, [[graft.streaming.AnnIngest]]),
+    * fresh for every other append (a UUID). The staged write
+    * repartitions by cell (deterministic hash layout, and one file per
+    * (task, cell) keeps publish renames bounded).
     */
   def appendBatch(batch: DataFrame, idCol: String, embCol: String,
-      p: Params, path: String): Unit = {
-    checkParams(path, p)
-    postingsOf(batch, idCol, embCol, readCentroids(path))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$path/postings")
-  }
-
-  /** EXACTLY-ONCE twin of [[appendBatch]] for streaming ingest
-    * ([[graft.streaming.AnnIngest]]): the batch's postings are STAGED
-    * under `path/staging/<tag>/` (overwrite — a replay rewrites the
-    * stage), then PUBLISHED into the live cell-partitioned directories
-    * by deterministic-name renames that skip already-published files
-    * ([[graft.sources.StagedAppend]]) — so a crash anywhere between
-    * staging and the caller's batch marker replays to the same file
-    * set with zero duplicate postings. The staged write repartitions
-    * by cell (deterministic hash layout, and one file per (task, cell)
-    * keeps publish renames bounded); cell assignment is against the
-    * STORED centroids, identical to [[appendBatch]].
-    */
-  def appendBatchExactlyOnce(batch: DataFrame, idCol: String,
-      embCol: String, p: Params, path: String, tag: String): Unit = {
+      p: Params, path: String, tag: String): Unit = {
     checkParams(path, p)
     val stage = s"$path/staging/$tag"
     postingsOf(batch, idCol, embCol, readCentroids(path))

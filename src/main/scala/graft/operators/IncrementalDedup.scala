@@ -45,10 +45,10 @@ import graft.sources.FsMeta
   * O(batch); (b) the index parquet — bucket-pruned, column-pruned scans of
   * precomputed keys, no shingling, no signature hashing, NO index-side
   * exchange; the heavy per-byte compute is paid once per document EVER,
-  * not once per run. Appends are bucketed parquet file appends — no
+  * not once per run. Appends publish bucket-correct parquet files — no
   * rewrite of existing index files (multiple files per bucket are fine;
   * compact periodically with [[compactIndex]] when small files or
-  * replay-duplicate rows accumulate — NOT with [[Compaction]], whose
+  * duplicate rows accumulate — NOT with [[Compaction]], whose
   * plain-parquet rewrite would destroy the bucketing).
   */
 object IncrementalDedup {
@@ -186,52 +186,27 @@ object IncrementalDedup {
     FsMeta.writeString(paramsPath(path), p.json)
   }
 
-  /** Fold an already-deduped batch into the index so subsequent batches
-    * dedup against it too: bucketed parquet APPENDs of the batch's shingle
-    * and band rows — existing index files are never rewritten.
-    *
-    * At-least-once across crashes: a replay that re-appends the same batch
-    * leaves duplicate index rows. They are harmless downstream — candidate
-    * pairs are distinct()'d and the verify output is deduped — and they
-    * disappear at the next [[Compaction]]-style index rewrite.
-    */
-  def appendBatch(batch: DataFrame, idCol: String, textCol: String,
-      p: Params, path: String): Unit = {
-    requireSameParams(p, path)
-    val spark = batch.sparkSession
-    // ensure the catalog entries exist before appending through them
-    bucketedTable(spark, path, "sh", shinglesPath(path), "id", p.numBuckets)
-    bucketedTable(spark, path, "bands", bandsPath(path), "bkey", p.numBuckets)
-    val sh = Dedup.shingled(batch, idCol, textCol, p.shingleSize)
-    writeBucketed(sh, "append", shinglesPath(path), tableId("sh", path),
-      "id", p.numBuckets)
-    writeBucketed(
-      Dedup.bandRows(Dedup.minhashSignatures(sh, p.numHashes),
-        p.numHashes, p.bands),
-      "append", bandsPath(path), tableId("bands", path), "bkey", p.numBuckets)
-  }
-
-  /** EXACTLY-ONCE twin of [[appendBatch]] for streaming ingest: the
-    * batch's shingle and band rows are STAGED under
-    * `path/staging/<tag>/` (overwrite — a replay rewrites the stage),
-    * then PUBLISHED into the live bucketed directories by
-    * deterministic-name renames that skip already-published files
-    * ([[graft.sources.StagedAppend]]). A crash anywhere in the window —
-    * mid-stage, mid-publish, or after publish but before the caller's
-    * batch marker — replays to the SAME file set with zero duplicate
-    * index rows (spec-pinned in IncrementalDedupSpec), closing the
-    * at-least-once window [[appendBatch]] documents.
+  /** Fold a batch into the index so subsequent batches dedup against it
+    * too — existing index files are never rewritten. The batch's shingle
+    * and band rows are STAGED under `path/staging/<tag>/` (overwrite — a
+    * replay rewrites the stage), then PUBLISHED into the live bucketed
+    * directories by deterministic-name renames that skip
+    * already-published files ([[graft.sources.StagedAppend]]). A replay
+    * under the same `tag` — after a crash mid-stage, mid-publish, or
+    * after publish but before the caller's batch marker — converges to
+    * the SAME file set with zero duplicate index rows (spec-pinned in
+    * IncrementalDedupSpec). `tag` names one logical batch: stable across
+    * replays (a stream's `b<batchId>`, [[graft.streaming.DedupIngest]]),
+    * fresh for every other append (a UUID).
     *
     * The staged writes repartition on the bucket columns with the
     * index's bucket count — the same hash-mod layout `bucketBy` uses —
     * so each published file is bucket-correct and carries its bucket id
     * in the published name where the bucketed reader parses it; the
-    * bucket-pruned, exchange-free probe contract is unchanged. `tag`
-    * must be unique per logical batch and stable across replays (the
-    * streaming batch id).
+    * bucket-pruned, exchange-free probe contract is unchanged.
     */
-  def appendBatchExactlyOnce(batch: DataFrame, idCol: String,
-      textCol: String, p: Params, path: String, tag: String): Unit = {
+  def appendBatch(batch: DataFrame, idCol: String, textCol: String,
+      p: Params, path: String, tag: String): Unit = {
     requireSameParams(p, path)
     val stage = s"$path/staging/$tag"
     val sh = Dedup.shingled(batch, idCol, textCol, p.shingleSize)
@@ -366,8 +341,8 @@ object IncrementalDedup {
     * table's bucketing and force a corpus-sized shuffle. The batch copy
     * wins the coalesce (relevant only in the crashed-append replay window,
     * where both exist and are identical). The trailing distinct() is
-    * batch-bounded and collapses repeats from duplicate index rows left by
-    * replayed appends.
+    * batch-bounded and collapses repeats from duplicate index rows (the
+    * same docs appended under two tags).
     */
   private def verifyAgainstIndex(spark: SparkSession, cands: DataFrame,
       bSh: DataFrame, pruneSh: DataFrame => DataFrame, p: Params,
@@ -404,8 +379,8 @@ object IncrementalDedup {
       bandFilesAfter: Long, shingleFilesBefore: Long, shingleFilesAfter: Long)
 
   /** Offline index maintenance: rewrite the index at `inPath` into a fresh
-    * index at `outPath`, collapsing the duplicate rows replayed appends
-    * leave behind ([[appendBatch]]'s at-least-once contract) and merging
+    * index at `outPath`, collapsing duplicate rows (the same docs
+    * appended under two tags) and merging
     * each bucket's accumulated files into one — appends never rewrite
     * existing files, so a long-lived index accretes one file set per
     * batch, and every file costs a probe-side task and footer read.

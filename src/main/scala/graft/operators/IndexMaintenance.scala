@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions.col
   *
   * Semantics per feed: DELETES first (a retention-filtered compaction —
   * the only way rows leave an append-only index), INSERTS second
-  * (appendBatch against the stored parameters/centroids); an UPDATE,
+  * (appendBatch against the stored parameters/centroids, under a fresh
+  * tag per call); an UPDATE,
   * which the feed surfaces as a delete+insert pair of the same id, thus
   * lands as drop-old-derived-rows then append-new — exactly an index
   * upsert. With no deletes the append folds IN PLACE and `inPath` is
@@ -23,19 +24,23 @@ import org.apache.spark.sql.functions.col
   * IndexLifecycleSpec already proves aged-equals-fresh across arbitrary
   * interleavings of exactly these primitives. The delete set is NEVER
   * driver-bounded: up to [[LiteralDeleteMaxIds]] ids collect as a
-  * literal filter (compactIndex — bucket-file pruning, zero-exchange),
-  * and anything larger routes to the DISTRIBUTED purge
-  * ([[IncrementalDedup.purgeIndex]] / [[AnnIndex.purgeIndex]]: bloom
-  * split + exact anti-join, shuffle O(dropset + FPP·index)) — so a
-  * corpus-scale takedown feed maintains instead of forcing a rebuild.
+  * literal filter (compactIndex — zero-exchange; no bloom build, no
+  * drop-set broadcast, one write per table), and anything larger routes
+  * to the DISTRIBUTED purge ([[IncrementalDedup.purgeIndex]] /
+  * [[AnnIndex.purgeIndex]]: bloom split + exact anti-join, shuffle
+  * O(dropset + FPP·index)) — so a corpus-scale takedown feed maintains
+  * instead of forcing a rebuild.
   */
 object IndexMaintenance {
 
   /** Tier gate: delete sets up to this size collect to the driver and
-    * push as a literal filter (whole bucket FILES prune — worth it for
-    * the operator-request regime); larger sets stay distributed. The
-    * same two-tier shape as the probe's [[IncrementalDedup.MaxProbeKeys]]
-    * pruning — literal when trivially small, join when not.
+    * push as a literal filter; larger sets stay distributed. The literal
+    * tier still rewrites every bucket (each holds retained rows, and a
+    * negated IN prunes no bucket file); its gain in the operator-request
+    * regime is what it skips: the bloom build, the drop-set broadcast
+    * and the second (survivors) write per table. The same two-tier shape
+    * as the probe's [[IncrementalDedup.MaxProbeKeys]] pruning — literal
+    * when trivially small, join when not.
     */
   val LiteralDeleteMaxIds: Int = 1024
 
@@ -91,7 +96,7 @@ object IndexMaintenance {
     val nIns = ins.count()
     if (nIns > 0)
       IncrementalDedup.appendBatch(ins.select(col(idCol), col(textCol)),
-        idCol, textCol, p, path)
+        idCol, textCol, p, path, java.util.UUID.randomUUID.toString)
     MaintResult(path, nDel, nIns, distributed)
   }
 
@@ -126,7 +131,7 @@ object IndexMaintenance {
     val nIns = ins.count()
     if (nIns > 0)
       AnnIndex.appendBatch(ins.select(col(idCol), col(embCol)),
-        idCol, embCol, p, path)
+        idCol, embCol, p, path, java.util.UUID.randomUUID.toString)
     MaintResult(path, nDel, nIns, distributed)
   }
 }

@@ -740,7 +740,8 @@ object PipelineMore {
         graft.operators.AnnIndex.buildIndex(
           e.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding", p, path)
         graft.operators.AnnIndex.appendBatch(
-          e.filter(col("vec_id") % 7 === 0), "vec_id", "embedding", p, path)
+          e.filter(col("vec_id") % 7 === 0), "vec_id", "embedding", p, path,
+          java.util.UUID.randomUUID.toString)
         graft.operators.AnnIndex.topKAgainstIndex(
             s, e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
             k = 5, nprobe = 16, p, path)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.AnnIndex
-import graft.sources.FsMeta
 
 /** Streaming ANN index ingest — the similarity-search twin of
   * [[DedupIngest]], completing the streaming-twin family: embedding
@@ -17,37 +16,30 @@ import graft.sources.FsMeta
   * assignment is a pure function of (vector, stored centroids), so
   * batch boundaries cannot move a posting).
   *
-  * CRASH SEMANTICS (the [[DedupIngest]] marker protocol, all metadata
-  * via [[FsMeta]]):
-  *   - POSTINGS — exactly-once rows. Each batch is staged then
-  *     published by deterministic renames
-  *     ([[AnnIndex.appendBatchExactlyOnce]] /
-  *     [[graft.sources.StagedAppend]]): a replay of any crash window —
-  *     mid-stage, mid-publish, published-but-unmarked — converges to
-  *     the same file set with zero duplicate postings.
-  *   - MARKER — `_commit_<b>` under the index dir, created LAST; a
-  *     foreachBatch replay of a fully-committed batch is a no-op.
+  * Crash semantics: [[BatchCommit]]'s protocol, the marker under the
+  * index dir. The postings are exactly-once rows: [[AnnIndex.appendBatch]]
+  * stages and publishes each batch under the tag `b<batchId>`, so a
+  * replay of any crash window — mid-stage, mid-publish,
+  * published-but-unmarked — converges to the same file set with zero
+  * duplicate postings.
   */
 object AnnIngest {
 
-  private def markerPath(indexPath: String, batchId: Long) =
-    s"$indexPath/_commit_$batchId"
-
   /** One micro-batch: fold the batch's vectors into the index, mark the
-    * batch committed. Idempotent per (indexPath, batchId) — see the
-    * crash-semantics contract in the object scaladoc. The index at
+    * batch committed. Idempotent per (indexPath, batchId). The index at
     * `indexPath` must exist ([[AnnIndex.buildIndex]] — an IVF index
     * needs fitted centroids before it can accept appends; seed it from
     * a bootstrap corpus or the stream's first materialized batch).
     */
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
-      embCol: String, p: AnnIndex.Params, indexPath: String): Unit = {
-    if (FsMeta.exists(markerPath(indexPath, batchId))) return
-    if (batch.isEmpty) return
-    AnnIndex.appendBatchExactlyOnce(batch, idCol, embCol, p, indexPath,
-      s"b$batchId")
-    FsMeta.createMarker(markerPath(indexPath, batchId)): Unit
-  }
+      embCol: String, p: AnnIndex.Params, indexPath: String): Unit =
+    BatchCommit.commit(indexPath, batchId) {
+      if (batch.isEmpty) false // an empty batch commits nothing
+      else {
+        AnnIndex.appendBatch(batch, idCol, embCol, p, indexPath, s"b$batchId")
+        true
+      }
+    }
 
   /** Start the ingest stream: `vectors` must carry (`idCol`, `embCol`).
     * Query the index at any point with [[AnnIndex.topKAgainstIndex]] —
@@ -57,11 +49,6 @@ object AnnIngest {
   def ingestStream(vectors: DataFrame, idCol: String, embCol: String,
       p: AnnIndex.Params, indexPath: String,
       checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatch(batch, bid, idCol, embCol, p, indexPath)
-      }
-      .start()
+    BatchCommit.start(vectors, checkpointDir)(
+      processBatch(_, _, idCol, embCol, p, indexPath))
 }

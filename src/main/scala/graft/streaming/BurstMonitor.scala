@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Burst
-import graft.sources.FsMeta
 
 /** Streaming burst monitor — [[DriftMonitor]]'s sibling on the time
   * axis: events arrive as a stream, each micro-batch folds its
@@ -19,36 +18,25 @@ import graft.sources.FsMeta
   * event stream is never rescanned — per batch the work is O(batch)
   * counting plus a day-granular window pass.
   *
-  * Crash protocol is [[DriftMonitor]]'s verbatim: per-batch OVERWRITE
-  * directories for counts (`counts/batch=b/`) and the report
-  * (`bursts/batch=b/`), commit marker last — committed replays no-op,
+  * Crash semantics: [[BatchCommit.monitorBatch]], as for
+  * [[DriftMonitor]] — per-batch OVERWRITE directories for counts
+  * (`counts/batch=b/`) and the report (`bursts/batch=b/`), so
   * uncommitted replays replace instead of double-count.
   */
 object BurstMonitor {
-
-  private def markerPath(root: String, batchId: Long) =
-    s"$root/_commit_$batchId"
 
   /** One micro-batch: fold counts, recompute the cumulative burst
     * report, mark committed. Idempotent per (root, batchId).
     */
   def processBatch(batch: DataFrame, batchId: Long, keyCol: String,
       tsCol: String, root: String, trailing: Int = 7, minWindow: Int = 3,
-      zThreshold: Double = 2.0): Unit = {
-    if (FsMeta.exists(markerPath(root, batchId))) return
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    batch.groupBy(col(keyCol), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("cnt"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/counts/batch=$batchId")
-    val cum = spark.read.parquet(s"$root/counts")
-      .groupBy(keyCol, "day").agg(sum("cnt").as("n"))
-    Burst.burstsFromDailyCounts(cum, keyCol, trailing, minWindow,
-        zThreshold)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/bursts/batch=$batchId")
-    FsMeta.createMarker(markerPath(root, batchId)): Unit
-  }
+      zThreshold: Double = 2.0): Unit =
+    BatchCommit.monitorBatch(batch, batchId, root, "counts", "bursts")(
+      _.groupBy(col(keyCol), col(tsCol).cast("date").as("day"))
+        .agg(count(lit(1)).as("cnt")),
+      _.groupBy(keyCol, "day").agg(sum("cnt").as("n")),
+      Burst.burstsFromDailyCounts(_, keyCol, trailing, minWindow,
+        zThreshold))
 
   /** Start the monitor: the burst report as of batch b lives under
     * `root/bursts/batch=b/`; the max batch_id partition is the current
@@ -57,12 +45,7 @@ object BurstMonitor {
   def monitorStream(events: DataFrame, keyCol: String, tsCol: String,
       root: String, checkpointDir: String, trailing: Int = 7,
       minWindow: Int = 3, zThreshold: Double = 2.0): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatch(batch, bid, keyCol, tsCol, root, trailing,
-          minWindow, zThreshold)
-      }
-      .start()
+    BatchCommit.start(events, checkpointDir)(
+      processBatch(_, _, keyCol, tsCol, root, trailing, minWindow,
+        zThreshold))
 }

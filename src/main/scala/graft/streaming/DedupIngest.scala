@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.IncrementalDedup
-import graft.sources.FsMeta
 
 /** Streaming near-dup dedup ingest — the composition a 100 TB pipeline
   * actually runs: documents arrive as a stream, each micro-batch is
@@ -31,38 +30,28 @@ import graft.sources.FsMeta
   * per-component is the batch [[graft.operators.ConnectedComponents]]
   * path.)
   *
-  * CRASH SEMANTICS, per artifact (all metadata via [[FsMeta]], so the
-  * same protocol runs on HDFS/object stores, not just local disk):
+  * CRASH SEMANTICS: [[BatchCommit]]'s protocol, the marker under the
+  * index dir. Per artifact:
   *   - KEPT TABLE — effectively exactly-once. Batch b's survivors land in
   *     their own partition directory `kept/batch=b/`, written with
   *     OVERWRITE: a replay of batch b (crash anywhere before the commit
   *     marker) recomputes the same survivor set — drops are a
-  *     deterministic function of (batch, index-as-of-b), and duplicate
-  *     index rows from a crashed append cannot change the drop set, only
-  *     repeat pairs the probe dedups — and REPLACES the directory instead
-  *     of appending next to the first attempt. Readers of `kept/` see a
+  *     deterministic function of (batch, index-as-of-b), and a replay
+  *     probing an index that already holds the batch only repeats pairs
+  *     the probe dedups — and REPLACES the directory instead of
+  *     appending next to the first attempt. Readers of `kept/` see a
   *     partial batch directory only between a mid-write crash and the
   *     replay that overwrites it (Spark's _SUCCESS marker distinguishes).
-  *   - INDEX — exactly-once rows. Batch rows are staged then published
-  *     by deterministic renames ([[IncrementalDedup.appendBatchExactlyOnce]]
-  *     / [[graft.sources.StagedAppend]]): a replay of any crash window —
-  *     mid-stage, mid-publish, or published-but-unmarked — converges to
-  *     the same file set with zero duplicate index rows (spec-pinned).
-  *     [[IncrementalDedup]]'s probe would tolerate duplicates anyway
-  *     (candidates distinct()'d, verify output deduped), so the
-  *     guarantee saves index bytes and probe work rather than
-  *     correctness.
-  *   - MARKER — `_commit_<b>` under the index dir, created LAST; a
-  *     foreachBatch replay of a fully-committed batch is a no-op
-  *     (MergeSink's manifest idea at batch granularity).
-  * A table-format transaction would collapse the three artifacts into
-  * one atomic commit; this protocol gets the same effective result with
-  * plain parquet + rename-free idempotency.
+  *   - INDEX — exactly-once rows. [[IncrementalDedup.appendBatch]] stages
+  *     and publishes the batch under the tag `b<batchId>`, so a replay of
+  *     any crash window — mid-stage, mid-publish, or
+  *     published-but-unmarked — converges to the same file set with zero
+  *     duplicate index rows (spec-pinned).
+  * A table-format transaction would collapse the artifacts into one
+  * atomic commit; this protocol gets the same effective result with
+  * plain parquet.
   */
 object DedupIngest {
-
-  private def markerPath(indexPath: String, batchId: Long) =
-    s"$indexPath/_commit_$batchId"
 
   /** Initialize an EMPTY index at `path` (schema-complete, zero rows) so
     * the first streaming batch has something to probe. Overwrites.
@@ -85,24 +74,27 @@ object DedupIngest {
     */
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, p: IncrementalDedup.Params, indexPath: String,
-      keptPath: String): Unit = {
-    if (FsMeta.exists(markerPath(indexPath, batchId))) return
-    if (batch.isEmpty) return
-    batch.persist()
-    try {
-      val pairs = IncrementalDedup.nearDupsAgainstIndex(
-        batch.sparkSession, batch, idCol, textCol, p, indexPath)
-      // monotone ids: the batch side of every pair is the greater id
-      val drops = pairs.select(col("id_b").cast("long").as(idCol)).distinct()
-      batch.join(drops, Seq(idCol), "left_anti")
-        .write.mode(SaveMode.Overwrite).parquet(s"$keptPath/batch=$batchId")
-      // MUST follow nearDupsAgainstIndex (its ordering contract): once
-      // the batch is indexed, its rows would sit on both probe sides
-      IncrementalDedup.appendBatchExactlyOnce(batch, idCol, textCol, p,
-        indexPath, s"b$batchId")
-      FsMeta.createMarker(markerPath(indexPath, batchId)): Unit
-    } finally batch.unpersist(): Unit
-  }
+      keptPath: String): Unit =
+    BatchCommit.commit(indexPath, batchId) {
+      if (batch.isEmpty) false // an empty batch commits nothing
+      else {
+        batch.persist()
+        try {
+          val pairs = IncrementalDedup.nearDupsAgainstIndex(
+            batch.sparkSession, batch, idCol, textCol, p, indexPath)
+          // monotone ids: the batch side of every pair is the greater id
+          val drops =
+            pairs.select(col("id_b").cast("long").as(idCol)).distinct()
+          batch.join(drops, Seq(idCol), "left_anti")
+            .write.mode(SaveMode.Overwrite).parquet(s"$keptPath/batch=$batchId")
+          // MUST follow nearDupsAgainstIndex (its ordering contract): once
+          // the batch is indexed, its rows would sit on both probe sides
+          IncrementalDedup.appendBatch(batch, idCol, textCol, p, indexPath,
+            s"b$batchId")
+          true
+        } finally batch.unpersist(): Unit
+      }
+    }
 
   /** Start the ingest stream: `docs` must carry (`idCol`, `textCol`)
     * with ids monotone in ingest order. The index at `indexPath` must
@@ -114,11 +106,6 @@ object DedupIngest {
   def ingestStream(docs: DataFrame, idCol: String, textCol: String,
       p: IncrementalDedup.Params, indexPath: String, keptPath: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatch(batch, bid, idCol, textCol, p, indexPath, keptPath)
-      }
-      .start()
+    BatchCommit.start(docs, checkpointDir)(
+      processBatch(_, _, idCol, textCol, p, indexPath, keptPath))
 }

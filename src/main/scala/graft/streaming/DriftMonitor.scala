@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.sum
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Drift
-import graft.sources.FsMeta
 
 /** Streaming corpus-drift monitor — the ingest-time twin of the batch
   * [[Drift]] detector: documents arrive as a stream, each micro-batch
@@ -25,21 +24,16 @@ import graft.sources.FsMeta
   * so the equality is batch-boundary-INVARIANT (spec-pinned under
   * different trigger sizes).
   *
-  * Crash semantics (DedupIngest's per-batch-directory protocol, all
-  * metadata via [[FsMeta]]): batch b's counts land in
+  * Crash semantics: [[BatchCommit]]'s protocol through its
+  * [[BatchCommit.monitorBatch]] step — batch b's counts land in
   * `counts/batch=b/` and its metrics row in `metrics/batch=b/`, both
-  * written with OVERWRITE — a replay of an uncommitted batch REPLACES
-  * its own directories instead of double-counting into shared files —
-  * and the `_commit_<b>` marker, created last, makes replays of
-  * committed batches no-ops. Readers aggregate `counts/` by token on
-  * read; [[graft.operators.Compaction]] applies if small batch
-  * directories accumulate (plain parquet — no bucketing to preserve
-  * here, unlike the dedup index).
+  * OVERWRITTEN, so a replay of an uncommitted batch replaces its own
+  * directories instead of double-counting. Readers aggregate `counts/`
+  * by token on read; [[graft.operators.Compaction]] applies if small
+  * batch directories accumulate (plain parquet — no bucketing to
+  * preserve here, unlike the dedup index).
   */
 object DriftMonitor {
-
-  private def markerPath(root: String, batchId: Long) =
-    s"$root/_commit_$batchId"
 
   /** Freeze the reference slice's token counts at `refPath` — the drift
     * baseline every batch is compared against. Overwrites.
@@ -53,19 +47,11 @@ object DriftMonitor {
     * committed. Idempotent per (root, batchId).
     */
   def processBatch(batch: DataFrame, batchId: Long, textCol: String,
-      refPath: String, root: String): Unit = {
-    if (FsMeta.exists(markerPath(root, batchId))) return
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    Drift.tokenCounts(batch, textCol, "cnt")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/counts/batch=$batchId")
-    val cum = spark.read.parquet(s"$root/counts")
-      .groupBy("w").agg(sum("cnt").as("cc"))
-    Drift.tokenKlFromCounts(spark.read.parquet(refPath), cum)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/metrics/batch=$batchId")
-    FsMeta.createMarker(markerPath(root, batchId)): Unit
-  }
+      refPath: String, root: String): Unit =
+    BatchCommit.monitorBatch(batch, batchId, root, "counts", "metrics")(
+      Drift.tokenCounts(_, textCol, "cnt"),
+      _.groupBy("w").agg(sum("cnt").as("cc")),
+      Drift.tokenKlFromCounts(batch.sparkSession.read.parquet(refPath), _))
 
   /** Start the monitor: one metrics row per non-empty micro-batch under
     * `root/metrics/` (read with `spark.read.parquet`; `batch_id` marks
@@ -75,11 +61,6 @@ object DriftMonitor {
     */
   def monitorStream(docs: DataFrame, textCol: String, refPath: String,
       root: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatch(batch, bid, textCol, refPath, root)
-      }
-      .start()
+    BatchCommit.start(docs, checkpointDir)(
+      processBatch(_, _, textCol, refPath, root))
 }

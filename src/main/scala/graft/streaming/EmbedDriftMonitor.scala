@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.sources.FsMeta
 
 /** Streaming EMBEDDING-drift monitor — the vector member of the monitor
   * family (DriftMonitor = token KL, BurstMonitor = time, this = the
@@ -22,16 +21,12 @@ import graft.sources.FsMeta
   * batch operator, so stream state and p80 agree at the reported
   * precision (spec-pinned under different trigger sizes).
   *
-  * Crash semantics: DedupIngest/DriftMonitor's per-batch-directory
-  * protocol — `stats/batch=b/` and `metrics/batch=b/` written with
-  * OVERWRITE, `_commit_<b>` marker created last; replays of committed
-  * batches are no-ops, replays of the crash window replace their own
+  * Crash semantics: [[BatchCommit.monitorBatch]], as for
+  * [[DriftMonitor]] — `stats/batch=b/` and `metrics/batch=b/` are
+  * OVERWRITTEN, so replays of the crash window replace their own
   * directories instead of double-counting.
   */
 object EmbedDriftMonitor {
-
-  private def markerPath(root: String, batchId: Long) =
-    s"$root/_commit_$batchId"
 
   /** Per-dim (dim, n, s, ss) sufficient statistics of a vector slice. */
   private[graft] def dimStats(df: DataFrame, embCol: String): DataFrame =
@@ -73,20 +68,12 @@ object EmbedDriftMonitor {
     * rows, mark committed. Idempotent per (root, batchId).
     */
   def processBatch(batch: DataFrame, batchId: Long, embCol: String,
-      refPath: String, root: String): Unit = {
-    if (FsMeta.exists(markerPath(root, batchId))) return
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    dimStats(batch, embCol)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/stats/batch=$batchId")
-    val cum = spark.read.parquet(s"$root/stats")
-      .groupBy("dim")
-      .agg(sum("n").as("n"), sum("s").as("s"), sum("ss").as("ss"))
-    report(spark.read.parquet(refPath), cum)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/metrics/batch=$batchId")
-    FsMeta.createMarker(markerPath(root, batchId)): Unit
-  }
+      refPath: String, root: String): Unit =
+    BatchCommit.monitorBatch(batch, batchId, root, "stats", "metrics")(
+      dimStats(_, embCol),
+      _.groupBy("dim")
+        .agg(sum("n").as("n"), sum("s").as("s"), sum("ss").as("ss")),
+      report(batch.sparkSession.read.parquet(refPath), _))
 
   /** Start the monitor: per-dim metrics rows per non-empty micro-batch
     * under `root/metrics/`; the highest `batch_id` is the current drift
@@ -94,11 +81,6 @@ object EmbedDriftMonitor {
     */
   def monitorStream(vecs: DataFrame, embCol: String, refPath: String,
       root: String, checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatch(batch, bid, embCol, refPath, root)
-      }
-      .start()
+    BatchCommit.start(vecs, checkpointDir)(
+      processBatch(_, _, embCol, refPath, root))
 }

@@ -155,15 +155,13 @@ object MergeSink {
       .foreach(FsMeta.deleteRecursive)
   }
 
-  /** Start the streaming query: events stream → foreachBatch upsert. */
+  /** Start the streaming query: events stream → foreachBatch upsert (the
+    * manifest replay check in [[upsertBatch]] is this sink's commit, not
+    * [[BatchCommit]]'s marker).
+    */
   def latestPerUserSink(events: DataFrame, tableDir: String,
       checkpointDir: String): StreamingQuery = {
     FsMeta.mkdirs(tableDir)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, tableDir, batchId)
-      }
-      .start()
+    BatchCommit.start(events, checkpointDir)(upsertBatch(_, tableDir, _))
   }
 }

@@ -25,7 +25,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.buildIndex(emb.filter(col("vec_id") % 5 =!= 0),
       "vec_id", "embedding", p, path)
     AnnIndex.appendBatch(emb.filter(col("vec_id") % 5 === 0),
-      "vec_id", "embedding", p, path)
+      "vec_id", "embedding", p, path, "b")
     path
   }
 
@@ -89,7 +89,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val preCentroids = graft.sources.FsMeta
       .readString(s"$path/centroids.json")
     AnnIndex.appendBatch(emb.filter(col("vec_id") % 5 === 0),
-      "vec_id", "embedding", p, path)
+      "vec_id", "embedding", p, path, "b")
     assert(graft.sources.FsMeta.readString(s"$path/centroids.json")
       == preCentroids, "append must not refit the quantizer")
     // exhaustive probe sees every appended vector as a candidate
@@ -107,7 +107,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // re-append some of the build's own vectors: each must land exactly
     // where the build put it, so every such nid has two postings in ONE cell
     val again = emb.filter(col("vec_id") % 5 === 1)
-    AnnIndex.appendBatch(again, "vec_id", "embedding", p, path)
+    AnnIndex.appendBatch(again, "vec_id", "embedding", p, path, "again")
     val cells = spark.read.parquet(s"$path/postings")
       .join(again.select(col("vec_id").as("nid")), "nid")
       .groupBy("nid")
@@ -123,7 +123,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val path = builtIndex()
     val wrong = AnnIndex.Params(nlist = 4, dims = 64)
     val e1 = intercept[IllegalArgumentException] {
-      AnnIndex.appendBatch(emb.limit(1), "vec_id", "embedding", wrong, path)
+      AnnIndex.appendBatch(emb.limit(1), "vec_id", "embedding", wrong, path,
+        "b")
     }
     assert(e1.getMessage.contains("index families"))
     val e2 = intercept[IllegalArgumentException] {
@@ -175,7 +176,7 @@ class AnnIndexSpec extends AnyFunSuite {
         .select("nid").distinct().collect().map(_.getLong(0)).toSeq)
     AnnIndex.appendBatch(
       emb.filter(!col("vec_id").isin(victims: _*)), "vec_id",
-      "embedding", p, rebuilt)
+      "embedding", p, rebuilt, "retained")
     assert(exhaustive(rebuilt, queries) == got)
   }
 }

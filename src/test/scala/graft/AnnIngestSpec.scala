@@ -40,7 +40,7 @@ class AnnIngestSpec extends AnyFunSuite {
     // batch twin: bootstrap + one append of everything else
     val batchIdx = tmpDir("batch")
     AnnIndex.buildIndex(boot, "vec_id", "embedding", P, batchIdx)
-    AnnIndex.appendBatch(rest, "vec_id", "embedding", P, batchIdx)
+    AnnIndex.appendBatch(rest, "vec_id", "embedding", P, batchIdx, "all")
 
     // stream twin: same bootstrap, the rest in id-ranged micro-batches
     val root = tmpDir("stream")

@@ -1,20 +1,27 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Fns
 import graft.operators.ClusteredWrite
 
-class ClusteredWriteSpec extends AnyFunSuite {
+class ClusteredWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private lazy val root = Files.createTempDirectory("graft_clustered").toString
+
+  override def afterAll(): Unit =
+    try graft.sources.FsMeta.deleteRecursive(root) finally super.afterAll()
 
   private def parquetFiles(dir: String) =
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
 
   test("file sizing: output file count tracks the byte target") {
     val df = spark.read.parquet(s"${TestSpark.sf001}/lineitem.parquet")
-    val out = "/tmp/graft-clustered-sizing"
+    val out = s"$root/sizing"
     ClusteredWrite.writeClustered(df, out,
       Seq(col("l_orderkey")), targetBytes = 256L << 10)
     val files = parquetFiles(out)
@@ -37,11 +44,11 @@ class ClusteredWriteSpec extends AnyFunSuite {
         s._1 + s._2
       }.max
     }
-    val zOut = "/tmp/graft-clustered-z"
+    val zOut = s"$root/z"
     grid.withColumn("zkey", Fns.zorderKey($"x", $"y"))
       .repartitionByRange(16, $"zkey").sortWithinPartitions("zkey")
       .write.mode("overwrite").parquet(zOut)
-    val rowMajorOut = "/tmp/graft-clustered-rowmajor"
+    val rowMajorOut = s"$root/rowmajor"
     grid.repartitionByRange(16, $"x", $"y").sortWithinPartitions("x", "y")
       .write.mode("overwrite").parquet(rowMajorOut)
     val zBox = worstBBox(zOut)

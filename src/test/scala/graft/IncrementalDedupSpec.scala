@@ -74,7 +74,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     IncrementalDedup.buildIndex(corpus, "doc_id", "text", P, idx)
     val r1 = pairSet(IncrementalDedup.nearDupsAgainstIndex(
       spark, b1, "doc_id", "text", P, idx))
-    IncrementalDedup.appendBatch(b1, "doc_id", "text", P, idx)
+    IncrementalDedup.appendBatch(b1, "doc_id", "text", P, idx, "b1")
     val r2 = pairSet(IncrementalDedup.nearDupsAgainstIndex(
       spark, b2, "doc_id", "text", P, idx))
     // r1 covers pairs touching b1 (within corpus∪b1); r2 covers pairs
@@ -358,9 +358,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val corpus = docs.filter($"doc_id" % 5 =!= 0)
     val b = docs.filter($"doc_id" % 10 === 0)
     IncrementalDedup.buildIndex(corpus, "doc_id", "text", P, idx)
-    // a crashed-append replay: the same batch folded in twice
-    IncrementalDedup.appendBatch(b, "doc_id", "text", P, idx)
-    IncrementalDedup.appendBatch(b, "doc_id", "text", P, idx)
+    // the same batch folded in twice, under two tags: a retry that did
+    // not reuse its tag is a new batch to the staged publish
+    IncrementalDedup.appendBatch(b, "doc_id", "text", P, idx, "try1")
+    IncrementalDedup.appendBatch(b, "doc_id", "text", P, idx, "try2")
     val bandsDir = s"$idx/bands"
     val dupRows = spark.read.parquet(bandsDir).count()
     val distinctRows = spark.read.parquet(bandsDir).distinct().count()

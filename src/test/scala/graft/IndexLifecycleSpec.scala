@@ -37,14 +37,14 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
     val idx1 = tmp("ivf1")
     AnnIndex.buildIndex(a, "vec_id", "embedding", p, idx1)
-    AnnIndex.appendBatch(b, "vec_id", "embedding", p, idx1)
+    AnnIndex.appendBatch(b, "vec_id", "embedding", p, idx1, "b")
     // delete vectors that matter: each query's rank-1 neighbor
     val victims = probe(idx1, p.nlist).filter(_.getInt(3) == 1)
       .map(_.getLong(1)).distinct.take(4).toSeq
     assert(victims.nonEmpty)
     val idx2 = tmp("ivf2")
     AnnIndex.compactIndex(spark, idx1, idx2, dropIds = victims)
-    AnnIndex.appendBatch(c, "vec_id", "embedding", p, idx2)
+    AnnIndex.appendBatch(c, "vec_id", "embedding", p, idx2, "c")
     val idx3 = tmp("ivf3")
     AnnIndex.compactIndex(spark, idx2, idx3)
     // the second deletion tier in the SAME history: a frame-shaped
@@ -66,7 +66,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     AnnIndex.appendBatch(
       emb.filter(!col("vec_id").isin(victims: _*) &&
         !col("vec_id").isin(victim2Set.toSeq: _*)),
-      "vec_id", "embedding", p, fresh)
+      "vec_id", "embedding", p, fresh, "retained")
 
     // probe-for-probe: exact rung AND both approximate rungs
     Seq(1, 2, p.nlist).foreach { np =>
@@ -101,14 +101,14 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
     val idx1 = tmp("mh1")
     IncrementalDedup.buildIndex(corpus, "doc_id", "text", P, idx1)
-    IncrementalDedup.appendBatch(b1, "doc_id", "text", P, idx1)
+    IncrementalDedup.appendBatch(b1, "doc_id", "text", P, idx1, "b1")
     // forget docs that participate in pairs (non-vacuous deletion)
     val victims = pairs(idx1).flatMap(p => Seq(p._1, p._2))
       .filter(_ < 400).take(3).toSeq
     assert(victims.nonEmpty, "fixtures plant near-dups")
     val idx2 = tmp("mh2")
     IncrementalDedup.compactIndex(spark, idx1, idx2, dropIds = victims)
-    IncrementalDedup.appendBatch(b2, "doc_id", "text", P, idx2)
+    IncrementalDedup.appendBatch(b2, "doc_id", "text", P, idx2, "b2")
     val idx3 = tmp("mh3")
     IncrementalDedup.compactIndex(spark, idx2, idx3)
     // the second deletion tier in the SAME history: a frame-shaped

@@ -101,7 +101,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       dropIds = spark.read.parquet(s"$idx/postings")
         .select("nid").distinct().as[Long].collect().toSeq)
     AnnIndex.appendBatch(emb.filter(!col("vec_id").isin(victims: _*)),
-      "vec_id", "embedding", p, fresh)
+      "vec_id", "embedding", p, fresh, "retained")
     val queries = emb.filter(col("vec_id") % 40 === 0)
     Seq(1, p.nlist).foreach { np =>
       val a = AnnIndex.topKAgainstIndex(spark, queries, "vec_id",

@@ -8,7 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * builder block drifts from the others one config line at a time. The
   * same source scan keeps spark.ml out of the engine: every k-means there
   * is graft.operators.Clustering.lloyd, a deterministic, oracle-checked
-  * fit, not a seeded black box.
+  * fit, not a seeded black box. It also keeps one exactly-once batch
+  * commit: the `_commit_<b>` marker and the foreachBatch starter live only
+  * in graft/streaming/BatchCommit.scala, and each persisted index has one
+  * (staged) append.
   */
 class SessionSpec extends AnyFunSuite {
   private def sources(root: String) = {
@@ -31,5 +34,18 @@ class SessionSpec extends AnyFunSuite {
       .filter(p => mlImport.findFirstIn(Files.readString(p)).isDefined)
     assert(mlUsers.isEmpty,
       s"fit k-means with graft.operators.Clustering.lloyd, not spark.ml, in: ${mlUsers.mkString(", ")}")
+  }
+
+  test("batch commits go only through graft/streaming/BatchCommit.scala") {
+    val own = Paths.get("src/main/scala/graft/streaming/BatchCommit.scala")
+    val commitSite = "\"[^\"\n]*_commit_|\\.\\s*foreachBatch\\b".r
+    val main = sources("src/main/scala")
+    val offenders = main.filter(p => p != own &&
+      commitSite.findFirstIn(Files.readString(p)).isDefined)
+    val twins = main.filter(Files.readString(_).contains("appendBatchExactlyOnce"))
+    assert(offenders.isEmpty && twins.isEmpty,
+      s"commit micro-batches through BatchCommit, not in: ${offenders.mkString(", ")}; " +
+        s"each index has one append, appendBatch, so remove the twin in: ${twins.mkString(", ")}")
+    assert(Files.exists(own), s"$own moved: re-point this guard")
   }
 }
