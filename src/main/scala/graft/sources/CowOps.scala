@@ -185,7 +185,10 @@ object CowOps {
 
   /** The table's bloom configuration, recovered from the per-file stats
     * the writers already persist (`#bloom:<col>` keys): which columns
-    * carry blooms, sized to the largest filter seen. COW rewrites pass
+    * carry blooms, and the largest FIXED size seen — None when every
+    * bloom was sized from its file's row count (the
+    * [[GTabBloom.PerFileKey]] marker), so rewrites size theirs the same
+    * way. COW rewrites pass
     * this to the staged write so a merge/delete does not silently strip
     * blooms from rewritten files — correctness would survive (bloom
     * absence is conservative) but q90 point-lookup skipping and COW's
@@ -216,7 +219,7 @@ object CowOps {
       .map(_.stripPrefix(GTabBloom.KeyPrefix)) ++ shardCols)
       .distinct.sorted
     val bits = ((for {
-      f <- census; c <- cols
+      f <- census if !f.stats.contains(GTabBloom.PerFileKey); c <- cols
       (_, b64) <- f.stats.get(GTabBloom.statKey(c))
     } yield GTabBloom.decode(b64).length * 64) ++ shardBits).maxOption
     (cols, bits)

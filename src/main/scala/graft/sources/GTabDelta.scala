@@ -101,8 +101,7 @@ private[sources] class GTabMorOperation(path: String, cmd: Command)
         new DeltaWrite {
           override def toBatch: DeltaBatchWrite =
             new GTabDeltaBatchWrite(GTabMorOperation.this, path, info,
-              bloomCols, bloomBits.getOrElse(GTabBloom.DefaultBits),
-              partCols, ndvCols)
+              bloomCols, bloomBits, partCols, ndvCols)
         }
       }
     }
@@ -125,7 +124,7 @@ private[sources] class GTabMorOperation(path: String, cmd: Command)
   */
 private[sources] class GTabDeltaBatchWrite(op: GTabMorOperation,
     path: String, info: LogicalWriteInfo, bloomCols: Seq[String],
-    bloomBits: Int, partCols: Seq[String], ndvCols: Seq[String])
+    bloomBits: Option[Int], partCols: Seq[String], ndvCols: Seq[String])
     extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(
@@ -219,8 +218,8 @@ private[sources] final case class GTabDeltaCommit(
 
 private[sources] class GTabDeltaWriterFactory(path: String,
     schema: org.apache.spark.sql.types.StructType, queryId: String,
-    confMap: Map[String, String], bloomCols: Seq[String], bloomBits: Int,
-    partCols: Seq[String], ndvCols: Seq[String])
+    confMap: Map[String, String], bloomCols: Seq[String],
+    bloomBits: Option[Int], partCols: Seq[String], ndvCols: Seq[String])
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] = {
@@ -245,7 +244,7 @@ private[sources] class GTabDeltaWriterFactory(path: String,
   */
 private[sources] class GTabDeltaWriter(dir: String,
     schema: org.apache.spark.sql.types.StructType, stem: String,
-    conf: Configuration, bloomCols: Seq[String], bloomBits: Int,
+    conf: Configuration, bloomCols: Seq[String], bloomBits: Option[Int],
     partCols: Seq[String], ndvCols: Seq[String])
     extends DeltaWriter[InternalRow] {
 

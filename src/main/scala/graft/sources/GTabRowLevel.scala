@@ -105,9 +105,7 @@ private[sources] class GTabRowLevelOperation(path: String,
               SortDirection.ASCENDING)).toArray
           override def toBatch: BatchWrite =
             new GTabReplaceBatchWrite(GTabRowLevelOperation.this, path,
-              info, bloomCols,
-              bloomBits.getOrElse(GTabBloom.DefaultBits), partCols,
-              ndvCols)
+              info, bloomCols, bloomBits, partCols, ndvCols)
         }
       }
     }
@@ -121,7 +119,7 @@ private[sources] class GTabRowLevelOperation(path: String,
   */
 private[sources] class GTabReplaceBatchWrite(op: GTabRowLevelOperation,
     path: String, info: LogicalWriteInfo, bloomCols: Seq[String],
-    bloomBits: Int, partCols: Seq[String], ndvCols: Seq[String])
+    bloomBits: Option[Int], partCols: Seq[String], ndvCols: Seq[String])
     extends BatchWrite {
 
   override def createBatchWriterFactory(

@@ -391,10 +391,12 @@ object ManifestTable {
     val bCols = entries
       .flatMap(_.stats.keys.filter(_.startsWith(GTabBloom.KeyPrefix)))
       .map(_.stripPrefix(GTabBloom.KeyPrefix)).distinct.sorted
-    val bBits = entries.flatMap(_.stats.collect {
-      case (k, (_, b64)) if k.startsWith(GTabBloom.KeyPrefix) =>
-        GTabBloom.decode(b64).length * 64
-    }).maxOption.getOrElse(0)
+    // the FIXED size members carry (0: every bloom is sized per file)
+    val bBits = entries.filterNot(_.stats.contains(GTabBloom.PerFileKey))
+      .flatMap(_.stats.collect {
+        case (k, (_, b64)) if k.startsWith(GTabBloom.KeyPrefix) =>
+          GTabBloom.decode(b64).length * 64
+      }).maxOption.getOrElse(0)
     agg("#bloomcols") =
       (bCols.map(escape).mkString(","), bBits.toString)
     agg("#ndvcols") = (entries
@@ -1894,10 +1896,10 @@ private[sources] class GTable(path: String, schema0: StructType,
         s"bloomColumns: '$c' is ${f.dataType.sql} — blooms support " +
           "int/long/string")
     }
+    // absent: every file's bloom is sized from its own row count
     val bloomBits = declaredOrOpt("bloomBits").map(_.toInt)
-      .getOrElse(GTabBloom.DefaultBits)
-    require(bloomBits >= 64 && bloomBits % 64 == 0,
-      s"bloomBits must be a positive multiple of 64, got $bloomBits")
+    bloomBits.foreach(b => require(b >= 64 && b % 64 == 0,
+      s"bloomBits must be a positive multiple of 64, got $b"))
     // catalog-declared partitioning auto-applies; an explicit write
     // option overrides (e.g. a maintenance rewrite changing layout).
     // Several columns (comma-separated) give the date+hour-style layout.
@@ -1953,7 +1955,7 @@ private[sources] object GTabWriteBuilder {
 
 private[sources] class GTabWriteBuilder(path: String, schema: StructType,
     queryId: String, bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = GTabBloom.DefaultBits,
+    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ref: String = "",
     ndvCols: Seq[String] = Seq.empty,
     // no-rename commit mode: data files are BORN under this table
@@ -2007,7 +2009,7 @@ private[sources] class GTabWriteBuilder(path: String, schema: StructType,
 private[sources] class GTabStreamingWrite(path: String, schema: StructType,
     queryId: String, keepPrevious: Boolean,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = GTabBloom.DefaultBits,
+    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ref: String = "",
     ndvCols: Seq[String] = Seq.empty)
     extends StreamingWrite {
@@ -2029,7 +2031,7 @@ private[sources] class GTabStreamingWrite(path: String, schema: StructType,
 private[sources] class GTabStreamingWriterFactory(path: String,
     schema: StructType, queryId: String, confMap: Map[String, String],
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = GTabBloom.DefaultBits,
+    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ndvCols: Seq[String] = Seq.empty)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
@@ -2074,7 +2076,7 @@ private[sources] object GTabCommits {
 private[sources] class GTabBatchWrite(path: String, schema: StructType,
     queryId: String, keepPrevious: Boolean,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = GTabBloom.DefaultBits,
+    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ref: String = "",
     ndvCols: Seq[String] = Seq.empty, dataDir: Option[String] = None,
     commitOp: String = "")
@@ -2098,7 +2100,7 @@ private[sources] class GTabBatchWrite(path: String, schema: StructType,
 private[sources] class GTabWriterFactory(path: String, schema: StructType,
     queryId: String, confMap: Map[String, String],
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = GTabBloom.DefaultBits,
+    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ndvCols: Seq[String] = Seq.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -2119,7 +2121,7 @@ private[sources] object GTabWriters {
     * extension (the partitioned writer suffixes a segment ordinal).
     */
   def create(dir: String, schema: StructType, stem: String,
-      conf: Configuration, bloomCols: Seq[String], bloomBits: Int,
+      conf: Configuration, bloomCols: Seq[String], bloomBits: Option[Int],
       partCols: Seq[String], ndvCols: Seq[String] = Seq.empty)
       : DataWriter[InternalRow] =
     if (partCols.isEmpty)
@@ -2137,7 +2139,7 @@ private[sources] object GTabWriters {
   */
 private[sources] class GTabPartitionedWriter(dir: String,
     schema: StructType, stem: String, conf: Configuration,
-    bloomCols: Seq[String], bloomBits: Int, partCols: Seq[String],
+    bloomCols: Seq[String], bloomBits: Option[Int], partCols: Seq[String],
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
   private val encs: Seq[InternalRow => String] = partCols.map { c =>
@@ -2192,7 +2194,7 @@ private[sources] class GTabPartitionedWriter(dir: String,
 private[sources] class GTabWriter(dir: String, schema: StructType,
     fileName: String, conf: Configuration,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = GTabBloom.DefaultBits,
+    bloomBits: Option[Int] = None,
     extraStats: Map[String, (String, String)] = Map.empty,
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
@@ -2256,8 +2258,12 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
           else (statLoL(j).toString, statHiL(j).toString))
     }.toMap ++ bloomIx.indices.map { j =>
       GTabBloom.statKey(bloomCols(j)) ->
-        (GTabBloom.NumHashes.toString, GTabBloom.encode(bloomWords(j)))
-    } ++ ndvIx.indices.map { j =>
+        (GTabBloom.NumHashes.toString, GTabBloom.encode(bloomBits match {
+          case Some(_) => bloomWords(j)
+          case None => GTabBloom.fold(bloomWords(j), GTabBloom.bitsFor(rows))
+        }))
+    } ++ (if (bloomIx.isEmpty || bloomBits.isDefined) Nil
+      else Seq(GTabBloom.PerFileKey -> ("1", ""))) ++ ndvIx.indices.map { j =>
       val hs = new Array[Long](ndvSets(j).size)
       val it = ndvSets(j).iterator()
       var i = 0
@@ -2299,11 +2305,14 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
   }
 
   // per-file point-lookup blooms (GTabBloom scaladoc); nulls never set
-  // bits — IsNull filters are not bloom-skippable
+  // bits — IsNull filters are not bloom-skippable. Without a fixed
+  // `bloomBits` the keys go into a MaxBits bitmap that commit folds down
+  // to the file's own size
   private val bloomIx: Array[Int] =
     bloomCols.map(c => schema.fieldIndex(c)).toArray
   private val bloomWords: Array[Array[Long]] =
-    bloomIx.map(_ => new Array[Long](bloomBits / 64))
+    bloomIx.map(_ => new Array[Long](
+      bloomBits.getOrElse(GTabBloom.MaxBits) / 64))
   private def trackBloom(row: InternalRow): Unit = {
     var j = 0
     while (j < bloomIx.length) {
@@ -2388,19 +2397,24 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
   }
   private var pruned: StructType = manifest.schema
   private var skipping: Array[Filter] = Array.empty
+  private var exact: Array[Filter] = Array.empty
   private var sawFilters = false
   private var pushedCount = false
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     pruned = requiredSchema
 
-  /** File skipping, not row filtering: every filter stays RESIDUAL (Spark
-    * re-evaluates row-level — exactness never depends on the zone maps),
-    * but range/equality/in predicates on stats-carrying columns
-    * additionally prune whole manifest entries whose [min, max] cannot
-    * satisfy them. The Delta/Iceberg data-skipping shape; with a
-    * range-clustered layout (repartitionByRange / ZOrderKey before the
-    * write) a selective predicate reads O(matching files), not O(table).
+  /** File skipping plus exact row filtering. Range/equality/in
+    * predicates on stats-carrying columns prune whole manifest entries
+    * whose zone map or bloom cannot satisfy them (the Delta/Iceberg
+    * data-skipping shape; with a range-clustered layout a selective
+    * predicate reads O(matching files), not O(table)). The shapes
+    * [[GTabExact]] handles are then evaluated by the reader itself, on
+    * each row, and are NOT returned: the literal stays data in the scan,
+    * so Spark plans no FilterExec and a new key compiles no new class.
+    * Everything else stays residual. A row-level operation's scan
+    * (`onPlan`) and a `files` read return every filter residual: a
+    * group rewrite must see every row of the files it replaces.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     sawFilters = filters.nonEmpty
@@ -2409,9 +2423,11 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
     // the files that carry the predicate's column as a partition key
     skipping = filters.filter(GTabSkip.usable(_, manifest.schema,
       ManifestTable.anyPartitionColumns(manifest)))
-    filters
+    if (onPlan.isEmpty && only.isEmpty)
+      exact = filters.filter(GTabExact.handles(_, manifest.schema))
+    filters.filterNot(exact.contains)
   }
-  override def pushedFilters(): Array[Filter] = skipping
+  override def pushedFilters(): Array[Filter] = exact
 
   /** Metadata-only COUNT(*): the manifest already carries exact per-file
     * row counts (they double as the truncation check), so an unfiltered
@@ -2438,8 +2454,8 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
 
   override def build(): Scan =
     if (pushedCount) new GTabCountScan(path, manifest)
-    else new GTabScan(path, manifest, pruned, skipping, FsMeta.confAsMap(),
-      streamOpts, ref, onPlan)
+    else new GTabScan(path, manifest, pruned, skipping, exact.toSeq,
+      FsMeta.confAsMap(), streamOpts, ref, onPlan)
 }
 
 /** Conservative zone-map evaluation: `keep` answers "could this file
@@ -2464,16 +2480,45 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
   * name, older readers treat the entries as stats for a column no filter
   * references, and the manifest format needs no version bump. Written
   * only when the writer is asked (`.option("bloomColumns", "c1,c2")`,
-  * int/long/string columns; `.option("bloomBits", n)` sizes the filter,
-  * default 4096 bits ≈ 0.5 KB/file/column — at ~3k rows/file that is
-  * ~1% FPP with 6 hashes; size up for bigger files).
+  * int/long/string columns). By default each file's bloom is sized from
+  * its own row count ([[bitsFor]]: a power of two with at least 10 bits
+  * per row, about 1% FPP with 6 hashes, capped at [[MaxBits]] — 16 KiB
+  * per file and column, so files past ~13k rows see a higher FPP) and
+  * the file carries the [[PerFileKey]] marker. `.option("bloomBits", n)`
+  * (or the table property) fixes every file's size instead; rewrites
+  * recover a fixed size from the unmarked files ([[CowOps.bloomConfig]]).
   */
 private[graft] object GTabBloom {
   val KeyPrefix = "#bloom:"
   val NumHashes = 6
-  val DefaultBits = 4096
+  val BitsPerRow = 10
+  val MaxBits: Int = 1 << 17
+  /** Stats key of a file whose blooms were sized from its row count. */
+  val PerFileKey = "#bloomrows"
 
   def statKey(col: String): String = KeyPrefix + col
+
+  /** The per-file size: the smallest power of two holding [[BitsPerRow]]
+    * bits per row, within [64, [[MaxBits]]].
+    */
+  def bitsFor(rows: Long): Int = {
+    val want = math.max(64L, math.min(MaxBits.toLong, rows * BitsPerRow))
+    val p = java.lang.Long.highestOneBit(want)
+    (if (p == want) p else p << 1).toInt
+  }
+
+  /** `words` OR-folded down to `bits` (a power of two dividing its size).
+    * Bit positions are `h mod size`, and `(h mod 2^a) mod 2^b == h mod
+    * 2^b` for b <= a, so the fold is exactly the bitmap a `bits`-sized
+    * bloom would have built from the same keys.
+    */
+  def fold(words: Array[Long], bits: Int): Array[Long] = {
+    val n = bits / 64
+    val out = java.util.Arrays.copyOf(words, n)
+    var i = n
+    while (i < words.length) { out(i % n) |= words(i); i += 1 }
+    out
+  }
 
   /** FNV-1a 64 + avalanche for strings (KmvDistinct's construction);
     * integral values feed BloomUtil (which mixes) directly.
@@ -2683,6 +2728,87 @@ private[graft] object GTabSkip {
     }
 }
 
+/** Exact in-scan predicates: the top-level filters [[GTabReader]]
+  * evaluates itself on a line's split fields, before it parses the other
+  * columns or builds the row. Handled: `=`, `IN`, `<`, `<=`, `>`, `>=`
+  * with non-null literals of the column's own type, and `IS NOT NULL`,
+  * on int, long and binary-collation string columns. Strings compare as
+  * UTF-8 bytes, as Spark's binary collation does. Doubles stay residual:
+  * Spark's NaN and -0.0 rules are not Java's. A null value, or a file
+  * written before the column existed, satisfies none of them, as in SQL.
+  */
+private[graft] object GTabExact {
+
+  def handles(f: Filter, schema: StructType): Boolean = f match {
+    case EqualTo(c, v) => lit(schema, c, v).isDefined
+    case LessThan(c, v) => lit(schema, c, v).isDefined
+    case LessThanOrEqual(c, v) => lit(schema, c, v).isDefined
+    case GreaterThan(c, v) => lit(schema, c, v).isDefined
+    case GreaterThanOrEqual(c, v) => lit(schema, c, v).isDefined
+    case In(c, vs) => vs.nonEmpty && vs.forall(lit(schema, c, _).isDefined)
+    case IsNotNull(c) => typeOf(schema, c).isDefined
+    case _ => false
+  }
+
+  private def typeOf(schema: StructType, c: String): Option[DataType] =
+    schema.fields.find(_.name == c).map(_.dataType)
+      .filter(dt => dt == IntegerType || dt == LongType || dt == StringType)
+
+  /** A literal as the reader compares it: Long for int and long columns,
+    * UTF8String for strings; None for any other literal type.
+    */
+  private def lit(schema: StructType, c: String, v: Any): Option[Any] =
+    (typeOf(schema, c), v) match {
+      case (Some(IntegerType), n: java.lang.Integer) => Some(n.longValue)
+      case (Some(LongType), n: java.lang.Long) => Some(n.longValue)
+      case (Some(StringType), s: String) => Some(UTF8String.fromString(s))
+      case _ => None
+    }
+
+  /** Handled filters `fs` as one test over a line's fields, for a file
+    * whose columns are `cols`.
+    */
+  def compile(fs: Seq[Filter], schema: StructType,
+      cols: Seq[String]): Array[String] => Boolean = {
+    val tests = fs.map { f =>
+      val c = f.references.head
+      val ix = cols.indexOf(c)
+      val test: String => Boolean = typeOf(schema, c).get match {
+        case StringType =>
+          val p = pred[UTF8String](f, schema, _.binaryCompare(_))
+          raw => p(UTF8String.fromString(ManifestTable.unescape(raw)))
+        case _ =>
+          val p = pred[Long](f, schema, java.lang.Long.compare)
+          raw => p(java.lang.Long.parseLong(raw))
+      }
+      (parts: Array[String]) => ix >= 0 && {
+        val raw = parts(ix)
+        raw != ManifestTable.Null && test(raw)
+      }
+    }.toArray
+    parts => {
+      var i = 0
+      while (i < tests.length && tests(i)(parts)) i += 1
+      i == tests.length
+    }
+  }
+
+  private def pred[T](f: Filter, schema: StructType,
+      cmp: (T, T) => Int): T => Boolean = {
+    def l(c: String, v: Any): T = lit(schema, c, v).get.asInstanceOf[T]
+    f match {
+      case EqualTo(c, v) => val x = l(c, v); cmp(_, x) == 0
+      case LessThan(c, v) => val x = l(c, v); cmp(_, x) < 0
+      case LessThanOrEqual(c, v) => val x = l(c, v); cmp(_, x) <= 0
+      case GreaterThan(c, v) => val x = l(c, v); cmp(_, x) > 0
+      case GreaterThanOrEqual(c, v) => val x = l(c, v); cmp(_, x) >= 0
+      case In(c, vs) => val xs = vs.toSet.map(l(c, _: Any)); xs.contains
+      case IsNotNull(_) => _ => true
+      case other => throw new IllegalStateException(s"unhandled: $other")
+    }
+  }
+}
+
 /** One-row scan answering an unfiltered COUNT(*) from manifest metadata. */
 private[sources] class GTabCountScan(path: String,
     manifest: ManifestTable.Manifest) extends Scan with Batch {
@@ -2779,7 +2905,7 @@ private[sources] final case class GTabGroupPartition(
 
 private[graft] class GTabScan(path: String,
     manifest: ManifestTable.Manifest, pruned: StructType,
-    skipping: Seq[Filter], confMap: Map[String, String],
+    skipping: Seq[Filter], exact: Seq[Filter], confMap: Map[String, String],
     streamOpts: GTabStreamOpts = GTabStreamOpts(None, false),
     ref: String = "",
     onPlan: Option[(Long, Set[String]) => Unit] = None)
@@ -3005,7 +3131,7 @@ private[graft] class GTabScan(path: String,
         ManifestTable.partitionOf(path, f): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GTabReaderFactory(manifest.schema, pruned, confMap)
+    new GTabReaderFactory(manifest.schema, pruned, confMap, exact)
   override def toMicroBatchStream(checkpointLocation: String)
       : MicroBatchStream = {
     asStream = true
@@ -3013,7 +3139,7 @@ private[graft] class GTabScan(path: String,
       "audit staging area, not a stream source — fastForward it and " +
       "stream the table")
     new GTabMicroBatchStream(path, manifest.schema, pruned, skipping,
-      confMap, streamOpts)
+      exact, confMap, streamOpts)
   }
 }
 
@@ -3051,8 +3177,8 @@ private[sources] case class GTabOffset(version: Long) extends Offset {
 }
 
 private[sources] class GTabMicroBatchStream(path: String, full: StructType,
-    pruned: StructType, skipping: Seq[Filter], confMap: Map[String, String],
-    opts: GTabStreamOpts)
+    pruned: StructType, skipping: Seq[Filter], exact: Seq[Filter],
+    confMap: Map[String, String], opts: GTabStreamOpts)
     extends MicroBatchStream with SupportsAdmissionControl {
   import ManifestTable._
 
@@ -3164,19 +3290,19 @@ private[sources] class GTabMicroBatchStream(path: String, full: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GTabReaderFactory(full, pruned, confMap)
+    new GTabReaderFactory(full, pruned, confMap, exact)
 }
 
 private[sources] class GTabReaderFactory(full: StructType,
-    pruned: StructType, confMap: Map[String, String])
+    pruned: StructType, confMap: Map[String, String], exact: Seq[Filter])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val conf = new Configuration(false)
     confMap.foreach { case (k, v) => conf.set(k, v) }
     p match {
-      case gp: GTabPartition => new GTabReader(gp, full, pruned, conf)
+      case gp: GTabPartition => new GTabReader(gp, full, pruned, conf, exact)
       case gg: GTabGroupPartition =>
-        new GTabGroupReader(gg.parts, full, pruned, conf)
+        new GTabGroupReader(gg.parts, full, pruned, conf, exact)
       case other => throw new IllegalStateException(
         s"unexpected partition type: ${other.getClass.getName}")
     }
@@ -3188,15 +3314,15 @@ private[sources] class GTabReaderFactory(full: StructType,
   * merge (delegated to [[GTabReader]]).
   */
 private[sources] class GTabGroupReader(parts: Seq[GTabPartition],
-    full: StructType, pruned: StructType, conf: Configuration)
-    extends PartitionReader[InternalRow] {
+    full: StructType, pruned: StructType, conf: Configuration,
+    exact: Seq[Filter]) extends PartitionReader[InternalRow] {
   private val it = parts.iterator
   private var cur: GTabReader = _
   override def next(): Boolean = {
     while (true) {
       if (cur == null) {
         if (!it.hasNext) return false
-        cur = new GTabReader(it.next(), full, pruned, conf)
+        cur = new GTabReader(it.next(), full, pruned, conf, exact)
       }
       if (cur.next()) return true
       cur.close()
@@ -3209,7 +3335,7 @@ private[sources] class GTabGroupReader(parts: Seq[GTabPartition],
 }
 
 private[sources] class GTabReader(p: GTabPartition, full: StructType,
-    pruned: StructType, conf: Configuration)
+    pruned: StructType, conf: Configuration, exact: Seq[Filter])
     extends PartitionReader[InternalRow] {
   private val hp = new HPath(p.file)
   private val fs = { val f = hp.getFileSystem(conf)
@@ -3279,6 +3405,10 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
       all
     }
 
+  // the scan's exact predicates against THIS file's layout; null = none
+  private val matches: Array[String] => Boolean =
+    if (exact.isEmpty) null else GTabExact.compile(exact, full, p.cols)
+
   private def dvDeleted(parts: Array[String]): Boolean = {
     var d = 0
     while (d < dvs.length) {
@@ -3307,14 +3437,16 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
           s"${p.file}: CRC mismatch vs manifest — corrupted data file")
         return false
       }
-      crc.update((line + "\n").getBytes(StandardCharsets.UTF_8))
+      crc.update(line.getBytes(StandardCharsets.UTF_8))
+      crc.update('\n')
       rows += 1
       val ordinal = rows - 1 // 0-based physical position == `_pos`
       val posDeleted = posDv.length > 0 &&
         java.util.Arrays.binarySearch(posDv, ordinal) >= 0
       if (!posDeleted) {
         val parts = line.split("\t", -1)
-        if (dvs.isEmpty || !dvDeleted(parts)) {
+        if ((dvs.isEmpty || !dvDeleted(parts)) &&
+            (matches == null || matches(parts))) {
           val vals = new Array[Any](colIx.length)
           var j = 0
           while (j < colIx.length) {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.ManifestTable
+import graft.sources.{GTabBloom, ManifestTable}
 
 /** Per-file bloom point-lookup skipping (q90): on a hash-scattered
   * layout — where zone maps cannot prune anything — equality and IN
@@ -104,6 +104,55 @@ class BloomSkipSpec extends AnyFunSuite {
     val m2 = ManifestTable.readManifest(dir).get
     assert(m2.files.forall(f =>
       !f.stats.keys.exists(_.startsWith("#bloom:"))))
+  }
+
+  test("blooms sized per file keep 3,000-row files prunable") {
+    val dir = tmp()
+    spark.range(0, 24000).select($"id", concat(lit("name-"), $"id").as("s"))
+      .repartition(8, $"id")
+      .write.format(Fmt).option("path", dir)
+      .option("bloomColumns", "id").mode(SaveMode.Append).save()
+    val m = ManifestTable.readManifest(dir).get
+    assert(m.files.size == 8 && m.files.forall(_.rows > 2500))
+    // 10+ bits per row: a 3,000-row file gets 32,768 bits, not 4,096
+    assert(m.files.forall(f => f.stats.contains(GTabBloom.PerFileKey) &&
+      GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
+        GTabBloom.bitsFor(f.rows)))
+    Seq(7L, 1234L, 9999L, 17000L, 23999L).foreach { k =>
+      val eq = spark.read.format(Fmt).option("path", dir).load()
+        .filter($"id" === k)
+      assert(eq.count() == 1)
+      val (read, total) = filesRead(eq)
+      assert(total == 8 && read <= 2, s"key $k read $read/8 files")
+    }
+  }
+
+  test("a folded bloom is the bloom built at the smaller size") {
+    val rnd = new scala.util.Random(3)
+    val keys = Seq.fill(500)(rnd.nextLong())
+    def built(bits: Int) = {
+      val w = new Array[Long](bits / 64)
+      keys.foreach(graft.functions.BloomUtil.set(w, _, GTabBloom.NumHashes))
+      w.toSeq
+    }
+    val big = built(GTabBloom.MaxBits).toArray
+    Seq(64, 1024, 8192, GTabBloom.MaxBits).foreach(bits =>
+      assert(GTabBloom.fold(big, bits).toSeq == built(bits)))
+    assert(GTabBloom.bitsFor(0) == 64 && GTabBloom.bitsFor(3000) == 32768 &&
+      GTabBloom.bitsFor(6553) == 65536 && GTabBloom.bitsFor(10L << 20) ==
+        GTabBloom.MaxBits)
+  }
+
+  test("rewrites size their blooms per file too") {
+    val dir = tmp()
+    build(dir, bloom = "id")
+    ManifestTable.compact(spark, dir, targetFiles = 2)
+    val m = ManifestTable.readManifest(dir).get
+    assert(m.files.size == 2 && m.files.forall(f =>
+      f.stats.contains(GTabBloom.PerFileKey) &&
+        GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
+          GTabBloom.bitsFor(f.rows)))
+    assert(graft.sources.CowOps.bloomConfig(m) == (Seq("id"), None))
   }
 
   test("write-time validation: unknown column and unsupported type fail fast") {
