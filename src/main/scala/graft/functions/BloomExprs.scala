@@ -22,26 +22,57 @@ object BloomUtil {
     z ^ (z >>> 31)
   }
 
+  /** FNV-1a 64 + splitmix64 finalizer for strings: FNV alone is too
+    * structured (low bits correlate on short keys). Integral keys go to
+    * [[set]] / [[mightContain]] directly, which mix them.
+    */
+  def hashString(s: String): Long = {
+    var h = 0xcbf29ce484222325L
+    var i = 0
+    while (i < s.length) { h ^= s.charAt(i).toLong; h *= 0x100000001b3L; i += 1 }
+    h ^= h >>> 30; h *= 0xbf58476d1ce4e5b9L
+    h ^= h >>> 27; h *= 0x94d049bb133111ebL
+    h ^ (h >>> 31)
+  }
+
+  /** Bit position `i` of a key whose hashes are `h1` and odd `h2`. */
+  private def position(h1: Long, h2: Long, i: Int, numBits: Int): Int =
+    java.lang.Long.remainderUnsigned(h1 + i * h2, numBits).toInt
+
   def set(words: Array[Long], key: Long, numHashes: Int): Unit = {
     val numBits = words.length * 64
     val h1 = mix64(key)
     val h2 = mix64(h1) | 1L // odd => h_i cycles all positions
     var i = 0
     while (i < numHashes) {
-      val idx = java.lang.Long.remainderUnsigned(h1 + i * h2, numBits).toInt
+      val idx = position(h1, h2, i, numBits)
       words(idx >>> 6) |= (1L << (idx & 63))
       i += 1
     }
   }
 
+  /** The codegen'd probe: reads the broadcast bitmap in place. */
   def mightContain(words: ArrayData, key: Long, numHashes: Int): Boolean = {
     val numBits = words.numElements() * 64
     val h1 = mix64(key)
     val h2 = mix64(h1) | 1L
     var i = 0
     while (i < numHashes) {
-      val idx = java.lang.Long.remainderUnsigned(h1 + i * h2, numBits).toInt
+      val idx = position(h1, h2, i, numBits)
       if ((words.getLong(idx >>> 6) & (1L << (idx & 63))) == 0L) return false
+      i += 1
+    }
+    true
+  }
+
+  def mightContain(words: Array[Long], key: Long, numHashes: Int): Boolean = {
+    val numBits = words.length * 64
+    val h1 = mix64(key)
+    val h2 = mix64(h1) | 1L
+    var i = 0
+    while (i < numHashes) {
+      val idx = position(h1, h2, i, numBits)
+      if ((words(idx >>> 6) & (1L << (idx & 63))) == 0L) return false
       i += 1
     }
     true

@@ -127,19 +127,12 @@ class KmvDistinct(capacity: Int)
     extends Aggregator[String, KmvBuf, Long] {
   require(capacity >= 2, s"capacity must be >= 2, got $capacity")
 
-  /** FNV-1a 64 + splitmix64 finalizer: FNV alone is too structured for
-    * the saturated estimator (low bits correlate on short keys); the
-    * avalanche makes the hash behave uniform in the unsigned unit
-    * interval, which the (capacity-1)/u_k estimator assumes.
+  /** [[BloomUtil.hashString]]: its avalanche makes the hash behave
+    * uniform in the unsigned unit interval, which the (capacity-1)/u_k
+    * estimator assumes.
     */
-  private def h64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i).toLong; h *= 0x100000001b3L; i += 1 }
-    h ^= h >>> 30; h *= 0xbf58476d1ce4e5b9L
-    h ^= h >>> 27; h *= 0x94d049bb133111ebL
-    (h ^ (h >>> 31)) ^ Long.MinValue // unsigned-order representation
-  }
+  private def h64(s: String): Long =
+    BloomUtil.hashString(s) ^ Long.MinValue // unsigned-order representation
 
   private def compact(hs: Seq[Long]): Seq[Long] =
     hs.distinct.sorted.take(capacity)

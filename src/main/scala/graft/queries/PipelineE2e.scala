@@ -35,9 +35,9 @@ object PipelineE2e {
 
   /** The chain's stage frames, LAZY so a prefix costs only its prefix
     * (componentLabels and contiguousIds run eagerly when touched):
-    * the QueryDef runs `account`; Bench's per-stage e2e attribution and
-    * the DbgP92 tool time each prefix on a FRESH Chain so the eager
-    * stages re-run inside the timed window.
+    * the QueryDef runs `account`; Bench's per-stage e2e attribution
+    * times each prefix on a FRESH Chain so the eager stages re-run
+    * inside the timed window.
     */
   final class Chain(s: org.apache.spark.sql.SparkSession, dir: String) {
     private val allDocs = Tables.t(s, dir, "documents")

@@ -65,7 +65,8 @@ object AnalyzeNdv {
                   graft.functions.BloomUtil.mix64(r.getInt(ix).toLong)
                 case LongType =>
                   graft.functions.BloomUtil.mix64(r.getLong(ix))
-                case StringType => GTabBloom.hashString(r.getString(ix))
+                case StringType =>
+                  graft.functions.BloomUtil.hashString(r.getString(ix))
                 case other =>
                   throw new IllegalStateException(s"unreachable: $other")
               }

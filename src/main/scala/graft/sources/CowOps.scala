@@ -80,18 +80,20 @@ object CowOps {
     throw last
   }
 
-  /** Commit `added` replacing `affected`, cleaning up the staged files
-    * if the commit loses the CAS (they are unreferenced; deleting keeps
-    * the data dir free of loser debris rather than waiting on vacuum).
+  /** Commit `added` replacing `affected`, cleaning up what this attempt
+    * wrote if the commit loses the CAS: the new data files (entries not
+    * already in `affected` — a deletion-vectored entry keeps its name)
+    * and the `sidecars`. They are unreferenced; deleting keeps the data
+    * dir free of loser debris rather than waiting on vacuum.
     */
   private def commitOrCleanup(dir: String, m: ManifestTable.Manifest,
-      affected: Seq[String], added: Seq[ManifestTable.FileEntry],
-      ref: String = "", op: String = "replace-files"): Long = {
+      affected: Set[String], added: Seq[ManifestTable.FileEntry],
+      ref: String, op: String, sidecars: Seq[String] = Nil): Long = {
     beforeCommitHook()
-    try ManifestTable.commitReplace(dir, m.version, affected.toSet, added,
-      ref, op)
+    try ManifestTable.commitReplace(dir, m.version, affected, added, ref, op)
     catch { case e: ManifestTable.ConcurrentCommitException =>
-      added.foreach(a => FsMeta.deleteRecursive(s"$dir/data/${a.name}"))
+      (added.map(_.name).filterNot(affected) ++ sidecars)
+        .foreach(n => FsMeta.deleteRecursive(s"$dir/data/$n"))
       throw e
     }
   }
@@ -183,69 +185,36 @@ object CowOps {
       (if (ref.isEmpty) r else r.option("branch", ref)).load()
     }
 
-  /** The table's bloom configuration, recovered from the per-file stats
-    * the writers already persist (`#bloom:<col>` keys): which columns
-    * carry blooms, and the largest FIXED size seen — None when every
-    * bloom was sized from its file's row count (the
-    * [[GTabBloom.PerFileKey]] marker), so rewrites size theirs the same
-    * way. COW rewrites pass
-    * this to the staged write so a merge/delete does not silently strip
-    * blooms from rewritten files — correctness would survive (bloom
-    * absence is conservative) but q90 point-lookup skipping and COW's
-    * own bloom-localized affected set would degrade permanently after
-    * the first rewrite.
+  /** The columns whose per-file stats carry `prefix` — blooms
+    * ([[GTabBloom.KeyPrefix]]) or NDV sketches
+    * ([[ManifestTable.NdvPrefix]]) — recovered from the stats the writers
+    * already persist. Rewrites pass them to the staged write so a COW
+    * merge/delete or a compaction does not silently strip the skipping
+    * structures or the optimizer statistics: correctness would survive
+    * (a missing bloom is conservative), but q90 point-lookup skipping,
+    * COW's own bloom-localized affected set and join reordering would
+    * degrade permanently after the first rewrite. Only columns still in
+    * the live schema count (a rename/drop may have retired the name).
     */
-  private[graft] def bloomConfig(
-      m: ManifestTable.Manifest): (Seq[String], Option[Int]) = {
+  private[graft] def censusColumns(m: ManifestTable.Manifest,
+      prefix: String): Seq[String] = {
     // sharded table with census keys: the shard refs already carry the
-    // member bloom-column names and max bits — zero decodes (absence of
-    // the key marks a pre-census shard; fall back to the exact scan)
-    val census: Seq[ManifestTable.FileEntry] =
-      if (m.shards.isEmpty || !m.shards.forall(_.agg.contains("#bloomcols")))
-        m.files
-      else m.inline
-    val shardCols =
-      if (m.shards.forall(_.agg.contains("#bloomcols")))
-        m.shards.flatMap(_.agg("#bloomcols")._1.split(","))
-          .filter(_.nonEmpty).map(ManifestTable.unescape)
-      else Nil
-    val shardBits =
-      if (m.shards.forall(_.agg.contains("#bloomcols")))
-        m.shards.flatMap(_.agg("#bloomcols")._2.toIntOption)
-          .filter(_ > 0).maxOption
-      else None
-    val cols = (census.flatMap(_.stats.keys)
-      .filter(_.startsWith(GTabBloom.KeyPrefix))
-      .map(_.stripPrefix(GTabBloom.KeyPrefix)) ++ shardCols)
-      .distinct.sorted
-    val bits = ((for {
-      f <- census if !f.stats.contains(GTabBloom.PerFileKey); c <- cols
-      (_, b64) <- f.stats.get(GTabBloom.statKey(c))
-    } yield GTabBloom.decode(b64).length * 64) ++ shardBits).maxOption
-    (cols, bits)
-  }
-
-  /** The table's NDV-sketch configuration, recovered like [[bloomConfig]]
-    * — rewrites pass it through so a COW merge/delete (or compaction)
-    * does not silently strip the column statistics the optimizer's join
-    * reordering runs on. Only columns still in the live schema count
-    * (a rename/drop may have retired the name).
-    */
-  private[graft] def ndvConfig(m: ManifestTable.Manifest): Seq[String] = {
-    val census: Seq[ManifestTable.FileEntry] =
-      if (m.shards.isEmpty || !m.shards.forall(_.agg.contains("#ndvcols")))
-        m.files
-      else m.inline
-    val shardCols =
-      if (m.shards.forall(_.agg.contains("#ndvcols")))
-        m.shards.flatMap(_.agg("#ndvcols")._1.split(","))
-          .filter(_.nonEmpty).map(ManifestTable.unescape)
-      else Nil
-    (census.flatMap(_.stats.keys)
-      .filter(_.startsWith(ManifestTable.NdvPrefix))
-      .map(_.stripPrefix(ManifestTable.NdvPrefix)) ++ shardCols)
+    // member column names — zero decodes (absence of the key marks a
+    // pre-census shard; fall back to the exact scan)
+    val key = CensusKeys(prefix)
+    val (entries, shardCols) =
+      if (m.shards.isEmpty || !m.shards.forall(_.agg.contains(key)))
+        (m.files, Nil)
+      else (m.inline, m.shards.flatMap(_.agg(key)._1.split(","))
+        .filter(_.nonEmpty).map(ManifestTable.unescape))
+    (entries.flatMap(_.stats.keys).filter(_.startsWith(prefix))
+      .map(_.stripPrefix(prefix)) ++ shardCols)
       .filter(m.schema.fieldNames.contains).distinct.sorted
   }
+
+  /** Stat prefix -> the shard-census key listing its columns. */
+  private val CensusKeys = Map(GTabBloom.KeyPrefix -> "#bloomcols",
+    ManifestTable.NdvPrefix -> "#ndvcols")
 
   /** Shape a rewrite/insert row set before staging: range-partitioned
     * and sorted on the key into at most `nFiles` files. Without this,
@@ -261,31 +230,34 @@ object CowOps {
     rows.repartitionByRange(math.max(1, nFiles), col(keyCol))
       .sortWithinPartitions(keyCol)
 
-  /** The skipping/statistics configuration a REWRITE must apply: the
-    * union of what the files already carry ([[bloomConfig]]/[[ndvConfig]]
-    * — a rewrite never strips structures) and what the catalog DECLARES
-    * in `_TBLMETA` (TBLPROPERTIES). The union is the ADOPTION path: a
-    * property SET after the data landed reaches existing files exactly
-    * here — at their next compaction / COW / MOR rewrite — closing the
-    * chicken-and-egg a file-derived-only config would have (no file
-    * carries the bloom yet, so no rewrite would ever add it). Only
-    * live-schema columns count.
+  /** The skipping/statistics configuration a REWRITE must apply — bloom
+    * and NDV columns: the union of what the files already carry
+    * ([[censusColumns]] — a rewrite never strips structures) and what
+    * the catalog DECLARES in `_TBLMETA` (TBLPROPERTIES). The union is
+    * the ADOPTION path: a property SET after the data landed reaches
+    * existing files exactly here — at their next compaction / COW / MOR
+    * rewrite — closing the chicken-and-egg a file-derived-only config
+    * would have (no file carries the bloom yet, so no rewrite would ever
+    * add it). Only live-schema columns count.
     */
   private[sources] def effectiveSkipConfig(dir: String,
-      m: ManifestTable.Manifest)
-      : (Seq[String], Option[Int], Seq[String]) = {
+      m: ManifestTable.Manifest): (Seq[String], Seq[String]) = {
     val props = TblMeta.properties(dir)
-    def declared(key: String): Seq[String] = props.get(key)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val (fileBloom, fileBits) = bloomConfig(m)
-    val bloomCols = (fileBloom ++ declared(GTabProps.BloomColumns))
-      .distinct.sorted.filter(m.schema.fieldNames.contains)
-    val bits = props.get(GTabProps.BloomBits).flatMap(_.toIntOption)
-      .orElse(fileBits)
-    val ndvCols = (ndvConfig(m) ++ declared(GTabProps.NdvColumns))
-      .distinct.sorted.filter(m.schema.fieldNames.contains)
-    (bloomCols, bits, ndvCols)
+    def cols(prefix: String, prop: String): Seq[String] =
+      (censusColumns(m, prefix) ++ props.get(prop).toSeq
+        .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
+        .distinct.sorted.filter(m.schema.fieldNames.contains)
+    (cols(GTabBloom.KeyPrefix, GTabProps.BloomColumns),
+      cols(ManifestTable.NdvPrefix, GTabProps.NdvColumns))
+  }
+
+  /** [[effectiveSkipConfig]] as the write options of a rewrite. */
+  private[sources] def skipOptions(dir: String,
+      m: ManifestTable.Manifest): Map[String, String] = {
+    val (bloomCols, ndvCols) = effectiveSkipConfig(dir, m)
+    Map("bloomColumns" -> bloomCols, "ndvColumns" -> ndvCols).collect {
+      case (k, cs) if cs.nonEmpty => k -> cs.mkString(",")
+    }
   }
 
   /** Stage `rows` through the connector, adopt the staged data files
@@ -302,20 +274,15 @@ object CowOps {
       : Seq[ManifestTable.FileEntry] = {
     val stage = s"$dir/_cow-stage-${java.util.UUID.randomUUID}"
     val noRename = FsMeta.noRenameCommits
-    val (bloomCols, bloomBits, ndvCols) = effectiveSkipConfig(dir, m)
-    val w00 = rows.write.format(Fmt).option("path", stage)
-    val w0 = if (noRename) w00.option("dataDir", dir) else w00
-    val w1 = if (bloomCols.isEmpty) w0
-      else w0.option("bloomColumns", bloomCols.mkString(","))
-    val w2a = bloomBits.fold(w1)(b => w1.option("bloomBits", b))
-    val w2 = if (ndvCols.isEmpty) w2a
-      else w2a.option("ndvColumns", ndvCols.mkString(","))
+    val w0 = rows.write.format(Fmt).option("path", stage)
+      .options(skipOptions(dir, m))
+    val w1 = if (noRename) w0.option("dataDir", dir) else w0
     // partitioned table: staged rewrites keep the `#part:` layout (the
     // bloom-preservation move) — otherwise one COW merge/delete would
     // silently turn the storage-partitioned-join report off for good
     val pcols = ManifestTable.partitionColumnsOf(m)
-    val w = if (pcols.isEmpty) w2
-      else w2.option("partitionColumn", pcols.mkString(","))
+    val w = if (pcols.isEmpty) w1
+      else w1.option("partitionColumn", pcols.mkString(","))
     w.mode(SaveMode.Append).save()
     // empty partitions stage 0-row files — drop them instead of adopting
     // stat-less dead weight into the manifest
@@ -360,35 +327,11 @@ object CowOps {
       Seq(keyCol))
     val added = stageAndAdopt(spark, dir,
       reclustered(merged, keyCol, math.max(1, affected.size)), m)
-    val v = commitOrCleanup(dir, m, affected, added, branch, "cow-merge")
+    val v = commitOrCleanup(dir, m, affected.toSet, added, branch,
+      "cow-merge")
     CowResult(v, affected.size, m.files.size - affected.size, added.size)
   }
 
-  /** DELETE by key set (the right-to-be-forgotten table primitive —
-    * IncrementalDedup's deletion story at the table layer): affected
-    * files are rewritten without the keys, files emptied by the delete
-    * are dropped (not rewritten as empty), untouched files carry over.
-    */
-  /** DELETE, merge-on-read: instead of rewriting affected files, their
-    * manifest entries gain a DELETION-VECTOR sidecar reference
-    * (`#dv:<keyCol>` stats key) holding the deleted key set; the
-    * connector's read path subtracts those keys row-level, and the next
-    * [[ManifestTable.compact]] (or any COW rewrite of the file) reads
-    * through the merge and materializes the deletes away. ZERO data
-    * files are rewritten — the write cost is O(affected manifest
-    * entries + key set), which is why engines choose MOR when deletes
-    * are frequent and small relative to file sizes (Iceberg v2
-    * deletes, Delta deletion vectors); the read pays a binary-search
-    * per row on affected files until compaction. Repeated MOR deletes
-    * on a file UNION into one sidecar (entries reference exactly one).
-    *
-    * The sidecar is EXECUTOR-written ([[writeDvDistributed]]): the
-    * distinct key set never collects to the driver — the driver
-    * handles the (name, cardinality) ref only. Sidecars are
-    * manifest-referenced, so vacuum protects them while any retaining
-    * snapshot lives, and time-travel readers of pre-delete versions
-    * never see the `#dv:` entry.
-    */
   /** Write one value-keyed DV sidecar from the EXECUTORS: the distinct
     * key set (unioned with a prior sidecar's contents, both read as
     * ordinary datasets) sorts into a single partition whose one task
@@ -463,6 +406,26 @@ object CowOps {
     (updated, written.toSeq)
   }
 
+  /** DELETE, merge-on-read: instead of rewriting affected files, their
+    * manifest entries gain a DELETION-VECTOR sidecar reference
+    * (`#dv:<keyCol>` stats key) holding the deleted key set; the
+    * connector's read path subtracts those keys row-level, and the next
+    * [[ManifestTable.compact]] (or any COW rewrite of the file) reads
+    * through the merge and materializes the deletes away. ZERO data
+    * files are rewritten — the write cost is O(affected manifest
+    * entries + key set), which is why engines choose MOR when deletes
+    * are frequent and small relative to file sizes (Iceberg v2
+    * deletes, Delta deletion vectors); the read pays a binary-search
+    * per row on affected files until compaction. Repeated MOR deletes
+    * on a file UNION into one sidecar (entries reference exactly one).
+    *
+    * The sidecar is EXECUTOR-written ([[writeDvDistributed]]): the
+    * distinct key set never collects to the driver — the driver
+    * handles the (name, cardinality) ref only. Sidecars are
+    * manifest-referenced, so vacuum protects them while any retaining
+    * snapshot lives, and time-travel readers of pre-delete versions
+    * never see the `#dv:` entry.
+    */
   def deleteMor(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String, branch: String = ""): CowResult =
     withCommitRetry(dir, branch) { m =>
@@ -475,15 +438,9 @@ object CowOps {
       val affectedEntries = m.files.filter(f => affected.contains(f.name))
       val (updated, written) =
         attachDvs(spark, dir, keyCol, affectedEntries, keys)
-      try {
-        beforeCommitHook()
-        val v = ManifestTable.commitReplace(dir, m.version, affected,
-          updated, branch, "mor-delete")
-        CowResult(v, 0, m.files.size - affected.size, 0)
-      } catch { case e: ManifestTable.ConcurrentCommitException =>
-        written.foreach(n => FsMeta.deleteRecursive(s"$dir/data/$n"))
-        throw e
-      }
+      val v = commitOrCleanup(dir, m, affected, updated, branch,
+        "mor-delete", written)
+      CowResult(v, 0, m.files.size - affected.size, 0)
     }
   }
 
@@ -511,18 +468,16 @@ object CowOps {
     val added = stageAndAdopt(spark, dir,
       reclustered(updates.select(m.schema.fieldNames.map(col).toSeq: _*),
         keyCol, math.max(1, affected.size)), m)
-    try {
-      beforeCommitHook()
-      val v = ManifestTable.commitReplace(dir, m.version, affected,
-        updated ++ added, branch, "mor-merge")
-      CowResult(v, 0, m.files.size - affected.size, added.size)
-    } catch { case e: ManifestTable.ConcurrentCommitException =>
-      (written ++ added.map(_.name)).foreach(n =>
-        FsMeta.deleteRecursive(s"$dir/data/$n"))
-      throw e
-    }
+    val v = commitOrCleanup(dir, m, affected, updated ++ added, branch,
+      "mor-merge", written)
+    CowResult(v, 0, m.files.size - affected.size, added.size)
   }
 
+  /** DELETE by key set (the right-to-be-forgotten table primitive —
+    * IncrementalDedup's deletion story at the table layer): affected
+    * files are rewritten without the keys, files emptied by the delete
+    * are dropped (not rewritten as empty), untouched files carry over.
+    */
   def delete(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String, branch: String = ""): CowResult =
     withCommitRetry(dir, branch) { m =>
@@ -537,7 +492,8 @@ object CowOps {
     val added = if (kept.isEmpty) Seq.empty
       else stageAndAdopt(spark, dir,
         reclustered(kept, keyCol, affected.size), m)
-    val v = commitOrCleanup(dir, m, affected, added, branch, "cow-delete")
+    val v = commitOrCleanup(dir, m, affected.toSet, added, branch,
+      "cow-delete")
     CowResult(v, affected.size, m.files.size - affected.size, added.size)
   }
 }

@@ -95,13 +95,13 @@ private[sources] class GTabMorOperation(path: String, cmd: Command)
         // inserted files keep the table's bloom/NDV/partition layout —
         // the same preservation rule as every COW rewrite, declared
         // TBLPROPERTIES unioned in (the adoption path)
-        val (bloomCols, bloomBits, ndvCols) =
+        val (bloomCols, ndvCols) =
           CowOps.effectiveSkipConfig(path, m)
         val partCols = ManifestTable.partitionColumnsOf(m)
         new DeltaWrite {
           override def toBatch: DeltaBatchWrite =
             new GTabDeltaBatchWrite(GTabMorOperation.this, path, info,
-              bloomCols, bloomBits, partCols, ndvCols)
+              bloomCols, partCols, ndvCols)
         }
       }
     }
@@ -124,13 +124,13 @@ private[sources] class GTabMorOperation(path: String, cmd: Command)
   */
 private[sources] class GTabDeltaBatchWrite(op: GTabMorOperation,
     path: String, info: LogicalWriteInfo, bloomCols: Seq[String],
-    bloomBits: Option[Int], partCols: Seq[String], ndvCols: Seq[String])
+    partCols: Seq[String], ndvCols: Seq[String])
     extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DeltaWriterFactory =
     new GTabDeltaWriterFactory(path, info.schema(), info.queryId(),
-      FsMeta.confAsMap(), bloomCols, bloomBits, partCols, ndvCols)
+      FsMeta.confAsMap(), bloomCols, partCols, ndvCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val all = messages.collect { case d: GTabDeltaCommit => d }
@@ -219,15 +219,15 @@ private[sources] final case class GTabDeltaCommit(
 private[sources] class GTabDeltaWriterFactory(path: String,
     schema: org.apache.spark.sql.types.StructType, queryId: String,
     confMap: Map[String, String], bloomCols: Seq[String],
-    bloomBits: Option[Int], partCols: Seq[String], ndvCols: Seq[String])
+    partCols: Seq[String], ndvCols: Seq[String])
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] = {
     val conf = new Configuration(false)
     confMap.foreach { case (k, v) => conf.set(k, v) }
     new GTabDeltaWriter(path, schema,
-      s"delta-$queryId-$partitionId-$taskId", conf, bloomCols, bloomBits,
-      partCols, ndvCols)
+      s"delta-$queryId-$partitionId-$taskId", conf, bloomCols, partCols,
+      ndvCols)
   }
 }
 
@@ -244,8 +244,8 @@ private[sources] class GTabDeltaWriterFactory(path: String,
   */
 private[sources] class GTabDeltaWriter(dir: String,
     schema: org.apache.spark.sql.types.StructType, stem: String,
-    conf: Configuration, bloomCols: Seq[String], bloomBits: Option[Int],
-    partCols: Seq[String], ndvCols: Seq[String])
+    conf: Configuration, bloomCols: Seq[String], partCols: Seq[String],
+    ndvCols: Seq[String])
     extends DeltaWriter[InternalRow] {
 
   private var insertWriter: DataWriter[InternalRow] = _
@@ -271,7 +271,7 @@ private[sources] class GTabDeltaWriter(dir: String,
   override def insert(row: InternalRow): Unit = {
     if (insertWriter == null)
       insertWriter = GTabWriters.create(dir, schema, stem, conf,
-        bloomCols, bloomBits, partCols, ndvCols)
+        bloomCols, partCols, ndvCols)
     insertWriter.write(row)
   }
 

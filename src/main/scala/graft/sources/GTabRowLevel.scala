@@ -91,7 +91,7 @@ private[sources] class GTabRowLevelOperation(path: String,
         // otherwise the first SQL UPDATE would silently strip the
         // skipping structures a clustered write paid for; declared
         // TBLPROPERTIES union in (the adoption path for SET-after-load)
-        val (bloomCols, bloomBits, ndvCols) =
+        val (bloomCols, ndvCols) =
           CowOps.effectiveSkipConfig(path, m)
         val partCols = ManifestTable.partitionColumnsOf(m)
         new Write with RequiresDistributionAndOrdering {
@@ -105,7 +105,7 @@ private[sources] class GTabRowLevelOperation(path: String,
               SortDirection.ASCENDING)).toArray
           override def toBatch: BatchWrite =
             new GTabReplaceBatchWrite(GTabRowLevelOperation.this, path,
-              info, bloomCols, bloomBits, partCols, ndvCols)
+              info, bloomCols, partCols, ndvCols)
         }
       }
     }
@@ -119,13 +119,13 @@ private[sources] class GTabRowLevelOperation(path: String,
   */
 private[sources] class GTabReplaceBatchWrite(op: GTabRowLevelOperation,
     path: String, info: LogicalWriteInfo, bloomCols: Seq[String],
-    bloomBits: Option[Int], partCols: Seq[String], ndvCols: Seq[String])
+    partCols: Seq[String], ndvCols: Seq[String])
     extends BatchWrite {
 
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DataWriterFactory =
     new GTabWriterFactory(path, info.schema(), info.queryId(),
-      FsMeta.confAsMap(), bloomCols, bloomBits, partCols, ndvCols)
+      FsMeta.confAsMap(), bloomCols, partCols, ndvCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val all = GTabCommits.entriesOf(messages)

@@ -699,7 +699,6 @@ private[sources] class GStagedTable(stageDir: String, dir: String,
   * {{{
   *   CREATE TABLE g.db.t (...) TBLPROPERTIES(
   *     'bloomColumns'='k,s',        -- per-file blooms on every write
-  *     'bloomBits'='8192',          -- bloom sizing
   *     'ndvColumns'='k',            -- per-file KMV sketches (CBO NDV)
   *     'write.delete.mode'='merge-on-read')  -- DML strategy
   *   ALTER TABLE g.db.t SET TBLPROPERTIES('bloomColumns'='k')
@@ -713,7 +712,6 @@ private[sources] class GStagedTable(stageDir: String, dir: String,
   */
 private[sources] object GTabProps {
   val BloomColumns = "bloomColumns"
-  val BloomBits = "bloomBits"
   val NdvColumns = "ndvColumns"
   val DeleteMode = "write.delete.mode"
   val UpdateMode = "write.update.mode"
@@ -746,12 +744,6 @@ private[sources] object GTabProps {
       }
     }
     checkCols(BloomColumns); checkCols(NdvColumns)
-    p.get(BloomBits).foreach { b =>
-      val n = b.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"$BloomBits must be an integer, got '$b'"))
-      require(n >= 64 && n % 64 == 0,
-        s"$BloomBits must be a positive multiple of 64, got $n")
-    }
     Seq(DeleteMode, UpdateMode, MergeMode).foreach(k =>
       p.get(k).foreach(v => require(Modes.contains(v),
         s"$k must be '$CopyOnWrite' or '$MergeOnRead', got '$v'")))

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util
 import java.util.zip.CRC32
 
+import graft.functions.BloomUtil
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -388,17 +389,10 @@ object ManifestTable {
         pSets.head.toSeq.map(_.stripPrefix(PartPrefix)).sorted
           .map(escape).mkString(",")
       else "", "")
-    val bCols = entries
+    agg("#bloomcols") = (entries
       .flatMap(_.stats.keys.filter(_.startsWith(GTabBloom.KeyPrefix)))
       .map(_.stripPrefix(GTabBloom.KeyPrefix)).distinct.sorted
-    // the FIXED size members carry (0: every bloom is sized per file)
-    val bBits = entries.filterNot(_.stats.contains(GTabBloom.PerFileKey))
-      .flatMap(_.stats.collect {
-        case (k, (_, b64)) if k.startsWith(GTabBloom.KeyPrefix) =>
-          GTabBloom.decode(b64).length * 64
-      }).maxOption.getOrElse(0)
-    agg("#bloomcols") =
-      (bCols.map(escape).mkString(","), bBits.toString)
+      .map(escape).mkString(","), "")
     agg("#ndvcols") = (entries
       .flatMap(_.stats.keys.filter(_.startsWith(NdvPrefix)))
       .map(_.stripPrefix(NdvPrefix)).distinct.sorted
@@ -413,17 +407,8 @@ object ManifestTable {
     // (4096 bits ≈ 16 bits/name at ShardTarget members, sub-1% FPP — a
     // false positive costs one decode, never correctness)
     val nbl = new Array[Long](64)
-    entries.foreach { e =>
-      val key = GTabBloom.hashString(e.name)
-      val h1 = graft.functions.BloomUtil.mix64(key)
-      val h2 = graft.functions.BloomUtil.mix64(h1) | 1L
-      var i = 0
-      while (i < GTabBloom.NumHashes) {
-        val idx = java.lang.Long.remainderUnsigned(h1 + i * h2, 4096L).toInt
-        nbl(idx >>> 6) |= 1L << (idx & 63)
-        i += 1
-      }
-    }
+    entries.foreach(e => BloomUtil.set(nbl, BloomUtil.hashString(e.name),
+      GTabBloom.NumHashes))
     agg("#nbl") = (GTabBloom.NumHashes.toString, GTabBloom.encode(nbl))
     agg.toMap
   }
@@ -435,7 +420,7 @@ object ManifestTable {
       val k = kStr.toIntOption.getOrElse(return true)
       val words = GTabBloom.decode(b64)
       names.exists(n =>
-        GTabBloom.mightContainWords(words, GTabBloom.hashString(n), k))
+        BloomUtil.mightContain(words, BloomUtil.hashString(n), k))
     case None => true
   }
 
@@ -673,18 +658,6 @@ object ManifestTable {
     s"concurrent commit at $dir: expected to publish version $version " +
       s"but another writer got there first (current version $foundVersion)")
 
-  /** Publish `m` with optimistic concurrency: the VERSION SNAPSHOT is
-    * the CAS — `_MANIFEST.v<N>` is create-once (renameIfAbsent), so
-    * exactly one writer can publish version N; the loser gets a typed
-    * [[ConcurrentCommitException]] instead of silently overwriting the
-    * winner (the lost-update mode the pre-round-12 overwrite-rename
-    * had). The `_MANIFEST` pointer is a CACHE of the max snapshot,
-    * republished after each win; if a winner crashes between its
-    * snapshot and pointer writes, the next loser rolls the pointer
-    * forward from the orphan snapshot, so the table never wedges. On a
-    * store with atomic rename this is exactly Iceberg's
-    * commit-by-create model minus the metastore.
-    */
   // ---- merge-on-read deletion vectors ----
   // A DELETE can avoid rewriting data files entirely: the deleted key
   // set lands in a SIDECAR file and affected manifest entries reference
@@ -713,7 +686,7 @@ object ManifestTable {
   // ~1/sqrt(k-1) ≈ 13% relative error — cardinality-class accuracy,
   // exactly what join ordering needs. Sub-k unions are EXACT (no file
   // truncated its set). Same no-format-bump trick as `#bloom:`.
-  private[sources] val NdvPrefix = "#ndv:"
+  private[graft] val NdvPrefix = "#ndv:"
   private[sources] def ndvStatKey(col: String): String = NdvPrefix + col
   private[sources] val NdvK = 64
 
@@ -1052,6 +1025,18 @@ object ManifestTable {
       m.copy(inline = Nil, shards = keep ++ fresh, dir = dir)
     }
 
+  /** Publish `m` with optimistic concurrency: the VERSION SNAPSHOT is
+    * the CAS — `_MANIFEST.v<N>` is create-once (renameIfAbsent), so
+    * exactly one writer can publish version N; the loser gets a typed
+    * [[ConcurrentCommitException]] instead of silently overwriting the
+    * winner (the lost-update mode the pre-round-12 overwrite-rename
+    * had). The `_MANIFEST` pointer is a CACHE of the max snapshot,
+    * republished after each win; if a winner crashes between its
+    * snapshot and pointer writes, the next loser rolls the pointer
+    * forward from the orphan snapshot, so the table never wedges. On a
+    * store with atomic rename this is exactly Iceberg's
+    * commit-by-create model minus the metastore.
+    */
   private def publish(dir: String, m0: Manifest, ref: String = ""): Unit = {
     FsMeta.mkdirs(dir)
     val m = normalized(dir, m0)
@@ -1603,20 +1588,10 @@ object ManifestTable {
     // skipping structures or the optimizer statistics — only columns
     // still in the live schema carry over (a DROP COLUMN relies on
     // compaction to purge the retired name)
-    val (liveBloomCols, bloomBits, ndvCols) =
-      CowOps.effectiveSkipConfig(dir, m0)
-    val w0 = shaped.write.format("graft.sources.ManifestTable")
-      .option("path", dir)
-    val w1 = if (keepPart) w0.option("partitionColumn", pcols.mkString(","))
-      else w0
-    val w2 = if (liveBloomCols.isEmpty) w1
-      else bloomBits.fold(
-        w1.option("bloomColumns", liveBloomCols.mkString(",")))(b =>
-        w1.option("bloomColumns", liveBloomCols.mkString(","))
-          .option("bloomBits", b))
-    val w = if (ndvCols.isEmpty) w2
-      else w2.option("ndvColumns", ndvCols.mkString(","))
-    w.option("commitOp", "compact").mode("overwrite").save()
+    val w = shaped.write.format("graft.sources.ManifestTable")
+      .option("path", dir).options(CowOps.skipOptions(dir, m0))
+    (if (keepPart) w.option("partitionColumn", pcols.mkString(",")) else w)
+      .option("commitOp", "compact").mode("overwrite").save()
     (before, readManifest(dir).get.files.size)
   }
 
@@ -1896,10 +1871,6 @@ private[sources] class GTable(path: String, schema0: StructType,
         s"bloomColumns: '$c' is ${f.dataType.sql} — blooms support " +
           "int/long/string")
     }
-    // absent: every file's bloom is sized from its own row count
-    val bloomBits = declaredOrOpt("bloomBits").map(_.toInt)
-    bloomBits.foreach(b => require(b >= 64 && b % 64 == 0,
-      s"bloomBits must be a positive multiple of 64, got $b"))
     // catalog-declared partitioning auto-applies; an explicit write
     // option overrides (e.g. a maintenance rewrite changing layout).
     // Several columns (comma-separated) give the date+hour-style layout.
@@ -1940,7 +1911,7 @@ private[sources] class GTable(path: String, schema0: StructType,
         s"(${GTabWriteBuilder.AllowedOps.mkString(", ")}) — history " +
         "provenance is set by the commit path, not by writer claims")
     new GTabWriteBuilder(path, info.schema(), info.queryId(), bloomCols,
-      bloomBits, partCols, Option(opts.get("branch")).getOrElse(""),
+      partCols, Option(opts.get("branch")).getOrElse(""),
       ndvCols, Option(opts.get("dataDir")), commitOp)
   }
 }
@@ -1955,7 +1926,6 @@ private[sources] object GTabWriteBuilder {
 
 private[sources] class GTabWriteBuilder(path: String, schema: StructType,
     queryId: String, bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ref: String = "",
     ndvCols: Seq[String] = Seq.empty,
     // no-rename commit mode: data files are BORN under this table
@@ -1988,12 +1958,12 @@ private[sources] class GTabWriteBuilder(path: String, schema: StructType,
         SortDirection.ASCENDING)).toArray
     override def toBatch: BatchWrite =
       new GTabBatchWrite(path, schema, queryId, keepPrevious, bloomCols,
-        bloomBits, partCols, ref, ndvCols, dataDir, commitOp)
+        partCols, ref, ndvCols, dataDir, commitOp)
     override def toStreaming: StreamingWrite = {
       require(dataDir.isEmpty,
         "dataDir is a batch staging option, not a streaming one")
       new GTabStreamingWrite(path, schema, queryId, keepPrevious, bloomCols,
-        bloomBits, partCols, ref, ndvCols)
+        partCols, ref, ndvCols)
     }
   }
 }
@@ -2009,14 +1979,13 @@ private[sources] class GTabWriteBuilder(path: String, schema: StructType,
 private[sources] class GTabStreamingWrite(path: String, schema: StructType,
     queryId: String, keepPrevious: Boolean,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ref: String = "",
     ndvCols: Seq[String] = Seq.empty)
     extends StreamingWrite {
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new GTabStreamingWriterFactory(path, schema, queryId, FsMeta.confAsMap(),
-      bloomCols, bloomBits, partCols, ndvCols)
+      bloomCols, partCols, ndvCols)
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
     ManifestTable.commitVersion(path, schema,
@@ -2031,7 +2000,6 @@ private[sources] class GTabStreamingWrite(path: String, schema: StructType,
 private[sources] class GTabStreamingWriterFactory(path: String,
     schema: StructType, queryId: String, confMap: Map[String, String],
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ndvCols: Seq[String] = Seq.empty)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
@@ -2040,7 +2008,7 @@ private[sources] class GTabStreamingWriterFactory(path: String,
     confMap.foreach { case (k, v) => conf.set(k, v) }
     GTabWriters.create(path, schema,
       s"part-e$epochId-$partitionId-$taskId-$queryId", conf,
-      bloomCols, bloomBits, partCols, ndvCols)
+      bloomCols, partCols, ndvCols)
   }
 }
 
@@ -2076,7 +2044,6 @@ private[sources] object GTabCommits {
 private[sources] class GTabBatchWrite(path: String, schema: StructType,
     queryId: String, keepPrevious: Boolean,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ref: String = "",
     ndvCols: Seq[String] = Seq.empty, dataDir: Option[String] = None,
     commitOp: String = "")
@@ -2085,7 +2052,7 @@ private[sources] class GTabBatchWrite(path: String, schema: StructType,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
     new GTabWriterFactory(writeDir, schema, queryId, FsMeta.confAsMap(),
-      bloomCols, bloomBits, partCols, ndvCols)
+      bloomCols, partCols, ndvCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     ManifestTable.commitVersion(path, schema,
@@ -2100,7 +2067,6 @@ private[sources] class GTabBatchWrite(path: String, schema: StructType,
 private[sources] class GTabWriterFactory(path: String, schema: StructType,
     queryId: String, confMap: Map[String, String],
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Option[Int] = None,
     partCols: Seq[String] = Nil, ndvCols: Seq[String] = Seq.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -2111,7 +2077,7 @@ private[sources] class GTabWriterFactory(path: String, schema: StructType,
     // only the attempt whose commit message reaches BatchWrite.commit is
     // ever listed (useCommitCoordinator guarantees one winner per partition)
     GTabWriters.create(path, schema, s"part-$partitionId-$taskId-$queryId",
-      conf, bloomCols, bloomBits, partCols, ndvCols)
+      conf, bloomCols, partCols, ndvCols)
   }
 }
 
@@ -2121,14 +2087,14 @@ private[sources] object GTabWriters {
     * extension (the partitioned writer suffixes a segment ordinal).
     */
   def create(dir: String, schema: StructType, stem: String,
-      conf: Configuration, bloomCols: Seq[String], bloomBits: Option[Int],
-      partCols: Seq[String], ndvCols: Seq[String] = Seq.empty)
+      conf: Configuration, bloomCols: Seq[String], partCols: Seq[String],
+      ndvCols: Seq[String] = Seq.empty)
       : DataWriter[InternalRow] =
     if (partCols.isEmpty)
-      new GTabWriter(dir, schema, s"$stem.gtab", conf, bloomCols, bloomBits,
+      new GTabWriter(dir, schema, s"$stem.gtab", conf, bloomCols,
         ndvCols = ndvCols)
     else new GTabPartitionedWriter(dir, schema, stem, conf,
-      bloomCols, bloomBits, partCols, ndvCols)
+      bloomCols, partCols, ndvCols)
 }
 
 /** Rolls one [[GTabWriter]] segment per run of equal partition-column
@@ -2139,7 +2105,7 @@ private[sources] object GTabWriters {
   */
 private[sources] class GTabPartitionedWriter(dir: String,
     schema: StructType, stem: String, conf: Configuration,
-    bloomCols: Seq[String], bloomBits: Option[Int], partCols: Seq[String],
+    bloomCols: Seq[String], partCols: Seq[String],
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
   private val encs: Seq[InternalRow => String] = partCols.map { c =>
@@ -2167,7 +2133,7 @@ private[sources] class GTabPartitionedWriter(dir: String,
       if (cur != null) done += cur.commitSegment()
       curKey = k
       cur = new GTabWriter(dir, schema, s"$stem-s$seq.gtab", conf,
-        bloomCols, bloomBits,
+        bloomCols,
         extraStats = partCols.zip(k).map { case (c, e) =>
           ManifestTable.partStatKey(c) -> (e, "") }.toMap,
         ndvCols = ndvCols)
@@ -2194,7 +2160,6 @@ private[sources] class GTabPartitionedWriter(dir: String,
 private[sources] class GTabWriter(dir: String, schema: StructType,
     fileName: String, conf: Configuration,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Option[Int] = None,
     extraStats: Map[String, (String, String)] = Map.empty,
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
@@ -2258,12 +2223,9 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
           else (statLoL(j).toString, statHiL(j).toString))
     }.toMap ++ bloomIx.indices.map { j =>
       GTabBloom.statKey(bloomCols(j)) ->
-        (GTabBloom.NumHashes.toString, GTabBloom.encode(bloomBits match {
-          case Some(_) => bloomWords(j)
-          case None => GTabBloom.fold(bloomWords(j), GTabBloom.bitsFor(rows))
-        }))
-    } ++ (if (bloomIx.isEmpty || bloomBits.isDefined) Nil
-      else Seq(GTabBloom.PerFileKey -> ("1", ""))) ++ ndvIx.indices.map { j =>
+        (GTabBloom.NumHashes.toString, GTabBloom.encode(
+          GTabBloom.fold(bloomWords(j), GTabBloom.bitsFor(rows))))
+    } ++ ndvIx.indices.map { j =>
       val hs = new Array[Long](ndvSets(j).size)
       val it = ndvSets(j).iterator()
       var i = 0
@@ -2288,10 +2250,10 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
       if (!row.isNullAt(i)) {
         val h = schema.fields(i).dataType match {
           case IntegerType =>
-            graft.functions.BloomUtil.mix64(row.getInt(i).toLong)
+            BloomUtil.mix64(row.getInt(i).toLong)
           case LongType =>
-            graft.functions.BloomUtil.mix64(row.getLong(i))
-          case _ => GTabBloom.hashString(row.getUTF8String(i).toString)
+            BloomUtil.mix64(row.getLong(i))
+          case _ => BloomUtil.hashString(row.getUTF8String(i).toString)
         }
         val flipped = java.lang.Long.valueOf(h ^ Long.MinValue)
         val s = ndvSets(j)
@@ -2305,14 +2267,12 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
   }
 
   // per-file point-lookup blooms (GTabBloom scaladoc); nulls never set
-  // bits — IsNull filters are not bloom-skippable. Without a fixed
-  // `bloomBits` the keys go into a MaxBits bitmap that commit folds down
-  // to the file's own size
+  // bits — IsNull filters are not bloom-skippable. The keys go into a
+  // MaxBits bitmap that commit folds down to the file's own size
   private val bloomIx: Array[Int] =
     bloomCols.map(c => schema.fieldIndex(c)).toArray
   private val bloomWords: Array[Array[Long]] =
-    bloomIx.map(_ => new Array[Long](
-      bloomBits.getOrElse(GTabBloom.MaxBits) / 64))
+    bloomIx.map(_ => new Array[Long](GTabBloom.MaxBits / 64))
   private def trackBloom(row: InternalRow): Unit = {
     var j = 0
     while (j < bloomIx.length) {
@@ -2321,9 +2281,9 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
         val key = schema.fields(i).dataType match {
           case IntegerType => row.getInt(i).toLong
           case LongType => row.getLong(i)
-          case _ => GTabBloom.hashString(row.getUTF8String(i).toString)
+          case _ => BloomUtil.hashString(row.getUTF8String(i).toString)
         }
-        graft.functions.BloomUtil.set(bloomWords(j), key,
+        BloomUtil.set(bloomWords(j), key,
           GTabBloom.NumHashes)
       }
       j += 1
@@ -2480,21 +2440,18 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
   * name, older readers treat the entries as stats for a column no filter
   * references, and the manifest format needs no version bump. Written
   * only when the writer is asked (`.option("bloomColumns", "c1,c2")`,
-  * int/long/string columns). By default each file's bloom is sized from
-  * its own row count ([[bitsFor]]: a power of two with at least 10 bits
-  * per row, about 1% FPP with 6 hashes, capped at [[MaxBits]] — 16 KiB
-  * per file and column, so files past ~13k rows see a higher FPP) and
-  * the file carries the [[PerFileKey]] marker. `.option("bloomBits", n)`
-  * (or the table property) fixes every file's size instead; rewrites
-  * recover a fixed size from the unmarked files ([[CowOps.bloomConfig]]).
+  * int/long/string columns). Each file's bloom is sized from its own
+  * row count ([[bitsFor]]: a power of two with at least 10 bits per row,
+  * about 1% FPP with 6 hashes, capped at [[MaxBits]] — 16 KiB per file
+  * and column, so files past ~13k rows see a higher FPP). Readers probe
+  * whatever size a file holds, so files written at another size stay
+  * readable.
   */
 private[graft] object GTabBloom {
   val KeyPrefix = "#bloom:"
   val NumHashes = 6
   val BitsPerRow = 10
   val MaxBits: Int = 1 << 17
-  /** Stats key of a file whose blooms were sized from its row count. */
-  val PerFileKey = "#bloomrows"
 
   def statKey(col: String): String = KeyPrefix + col
 
@@ -2520,18 +2477,6 @@ private[graft] object GTabBloom {
     out
   }
 
-  /** FNV-1a 64 + avalanche for strings (KmvDistinct's construction);
-    * integral values feed BloomUtil (which mixes) directly.
-    */
-  def hashString(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i).toLong; h *= 0x100000001b3L; i += 1 }
-    h ^= h >>> 30; h *= 0xbf58476d1ce4e5b9L
-    h ^= h >>> 27; h *= 0x94d049bb133111ebL
-    h ^ (h >>> 31)
-  }
-
   def supported(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt == IntegerType || dt == LongType || dt == StringType
 
@@ -2545,9 +2490,9 @@ private[graft] object GTabBloom {
       case (IntegerType, n: java.lang.Integer) => Some(n.longValue)
       case (IntegerType, n: java.lang.Long)
         if n.longValue == n.intValue => Some(n.longValue)
-      case (StringType, s: String) => Some(hashString(s))
+      case (StringType, s: String) => Some(BloomUtil.hashString(s))
       case (StringType, s: org.apache.spark.unsafe.types.UTF8String) =>
-        Some(hashString(s.toString))
+        Some(BloomUtil.hashString(s.toString))
       case _ => None
     }
 
@@ -2563,19 +2508,6 @@ private[graft] object GTabBloom {
     Array.fill(bytes.length / 8)(bb.getLong)
   }
 
-  def mightContainWords(words: Array[Long], key: Long, k: Int): Boolean = {
-    val numBits = words.length * 64
-    val h1 = graft.functions.BloomUtil.mix64(key)
-    val h2 = graft.functions.BloomUtil.mix64(h1) | 1L
-    var i = 0
-    while (i < k) {
-      val idx = java.lang.Long.remainderUnsigned(h1 + i * h2, numBits).toInt
-      if ((words(idx >>> 6) & (1L << (idx & 63))) == 0L) return false
-      i += 1
-    }
-    true
-  }
-
   /** Could file `e` hold a row with `c` equal to SOME of `vs`? True when
     * no bloom was written for `c` or a literal is unprobeable.
     */
@@ -2589,7 +2521,7 @@ private[graft] object GTabBloom {
         val dt = schema.fields.find(_.name == c).map(_.dataType)
           .getOrElse(return true)
         vs.exists(v => keyOf(dt, v) match {
-          case Some(key) => mightContainWords(words, key, k)
+          case Some(key) => BloomUtil.mightContain(words, key, k)
           case None => true // unprobeable literal: cannot prove a miss
         })
     }

@@ -115,7 +115,7 @@ class BloomSkipSpec extends AnyFunSuite {
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.size == 8 && m.files.forall(_.rows > 2500))
     // 10+ bits per row: a 3,000-row file gets 32,768 bits, not 4,096
-    assert(m.files.forall(f => f.stats.contains(GTabBloom.PerFileKey) &&
+    assert(m.files.forall(f =>
       GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
         GTabBloom.bitsFor(f.rows)))
     Seq(7L, 1234L, 9999L, 17000L, 23999L).foreach { k =>
@@ -149,10 +149,10 @@ class BloomSkipSpec extends AnyFunSuite {
     ManifestTable.compact(spark, dir, targetFiles = 2)
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.size == 2 && m.files.forall(f =>
-      f.stats.contains(GTabBloom.PerFileKey) &&
-        GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
-          GTabBloom.bitsFor(f.rows)))
-    assert(graft.sources.CowOps.bloomConfig(m) == (Seq("id"), None))
+      GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
+        GTabBloom.bitsFor(f.rows)))
+    assert(graft.sources.CowOps.censusColumns(m, GTabBloom.KeyPrefix) ==
+      Seq("id"))
   }
 
   test("write-time validation: unknown column and unsupported type fail fast") {

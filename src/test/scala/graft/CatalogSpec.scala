@@ -417,7 +417,7 @@ class CatalogSpec extends AnyFunSuite {
   test("TBLPROPERTIES drive skipping structures from pure SQL") {
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.props (id BIGINT, s STRING) " +
-      "TBLPROPERTIES('bloomColumns'='id', 'bloomBits'='4096')")
+      "TBLPROPERTIES('bloomColumns'='id')")
     (0 until 400).map(i => (i.toLong, s"v$i")).toDF("id", "s")
       .createOrReplaceTempView("props_src")
     // hash-scattered on purpose: zone maps prune nothing, blooms must

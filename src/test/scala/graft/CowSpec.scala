@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{CowOps, ManifestTable}
+import graft.sources.{CowOps, GTabBloom, ManifestTable}
 
 /** Copy-on-write MERGE/DELETE (q88/q89): affected files are found via
   * zone maps and rewritten; untouched files carry over byte-identically
@@ -310,23 +310,19 @@ class CowSpec extends AnyFunSuite {
         concat(lit("v"), col("id")).as("s"))
       .repartitionByRange(5, col("k")).sortWithinPartitions("k")
       .write.format(Fmt).option("path", dir)
-      .option("bloomColumns", "k").option("bloomBits", "1024")
-      .mode(SaveMode.Append).save()
-    def bloomB64s(): Seq[String] =
-      ManifestTable.readManifest(dir).get.files
-        .flatMap(_.stats.get("#bloom:k")).map(_._2)
-    val bitsBefore = bloomB64s().map(b64 =>
-      java.util.Base64.getDecoder.decode(b64).length * 8L).distinct
-    assert(bitsBefore == Seq(1024L))
+      .option("bloomColumns", "k").mode(SaveMode.Append).save()
+    // every bloom, rewritten or not, is sized from its own file's rows
+    def sizedPerFile(): Boolean =
+      ManifestTable.readManifest(dir).get.files.forall(f =>
+        f.stats.get("#bloom:k").exists(b => GTabBloom.decode(b._2).length *
+          64 == GTabBloom.bitsFor(f.rows)))
+    assert(sizedPerFile())
     val r = CowOps.merge(spark, dir, Seq((5L, "U5")).toDF("k", "s"), "k")
     assert(r.filesRewritten == 1)
     val files = ManifestTable.readManifest(dir).get.files
     assert(files.forall(_.stats.contains("#bloom:k")),
       "rewritten files must keep the table's bloom column")
-    val bitsAfter = bloomB64s().map(b64 =>
-      java.util.Base64.getDecoder.decode(b64).length * 8L).distinct
-    assert(bitsAfter == Seq(1024L),
-      s"rewritten blooms must keep the 1024-bit sizing, got $bitsAfter")
+    assert(sizedPerFile(), "rewritten blooms must be sized per file")
     // the rewritten file's bloom is live: a follow-up delete still
     // localizes to one file through it
     val r2 = CowOps.delete(spark, dir, Seq(5L).toDF("k"), "k")

@@ -314,12 +314,8 @@ class MetadataTreeSpec extends AnyFunSuite {
     // bloom words exactly as the writer sets them (same double hashing)
     def bloomOf(key: Long): String = {
       val words = new Array[Long](64) // 4096 bits
-      val h1 = graft.functions.BloomUtil.mix64(key)
-      val h2 = graft.functions.BloomUtil.mix64(h1) | 1L
-      (0 until graft.sources.GTabBloom.NumHashes).foreach { i =>
-        val idx = java.lang.Long.remainderUnsigned(h1 + i * h2, 4096L).toInt
-        words(idx >>> 6) |= 1L << (idx & 63)
-      }
+      graft.functions.BloomUtil.set(words, key,
+        graft.sources.GTabBloom.NumHashes)
       graft.sources.GTabBloom.encode(words)
     }
     // hash-scattered table: NO zone maps (bloom is the only skip), each
@@ -468,12 +464,8 @@ class MetadataTreeSpec extends AnyFunSuite {
     val schema3 = StructType.fromDDL("id BIGINT, g STRING")
     def bloomOf(key: Long): String = {
       val words = new Array[Long](64)
-      val h1 = graft.functions.BloomUtil.mix64(key)
-      val h2 = graft.functions.BloomUtil.mix64(h1) | 1L
-      (0 until graft.sources.GTabBloom.NumHashes).foreach { i =>
-        val idx = java.lang.Long.remainderUnsigned(h1 + i * h2, 4096L).toInt
-        words(idx >>> 6) |= 1L << (idx & 63)
-      }
+      graft.functions.BloomUtil.set(words, key,
+        graft.sources.GTabBloom.NumHashes)
       graft.sources.GTabBloom.encode(words)
     }
     def batch(from: Int, until: Int, g: String) = (from until until).map {
@@ -492,9 +484,10 @@ class MetadataTreeSpec extends AnyFunSuite {
     val before = ManifestTable.shardDecodes.get()
     // the three questions every SQL DML write build asks
     assert(ManifestTable.partitionColumnsOf(m) == Seq("g"))
-    val (bloomCols, bits) = graft.sources.CowOps.bloomConfig(m)
-    assert(bloomCols == Seq("id") && bits.contains(4096))
-    assert(graft.sources.CowOps.ndvConfig(m) == Seq("id"))
+    assert(graft.sources.CowOps.censusColumns(m,
+      graft.sources.GTabBloom.KeyPrefix) == Seq("id"))
+    assert(graft.sources.CowOps.censusColumns(m, ManifestTable.NdvPrefix) ==
+      Seq("id"))
     assert(ManifestTable.shardDecodes.get() == before,
       "table-level config derivations must not decode a shard")
     // a mixed-spec table degrades the partition report, still decode-free

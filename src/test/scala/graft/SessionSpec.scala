@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fit, not a seeded black box. It also keeps one exactly-once batch
   * commit: the `_commit_<b>` marker and the foreachBatch starter live only
   * in graft/streaming/BatchCommit.scala, and each persisted index has one
-  * (staged) append.
+  * (staged) append. Blooms keep one sizing rule (per file, no
+  * `bloomBits` knob) and one double-hashing position step, BloomUtil's.
   */
 class SessionSpec extends AnyFunSuite {
   private def sources(root: String) = {
@@ -46,6 +47,20 @@ class SessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty && twins.isEmpty,
       s"commit micro-batches through BatchCommit, not in: ${offenders.mkString(", ")}; " +
         s"each index has one append, appendBatch, so remove the twin in: ${twins.mkString(", ")}")
+    assert(Files.exists(own), s"$own moved: re-point this guard")
+  }
+
+  test("blooms have one position step, BloomUtil's, and no bloomBits knob") {
+    val own = Paths.get("src/main/scala/graft/functions/BloomExprs.scala")
+    val step = "h1\\s*\\+\\s*i\\s*\\*\\s*h2".r
+    val copies = Seq("src/main/scala", "src/test/scala").flatMap(sources)
+      .filter(p => p != own && step.findFirstIn(Files.readString(p)).isDefined)
+    val knobs = sources("src/main/scala")
+      .filter(Files.readString(_).contains("\"bloomBits\""))
+    assert(copies.isEmpty,
+      s"set and probe bloom bits through BloomUtil, not in: ${copies.mkString(", ")}")
+    assert(knobs.isEmpty,
+      s"gtab blooms are sized per file (GTabBloom.bitsFor), no bloomBits in: ${knobs.mkString(", ")}")
     assert(Files.exists(own), s"$own moved: re-point this guard")
   }
 }
