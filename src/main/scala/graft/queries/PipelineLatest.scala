@@ -657,14 +657,13 @@ object PipelineLatest {
           |ORDER BY o_orderkey""".stripMargin)),
 
     // --- merge-on-read DELETE (q92): q89's delete without rewriting a
-    //     single data file — deletion-vector sidecars land in the
-    //     manifest entries' reserved #dv: stats keys and the connector's
-    //     read path subtracts them row-level (Iceberg-v2/Delta-DV
-    //     shape, keyed by value since the text codec has no stable row
-    //     ordinals). CowSpec pins filesRewritten == 0, sidecar union
-    //     across stacked deletes, vacuum protection, and that
-    //     compaction materializes the vectors away; the oracle is the
-    //     plain anti-join — the merge must be invisible. ---
+    //     single data file — position deletion-vector sidecars land in
+    //     the manifest entries' reserved #dvp stats key and the
+    //     connector's read path skips the marked rows (Iceberg-v2/
+    //     Delta-DV shape). CowSpec pins filesRewritten == 0, the
+    //     chain-then-fold of stacked deletes, vacuum protection, and
+    //     that compaction materializes the vectors away; the oracle is
+    //     the plain anti-join — the merge must be invisible. ---
     QueryDef(
       "q92_mor_delete",
       (s, dir) => StorageLayout.q92MorDelete(s, dir)(),

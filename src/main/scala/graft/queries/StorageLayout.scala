@@ -214,11 +214,12 @@ object StorageLayout {
   }
 
   /** q92: same key-clustered layout and delete set as q89, but
-    * MERGE-ON-READ — the delete writes deletion-vector sidecars and
-    * rewrites ZERO data files (CowSpec pins filesRewritten == 0); the
-    * read path subtracts the vectors row-level and must equal the plain
-    * anti-join. Read cost carries the binary-search merge until
-    * compaction materializes it away — the deliberate MOR trade.
+    * MERGE-ON-READ — the delete writes position deletion-vector
+    * sidecars and rewrites ZERO data files (CowSpec pins
+    * filesRewritten == 0); the read path skips the marked rows and must
+    * equal the plain anti-join. Read cost carries the binary-search
+    * merge until compaction materializes it away — the deliberate MOR
+    * trade.
     */
   def q92MorDelete(s: SparkSession, dir: String): () => DataFrame = {
     val path = sink("q92", dir)

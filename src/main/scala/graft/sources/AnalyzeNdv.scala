@@ -104,7 +104,7 @@ object AnalyzeNdv {
     val byFile: Map[String, Map[String, (String, String)]] =
       m.files.map { f =>
         f.name -> cols.map { c =>
-          ManifestTable.ndvStatKey(c) -> (k.toString,
+          ManifestTable.ndvKey(c) -> (k.toString,
             GTabBloom.encode(got.getOrElse((f.name, c), Array.empty)))
         }.toMap
       }.toMap

@@ -62,8 +62,8 @@ object CowOps {
     * genuine write contention a table needs a coordinator, not an
     * unbounded spin.
     */
-  private def withCommitRetry(dir: String, ref: String = "")(
-      body: ManifestTable.Manifest => CowResult): CowResult = {
+  private[sources] def withCommitRetry[T](dir: String, ref: String = "")(
+      body: ManifestTable.Manifest => T): T = {
     val maxAttempts = 3
     var last: ManifestTable.ConcurrentCommitException = null
     var attempt = 0
@@ -80,22 +80,64 @@ object CowOps {
     throw last
   }
 
-  /** Commit `added` replacing `affected`, cleaning up what this attempt
-    * wrote if the commit loses the CAS: the new data files (entries not
-    * already in `affected` — a deletion-vectored entry keeps its name)
-    * and the `sidecars`. They are unreferenced; deleting keeps the data
-    * dir free of loser debris rather than waiting on vacuum.
+  /** Commit `added` replacing `affected` against `version`, cleaning up
+    * what this attempt wrote if the commit loses the CAS: the new data
+    * files (entries not already in `affected` — a deletion-vectored
+    * entry keeps its name) and the `sidecars`. They are unreferenced;
+    * deleting keeps the data dir free of loser debris rather than
+    * waiting on vacuum.
     */
-  private def commitOrCleanup(dir: String, m: ManifestTable.Manifest,
+  private[sources] def commitOrCleanup(dir: String, version: Long,
       affected: Set[String], added: Seq[ManifestTable.FileEntry],
       ref: String, op: String, sidecars: Seq[String] = Nil): Long = {
     beforeCommitHook()
-    try ManifestTable.commitReplace(dir, m.version, affected, added, ref, op)
+    try ManifestTable.commitReplace(dir, version, affected, added, ref, op)
     catch { case e: ManifestTable.ConcurrentCommitException =>
       (added.map(_.name).filterNot(affected) ++ sidecars)
         .foreach(n => FsMeta.deleteRecursive(s"$dir/data/$n"))
       throw e
     }
+  }
+
+  /** Chain fresh position-vector refs (file name -> (sidecar, count)
+    * pairs) onto their manifest entries — the one step every
+    * merge-on-read commit takes. Once a file's chain would exceed
+    * [[ManifestTable.DvPosChainMax]] members it folds into one sidecar:
+    * a per-FILE bounded read (positions per file <= rows per file),
+    * never proportional to the operation's total deleted rows. Returns
+    * the updated entries and every sidecar the commit is responsible
+    * for (the fresh refs plus fold successors), for
+    * [[commitOrCleanup]] to delete if the CAS loses.
+    */
+  private[sources] def chainDvs(dir: String,
+      entries: Seq[ManifestTable.FileEntry],
+      refs: Map[String, Seq[(String, Long)]])
+      : (Seq[ManifestTable.FileEntry], Seq[String]) = {
+    val owned = scala.collection.mutable.ListBuffer.empty[String]
+    owned ++= refs.values.flatten.map(_._1)
+    val updated = entries.map { f =>
+      val prior = f.stats.get(ManifestTable.DvPosKey)
+        .flatMap(_._2.toLongOption).getOrElse(0L)
+      val fresh = refs(f.name)
+      val chain = ManifestTable.dvPosChain(f.stats) ++ fresh.map(_._1)
+      val stat =
+        if (chain.size <= ManifestTable.DvPosChainMax)
+          (chain.mkString(";"), (prior + fresh.map(_._2).sum).toString)
+        else {
+          // fold: this commit's own partials become garbage at once
+          // (prior members stay — earlier versions reference them;
+          // vacuum reclaims once those expire)
+          val conf = FsMeta.hadoopConf()
+          val merged = chain.toArray.flatMap(n =>
+            ManifestTable.readDv(conf, s"$dir/data/$n")).distinct
+          val name = ManifestTable.writeDv(conf, dir, merged)
+          owned += name
+          fresh.map(_._1).foreach(n => FsMeta.deleteRecursive(s"$dir/data/$n"))
+          (name, merged.length.toString)
+        }
+      f.copy(stats = f.stats + (ManifestTable.DvPosKey -> stat))
+    }
+    (updated, owned.toSeq)
   }
 
   private def requireIntegralKey(df: DataFrame, keyCol: String): Unit = {
@@ -327,133 +369,99 @@ object CowOps {
       Seq(keyCol))
     val added = stageAndAdopt(spark, dir,
       reclustered(merged, keyCol, math.max(1, affected.size)), m)
-    val v = commitOrCleanup(dir, m, affected.toSet, added, branch,
+    val v = commitOrCleanup(dir, m.version, affected.toSet, added, branch,
       "cow-merge")
     CowResult(v, affected.size, m.files.size - affected.size, added.size)
   }
 
-  /** Write one value-keyed DV sidecar from the EXECUTORS: the distinct
-    * key set (unioned with a prior sidecar's contents, both read as
-    * ordinary datasets) sorts into a single partition whose one task
-    * streams the run straight into the sidecar file — the driver sees
-    * only the (name, cardinality) ref, never the keys. A `DELETE WHERE`
-    * whose key frame matches billions of rows costs the cluster one
-    * tiny extra stage and the driver nothing, closing what used to be
-    * the last data-proportional driver collect in the DML stack. The
-    * single-partition sort is fine at any realistic DV size (a sidecar
-    * bigger than one task's comfort zone means the table wants a COW
-    * rewrite, not a larger vector).
+  /** Position vectors for the rows of the `names` files whose key is in
+    * `keys`: the files are read through their current vectors with the
+    * `_file`/`_pos` metadata columns, semi-joined with the distinct keys
+    * (the broadcast join [[delete]] uses), and each task writes one
+    * sorted-ordinal sidecar per file it saw. Only (file, sidecar,
+    * count) refs reach the driver, never positions. A row already
+    * deleted is never read, so fresh sidecars are disjoint from a
+    * file's chain.
     */
-  private def writeDvDistributed(spark: SparkSession, dir: String,
-      keys: DataFrame, keyCol: String, prior: Option[String])
-      : (String, Long) = {
+  private def deleteVectors(spark: SparkSession, dir: String,
+      m: ManifestTable.Manifest, names: Seq[String], keys: DataFrame,
+      keyCol: String, ref: String): Map[String, Seq[(String, Long)]] = {
     import spark.implicits._
-    val name = s"dv-${java.util.UUID.randomUUID}.gdv"
-    val full = s"$dir/data/$name"
+    if (names.isEmpty) return Map.empty
     val confMap = FsMeta.confAsMap()
-    val fresh = keys.select(col(keyCol).cast("long").as("__dvk")).as[Long]
-    val all = prior match {
-      case Some(p) => fresh.union(
-        spark.read.textFile(s"$dir/data/$p")
-          .filter((l: String) => l.nonEmpty).map(_.toLong))
-      case None => fresh
-    }
-    val n = all.distinct().repartition(1)
-      .sortWithinPartitions("__dvk")
-      .mapPartitions { it =>
+    readOnly(spark, dir, names, m.schema, ref)
+      .select(col(ManifestTable.FileMetaCol), col(ManifestTable.PosMetaCol),
+        col(keyCol).cast("long").as("__row_k"))
+      .join(broadcast(keys.select(col(keyCol).cast("long").as("__k"))
+        .distinct()), col("__row_k") === col("__k"), "left_semi")
+      .select(ManifestTable.FileMetaCol, ManifestTable.PosMetaCol)
+      .as[(String, Long)]
+      .mapPartitions { rows =>
+        val byFile = scala.collection.mutable.HashMap.empty[
+          String, scala.collection.mutable.ArrayBuilder.ofLong]
+        rows.foreach { case (f, pos) =>
+          byFile.getOrElseUpdate(f,
+            new scala.collection.mutable.ArrayBuilder.ofLong) += pos }
         val conf = new org.apache.hadoop.conf.Configuration(false)
         confMap.foreach { case (k, v) => conf.set(k, v) }
-        val hp = new org.apache.hadoop.fs.Path(full)
-        val out = new java.io.BufferedOutputStream(
-          hp.getFileSystem(conf).create(hp, true))
-        var count = 0L
-        try it.foreach { k =>
-          out.write(k.toString.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          out.write('\n')
-          count += 1
-        } finally out.close()
-        Iterator.single(count)
-      }.collect().sum // one long per partition to the driver, not keys
-    (name, n)
+        byFile.toList.map { case (f, b) =>
+          val ps = b.result()
+          (f.substring(f.lastIndexOf('/') + 1),
+            ManifestTable.writeDv(conf, dir, ps), ps.length.toLong)
+        }.iterator
+      }.collect().toSeq.groupBy(_._1)
+      .map { case (f, rs) => f -> rs.map(r => (r._2, r._3)) }
   }
 
-  /** DV the distinct `keys` onto `affectedEntries`: one NEW sidecar per
-    * distinct prior sidecar (entries sharing a prior share the unioned
-    * successor — a file always references exactly one value-keyed
-    * sidecar, never a chain). Sidecars are executor-written
-    * ([[writeDvDistributed]]); the key frame's plan re-runs once per
-    * distinct prior group, which is 1 for every table this side of a
-    * partial-history mess. Returns the updated entries plus the sidecar
-    * names written (for cleanup if the commit loses the CAS).
+  /** Publish `refs` chained onto their entries ([[chainDvs]]) plus the
+    * `inserted` files as one version; nothing to publish, no version.
     */
-  private def attachDvs(spark: SparkSession, dir: String, keyCol: String,
-      affectedEntries: Seq[ManifestTable.FileEntry], keys: DataFrame)
-      : (Seq[ManifestTable.FileEntry], Seq[String]) = {
-    val dvKey = ManifestTable.dvStatKey(keyCol)
-    val byPrior = affectedEntries.groupBy(_.stats.get(dvKey).map(_._1))
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    val successor: Map[Option[String], (String, Long)] =
-      byPrior.keys.map { prior =>
-        val (name, n) = writeDvDistributed(spark, dir, keys, keyCol, prior)
-        written += name
-        prior -> (name, n)
-      }.toMap
-    val updated = affectedEntries.map { f =>
-      val (name, n) = successor(f.stats.get(dvKey).map(_._1))
-      f.copy(stats = f.stats + (dvKey -> (name, n.toString)))
+  private def commitMor(dir: String, m: ManifestTable.Manifest,
+      refs: Map[String, Seq[(String, Long)]],
+      inserted: Seq[ManifestTable.FileEntry], ref: String,
+      op: String): CowResult =
+    if (refs.isEmpty && inserted.isEmpty)
+      CowResult(m.version, 0, m.files.size, 0)
+    else {
+      val (updated, sidecars) = chainDvs(dir,
+        m.files.filter(f => refs.contains(f.name)), refs)
+      val v = commitOrCleanup(dir, m.version, refs.keySet,
+        updated ++ inserted, ref, op, sidecars)
+      CowResult(v, 0, m.files.size - refs.size, inserted.size)
     }
-    (updated, written.toSeq)
-  }
 
-  /** DELETE, merge-on-read: instead of rewriting affected files, their
-    * manifest entries gain a DELETION-VECTOR sidecar reference
-    * (`#dv:<keyCol>` stats key) holding the deleted key set; the
-    * connector's read path subtracts those keys row-level, and the next
-    * [[ManifestTable.compact]] (or any COW rewrite of the file) reads
-    * through the merge and materializes the deletes away. ZERO data
-    * files are rewritten — the write cost is O(affected manifest
-    * entries + key set), which is why engines choose MOR when deletes
-    * are frequent and small relative to file sizes (Iceberg v2
-    * deletes, Delta deletion vectors); the read pays a binary-search
-    * per row on affected files until compaction. Repeated MOR deletes
-    * on a file UNION into one sidecar (entries reference exactly one).
-    *
-    * The sidecar is EXECUTOR-written ([[writeDvDistributed]]): the
-    * distinct key set never collects to the driver — the driver
-    * handles the (name, cardinality) ref only. Sidecars are
+  /** DELETE, merge-on-read: instead of rewriting the files that hold
+    * `keys`, their manifest entries gain POSITION deletion vectors
+    * ([[deleteVectors]], chained by [[chainDvs]]); the read path skips
+    * the marked rows, and the next [[ManifestTable.compact]] (or any
+    * COW rewrite of the file) reads through the merge and materializes
+    * the deletes away. ZERO data files are rewritten (the write only
+    * reads the affected files, found by zone map plus bloom) — why
+    * engines choose MOR when deletes are frequent and small relative to
+    * file sizes (Iceberg v2 deletes, Delta deletion vectors). A delete
+    * that matches no row publishes no version. Sidecars are
     * manifest-referenced, so vacuum protects them while any retaining
     * snapshot lives, and time-travel readers of pre-delete versions
-    * never see the `#dv:` entry.
+    * never see them.
     */
   def deleteMor(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String, branch: String = ""): CowResult =
     withCommitRetry(dir, branch) { m =>
     requireIntegralKey(keys, keyCol)
     requireTableKey(m, keyCol)
-    val affected = affectedFiles(spark, m, keys, keyCol).toSet
-    if (affected.isEmpty) {
-      CowResult(m.version, 0, m.files.size, 0)
-    } else {
-      val affectedEntries = m.files.filter(f => affected.contains(f.name))
-      val (updated, written) =
-        attachDvs(spark, dir, keyCol, affectedEntries, keys)
-      val v = commitOrCleanup(dir, m, affected, updated, branch,
-        "mor-delete", written)
-      CowResult(v, 0, m.files.size - affected.size, 0)
-    }
+    val refs = deleteVectors(spark, dir, m,
+      affectedFiles(spark, m, keys, keyCol), keys, keyCol, branch)
+    commitMor(dir, m, refs, Nil, branch, "mor-delete")
   }
 
-  /** MERGE (upsert), merge-on-read — the MOR story completed: the OLD
-    * versions of updated keys are deletion-vectored onto the affected
-    * entries ([[deleteMor]]'s sidecar machinery) and the update rows
+  /** MERGE (upsert), merge-on-read: the OLD versions of updated keys
+    * are position-vectored as in [[deleteMor]] and the update rows
     * land as NEW files in the SAME commit, so the upsert rewrites ZERO
     * existing data files (Iceberg v2's merge-on-read MERGE shape). Read
     * semantics equal [[merge]] exactly — whole-row replacement + insert
-    * (CowSpec pins the equality); the read pays the dv binary search on
-    * affected files until compaction materializes, the deliberate MOR
-    * trade. DV'ing insert keys too is harmless (no row matches) and
-    * keeps the affected-set logic identical to the COW path.
+    * (CowSpec pins the equality); the read skips the vectored rows on
+    * affected files until compaction materializes them away, the
+    * deliberate MOR trade.
     */
   def mergeMor(spark: SparkSession, dir: String, updates: DataFrame,
       keyCol: String, branch: String = ""): CowResult =
@@ -461,16 +469,13 @@ object CowOps {
     checkSchema(m, updates, "updates")
     requireIntegralKey(updates, keyCol)
     requireTableKey(m, keyCol)
-    val affected = affectedFiles(spark, m, updates, keyCol).toSet
-    val affectedEntries = m.files.filter(f => affected.contains(f.name))
-    val (updated, written) =
-      attachDvs(spark, dir, keyCol, affectedEntries, updates)
+    val affected = affectedFiles(spark, m, updates, keyCol)
+    val refs = deleteVectors(spark, dir, m, affected, updates, keyCol,
+      branch)
     val added = stageAndAdopt(spark, dir,
       reclustered(updates.select(m.schema.fieldNames.map(col).toSeq: _*),
         keyCol, math.max(1, affected.size)), m)
-    val v = commitOrCleanup(dir, m, affected, updated ++ added, branch,
-      "mor-merge", written)
-    CowResult(v, 0, m.files.size - affected.size, added.size)
+    commitMor(dir, m, refs, added, branch, "mor-merge")
   }
 
   /** DELETE by key set (the right-to-be-forgotten table primitive —
@@ -492,7 +497,7 @@ object CowOps {
     val added = if (kept.isEmpty) Seq.empty
       else stageAndAdopt(spark, dir,
         reclustered(kept, keyCol, affected.size), m)
-    val v = commitOrCleanup(dir, m, affected.toSet, added, branch,
+    val v = commitOrCleanup(dir, m.version, affected.toSet, added, branch,
       "cow-delete")
     CowResult(v, affected.size, m.files.size - affected.size, added.size)
   }

@@ -132,12 +132,8 @@ private[graft] object GTabDelete {
     */
   @volatile private[graft] var lastStats: DeleteStats = DeleteStats(0, 0, 0)
 
-  def run(spark: SparkSession, dir: String, filters: Array[Filter]): Unit = {
-    var attempts = 0
-    while (true) {
-      val m = ManifestTable.readManifest(dir).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed manifest at $dir"))
+  def run(spark: SparkSession, dir: String, filters: Array[Filter]): Unit =
+    CowOps.withCommitRetry(dir) { m =>
       filters.foreach(f => require(translatable(f, m.schema),
         s"untranslatable DELETE filter: $f"))
       // PRUNE-THEN-CLASSIFY on sharded tables: a shard whose aggregate
@@ -150,29 +146,21 @@ private[graft] object GTabDelete {
         filters.forall(allMatch(e, _, m.schema)))
       lastStats = DeleteStats(gone.size,
         m.nFiles - possible.size, candidates.size)
-      if (gone.isEmpty && candidates.isEmpty) return // provably no-op
-      val added = if (candidates.isEmpty) Nil else {
-        val cond = filters.map(toColumn).reduce(_ && _)
-        val rows = spark.read.format("graft.sources.ManifestTable")
-          .option("path", dir)
-          .option("files", candidates.map(_.name).mkString(","))
-          .load()
-          // SURVIVORS: rows where the condition is FALSE or NULL
-          // (three-valued logic — DELETE removes only definite matches)
-          .where(coalesce(cond, lit(false)) === false)
-        CowOps.stageAndAdopt(spark, dir, rows, m)
-      }
-      try {
-        ManifestTable.commitReplace(dir, m.version,
-          (gone ++ candidates).map(_.name).toSet, added, op = "delete")
-        return
-      } catch {
-        case e: ManifestTable.ConcurrentCommitException =>
-          added.foreach(a =>
-            FsMeta.deleteRecursive(s"$dir/data/${a.name}"))
-          attempts += 1
-          if (attempts >= 3) throw e
+      // a provable no-op publishes nothing
+      if (gone.nonEmpty || candidates.nonEmpty) {
+        val added = if (candidates.isEmpty) Nil else {
+          val cond = filters.map(toColumn).reduce(_ && _)
+          val rows = spark.read.format("graft.sources.ManifestTable")
+            .option("path", dir)
+            .option("files", candidates.map(_.name).mkString(","))
+            .load()
+            // SURVIVORS: rows where the condition is FALSE or NULL
+            // (three-valued logic — DELETE removes only definite matches)
+            .where(coalesce(cond, lit(false)) === false)
+          CowOps.stageAndAdopt(spark, dir, rows, m)
+        }
+        CowOps.commitOrCleanup(dir, m.version,
+          (gone ++ candidates).map(_.name).toSet, added, "", "delete")
       }
     }
-  }
 }

@@ -19,10 +19,9 @@ import org.apache.hadoop.conf.Configuration
   * deletion vectors (`#dvp` sidecars, sorted line ordinals) to the
   * affected manifest entries. ZERO existing data files rewrite; the
   * read path subtracts marked ordinals row-level until a compaction
-  * materializes the merge away (the same contract as the value-keyed
-  * [[CowOps.deleteMor]] vectors, which this generalizes: positions
-  * identify ANY row, so arbitrary SQL predicates work without a key
-  * column).
+  * materializes the merge away. [[CowOps.deleteMor]] writes the same
+  * vectors for a key set; positions identify ANY row, so arbitrary SQL
+  * predicates work without a key column.
   *
   * The row ID rides the line-oriented codec's one stable invariant:
   * rows are never reordered in place (deletes are sidecars, rewrites
@@ -116,11 +115,9 @@ private[sources] class GTabMorOperation(path: String, cmd: Command)
   * deleted positions themselves (Iceberg's position-delete-file shape:
   * a 1%-of-100TB DELETE ships file names through the driver, not
   * billions of ordinals). Affected manifest entries CHAIN the new refs
-  * onto any existing ones; once a file's chain would exceed
-  * [[ManifestTable.DvPosChainMax]] members the commit folds it into one
-  * sidecar — a per-FILE bounded read (positions per file <= rows per
-  * file), never proportional to the operation's total deleted rows.
-  * One atomic manifest version publishes vectors and inserts together.
+  * onto any existing ones, folding past [[ManifestTable.DvPosChainMax]]
+  * ([[CowOps.chainDvs]], the step [[CowOps.deleteMor]] shares). One
+  * atomic manifest version publishes vectors and inserts together.
   */
 private[sources] class GTabDeltaBatchWrite(op: GTabMorOperation,
     path: String, info: LogicalWriteInfo, bloomCols: Seq[String],
@@ -147,48 +144,11 @@ private[sources] class GTabDeltaBatchWrite(op: GTabMorOperation,
       ManifestTable.readManifest(path).map(_.version).getOrElse(0L))
     val cur = ManifestTable.readManifest(path).getOrElse(
       throw new IllegalStateException(s"no committed manifest at $path"))
-    val affectedEntries = cur.files.filter(f => refsByFile.contains(f.name))
-    // every sidecar THIS commit is responsible for (task-written
-    // partials + any fold successors) — deleted if the CAS loses
-    val writtenSidecars = scala.collection.mutable.ListBuffer.empty[String]
-    writtenSidecars ++= refsByFile.values.flatten.map(_._1)
-    val updated = affectedEntries.map { f =>
-      val priorChain = ManifestTable.dvPosChain(f.stats)
-      val priorCount = f.stats.get(ManifestTable.DvPosKey)
-        .flatMap(_._2.toLongOption).getOrElse(0L)
-      val fresh = refsByFile(f.name)
-      val chain = priorChain ++ fresh.map(_._1)
-      val total = priorCount + fresh.map(_._2).sum
-      if (chain.size <= ManifestTable.DvPosChainMax)
-        f.copy(stats = f.stats + (ManifestTable.DvPosKey ->
-          (chain.mkString(";"), total.toString)))
-      else {
-        // fold: union the chain into ONE sidecar. Bounded by this
-        // file's row count; this commit's own partials become garbage
-        // immediately (prior members stay — earlier versions reference
-        // them; vacuum reclaims once those expire)
-        val merged = chain.toArray.flatMap(n => ManifestTable.readDv(
-          FsMeta.hadoopConf(), s"$path/data/$n")).distinct.sorted
-        val name = s"dvp-${java.util.UUID.randomUUID}.gdv"
-        ManifestTable.writeDv(path, name, merged)
-        writtenSidecars += name
-        fresh.map(_._1).foreach(n =>
-          FsMeta.deleteRecursive(s"$path/data/$n"))
-        f.copy(stats = f.stats + (ManifestTable.DvPosKey ->
-          (name, merged.length.toString)))
-      }
-    }
-    // shared test seam with the COW paths: a spec can interleave a
-    // competing commit deterministically right before the CAS
-    CowOps.beforeCommitHook()
-    try ManifestTable.commitReplace(path, ver,
-      affectedEntries.map(_.name).toSet, updated ++ inserted,
-      op = "mor-" + op.command().toString.toLowerCase)
-    catch { case e: Throwable =>
-      (writtenSidecars ++ inserted.map(_.name)).foreach(n =>
-        FsMeta.deleteRecursive(s"$path/data/$n"))
-      throw e
-    }
+    val (updated, sidecars) = CowOps.chainDvs(path,
+      cur.files.filter(f => refsByFile.contains(f.name)), refsByFile)
+    CowOps.commitOrCleanup(path, ver, refsByFile.keySet,
+      updated ++ inserted, "", "mor-" + op.command().toString.toLowerCase,
+      sidecars)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -283,12 +243,9 @@ private[sources] class GTabDeltaWriter(dir: String,
       if (insertWriter == null) Seq.empty[ManifestTable.FileEntry]
       else GTabCommits.entriesOf(Array(insertWriter.commit()))
     val refs = deletes.toSeq.map { case (f, ps) =>
-      val arr = ps.toArray
-      java.util.Arrays.sort(arr)
-      val name = s"dvp-${java.util.UUID.randomUUID}.gdv"
-      ManifestTable.writeDvConf(conf, s"$dir/data/$name", arr)
+      val name = ManifestTable.writeDv(conf, dir, ps.toArray)
       wroteSidecars += name
-      f -> (name, arr.length.toLong)
+      f -> (name, ps.length.toLong)
     }
     GTabDeltaCommit(ins, refs)
   }

@@ -136,15 +136,8 @@ private[sources] class GTabReplaceBatchWrite(op: GTabRowLevelOperation,
       // nothing to replace, commit as a pure add against current
       (ManifestTable.readManifest(path).map(_.version).getOrElse(0L),
         Set.empty[String]))
-    // shared test seam with the Scala COW path: lets a spec interleave
-    // a competing commit deterministically right before the CAS
-    CowOps.beforeCommitHook()
-    try ManifestTable.commitReplace(path, ver, removed, entries,
-      op = "cow-" + op.command().toString.toLowerCase)
-    catch { case e: Throwable =>
-      entries.foreach(a => FsMeta.deleteRecursive(s"$path/data/${a.name}"))
-      throw e
-    }
+    CowOps.commitOrCleanup(path, ver, removed, entries, "",
+      "cow-" + op.command().toString.toLowerCase)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -325,7 +325,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Rename `from` → `to` through a file entry's metadata: the column
     * list and every stats key namespace (`c`, `#bloom:c`, `#part:c`,
-    * `#dv:c`) — what keeps skipping exact across a rename.
+    * `#ndv:c`) — what keeps skipping exact across a rename.
     */
   private def renameInEntries(from: String, to: String)
       : Seq[ManifestTable.FileEntry] => Seq[ManifestTable.FileEntry] = {

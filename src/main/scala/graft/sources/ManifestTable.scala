@@ -399,8 +399,7 @@ object ManifestTable {
       .map(escape).mkString(","), "")
     // any member carrying a deletion vector disables the metadata-count
     // fast path without a decode
-    if (entries.exists(_.stats.keys.exists(k =>
-        k.startsWith(DvPrefix) || k == DvPosKey)))
+    if (entries.exists(_.stats.keys.exists(isDvStat)))
       agg("#dv") = ("1", "")
     // bloom over member FILE NAMES: commitReplace and the files-option
     // read probe it to skip shards that cannot hold a requested entry
@@ -658,20 +657,6 @@ object ManifestTable {
     s"concurrent commit at $dir: expected to publish version $version " +
       s"but another writer got there first (current version $foundVersion)")
 
-  // ---- merge-on-read deletion vectors ----
-  // A DELETE can avoid rewriting data files entirely: the deleted key
-  // set lands in a SIDECAR file and affected manifest entries reference
-  // it under a reserved `#dv:<keyCol>` stats key (the `#bloom:` trick —
-  // no format version bump, older readers see stats for a column no
-  // filter names). The read path subtracts sidecar keys row-level; a
-  // later compaction (or COW rewrite) reads THROUGH the merge and
-  // materializes the deletes away. Iceberg v2's position-delete shape,
-  // keyed by value instead of position (the text codec has no stable
-  // row ordinals). See [[CowOps.deleteMor]].
-
-  private[sources] val DvPrefix = "#dv:"
-  private[sources] def dvStatKey(col: String): String = DvPrefix + col
-
   // ---- per-file NDV sketches (reserved `#ndv:<col>` stats key) ----
   // A KMV (k-minimum-values) sketch per requested column per file: the
   // k smallest 64-bit hashes of the column's distinct values, written
@@ -687,7 +672,7 @@ object ManifestTable {
   // exactly what join ordering needs. Sub-k unions are EXACT (no file
   // truncated its set). Same no-format-bump trick as `#bloom:`.
   private[graft] val NdvPrefix = "#ndv:"
-  private[sources] def ndvStatKey(col: String): String = NdvPrefix + col
+  private[sources] def ndvKey(col: String): String = NdvPrefix + col
   private[sources] val NdvK = 64
 
   /** Merge per-file KMV hash sets into a distinct-count estimate; None
@@ -696,7 +681,7 @@ object ManifestTable {
     */
   private[sources] def mergeNdv(files: Seq[FileEntry], col: String)
       : Option[Long] = {
-    val key = ndvStatKey(col)
+    val key = ndvKey(col)
     val per = files.map(_.stats.get(key))
     if (files.isEmpty || per.exists(_.isEmpty)) return None
     val ks = per.map(_.get._1.toIntOption.getOrElse(return None))
@@ -750,7 +735,7 @@ object ManifestTable {
 
   // ---- per-file byte size (reserved `#sz` stats key) ----
   // The writer records each data file's exact byte count in its manifest
-  // entry (the `#bloom:`/`#dv:` trick — no format bump, older readers see
+  // entry (the `#bloom:` trick — no format bump, older readers see
   // a stat for a column no filter names). The scan sums them into a DSv2
   // statistics report: without one, Spark costs EVERY DSv2 relation at
   // `spark.sql.defaultSizeInBytes` (Long.MaxValue by default), so a join
@@ -896,43 +881,30 @@ object ManifestTable {
     }
 
   /** Rows a scan of `files` will actually emit: the physical counts
-    * minus the deletion-vector cardinalities, counted per DISTINCT
-    * sidecar — affected files SHARE a sidecar carrying the whole key
-    * set, so per-file subtraction would overcount deletes by the
-    * sharing factor. Still an estimate (a key may miss every file, two
-    * sidecars may overlap); exactness lives in the read path, this
-    * feeds the optimizer.
+    * minus each file's position-vector cardinality. Exact: a vector
+    * holds positions of one file, and its chain members are disjoint.
     */
-  private[sources] def liveRows(files: Seq[FileEntry]): Long = {
-    val phys = files.map(_.rows).sum
-    val dv = files.flatMap(_.stats.collect {
-      case (k, (name, n)) if k.startsWith(DvPrefix) || k == DvPosKey =>
-        (name, n.toLongOption.getOrElse(0L))
-    }).distinct.map(_._2).sum
-    math.max(0L, phys - dv)
-  }
+  private[sources] def liveRows(files: Seq[FileEntry]): Long =
+    files.map(f => f.rows - f.stats.get(DvPosKey)
+      .flatMap(_._2.toLongOption).getOrElse(0L)).sum
 
-  /** Write a deletion-vector sidecar (sorted distinct keys, one per
-    * line — the table's own text-codec discipline) and return nothing;
-    * the caller references `name` from the manifest entry stats.
+  /** Write `positions` (sorted here, in place) as a new deletion-vector
+    * sidecar in `dir`'s data directory, one per line — the table's own
+    * text-codec discipline — and return its write-once name, invisible
+    * until a manifest entry chains it. Takes an explicit Hadoop conf:
+    * executors author sidecars too, and FsMeta's conf comes from the
+    * driver's active session.
     */
-  private[sources] def writeDv(dir: String, name: String,
-      keys: Array[Long]): Unit =
-    FsMeta.writeString(s"$dir/data/$name", keys.mkString("", "\n", "\n"))
-
-  /** [[writeDv]] through an explicit Hadoop conf — the EXECUTOR-side
-    * variant (delta-writer tasks author their own position sidecars;
-    * FsMeta's conf comes from the driver's active session, absent on
-    * executors).
-    */
-  private[sources] def writeDvConf(conf: Configuration, path: String,
-      keys: Array[Long]): Unit = {
-    val hp = new HPath(path)
-    val fs = hp.getFileSystem(conf)
-    val out = fs.create(hp, true)
-    try out.write(keys.mkString("", "\n", "\n")
+  private[sources] def writeDv(conf: Configuration, dir: String,
+      positions: Array[Long]): String = {
+    java.util.Arrays.sort(positions)
+    val name = s"dvp-${java.util.UUID.randomUUID}.gdv"
+    val hp = new HPath(s"$dir/data/$name")
+    val out = hp.getFileSystem(conf).create(hp, true)
+    try out.write(positions.mkString("", "\n", "\n")
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    name
   }
 
   /** Read a deletion-vector sidecar back as a sorted array (driver or
@@ -983,26 +955,31 @@ object ManifestTable {
         .flatMap(readShard(m.dir, _)).filter(keep)
 
   /** Scan partition for a manifest entry, deletion vectors attached —
-    * shared by the batch scan and the micro-batch stream.
+    * shared by the batch scan and the micro-batch stream. An entry
+    * still carrying an older build's value-keyed vector is refused:
+    * reading past it would silently bring its deleted rows back.
     */
   private[sources] def partitionOf(path: String,
       f: FileEntry): GTabPartition = {
-    val dvs = f.stats.collect {
-      case (k, (sidecar, _)) if k.startsWith(DvPrefix) =>
-        (s"$path/data/$sidecar", f.cols.indexOf(k.stripPrefix(DvPrefix)))
-    }.toSeq
-    GTabPartition(s"$path/data/${f.name}", f.rows, f.crc, f.cols, dvs,
+    f.stats.keys.find(k => isDvStat(k) && k != DvPosKey).foreach { k =>
+      throw new IllegalStateException(s"$path/data/${f.name} carries a " +
+        s"value-keyed deletion vector ($k), which this build no longer " +
+        "reads: compact the table with an older build first")
+    }
+    GTabPartition(s"$path/data/${f.name}", f.rows, f.crc, f.cols,
       dvPosChain(f.stats).map(n => s"$path/data/$n"))
   }
 
   /** Every file name version `m` references: data files plus their
-    * deletion-vector sidecars — the set vacuum must protect.
+    * deletion-vector sidecars — the set vacuum must protect (an older
+    * build's value-keyed sidecar too, so compacting with that build
+    * still finds it).
     */
   private[sources] def referencedNames(m: Manifest): Seq[String] =
     m.files.flatMap { f =>
-      f.name +: (f.stats.collect {
-        case (k, (sidecar, _)) if k.startsWith(DvPrefix) => sidecar
-      }.toSeq ++ dvPosChain(f.stats))
+      f.name +: f.stats.toSeq.collect { case (k, (names, _)) if isDvStat(k) =>
+        names.split(";").toSeq.filter(_.nonEmpty)
+      }.flatten
     }
 
   /** Publish-time tree normalization: once a root would carry more
@@ -1122,7 +1099,7 @@ object ManifestTable {
     * of a 100 TB table viable. Updates surface as delete+insert pairs
     * (a value-keyed feed cannot pair them; consumers with a key join
     * the two sides). Stats participate in the entry key deliberately:
-    * a merge-on-read delete changes no file NAME, but its `#dv:` stats
+    * a merge-on-read delete changes no file NAME, but its `#dvp` stats
     * change puts the file on both sides and the except yields exactly
     * the deleted rows. Across a schema evolution both sides project to
     * the TO version's schema (missing columns null), so the consumer
@@ -1712,14 +1689,14 @@ object ManifestTable {
     */
   val PosMetaCol = "_pos"
 
-  // ---- POSITION deletion vectors (reserved `#dvp` stats key) ----
-  // The merge-on-read shape for SQL DML: `#dvp -> (chain, count)`
+  // ---- deletion vectors (reserved `#dvp` stats key) ----
+  // The one merge-on-read delete format: `#dvp -> (chain, count)`
   // marks rows deleted BY PHYSICAL POSITION (sorted line ordinals in
-  // the sidecar, same codec as the value-keyed `#dv:` vectors). The
-  // read path skips marked ordinals row-level; value- and position-
-  // vectors compose on one file. Unlike `#dv:` (which needs a key
-  // column), positions identify ANY row — what lets SupportsDelta
-  // express arbitrary SQL DELETE/UPDATE/MERGE without rewriting files.
+  // the sidecar, one per line). The read path skips marked ordinals
+  // row-level, and a later compaction (or COW rewrite) reads THROUGH
+  // the merge and materializes the deletes away. Positions identify
+  // ANY row, so one format serves SQL DELETE/UPDATE/MERGE
+  // (SupportsDelta) and the key-set [[CowOps.deleteMor]] alike.
   //
   // `chain` is one or more ';'-joined sidecar names (count = their
   // total cardinality; members are disjoint by construction — a scan
@@ -1739,6 +1716,14 @@ object ManifestTable {
       : Seq[String] =
     stats.get(DvPosKey).toSeq
       .flatMap(_._1.split(";").toSeq.filter(_.nonEmpty))
+
+  /** A deletion-vector stat key: `#dvp`, or the per-column key of an
+    * older build's value-keyed vector, which [[partitionOf]] refuses to
+    * read. The count fast path, the shard census and vacuum treat both
+    * alike, so a stale vector is never counted past and its sidecar is
+    * never reaped.
+    */
+  private[sources] def isDvStat(k: String): Boolean = k.startsWith("#dv")
 
   private[sources] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { f =>
@@ -2231,7 +2216,7 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
       var i = 0
       while (it.hasNext) { hs(i) = it.next().longValue ^ Long.MinValue
         i += 1 }
-      ManifestTable.ndvStatKey(ndvCols(j)) ->
+      ManifestTable.ndvKey(ndvCols(j)) ->
         (ManifestTable.NdvK.toString, GTabBloom.encode(hs))
     }
 
@@ -2402,9 +2387,7 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
       // manifest row counts are PHYSICAL; a deletion-vector file's
       // logical count needs the row-level merge — decline and scan
       // (compaction restores the metadata-count fast path)
-      !(manifest.inline.exists(_.stats.keys.exists(k =>
-          k.startsWith(ManifestTable.DvPrefix) ||
-            k == ManifestTable.DvPosKey)) ||
+      !(manifest.inline.exists(_.stats.keys.exists(ManifestTable.isDvStat)) ||
         manifest.shards.exists(_.agg.contains("#dv")))
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     countOk(agg)
@@ -2418,13 +2401,6 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
       FsMeta.confAsMap(), streamOpts, ref, onPlan)
 }
 
-/** Conservative zone-map evaluation: `keep` answers "could this file
-  * hold a matching row?" — unknown filter shapes, missing stats, and
-  * unparseable literals all answer TRUE (never prune on uncertainty).
-  * Bounds compare in exact BigDecimal arithmetic: integral stats stay
-  * exact past 2^53 and double stats use the exact binary expansion, so
-  * no rounding can shrink an interval and skip a matching file.
-  */
 /** Per-file BLOOM point-lookup skipping — the zone maps' complement:
   * range stats prune range predicates on CLUSTERED layouts, blooms prune
   * equality/IN predicates on ANY layout (including hash-scattered tables
@@ -2527,6 +2503,13 @@ private[graft] object GTabBloom {
     }
 }
 
+/** Conservative zone-map evaluation: `keep` answers "could this file
+  * hold a matching row?" — unknown filter shapes, missing stats, and
+  * unparseable literals all answer TRUE (never prune on uncertainty).
+  * Bounds compare in exact BigDecimal arithmetic: integral stats stay
+  * exact past 2^53 and double stats use the exact binary expansion, so
+  * no rounding can shrink an interval and skip a matching file.
+  */
 private[graft] object GTabSkip {
 
   def usable(f: Filter, schema: StructType,
@@ -2757,13 +2740,11 @@ private[sources] class GTabCountScan(path: String,
     new SingleRowReaderFactory(Array(n))
 }
 
-/** `dvs`: deletion-vector sidecars this file's read must subtract, as
-  * (sidecar path, index of the key column in THIS FILE's layout); -1
-  * index (pre-evolution file without the column) means no row matches.
+/** `posDv`: the paths of the position-vector sidecars (the `#dvp`
+  * chain) whose ordinals this file's read must skip.
   */
 private[sources] final case class GTabPartition(file: String, rows: Long,
     crc: Long, cols: Seq[String] = Nil,
-    dvs: Seq[(String, Int)] = Nil,
     posDv: Seq[String] = Nil) extends InputPartition
 
 /** The V2-Predicate → V1 Filter conversion for the shapes runtime
@@ -3315,18 +3296,12 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
     }
   }
 
-  // merge-on-read: deletion-vector sidecars loaded once per partition
-  // (sorted arrays, binarySearch per row); a deleted row still counts
-  // toward the PHYSICAL row count and CRC — integrity checks see the
-  // file as written, the query just never receives the row
-  private val dvs: Array[(Array[Long], Int)] =
-    p.dvs.map { case (f, ix) => (ManifestTable.readDv(conf, f), ix) }
-      .toArray
-  // position deletion vector: sorted physical line ordinals to skip —
-  // the SupportsDelta (SQL merge-on-read DML) sidecars; composes with
-  // the value-keyed vectors above on the same file. A chain's members
-  // are disjoint, so a concat+sort of the per-sidecar sorted runs is
-  // the exact union
+  // merge-on-read: the deletion vector's sorted physical line ordinals
+  // to skip, loaded once per partition (binarySearch per row); a deleted
+  // row still counts toward the PHYSICAL row count and CRC — integrity
+  // checks see the file as written, the query just never receives the
+  // row. A chain's members are disjoint, so a concat+sort of the
+  // per-sidecar sorted runs is the exact union
   private val posDv: Array[Long] =
     if (p.posDv.isEmpty) Array.emptyLongArray
     else if (p.posDv.lengthCompare(1) == 0)
@@ -3340,21 +3315,6 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
   // the scan's exact predicates against THIS file's layout; null = none
   private val matches: Array[String] => Boolean =
     if (exact.isEmpty) null else GTabExact.compile(exact, full, p.cols)
-
-  private def dvDeleted(parts: Array[String]): Boolean = {
-    var d = 0
-    while (d < dvs.length) {
-      val (keys, ix) = dvs(d)
-      if (ix >= 0) {
-        val raw = parts(ix)
-        if (raw != ManifestTable.Null &&
-            java.util.Arrays.binarySearch(keys,
-              java.lang.Long.parseLong(raw)) >= 0) return true
-      }
-      d += 1
-    }
-    false
-  }
 
   override def next(): Boolean = {
     while (true) {
@@ -3377,8 +3337,7 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
         java.util.Arrays.binarySearch(posDv, ordinal) >= 0
       if (!posDeleted) {
         val parts = line.split("\t", -1)
-        if ((dvs.isEmpty || !dvDeleted(parts)) &&
-            (matches == null || matches(parts))) {
+        if (matches == null || matches(parts)) {
           val vals = new Array[Any](colIx.length)
           var j = 0
           while (j < colIx.length) {

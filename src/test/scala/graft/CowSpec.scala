@@ -206,11 +206,13 @@ class CowSpec extends AnyFunSuite {
     assert(r.filesRewritten == 0 && r.filesAdded == 0,
       s"merge-on-read must rewrite nothing, got $r")
     // the data files are BYTE-IDENTICAL entries (same name, same crc);
-    // only their stats gained the #dv: reference
+    // only their stats gained a #dvp reference, counting exactly the
+    // rows each file lost
     val after = ManifestTable.readManifest(dir).get
     assert(after.files.map(f => (f.name, f.crc)).toSet ==
       before.files.map(f => (f.name, f.crc)).toSet)
-    assert(after.files.forall(_.stats.contains("#dv:k")))
+    assert(after.files.forall(_.stats.contains("#dvp")))
+    assert(after.files.map(_.stats("#dvp")._2.toLong).sum == 15)
     // read-back equals the anti-join
     val got = readAll(dir)
     assert(got.size == 100 - 15 && !got.contains(0L) && !got.contains(98L)
@@ -226,38 +228,45 @@ class CowSpec extends AnyFunSuite {
       .option("versionAsOf", v0).load().count() == 100)
   }
 
-  test("stacked MOR deletes union into one sidecar; compaction materializes them away") {
+  test("stacked MOR deletes chain position sidecars, then fold; compaction drops them") {
     val dir = tmp()
     build(dir)
-    CowOps.deleteMor(spark, dir, Seq(1L, 2L).toDF("k"), "k")
-    CowOps.deleteMor(spark, dir, Seq(2L, 3L, 50L).toDF("k"), "k")
-    val m = ManifestTable.readManifest(dir).get
-    // each AFFECTED entry references exactly ONE sidecar (the union),
-    // never a chain; untouched files carry none. Keys 1,2,3 live in
-    // file [0,19], key 50 in [40,59] — exactly 2 of 5 files have dvs.
-    m.files.foreach { f =>
-      assert(f.stats.keys.count(_.startsWith("#dv:")) <= 1)
+    // keys 1..6 live in file [0,19], key 50 in [40,59]; key 2 repeats,
+    // and an already-deleted row is never read again, so counts stay
+    // exact. Five deletes touch file [0,19]: the fifth sidecar would
+    // exceed the chain bound, so the chain folds into one.
+    Seq(Seq(1L, 2L), Seq(2L, 3L, 50L), Seq(4L), Seq(5L), Seq(6L)).foreach {
+      ks =>
+        CowOps.deleteMor(spark, dir, ks.toDF("k"), "k")
+        ManifestTable.readManifest(dir).get.files.foreach { f =>
+          assert(f.stats.get("#dvp").forall(
+            _._1.split(";").length <= ManifestTable.DvPosChainMax))
+        }
     }
-    assert(m.files.count(_.stats.contains("#dv:k")) == 2)
-    assert(readAll(dir).size == 96)
-    // a dv sidecar is manifest-referenced: vacuum must not reap it while
-    // a retaining snapshot lives
+    val m = ManifestTable.readManifest(dir).get
+    val dvs = m.files.flatMap(f =>
+      f.stats.get("#dvp").map(f.stats("k")._1 -> _)).toMap
+    assert(dvs.keySet == Set("0", "40"), s"vectored files: $dvs")
+    assert(dvs("0")._2 == "6" && dvs("40")._2 == "1")
+    assert(dvs("0")._1.split(";").length < 5, "the chain must have folded")
+    assert(readAll(dir).size == 93)
+    // every chain member is manifest-referenced: vacuum must not reap it
+    // while a retaining snapshot lives
     assert(ManifestTable.vacuum(dir, graceMs = 0L).isEmpty)
-    assert(readAll(dir).size == 96)
+    assert(readAll(dir).size == 93)
     // compaction reads THROUGH the merge and drops every dv reference
     ManifestTable.compact(spark, dir, targetFiles = 2)
     val compacted = ManifestTable.readManifest(dir).get
-    assert(compacted.files.forall(
-      !_.stats.keys.exists(_.startsWith("#dv:"))))
+    assert(compacted.files.forall(!_.stats.contains("#dvp")))
     val df = spark.read.format(Fmt).option("path", dir).load()
-    assert(df.count() == 96)
+    assert(df.count() == 93)
     // the metadata-count fast path is restored post-compaction
     assert(df.groupBy().count().queryExecution.executedPlan.toString
       .contains("ManifestCount"))
     // expire + vacuum now reclaims the obsolete sidecars and fragments
     ManifestTable.expireSnapshots(dir, keepLast = 1)
     assert(ManifestTable.vacuum(dir, graceMs = 0L).nonEmpty)
-    assert(readAll(dir).size == 96)
+    assert(readAll(dir).size == 93)
   }
 
   test("mergeMor: zero rewrites, read equals the COW merge row semantics, stacking works") {
@@ -274,7 +283,7 @@ class CowSpec extends AnyFunSuite {
     // affected ones gained a dv reference
     val beforeKeys = before.files.map(f => (f.name, f.crc)).toSet
     assert(beforeKeys.subsetOf(after.files.map(f => (f.name, f.crc)).toSet))
-    assert(after.files.exists(_.stats.contains("#dv:k")))
+    assert(after.files.exists(_.stats.contains("#dvp")))
     // read semantics equal the COW merge (whole-row upsert + insert)
     val cow = tmp()
     build(cow)
@@ -288,8 +297,30 @@ class CowSpec extends AnyFunSuite {
     // compaction materializes the whole MOR state away
     ManifestTable.compact(spark, dir, targetFiles = 2)
     assert(ManifestTable.readManifest(dir).get.files.forall(
-      !_.stats.keys.exists(_.startsWith("#dv:"))))
+      !_.stats.contains("#dvp")))
     assert(readAll(dir) == got)
+  }
+
+  test("an entry carrying a legacy #dv: stat fails the read loudly") {
+    val dir = tmp()
+    build(dir)
+    // an older build's value-keyed vector: reading past it would bring
+    // its deleted rows back, so the scan must refuse the entry
+    val m = ManifestTable.readManifest(dir).get
+    val f = m.files.head
+    Files.writeString(java.nio.file.Paths.get(dir, "data", "dv-old.gdv"),
+      "0\n")
+    ManifestTable.commitReplace(dir, m.version, Set(f.name),
+      Seq(f.copy(stats = f.stats + ("#dv:k" -> ("dv-old.gdv", "1")))))
+    val df = spark.read.format(Fmt).option("path", dir).load()
+    Seq[() => Any](() => df.collect(), () => df.count()).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(f.name) &&
+        e.getMessage.contains("older build"), e.getMessage)
+    }
+    // vacuum keeps the legacy sidecar, so an older build can compact it
+    assert(!ManifestTable.vacuum(dir, graceMs = 0L).contains("dv-old.gdv"))
+    assert(Files.exists(java.nio.file.Paths.get(dir, "data", "dv-old.gdv")))
   }
 
   test("a COW merge on a dv-carrying file reads through the merge (no resurrection)") {

@@ -54,13 +54,17 @@ class GTabExactSpec extends AnyFunSuite {
         if (i % 6 == 0) None else Some(i % 50 - 25), str(i)))
       .toDF("id", "n", "s").repartition(3).createOrReplaceTempView("ex_b")
     spark.sql(s"INSERT INTO $c.db.ex SELECT * FROM ex_b")
-    // a value deletion vector, then position deletion vectors
+    // position deletion vectors from a key-set delete, then chained
+    // onto by SQL DELETE
     CowOps.deleteMor(spark, dir, Seq(-97L, 3L, 600L, 903L).toDF("id"), "id")
+    val keyed = ManifestTable.readManifest(dir).get.files
+      .flatMap(f => f.stats.get("#dvp").map(f.name -> _._2.toLong)).toMap
+    assert(keyed.values.sum == 3) // key 3 holds no row
     spark.sql(s"DELETE FROM $c.db.ex WHERE id % 13 = 0")
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.exists(!_.cols.contains("s")))
-    assert(m.files.exists(_.stats.keys.exists(_.startsWith("#dv:"))))
-    assert(m.files.exists(_.stats.contains("#dvp")))
+    assert(m.files.exists(f =>
+      keyed.get(f.name).exists(_ < f.stats("#dvp")._2.toLong)))
 
     val table = spark.read.format(Fmt).option("path", dir).load()
     val all = table.collect().toSeq

@@ -538,4 +538,20 @@ class RowLevelSpec extends AnyFunSuite {
         s"SELECT count(*) FROM $cat.db.chain1 VERSION AS OF $v0")
       .as[Long].head() == 200)
   }
+
+  test("CowOps.deleteMor and a MOR SQL DELETE give the same rows and " +
+      "#dvp counts") {
+    val key = mkMorTable("dk1"); val sql = mkMorTable("ds1")
+    graft.sources.CowOps.deleteMor(spark, key,
+      (0 until 100).filter(_ % 7 == 0).map(_.toLong).toDF("id"), "id")
+    spark.sql(s"DELETE FROM $cat.db.ds1 WHERE id % 7 = 0")
+    def rows(t: String) =
+      spark.sql(s"SELECT * FROM $cat.db.$t ORDER BY id").collect().toSeq
+    assert(rows("dk1") == rows("ds1") && rows("dk1").size == 85)
+    // the same layout on both sides, so files pair up by zone map
+    def counts(dir: String) = ManifestTable.readManifest(dir).get.files
+      .map(f => f.stats("id") -> f.stats.get("#dvp").map(_._2)).toMap
+    assert(counts(key) == counts(sql) &&
+      counts(key).values.flatten.map(_.toLong).sum == 15, counts(key))
+  }
 }

@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in graft/streaming/BatchCommit.scala, and each persisted index has one
   * (staged) append. Blooms keep one sizing rule (per file, no
   * `bloomBits` knob) and one double-hashing position step, BloomUtil's.
+  * gtab keeps one deletion-vector format, the `#dvp` position vectors.
   */
 class SessionSpec extends AnyFunSuite {
   private def sources(root: String) = {
@@ -62,5 +63,14 @@ class SessionSpec extends AnyFunSuite {
     assert(knobs.isEmpty,
       s"gtab blooms are sized per file (GTabBloom.bitsFor), no bloomBits in: ${knobs.mkString(", ")}")
     assert(Files.exists(own), s"$own moved: re-point this guard")
+  }
+
+  test("gtab writes and reads one deletion-vector format, #dvp") {
+    val valueDv =
+      "\"[^\"\n]*#dv:|\\b(DvPrefix|writeDvDistributed|dvDeleted)\\b".r
+    val offenders = sources("src/main/scala")
+      .filter(p => valueDv.findFirstIn(Files.readString(p)).isDefined)
+    assert(offenders.isEmpty,
+      s"delete rows through #dvp position vectors, not a value-keyed format, in: ${offenders.mkString(", ")}")
   }
 }

@@ -258,4 +258,25 @@ class TableStatsSpec extends AnyFunSuite {
     assert(st.rowCount.contains(BigInt(150)),
       s"150 live rows after the MOR delete, got ${st.rowCount}")
   }
+
+  test("a MOR delete of keys that match no row leaves the row estimate exact") {
+    val dir = tmp()
+    (0 until 200).map(i => (i.toLong * 2, s"r$i")).toDF("id", "s")
+      .write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
+    val v0 = ManifestTable.readManifest(dir).get.version
+    def rowCount = read(dir).queryExecution.optimizedPlan.stats.rowCount
+    // odd keys inside the zone map: every file is a candidate, no row
+    // matches, and nothing is published
+    val miss = graft.sources.CowOps.deleteMor(spark, dir,
+      spark.range(1, 400, 2).select(col("id")), "id")
+    assert(miss.version == v0 &&
+      ManifestTable.readManifest(dir).get.version == v0)
+    assert(rowCount.contains(BigInt(200)), s"got $rowCount")
+    // hits and misses together: the vectors count only the hits
+    graft.sources.CowOps.deleteMor(spark, dir,
+      spark.range(0, 400, 3).select(col("id")), "id")
+    val live = read(dir).count()
+    assert(live == 200 - (0 until 400 by 6).size)
+    assert(rowCount.contains(BigInt(live)), s"$live live rows, got $rowCount")
+  }
 }
