@@ -706,7 +706,7 @@ object StorageLayout {
     val after = graft.sources.ManifestTable.readManifest(tdir).get
     require(after.files.map(_.name).toSet == before,
       "MOR DELETE must rewrite zero data files")
-    require(after.files.exists(_.stats.contains("#dvp")),
+    require(after.files.exists(_.stats.dv.isDefined),
       "MOR DELETE must attach position deletion vectors")
     () => s.sql(s"""SELECT c_custkey, c_name, c_nationkey, c_acctbal,
                    |  c_mktsegment FROM $cat.cust

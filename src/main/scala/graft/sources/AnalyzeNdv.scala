@@ -101,10 +101,10 @@ object AnalyzeNdv {
           .map(_ ^ Long.MinValue).sorted.take(k)
           .map(_ ^ Long.MinValue)
       }
-    val byFile: Map[String, Map[String, (String, String)]] =
+    val byFile: Map[String, Map[String, Sketch]] =
       m.files.map { f =>
         f.name -> cols.map { c =>
-          ManifestTable.ndvKey(c) -> (k.toString,
+          c -> Sketch(k,
             GTabBloom.encode(got.getOrElse((f.name, c), Array.empty)))
         }.toMap
       }.toMap
@@ -115,7 +115,8 @@ object AnalyzeNdv {
       transform = cur => (cur.schema, files => files.map {
       f =>
         byFile.get(f.name) match {
-          case Some(st) => f.copy(stats = f.stats ++ st)
+          case Some(st) =>
+            f.copy(stats = f.stats.copy(ndvs = f.stats.ndvs ++ st))
           case None => f
         }
     }))

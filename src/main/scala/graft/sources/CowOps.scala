@@ -116,13 +116,12 @@ object CowOps {
     val owned = scala.collection.mutable.ListBuffer.empty[String]
     owned ++= refs.values.flatten.map(_._1)
     val updated = entries.map { f =>
-      val prior = f.stats.get(ManifestTable.DvPosKey)
-        .flatMap(_._2.toLongOption).getOrElse(0L)
+      val prior = f.stats.dv.map(_.count).getOrElse(0L)
       val fresh = refs(f.name)
-      val chain = ManifestTable.dvPosChain(f.stats) ++ fresh.map(_._1)
-      val stat =
+      val chain = f.stats.dv.toSeq.flatMap(_.names) ++ fresh.map(_._1)
+      val dv =
         if (chain.size <= ManifestTable.DvPosChainMax)
-          (chain.mkString(";"), (prior + fresh.map(_._2).sum).toString)
+          DvChain(chain, prior + fresh.map(_._2).sum)
         else {
           // fold: this commit's own partials become garbage at once
           // (prior members stay — earlier versions reference them;
@@ -133,9 +132,9 @@ object CowOps {
           val name = ManifestTable.writeDv(conf, dir, merged)
           owned += name
           fresh.map(_._1).foreach(n => FsMeta.deleteRecursive(s"$dir/data/$n"))
-          (name, merged.length.toString)
+          DvChain(Seq(name), merged.length.toLong)
         }
-      f.copy(stats = f.stats + (ManifestTable.DvPosKey -> stat))
+      f.copy(stats = f.stats.copy(dv = Some(dv)))
     }
     (updated, owned.toSeq)
   }
@@ -194,15 +193,13 @@ object CowOps {
             org.apache.spark.sql.sources
               .LessThanOrEqual(keyCol, env.getLong(1))), m.schema))
       }
-    val (statted, statless) = census.partition(_.stats.contains(keyCol))
+    val (statted, statless) =
+      census.partition(_.stats.zones.contains(keyCol))
     val hit = if (statted.isEmpty) Seq.empty[String] else {
       val ranges = statted.map { f =>
-        val (lo, hi) = f.stats(keyCol)
-        val bloom = f.stats.get(GTabBloom.statKey(keyCol))
-          .flatMap { case (kStr, b64) =>
-            kStr.toIntOption.map(_ => GTabBloom.decode(b64))
-          }.orNull
-        (f.name, lo.toLong, hi.toLong, bloom)
+        val z = f.stats.zones(keyCol)
+        (f.name, z.lo.toLong, z.hi.toLong, f.stats.blooms.get(keyCol)
+          .map(b => GTabBloom.decode(b.words)).orNull)
       }.toDF("name", "lo", "hi", "bloom")
       val inBloom = col("bloom").isNull ||
         graft.operators.BloomPrune.mightContain(col("bloom"), col("k"),
@@ -227,10 +224,9 @@ object CowOps {
       (if (ref.isEmpty) r else r.option("branch", ref)).load()
     }
 
-  /** The columns whose per-file stats carry `prefix` — blooms
-    * ([[GTabBloom.KeyPrefix]]) or NDV sketches
-    * ([[ManifestTable.NdvPrefix]]) — recovered from the stats the writers
-    * already persist. Rewrites pass them to the staged write so a COW
+  /** The columns whose files carry blooms and those whose files carry
+    * NDV sketches, recovered from the stats the writers already
+    * persist. Rewrites pass them to the staged write so a COW
     * merge/delete or a compaction does not silently strip the skipping
     * structures or the optimizer statistics: correctness would survive
     * (a missing bloom is conservative), but q90 point-lookup skipping,
@@ -238,25 +234,21 @@ object CowOps {
     * degrade permanently after the first rewrite. Only columns still in
     * the live schema count (a rename/drop may have retired the name).
     */
-  private[graft] def censusColumns(m: ManifestTable.Manifest,
-      prefix: String): Seq[String] = {
-    // sharded table with census keys: the shard refs already carry the
-    // member column names — zero decodes (absence of the key marks a
-    // pre-census shard; fall back to the exact scan)
-    val key = CensusKeys(prefix)
-    val (entries, shardCols) =
-      if (m.shards.isEmpty || !m.shards.forall(_.agg.contains(key)))
-        (m.files, Nil)
-      else (m.inline, m.shards.flatMap(_.agg(key)._1.split(","))
-        .filter(_.nonEmpty).map(ManifestTable.unescape))
-    (entries.flatMap(_.stats.keys).filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix)) ++ shardCols)
-      .filter(m.schema.fieldNames.contains).distinct.sorted
+  private[graft] def censusColumns(m: ManifestTable.Manifest)
+      : (Seq[String], Seq[String]) = {
+    // census shards carry their members' column names — zero decodes;
+    // a pre-census shard has none, so the table decodes
+    def cols(ofFile: FileStats => Iterable[String],
+        ofShard: ManifestTable.ShardRef => Option[Seq[String]]) = {
+      val (entries, shardCols) =
+        if (m.shards.forall(ofShard(_).isDefined))
+          (m.inline, m.shards.flatMap(ofShard(_).get))
+        else (m.files, Nil)
+      (entries.flatMap(e => ofFile(e.stats)) ++ shardCols)
+        .filter(m.schema.fieldNames.contains).distinct.sorted
+    }
+    (cols(_.blooms.keys, _.bloomCols), cols(_.ndvs.keys, _.ndvCols))
   }
-
-  /** Stat prefix -> the shard-census key listing its columns. */
-  private val CensusKeys = Map(GTabBloom.KeyPrefix -> "#bloomcols",
-    ManifestTable.NdvPrefix -> "#ndvcols")
 
   /** Shape a rewrite/insert row set before staging: range-partitioned
     * and sorted on the key into at most `nFiles` files. Without this,
@@ -285,12 +277,12 @@ object CowOps {
   private[sources] def effectiveSkipConfig(dir: String,
       m: ManifestTable.Manifest): (Seq[String], Seq[String]) = {
     val props = TblMeta.properties(dir)
-    def cols(prefix: String, prop: String): Seq[String] =
-      (censusColumns(m, prefix) ++ props.get(prop).toSeq
+    val (blooms, ndvs) = censusColumns(m)
+    def cols(census: Seq[String], prop: String): Seq[String] =
+      (census ++ props.get(prop).toSeq
         .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
         .distinct.sorted.filter(m.schema.fieldNames.contains)
-    (cols(GTabBloom.KeyPrefix, GTabProps.BloomColumns),
-      cols(ManifestTable.NdvPrefix, GTabProps.NdvColumns))
+    (cols(blooms, GTabProps.BloomColumns), cols(ndvs, GTabProps.NdvColumns))
   }
 
   /** [[effectiveSkipConfig]] as the write options of a rewrite. */

@@ -73,9 +73,8 @@ private[graft] object GTabDelete {
   /** Does the file's single partition value prove EVERY row matches? */
   private def allMatch(e: ManifestTable.FileEntry, f: Filter,
       schema: StructType): Boolean = {
-    def pv(c: String): Option[(String, DataType)] =
-      e.stats.get(ManifestTable.partStatKey(c)).flatMap { case (enc, _) =>
-        schema.fields.find(_.name == c).map(x => (enc, x.dataType)) }
+    def pv(c: String): Option[(String, DataType)] = e.stats.parts.get(c)
+      .zip(schema.fields.find(_.name == c).map(_.dataType))
     def notNullVal(c: String): Option[(String, DataType)] =
       pv(c).filter(_._1 != ManifestTable.Null)
     def num(enc: String, dt: DataType): Option[Long] = dt match {

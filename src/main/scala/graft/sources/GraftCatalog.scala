@@ -264,14 +264,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           require(!liveCols.contains(to),
             s"column '$to' was dropped but live files still carry it — " +
               "compact the table first or use a new name")
-          val ren = renameInEntries(from, to)
+          // column lists and per-column stats follow: skipping stays exact
           val prevFiles = files
-          files = fs => ren(prevFiles(fs))
+          files = fs => prevFiles(fs).map(f => f.copy(
+            cols = f.cols.map(c => if (c == from) to else c),
+            stats = f.stats.renamed(from, to)))
           val pcols = newPartSpec.getOrElse(TblMeta.partitionCols(dir))
           if (pcols.contains(from))
             newPartSpec = Some(pcols.map(c => if (c == from) to else c))
-          StructType(s.fields.map(f =>
+          val next = StructType(s.fields.map(f =>
             if (f.name == from) f.copy(name = to) else f))
+          ManifestTable.checkSupported(next)
+          next
         case (s, del: TableChange.DeleteColumn) =>
           val name = single(del.fieldNames(), "DROP COLUMN")
           require(s.fieldNames.contains(name), s"no column '$name'")
@@ -321,24 +325,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     TblMeta.write(dir, TblMeta.partitionCols(dir),
       GTabProps.validated(schema, merged.asJava))
-  }
-
-  /** Rename `from` → `to` through a file entry's metadata: the column
-    * list and every stats key namespace (`c`, `#bloom:c`, `#part:c`,
-    * `#ndv:c`) — what keeps skipping exact across a rename.
-    */
-  private def renameInEntries(from: String, to: String)
-      : Seq[ManifestTable.FileEntry] => Seq[ManifestTable.FileEntry] = {
-    def key(k: String): String = k match {
-      case `from` => to
-      case _ if k.startsWith("#") && k.indexOf(':') > 0 =>
-        val i = k.indexOf(':')
-        if (k.substring(i + 1) == from) k.substring(0, i + 1) + to else k
-      case _ => k
-    }
-    fs => fs.map(f => f.copy(
-      cols = f.cols.map(c => if (c == from) to else c),
-      stats = f.stats.map { case (k, v) => key(k) -> v }))
   }
 
   // ---- atomic CTAS / RTAS (StagingTableCatalog) ----

@@ -176,95 +176,38 @@ object ManifestTable {
   /** One metadata SHARD reference in the root manifest — Iceberg's
     * manifest-list shape on the gtab ledger: the root lists shards
     * (`@`-prefixed lines), each an immutable `meta/shard-*.gsh` file of
-    * entry lines, carrying AGGREGATE stats so planning can prune whole
+    * entry lines, carrying AGGREGATE facts so planning can prune whole
     * shards before decoding lines and a commit can rewrite O(touched
-    * shards) instead of re-serializing every entry:
-    *
-    *   - merged numeric zone maps (min of los, max of his) per column
-    *     every member records — the shard prunes through the SAME
-    *     [[GTabSkip.keep]] the files do (a ShardRef renders as a
-    *     pseudo-FileEntry);
-    *   - `#part:c` when the shard is single-valued on a partition
-    *     column; `#pcols` lists every partition column ANY member
-    *     records (pushdown usability without decode);
-    *   - OR-union of member blooms per bloom column (bit-union of
-    *     equal-shape filters is exactly the union filter);
-    *   - `#nf` member count, `#nbl` a bloom over member FILE NAMES
-    *     (what lets commitReplace skip shards that cannot contain a
-    *     removed file), `#dv` flag when any member carries deletion
-    *     vectors (count-pushdown guard without decode).
-    *
-    * `crc` is the shard body's CRC32, validated at every decode — the
-    * same torn-publish detection as the root.
+    * shards) instead of re-serializing every entry. `stats` aggregate the
+    * members' (see [[shardRef]]) and prune through the SAME
+    * [[GTabSkip.keep]] as files. The census answers table-level
+    * questions without a decode: `pcols` (any member's partition
+    * columns), `pall` (the set every member shares, empty when mixed),
+    * `bloomCols`, `ndvCols`; `None` marks a pre-census shard, whose
+    * callers decode instead. `hasDv` guards the metadata count;
+    * `nameBloom` over member FILE NAMES lets commitReplace skip shards.
+    * `crc` is the shard body's CRC32, validated at every decode.
     */
   final case class ShardRef(name: String, nFiles: Int, rows: Long,
-      crc: Long, cols: Seq[String], agg: Map[String, (String, String)])
+      crc: Long, cols: Seq[String], stats: FileStats, pcols: Seq[String],
+      pall: Option[Seq[String]], bloomCols: Option[Seq[String]],
+      ndvCols: Option[Seq[String]], hasDv: Boolean,
+      nameBloom: Option[Sketch])
 
   /** One committed data file. `cols` is the column list THIS file was
     * written with — the unit of schema evolution: the table schema may
     * grow (or an append may carry a subset), and readers resolve each
     * requested column BY NAME against the file's own list, yielding null
-    * where the file predates the column. `stats` are per-column zone
-    * maps (min, max as the codec's string form) collected by the writer
-    * for NUMERIC columns only — string collation differs between
-    * UTF8String's binary order and codepoint/locale orders, so string
-    * zone maps are a correctness trap deliberately left out. A column
-    * absent from the map (string col, all-null file, or pre-evolution
-    * file) is simply never pruned on.
+    * where the file predates the column. `stats.zones` are per-column
+    * zone maps collected by the writer for NUMERIC columns only — string
+    * collation differs between UTF8String's binary order and
+    * codepoint/locale orders, so string zone maps are a correctness trap
+    * deliberately left out. A column absent from the map (string col,
+    * all-null file, or pre-evolution file) is simply never pruned on.
+    * [[ManifestCodec]] maps entries to and from their manifest lines.
     */
   final case class FileEntry(name: String, rows: Long, crc: Long,
-      cols: Seq[String], stats: Map[String, (String, String)] = Map.empty)
-
-  /** Serialized manifest: header `gtab v<version> [epoch=<e>]
-    * crc=<crc32-of-body>`, body = schema DDL line + one `name\trows\tcrc`
-    * line per file. The body CRC is what lets an object-store reader
-    * detect a torn publish. `epoch` (present once a streaming write has
-    * committed) is the high-water epoch id — the one field that makes
-    * streaming epoch replays idempotent, carried IN the manifest so the
-    * dedup decision and the publish are a single atomic swap.
-    */
-  private def renderEntry(f: FileEntry): String = {
-    val stats = f.stats.toSeq.sortBy(_._1).flatMap { case (c, (lo, hi)) =>
-      Seq(escape(c), escape(lo), escape(hi)) }
-    (Seq(f.name, f.rows.toString, f.crc.toString,
-      f.cols.length.toString) ++ f.cols.map(escape) ++ stats)
-      .mkString("\t")
-  }
-
-  // a ShardRef rides the ENTRY codec (name/rows/crc/cols/stats) behind
-  // an '@' marker; member count tunnels through the reserved #nf key
-  private val ShardNf = "#nf"
-  private def shardToEntry(r: ShardRef): FileEntry =
-    FileEntry(r.name, r.rows, r.crc, r.cols,
-      r.agg + (ShardNf -> (r.nFiles.toString, "")))
-  private def entryToShard(e: FileEntry): ShardRef =
-    ShardRef(e.name, e.stats.get(ShardNf).flatMap(_._1.toIntOption)
-      .getOrElse(0), e.rows, e.crc, e.cols, e.stats - ShardNf)
-
-  private def parseEntry(l: String, schema: StructType): FileEntry = {
-    val p = l.split("\t", -1)
-    // legacy (pre-evolution) lines lack the column-count field:
-    // field 4 is then a stats column NAME, not an integer — those
-    // files were written with the table schema of their day,
-    // which this manifest still carries
-    val k = if (p.length > 3) p(3).toIntOption else None
-    k match {
-      case Some(n) =>
-        val cols = p.slice(4, 4 + n).map(unescape).toSeq
-        val stats = p.drop(4 + n).grouped(3).collect {
-          case Array(c, lo, hi) =>
-            unescape(c) -> (unescape(lo), unescape(hi))
-        }.toMap
-        FileEntry(p(0), p(1).toLong, p(2).toLong, cols, stats)
-      case None =>
-        val stats = p.drop(3).grouped(3).collect {
-          case Array(c, lo, hi) =>
-            unescape(c) -> (unescape(lo), unescape(hi))
-        }.toMap
-        FileEntry(p(0), p(1).toLong, p(2).toLong,
-          schema.fieldNames.toSeq, stats)
-    }
-  }
+      cols: Seq[String], stats: FileStats = FileStats())
 
   // ---- metadata shards (the manifest TREE) ----
   // At ~10^6 files a single rendered manifest is a multi-GB driver
@@ -310,97 +253,53 @@ object ManifestTable {
     // entries always carry their own column lists (written by this
     // round's code), so the schema fallback never fires
     body.linesIterator.filter(_.nonEmpty)
-      .map(parseEntry(_, StructType(Nil))).toSeq
+      .map(ManifestCodec.parseEntry(_, StructType(Nil))).toSeq
   }
 
   private[sources] def writeShard(dir: String,
       entries: Seq[FileEntry]): ShardRef = {
-    val body = entries.map(renderEntry).mkString("\n")
+    val body = entries.map(ManifestCodec.renderEntry).mkString("\n")
     val c = new CRC32; c.update(body.getBytes(StandardCharsets.UTF_8))
     val name = s"shard-${java.util.UUID.randomUUID}.gsh"
     FsMeta.mkdirs(s"$dir/meta")
     FsMeta.writeString(shardPath(dir, name),
       s"gshard crc=${c.getValue}\n" + body)
-    ShardRef(name, entries.size, entries.map(_.rows).sum, c.getValue,
-      entries.flatMap(_.cols).distinct, shardAgg(entries))
+    shardRef(name, c.getValue, entries)
   }
 
-  /** Aggregate stats of a shard's members — what the root line carries
-    * so planning can prune the WHOLE shard with the same conservative
-    * [[GTabSkip.keep]] that prunes files. Every key is dropped on any
-    * doubt (a shard without a key is always kept).
+  /** A shard's ref. Its stats keep a fact only where every member has
+    * it (a shard without one is always kept): merged zone maps, the
+    * value of each column the shard is single-valued on, the OR-union
+    * of equal-shape blooms (exactly the union filter) and the byte sum.
     */
-  private def shardAgg(entries: Seq[FileEntry])
-      : Map[String, (String, String)] = {
-    if (entries.isEmpty) return Map.empty
-    val agg = scala.collection.mutable.Map.empty[String, (String, String)]
-    val keysEverywhere = entries.map(_.stats.keySet).reduce(_ intersect _)
-    keysEverywhere.foreach { k =>
-      val vs = entries.map(_.stats(k))
-      if (!k.startsWith("#")) {
-        // numeric zone map: [min lo, max hi] in exact decimal arithmetic
-        try {
-          val lo = vs.map(v => BigDecimal(v._1)).min
-          val hi = vs.map(v => BigDecimal(v._2)).max
-          val loS = vs.find(v => BigDecimal(v._1) == lo).get._1
-          val hiS = vs.find(v => BigDecimal(v._2) == hi).get._2
-          agg(k) = (loS, hiS)
-        } catch { case _: NumberFormatException => () }
-      } else if (k.startsWith(PartPrefix)) {
-        // single-valued across the shard -> exact value pruning applies
-        if (vs.map(_._1).distinct.size == 1) agg(k) = (vs.head._1, "")
-      } else if (k.startsWith(GTabBloom.KeyPrefix)) {
-        // bit-union of equal-shape blooms IS the union filter — but the
-        // union of ~ShardTarget dense members saturates: past half the
-        // bits set the filter proves nothing and only widens every root
-        // line, so it is dropped (conservative — the shard just stays
-        // un-bloom-prunable; per-FILE blooms still prune after decode)
-        val ks = vs.map(_._1).distinct
-        val words = vs.map(v => GTabBloom.decode(v._2))
-        if (ks.size == 1 && words.map(_.length).distinct.size == 1) {
-          val acc = new Array[Long](words.head.length)
-          words.foreach { w =>
-            var i = 0
-            while (i < w.length) { acc(i) |= w(i); i += 1 }
-          }
-          val fill = acc.map(java.lang.Long.bitCount).sum
-          if (fill * 2 < acc.length * 64)
-            agg(k) = (ks.head, GTabBloom.encode(acc))
-        }
-      } else if (k == SzKey) {
-        val sum = vs.flatMap(_._1.toLongOption).sum
-        agg(k) = (sum.toString, "")
+  private def shardRef(name: String, crc: Long,
+      entries: Seq[FileEntry]): ShardRef = {
+    val st = entries.map(_.stats)
+    // the values of every key ALL members record
+    def everywhere[V](m: FileStats => Map[String, V]): Seq[(String, Seq[V])] =
+      if (st.isEmpty) Nil
+      else st.map(m(_).keySet).reduce(_ intersect _).toSeq
+        .map(k => k -> st.map(m(_)(k)))
+    val zones = everywhere(_.zones).flatMap { case (c, vs) =>
+      mergeZones(vs).map(c -> _) }
+    val parts = everywhere(_.parts).collect {
+      case (c, vs) if vs.distinct.size == 1 => c -> vs.head }
+    // the union of ~ShardTarget dense members saturates: past half the
+    // bits set it proves nothing and only widens every root line
+    val blooms = everywhere(_.blooms).flatMap { case (c, vs) =>
+      val words = vs.map(v => GTabBloom.decode(v.words))
+      val acc = words.head.clone()
+      words.tail.foreach { w =>
+        var i = 0
+        while (i < math.min(w.length, acc.length)) { acc(i) |= w(i); i += 1 }
       }
+      Some(c -> Sketch(vs.head.k, GTabBloom.encode(acc))).filter(_ =>
+        vs.forall(_.k == vs.head.k) && words.forall(_.length == acc.length) &&
+          acc.map(java.lang.Long.bitCount).sum * 2 < acc.length * 64)
     }
-    // partition-column NAMES any member records (pushdown usability
-    // without decoding) — distinct from the single-valued #part keys
-    val pcols = entries.flatMap(_.stats.keys.filter(_.startsWith(PartPrefix)))
-      .map(_.stripPrefix(PartPrefix)).distinct.sorted
-    if (pcols.nonEmpty) agg("#pcols") = (pcols.map(escape).mkString(","), "")
-    // census keys for DECODE-FREE table-level derivations (the DML
-    // write-builder path asks "is this table partitioned / bloomed /
-    // sketched?" — at 10^6 files that question must not decode the
-    // tree). ALWAYS written, empty-valued when mixed/absent, so their
-    // ABSENCE identifies a pre-census shard and callers fall back to
-    // the exact decode.
-    val pSets = entries.map(_.stats.keySet.filter(_.startsWith(PartPrefix)))
-    agg("#pall") =
-      (if (pSets.head.nonEmpty && pSets.forall(_ == pSets.head))
-        pSets.head.toSeq.map(_.stripPrefix(PartPrefix)).sorted
-          .map(escape).mkString(",")
-      else "", "")
-    agg("#bloomcols") = (entries
-      .flatMap(_.stats.keys.filter(_.startsWith(GTabBloom.KeyPrefix)))
-      .map(_.stripPrefix(GTabBloom.KeyPrefix)).distinct.sorted
-      .map(escape).mkString(","), "")
-    agg("#ndvcols") = (entries
-      .flatMap(_.stats.keys.filter(_.startsWith(NdvPrefix)))
-      .map(_.stripPrefix(NdvPrefix)).distinct.sorted
-      .map(escape).mkString(","), "")
-    // any member carrying a deletion vector disables the metadata-count
-    // fast path without a decode
-    if (entries.exists(_.stats.keys.exists(isDvStat)))
-      agg("#dv") = ("1", "")
+    val size = Some(st.flatMap(_.size).sum)
+      .filter(_ => st.forall(_.size.isDefined))
+    val partSets = st.map(_.parts.keySet)
     // bloom over member FILE NAMES: commitReplace and the files-option
     // read probe it to skip shards that cannot hold a requested entry
     // (4096 bits ≈ 16 bits/name at ShardTarget members, sub-1% FPP — a
@@ -408,24 +307,42 @@ object ManifestTable {
     val nbl = new Array[Long](64)
     entries.foreach(e => BloomUtil.set(nbl, BloomUtil.hashString(e.name),
       GTabBloom.NumHashes))
-    agg("#nbl") = (GTabBloom.NumHashes.toString, GTabBloom.encode(nbl))
-    agg.toMap
+    ShardRef(name, entries.size, entries.map(_.rows).sum, crc,
+      entries.flatMap(_.cols).distinct,
+      FileStats(zones.toMap, blooms.toMap, parts = parts.toMap, size = size),
+      pcols = partSets.flatten.distinct.sorted,
+      pall = Some(partSets.distinct match {
+        case Seq(cs) => cs.toSeq.sorted
+        case _ => Nil
+      }),
+      bloomCols = Some(st.flatMap(_.blooms.keys).distinct.sorted),
+      ndvCols = Some(st.flatMap(_.ndvs.keys).distinct.sorted),
+      hasDv = st.exists(_.hasDv),
+      nameBloom = Some(Sketch(GTabBloom.NumHashes, GTabBloom.encode(nbl))))
   }
 
   /** Could shard `r` contain ANY of `names`? Name-bloom probe. */
   private def shardMightContain(r: ShardRef, names: Iterable[String])
-      : Boolean = r.agg.get("#nbl") match {
-    case Some((kStr, b64)) =>
-      val k = kStr.toIntOption.getOrElse(return true)
-      val words = GTabBloom.decode(b64)
+      : Boolean = r.nameBloom match {
+    case Some(b) =>
+      val words = GTabBloom.decode(b.words)
       names.exists(n =>
-        BloomUtil.mightContain(words, BloomUtil.hashString(n), k))
+        BloomUtil.mightContain(words, BloomUtil.hashString(n), b.k))
     case None => true
   }
 
-  private def render(m: Manifest): String = {
-    val body = ((m.schema.toDDL +: m.inline.map(renderEntry)) ++
-      m.shards.map(r => "@" + renderEntry(shardToEntry(r))))
+  /** Serialized manifest: header `gtab v<version> [epoch=<e>]
+    * crc=<crc32-of-body>`, body = schema DDL line + one entry line per
+    * inline file + one `@`-marked line per shard ([[ManifestCodec]]).
+    * The body CRC is what lets an object-store reader detect a torn
+    * publish. `epoch` (present once a streaming write has committed) is
+    * the high-water epoch id — the one field that makes streaming epoch
+    * replays idempotent, carried IN the manifest so the dedup decision
+    * and the publish are a single atomic swap.
+    */
+  private[graft] def render(m: Manifest): String = {
+    val body = ((m.schema.toDDL +: m.inline.map(ManifestCodec.renderEntry)) ++
+      m.shards.map(r => "@" + ManifestCodec.renderShard(r)))
       .mkString("\n")
     val c = new CRC32; c.update(body.getBytes(StandardCharsets.UTF_8))
     val ep = if (m.epoch >= 0) s" epoch=${m.epoch}" else ""
@@ -609,39 +526,37 @@ object ManifestTable {
     }
   }
 
-  private def parse(raw: String, mp: String): Manifest = {
-    {
-      val ix = raw.indexOf('\n')
-      require(ix > 0, s"corrupt manifest at $mp: no header line")
-      val header = raw.substring(0, ix)
-      val body = raw.substring(ix + 1)
-      val hm = ("^gtab v(\\d+)(?: epoch=(-?\\d+))?(?: base=(\\d+))?" +
-        "(?: ts=(\\d+))?(?: op=([a-z0-9-]+))? crc=(\\d+)$").r
-      header match {
-        case hm(v, ep, ba, tt, oo, crc) =>
-          val c = new CRC32; c.update(body.getBytes(StandardCharsets.UTF_8))
-          if (c.getValue != crc.toLong) throw new IllegalStateException(
-            s"manifest at $mp failed its CRC — torn/corrupted publish " +
-              s"(expected $crc, got ${c.getValue})")
-          val lines = body.split("\n", -1).toSeq
-          val schema = StructType.fromDDL(lines.head)
-          val (shardLines, fileLines) =
-            lines.tail.filter(_.nonEmpty).partition(_.startsWith("@"))
-          val files = fileLines.map(parseEntry(_, schema))
-          val shards = shardLines.map(l =>
-            entryToShard(parseEntry(l.substring(1), schema)))
-          Manifest(v.toLong, schema, files,
-            Option(ep).map(_.toLong).getOrElse(-1L),
-            Option(ba).map(_.toLong).getOrElse(-1L),
-            Option(tt).map(_.toLong).getOrElse(-1L),
-            shards,
-            // shards live under <table dir>/meta; mp is always a direct
-            // child of the table dir (_MANIFEST[, .vN, .b<name>...])
-            mp.substring(0, mp.lastIndexOf('/')),
-            Option(oo).getOrElse(""))
-        case _ => throw new IllegalStateException(
-          s"manifest at $mp has an unrecognized header: '$header'")
-      }
+  private[graft] def parse(raw: String, mp: String): Manifest = {
+    val ix = raw.indexOf('\n')
+    require(ix > 0, s"corrupt manifest at $mp: no header line")
+    val header = raw.substring(0, ix)
+    val body = raw.substring(ix + 1)
+    val hm = ("^gtab v(\\d+)(?: epoch=(-?\\d+))?(?: base=(\\d+))?" +
+      "(?: ts=(\\d+))?(?: op=([a-z0-9-]+))? crc=(\\d+)$").r
+    header match {
+      case hm(v, ep, ba, tt, oo, crc) =>
+        val c = new CRC32; c.update(body.getBytes(StandardCharsets.UTF_8))
+        if (c.getValue != crc.toLong) throw new IllegalStateException(
+          s"manifest at $mp failed its CRC — torn/corrupted publish " +
+            s"(expected $crc, got ${c.getValue})")
+        val lines = body.split("\n", -1).toSeq
+        val schema = StructType.fromDDL(lines.head)
+        val (shardLines, fileLines) =
+          lines.tail.filter(_.nonEmpty).partition(_.startsWith("@"))
+        val files = fileLines.map(ManifestCodec.parseEntry(_, schema))
+        val shards =
+          shardLines.map(l => ManifestCodec.parseShard(l.substring(1)))
+        Manifest(v.toLong, schema, files,
+          Option(ep).map(_.toLong).getOrElse(-1L),
+          Option(ba).map(_.toLong).getOrElse(-1L),
+          Option(tt).map(_.toLong).getOrElse(-1L),
+          shards,
+          // shards live under <table dir>/meta; mp is always a direct
+          // child of the table dir (_MANIFEST[, .vN, .b<name>...])
+          mp.substring(0, mp.lastIndexOf('/')),
+          Option(oo).getOrElse(""))
+      case _ => throw new IllegalStateException(
+        s"manifest at $mp has an unrecognized header: '$header'")
     }
   }
 
@@ -657,7 +572,7 @@ object ManifestTable {
     s"concurrent commit at $dir: expected to publish version $version " +
       s"but another writer got there first (current version $foundVersion)")
 
-  // ---- per-file NDV sketches (reserved `#ndv:<col>` stats key) ----
+  // ---- per-file NDV sketches (`FileStats.ndvs`) ----
   // A KMV (k-minimum-values) sketch per requested column per file: the
   // k smallest 64-bit hashes of the column's distinct values, written
   // by `.option("ndvColumns", "c1,c2")` (int/long/string — the bloom
@@ -670,9 +585,7 @@ object ManifestTable {
   // ~700 base64 chars per column per file; the (k-1)/u_k estimator has
   // ~1/sqrt(k-1) ≈ 13% relative error — cardinality-class accuracy,
   // exactly what join ordering needs. Sub-k unions are EXACT (no file
-  // truncated its set). Same no-format-bump trick as `#bloom:`.
-  private[graft] val NdvPrefix = "#ndv:"
-  private[sources] def ndvKey(col: String): String = NdvPrefix + col
+  // truncated its set).
   private[sources] val NdvK = 64
 
   /** Merge per-file KMV hash sets into a distinct-count estimate; None
@@ -681,14 +594,12 @@ object ManifestTable {
     */
   private[sources] def mergeNdv(files: Seq[FileEntry], col: String)
       : Option[Long] = {
-    val key = ndvKey(col)
-    val per = files.map(_.stats.get(key))
+    val per = files.map(_.stats.ndvs.get(col))
     if (files.isEmpty || per.exists(_.isEmpty)) return None
-    val ks = per.map(_.get._1.toIntOption.getOrElse(return None))
-    val k = ks.min
+    val k = per.map(_.get.k).min
     if (k < 2) return None
     // flip the sign bit so natural Long order == unsigned hash order
-    val merged = per.flatMap(e => GTabBloom.decode(e.get._2))
+    val merged = per.flatMap(e => GTabBloom.decode(e.get.words))
       .map(_ ^ Long.MinValue).distinct.sorted
     if (merged.length < k) Some(merged.length.toLong)
     else {
@@ -709,48 +620,43 @@ object ManifestTable {
     */
   private[sources] def mergeMinMax(files: Seq[FileEntry], col: String,
       dt: DataType): Option[(Any, Any)] = {
-    if (files.isEmpty) return None
-    val per = files.map(_.stats.get(col))
-    if (per.exists(_.isEmpty)) return None
-    val los = per.map(_.get._1)
-    val his = per.map(_.get._2)
-    dt match {
-      case IntegerType =>
-        val l = los.map(_.toIntOption); val h = his.map(_.toIntOption)
-        if ((l ++ h).exists(_.isEmpty)) None
-        else Some((Int.box(l.map(_.get).min), Int.box(h.map(_.get).max)))
-      case LongType =>
-        val l = los.map(_.toLongOption); val h = his.map(_.toLongOption)
-        if ((l ++ h).exists(_.isEmpty)) None
-        else Some((Long.box(l.map(_.get).min), Long.box(h.map(_.get).max)))
-      case DoubleType =>
-        val l = los.map(_.toDoubleOption); val h = his.map(_.toDoubleOption)
-        if ((l ++ h).exists(_.isEmpty) ||
-          (l ++ h).exists(x => x.get.isInfinite || x.get.isNaN)) None
-        else Some((Double.box(l.map(_.get).min),
-          Double.box(h.map(_.get).max)))
+    val per = files.map(_.stats.zones.get(col))
+    if (files.isEmpty || per.exists(_.isEmpty)) return None
+    // a zone bound that is not a finite number fails the merge
+    mergeZones(per.flatten).flatMap { case Zone(lo, hi) => dt match {
+      case IntegerType => lo.toIntOption.zip(hi.toIntOption)
+      case LongType => lo.toLongOption.zip(hi.toLongOption)
+      case DoubleType => lo.toDoubleOption.zip(hi.toDoubleOption)
       case _ => None
-    }
+    }}
   }
 
-  // ---- per-file byte size (reserved `#sz` stats key) ----
+  /** The zone covering all of `zs`: [min lo, max hi] compared in exact
+    * decimal arithmetic, each bound kept in its member's text. None when
+    * a bound is not a finite number.
+    */
+  private def mergeZones(zs: Seq[Zone]): Option[Zone] =
+    try {
+      val lo = zs.minBy(z => BigDecimal(z.lo)).lo
+      Some(Zone(lo, zs.maxBy(z => BigDecimal(z.hi)).hi))
+    } catch { case _: NumberFormatException => None }
+
+  // ---- per-file byte size (`FileStats.size`) ----
   // The writer records each data file's exact byte count in its manifest
-  // entry (the `#bloom:` trick — no format bump, older readers see
-  // a stat for a column no filter names). The scan sums them into a DSv2
+  // entry. The scan sums them into a DSv2
   // statistics report: without one, Spark costs EVERY DSv2 relation at
   // `spark.sql.defaultSizeInBytes` (Long.MaxValue by default), so a join
   // against even a 1 KB gtab can never auto-broadcast — at 100 TB that
   // is the difference between a map-side hash join and a full two-sided
-  // shuffle. Files from pre-round-13 manifests lack the key; their bytes
-  // are estimated from the row count and the text codec's per-type widths.
-  private[sources] val SzKey = "#sz"
+  // shuffle. Files from pre-round-13 manifests lack it; their bytes are
+  // estimated from the row count and the text codec's per-type widths.
 
-  // ---- partitioned layout (reserved `#part:<col>` stats key) ----
+  // ---- partitioned layout (`FileStats.parts`) ----
   // A write with `.option("partitionColumn", c)` clusters rows by `c`
   // (the Write declares a clustered distribution + sort, so Spark
   // shuffles accordingly) and each task rolls a NEW data file whenever
   // the value changes — every file is single-valued on `c`, and records
-  // that value under `#part:c` in the codec's own encoding. The scan
+  // that value in the row codec's own encoding. The scan
   // then (a) prunes files EXACTLY on equality/IN/null predicates over
   // `c` — including STRING columns, which zone maps deliberately
   // exclude — and (b) groups the kept files by value and reports the
@@ -762,39 +668,22 @@ object ManifestTable {
   // two-sided shuffle and none. Double partition columns are rejected:
   // Spark normalizes -0.0 == 0.0 while their codec strings differ, so
   // one logical key could split across two reported groups.
-  private[sources] val PartPrefix = "#part:"
-  private[sources] def partStatKey(col: String): String = PartPrefix + col
 
   /** The table's partition columns (possibly several — the date+hour
     * layout), DERIVED from the manifest: present iff every file records
-    * the same non-empty `#part:` key SET and every named column is in
+    * the same non-empty partition column SET and every named column is in
     * the schema; ordered by schema position. Derivation (not a table
     * property) makes degradation safe by construction — one
     * unpartitioned append (or a rewrite that dropped the keys) simply
     * turns the layout report off; correctness never depended on it.
     */
   private[graft] def partitionColumnsOf(m: Manifest): Seq[String] =
-    if (m.shards.isEmpty) partitionColumnsOfFiles(m.inline, m.schema)
-    else if (m.shards.forall(_.agg.contains("#pall"))) {
-      // census-keyed shards: every shard uniform on the SAME key set,
-      // and the inline entries match it — zero decodes
-      val sets = m.shards.map(_.agg("#pall")._1).distinct
-      val inlineOk = sets.size == 1 && sets.head.nonEmpty && {
-        val want = sets.head.split(",").filter(_.nonEmpty)
-          .map(unescape).toSet
-        m.inline.forall(_.stats.keySet
-          .filter(_.startsWith(PartPrefix))
-          .map(_.stripPrefix(PartPrefix)) == want)
-      }
-      if (!inlineOk) Nil
-      else {
-        val cols = sets.head.split(",").filter(_.nonEmpty)
-          .map(unescape).toSeq
-        if (cols.forall(m.schema.fieldNames.contains))
-          cols.sortBy(m.schema.fieldIndex)
-        else Nil
-      }
-    } else partitionColumnsOfFiles(m.files, m.schema) // pre-census shard
+    // a census shard stands for its members by their shared column set
+    // (empty when mixed) — zero decodes; a pre-census shard decodes
+    if (m.shards.forall(_.pall.isDefined))
+      uniformColumns(m.inline.map(_.stats.parts.keySet) ++
+        m.shards.map(_.pall.get.toSet), m.schema)
+    else partitionColumnsOfFiles(m.files, m.schema)
 
   /** Partition-spec EVOLUTION support: the layout derivation over an
     * arbitrary file SUBSET. A re-specced table (set_partition_spec)
@@ -805,17 +694,15 @@ object ManifestTable {
     * their layout, new files take the new one).
     */
   private[graft] def partitionColumnsOfFiles(files: Seq[FileEntry],
-      schema: StructType): Seq[String] = {
-    if (files.isEmpty) return Nil
-    val keySets = files.map(_.stats.keySet.filter(_.startsWith(PartPrefix)))
-    val head = keySets.head
-    if (head.nonEmpty && keySets.forall(_ == head)) {
-      val cols = head.map(_.stripPrefix(PartPrefix)).toSeq
-      if (cols.forall(schema.fieldNames.contains))
-        cols.sortBy(schema.fieldIndex)
-      else Nil
-    } else Nil
-  }
+      schema: StructType): Seq[String] =
+    uniformColumns(files.map(_.stats.parts.keySet), schema)
+
+  // the non-empty column set all `sets` share, if in `schema`, in its order
+  private def uniformColumns(sets: Seq[Set[String]],
+      schema: StructType): Seq[String] =
+    sets.headOption.filter(h => h.nonEmpty && sets.forall(_ == h) &&
+      h.forall(schema.fieldNames.contains))
+      .map(_.toSeq.sortBy(schema.fieldIndex)).getOrElse(Nil)
 
   /** Every partition column ANY file records, schema-resolved — the
     * superset used for pushdown USABILITY on mixed-spec tables: the
@@ -824,27 +711,17 @@ object ManifestTable {
     * and prunes exactly the files that do carry it.
     */
   private[graft] def anyPartitionColumns(m: Manifest): Seq[String] =
-    (m.inline.flatMap(_.stats.keys.filter(_.startsWith(PartPrefix)))
-        .map(_.stripPrefix(PartPrefix)) ++
-      // shard agg carries the member partition-column NAMES (#pcols),
-      // so pushdown usability never decodes a shard
-      m.shards.flatMap(_.agg.get("#pcols")).flatMap(_._1.split(","))
-        .filter(_.nonEmpty).map(unescape))
+    // a shard ref carries the member partition-column NAMES, so
+    // pushdown usability never decodes a shard
+    (m.inline.flatMap(_.stats.parts.keys) ++ m.shards.flatMap(_.pcols))
       .distinct.filter(m.schema.fieldNames.contains)
 
-  /** Decode one `#part:` value from its codec form. */
+  /** Decode one partition value from its codec form. */
   private[sources] def decodePartValue(enc: String, dt: DataType): Any =
-    if (enc == Null) null
-    else dt match {
-      case BooleanType => java.lang.Boolean.parseBoolean(enc)
-      case IntegerType => java.lang.Integer.parseInt(enc)
-      case LongType => java.lang.Long.parseLong(enc)
-      case StringType => UTF8String.fromString(unescape(enc))
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
+    if (enc == Null) null else fieldParser(dt)(enc)
 
   /** Encode a pushed-filter literal in the codec's form for EXACT
-    * comparison against a `#part:` value; None = unencodable literal
+    * comparison against a partition value; None = unencodable literal
     * (never prune on it).
     */
   private[sources] def encodePartLiteral(v: Any, dt: DataType)
@@ -862,7 +739,7 @@ object ManifestTable {
   }
 
   /** Rough per-column byte width of the tab-separated text codec, used
-    * (a) to estimate legacy files that predate `#sz` and (b) to scale a
+    * (a) to estimate legacy files that predate byte sizes and (b) to scale a
     * file's recorded bytes down to a pruned projection's share.
     */
   private[sources] def colWidth(dt: DataType): Long = dt match {
@@ -874,7 +751,7 @@ object ManifestTable {
   }
 
   private[sources] def bytesOf(f: FileEntry, schema: StructType): Long =
-    f.stats.get(SzKey).flatMap(_._1.toLongOption).getOrElse {
+    f.stats.size.getOrElse {
       val w = f.cols.map(c => schema.fields.find(_.name == c)
         .map(x => colWidth(x.dataType)).getOrElse(20L)).sum
       f.rows * math.max(1L, w)
@@ -885,8 +762,7 @@ object ManifestTable {
     * holds positions of one file, and its chain members are disjoint.
     */
   private[sources] def liveRows(files: Seq[FileEntry]): Long =
-    files.map(f => f.rows - f.stats.get(DvPosKey)
-      .flatMap(_._2.toLongOption).getOrElse(0L)).sum
+    files.map(f => f.rows - f.stats.dv.map(_.count).getOrElse(0L)).sum
 
   /** Write `positions` (sorted here, in place) as a new deletion-vector
     * sidecar in `dir`'s data directory, one per line — the table's own
@@ -951,7 +827,8 @@ object ManifestTable {
       keep: FileEntry => Boolean): Seq[FileEntry] =
     if (m.shards.isEmpty) m.inline.filter(keep)
     else m.inline.filter(keep) ++
-      m.shards.filter(r => keep(shardToEntry(r)))
+      m.shards.filter(r => keep(FileEntry(r.name, r.rows, r.crc, r.cols,
+        r.stats)))
         .flatMap(readShard(m.dir, _)).filter(keep)
 
   /** Scan partition for a manifest entry, deletion vectors attached —
@@ -961,13 +838,13 @@ object ManifestTable {
     */
   private[sources] def partitionOf(path: String,
       f: FileEntry): GTabPartition = {
-    f.stats.keys.find(k => isDvStat(k) && k != DvPosKey).foreach { k =>
+    f.stats.legacyDvs.headOption.foreach { case (k, _) =>
       throw new IllegalStateException(s"$path/data/${f.name} carries a " +
         s"value-keyed deletion vector ($k), which this build no longer " +
         "reads: compact the table with an older build first")
     }
     GTabPartition(s"$path/data/${f.name}", f.rows, f.crc, f.cols,
-      dvPosChain(f.stats).map(n => s"$path/data/$n"))
+      f.stats.dv.toSeq.flatMap(_.names).map(n => s"$path/data/$n"))
   }
 
   /** Every file name version `m` references: data files plus their
@@ -976,11 +853,8 @@ object ManifestTable {
     * still finds it).
     */
   private[sources] def referencedNames(m: Manifest): Seq[String] =
-    m.files.flatMap { f =>
-      f.name +: f.stats.toSeq.collect { case (k, (names, _)) if isDvStat(k) =>
-        names.split(";").toSeq.filter(_.nonEmpty)
-      }.flatten
-    }
+    m.files.flatMap(f => f.name +: (f.stats.dv.toSeq.flatMap(_.names) ++
+      f.stats.legacyDvs.flatMap(_._2)))
 
   /** Publish-time tree normalization: once a root would carry more
     * than InlineMax inline entries they spill into fresh shard files
@@ -1635,6 +1509,30 @@ object ManifestTable {
 
   // ---- row codec (write side mirrors read side; both executor-local) ----
   private[sources] val Null = "\\N"
+
+  /** Field `i` of a row in its codec text (data files, partition values). */
+  private[sources] def fieldText(schema: StructType,
+      i: Int): InternalRow => String = {
+    val g: InternalRow => String = schema.fields(i).dataType match {
+      case BooleanType => r => String.valueOf(r.getBoolean(i))
+      case IntegerType => r => String.valueOf(r.getInt(i))
+      case LongType => r => String.valueOf(r.getLong(i))
+      case DoubleType => r => String.valueOf(r.getDouble(i))
+      case StringType => r => escape(r.getUTF8String(i).toString)
+      case other => throw new IllegalStateException(s"unreachable: $other")
+    }
+    r => if (r.isNullAt(i)) Null else g(r)
+  }
+
+  /** The inverse of [[fieldText]] for a non-null field of type `dt`. */
+  private[sources] def fieldParser(dt: DataType): String => Any = dt match {
+    case BooleanType => java.lang.Boolean.parseBoolean
+    case IntegerType => java.lang.Integer.parseInt
+    case LongType => java.lang.Long.parseLong
+    case DoubleType => java.lang.Double.parseDouble
+    case StringType => s => UTF8String.fromString(unescape(s))
+    case other => throw new IllegalStateException(s"unreachable: $other")
+  }
   private[sources] def escape(s: String): String = {
     val b = new java.lang.StringBuilder(s.length + 8)
     var i = 0
@@ -1689,8 +1587,8 @@ object ManifestTable {
     */
   val PosMetaCol = "_pos"
 
-  // ---- deletion vectors (reserved `#dvp` stats key) ----
-  // The one merge-on-read delete format: `#dvp -> (chain, count)`
+  // ---- deletion vectors (`FileStats.dv`, a `#dvp` key on disk) ----
+  // The one merge-on-read delete format: a [[DvChain]] (chain, count)
   // marks rows deleted BY PHYSICAL POSITION (sorted line ordinals in
   // the sidecar, one per line). The read path skips marked ordinals
   // row-level, and a later compaction (or COW rewrite) reads THROUGH
@@ -1698,7 +1596,7 @@ object ManifestTable {
   // ANY row, so one format serves SQL DELETE/UPDATE/MERGE
   // (SupportsDelta) and the key-set [[CowOps.deleteMor]] alike.
   //
-  // `chain` is one or more ';'-joined sidecar names (count = their
+  // `chain` is one or more sidecar names (count = their
   // total cardinality; members are disjoint by construction — a scan
   // never produces an already-deleted row). The chain is what lets
   // EXECUTORS author the sidecars (each delta-writer task writes its
@@ -1709,21 +1607,7 @@ object ManifestTable {
   // positions per file <= rows per file — never proportional to the
   // DML's total deleted rows), so read-side sidecar opens stay O(1)
   // per file under repeated small DMLs.
-  private[sources] val DvPosKey = "#dvp"
   private[graft] val DvPosChainMax = 4
-
-  private[sources] def dvPosChain(stats: Map[String, (String, String)])
-      : Seq[String] =
-    stats.get(DvPosKey).toSeq
-      .flatMap(_._1.split(";").toSeq.filter(_.nonEmpty))
-
-  /** A deletion-vector stat key: `#dvp`, or the per-column key of an
-    * older build's value-keyed vector, which [[partitionOf]] refuses to
-    * read. The count fast path, the shard census and vacuum treat both
-    * alike, so a stale vector is never counted past and its sidecar is
-    * never reaped.
-    */
-  private[sources] def isDvStat(k: String): Boolean = k.startsWith("#dv")
 
   private[sources] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { f =>
@@ -1733,6 +1617,10 @@ object ManifestTable {
       // mis-parse — reject it at every schema entry point
       require(f.name != FileMetaCol && f.name != PosMetaCol,
         s"'${f.name}' is a reserved metadata column name")
+      // a zone map is keyed by its column's name: one named like a
+      // reserved stat key would be read as that key
+      require(!ManifestCodec.isReservedKey(f.name), s"column '${f.name}': " +
+        "names starting with '#' are reserved for manifest stat keys")
       f.dataType match {
         case BooleanType | IntegerType | LongType | DoubleType | StringType =>
         case other => throw new UnsupportedOperationException(
@@ -1997,33 +1885,20 @@ private[sources] class GTabStreamingWriterFactory(path: String,
   }
 }
 
-private[sources] final case class GTabCommit(name: String, rows: Long,
-    crc: Long, cols: Seq[String], stats: Map[String, (String, String)])
-    extends WriterCommitMessage {
-  def toEntry: ManifestTable.FileEntry =
-    ManifestTable.FileEntry(name, rows, crc, cols, stats)
-}
-
-/** A partitioned writer task commits SEVERAL files (one per partition
-  * value run) under one message.
-  */
-private[sources] final case class GTabMultiCommit(entries: Seq[GTabCommit])
-    extends WriterCommitMessage
+/** A writer task's committed files (a partitioned writer commits one per
+  * partition value run). */
+private[sources] final case class GTabCommit(
+    entries: Seq[ManifestTable.FileEntry]) extends WriterCommitMessage
 
 private[sources] object GTabCommits {
   def entriesOf(messages: Array[WriterCommitMessage])
       : Seq[ManifestTable.FileEntry] =
     messages.toSeq.flatMap {
-      case c: GTabCommit => Seq(c.toEntry)
-      case m: GTabMultiCommit => m.entries.map(_.toEntry)
+      case c: GTabCommit => c.entries
       case _ => Nil
     }
   def namesOf(messages: Array[WriterCommitMessage]): Seq[String] =
-    messages.toSeq.flatMap {
-      case c: GTabCommit => Seq(c.name)
-      case m: GTabMultiCommit => m.entries.map(_.name)
-      case _ => Nil
-    }
+    entriesOf(messages).map(_.name)
 }
 
 private[sources] class GTabBatchWrite(path: String, schema: StructType,
@@ -2086,31 +1961,20 @@ private[sources] object GTabWriters {
   * values (the declared write ordering makes equal values contiguous,
   * but rolling on ANY change keeps the single-valued-per-file invariant
   * even for unsorted input — extra files, never wrong metadata). Each
-  * segment records its value under the reserved `#part:` stats key.
+  * segment records its value as a partition value of its entry.
   */
 private[sources] class GTabPartitionedWriter(dir: String,
     schema: StructType, stem: String, conf: Configuration,
     bloomCols: Seq[String], partCols: Seq[String],
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
-  private val encs: Seq[InternalRow => String] = partCols.map { c =>
-    val ix = schema.fieldIndex(c)
-    val dt = schema.fields(ix).dataType
-    (r: InternalRow) =>
-      if (r.isNullAt(ix)) ManifestTable.Null
-      else dt match {
-        case BooleanType => String.valueOf(r.getBoolean(ix))
-        case IntegerType => String.valueOf(r.getInt(ix))
-        case LongType => String.valueOf(r.getLong(ix))
-        case StringType =>
-          ManifestTable.escape(r.getUTF8String(ix).toString)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
-  }
+  private val encs = partCols.map(c =>
+    ManifestTable.fieldText(schema, schema.fieldIndex(c)))
   private var seq = 0
   private var cur: GTabWriter = _
   private var curKey: Seq[String] = _
-  private val done = scala.collection.mutable.ListBuffer.empty[GTabCommit]
+  private val done =
+    scala.collection.mutable.ListBuffer.empty[ManifestTable.FileEntry]
 
   override def write(row: InternalRow): Unit = {
     val k = encs.map(_(row))
@@ -2119,8 +1983,7 @@ private[sources] class GTabPartitionedWriter(dir: String,
       curKey = k
       cur = new GTabWriter(dir, schema, s"$stem-s$seq.gtab", conf,
         bloomCols,
-        extraStats = partCols.zip(k).map { case (c, e) =>
-          ManifestTable.partStatKey(c) -> (e, "") }.toMap,
+        parts = partCols.zip(k).toMap,
         ndvCols = ndvCols)
       seq += 1
     }
@@ -2128,7 +1991,7 @@ private[sources] class GTabPartitionedWriter(dir: String,
   }
   override def commit(): WriterCommitMessage = {
     if (cur != null) { done += cur.commitSegment(); cur = null }
-    GTabMultiCommit(done.toSeq)
+    GTabCommit(done.toSeq)
   }
   override def abort(): Unit = {
     if (cur != null) { cur.abort(); cur = null }
@@ -2145,7 +2008,7 @@ private[sources] class GTabPartitionedWriter(dir: String,
 private[sources] class GTabWriter(dir: String, schema: StructType,
     fileName: String, conf: Configuration,
     bloomCols: Seq[String] = Seq.empty,
-    extraStats: Map[String, (String, String)] = Map.empty,
+    parts: Map[String, String] = Map.empty,
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
   private val filePath = new HPath(s"$dir/data/$fileName")
@@ -2199,28 +2062,29 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
       j += 1
     }
   }
-  private def statsMap: Map[String, (String, String)] =
-    statIx.indices.collect {
+  private def stats: FileStats = FileStats(
+    zones = statIx.indices.collect {
       case j if statSeen(j) && !statPoisoned(j) =>
         val isD = schema.fields(statIx(j)).dataType == DoubleType
         schema.fields(statIx(j)).name -> (
-          if (isD) (statLoD(j).toString, statHiD(j).toString)
-          else (statLoL(j).toString, statHiL(j).toString))
-    }.toMap ++ bloomIx.indices.map { j =>
-      GTabBloom.statKey(bloomCols(j)) ->
-        (GTabBloom.NumHashes.toString, GTabBloom.encode(
-          GTabBloom.fold(bloomWords(j), GTabBloom.bitsFor(rows))))
-    } ++ ndvIx.indices.map { j =>
+          if (isD) Zone(statLoD(j).toString, statHiD(j).toString)
+          else Zone(statLoL(j).toString, statHiL(j).toString))
+    }.toMap,
+    blooms = bloomIx.indices.map { j =>
+      bloomCols(j) -> Sketch(GTabBloom.NumHashes, GTabBloom.encode(
+        GTabBloom.fold(bloomWords(j), GTabBloom.bitsFor(rows))))
+    }.toMap,
+    ndvs = ndvIx.indices.map { j =>
       val hs = new Array[Long](ndvSets(j).size)
       val it = ndvSets(j).iterator()
       var i = 0
       while (it.hasNext) { hs(i) = it.next().longValue ^ Long.MinValue
         i += 1 }
-      ManifestTable.ndvKey(ndvCols(j)) ->
-        (ManifestTable.NdvK.toString, GTabBloom.encode(hs))
-    }
+      ndvCols(j) -> Sketch(ManifestTable.NdvK, GTabBloom.encode(hs))
+    }.toMap,
+    parts = parts, size = Some(bytes))
 
-  // per-file KMV NDV sketches (ManifestTable.NdvPrefix scaladoc): the k
+  // per-file KMV NDV sketches (ManifestTable.NdvK comment block): the k
   // smallest distinct hashes, kept in a TreeSet over SIGN-FLIPPED values
   // so natural order == unsigned hash order; nulls don't count (NDV is
   // a non-null distinct count, matching Spark's ColumnStat semantics)
@@ -2276,18 +2140,7 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
   }
 
   private val getters: Array[InternalRow => String] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      val g: InternalRow => String = f.dataType match {
-        case BooleanType => r => String.valueOf(r.getBoolean(i))
-        case IntegerType => r => String.valueOf(r.getInt(i))
-        case LongType => r => String.valueOf(r.getLong(i))
-        case DoubleType => r => String.valueOf(r.getDouble(i))
-        case StringType => r => ManifestTable.escape(r.getUTF8String(i).toString)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
-      (r: InternalRow) =>
-        if (r.isNullAt(i)) ManifestTable.Null else g(r)
-    }
+    schema.fields.indices.map(ManifestTable.fieldText(schema, _)).toArray
 
   override def write(row: InternalRow): Unit = {
     val line = getters.map(_(row)).mkString("", "\t", "\n")
@@ -2300,11 +2153,11 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
     trackNdv(row)
     rows += 1
   }
-  override def commit(): WriterCommitMessage = commitSegment()
-  private[sources] def commitSegment(): GTabCommit = {
+  override def commit(): WriterCommitMessage = GTabCommit(Seq(commitSegment()))
+  private[sources] def commitSegment(): ManifestTable.FileEntry = {
     out.close()
-    GTabCommit(fileName, rows, crc.getValue, schema.fieldNames.toSeq,
-      statsMap + (ManifestTable.SzKey -> (bytes.toString, "")) ++ extraStats)
+    ManifestTable.FileEntry(fileName, rows, crc.getValue,
+      schema.fieldNames.toSeq, stats)
   }
   override def abort(): Unit = {
     try out.close() catch { case _: Exception => }
@@ -2387,8 +2240,8 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
       // manifest row counts are PHYSICAL; a deletion-vector file's
       // logical count needs the row-level merge — decline and scan
       // (compaction restores the metadata-count fast path)
-      !(manifest.inline.exists(_.stats.keys.exists(ManifestTable.isDvStat)) ||
-        manifest.shards.exists(_.agg.contains("#dv")))
+      !(manifest.inline.exists(_.stats.hasDv) ||
+        manifest.shards.exists(_.hasDv))
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     countOk(agg)
   override def pushAggregation(agg: Aggregation): Boolean = {
@@ -2411,9 +2264,9 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
   * depends on it (BloomPrune's contract at the file level, Delta's bloom
   * index shape).
   *
-  * Blooms ride INSIDE the existing per-file stats map under reserved
-  * `#bloom:<col>` keys — `#` cannot start a real pushed-filter column
-  * name, older readers treat the entries as stats for a column no filter
+  * Blooms ride INSIDE the existing per-file stats (`FileStats.blooms`,
+  * stored under reserved `#` keys no column name may take): older
+  * readers treat the entries as stats for a column no filter
   * references, and the manifest format needs no version bump. Written
   * only when the writer is asked (`.option("bloomColumns", "c1,c2")`,
   * int/long/string columns). Each file's bloom is sized from its own
@@ -2424,12 +2277,9 @@ private[sources] class GTabScanBuilder(path: String, asOf: Option[Long],
   * readable.
   */
 private[graft] object GTabBloom {
-  val KeyPrefix = "#bloom:"
   val NumHashes = 6
   val BitsPerRow = 10
   val MaxBits: Int = 1 << 17
-
-  def statKey(col: String): String = KeyPrefix + col
 
   /** The per-file size: the smallest power of two holding [[BitsPerRow]]
     * bits per row, within [64, [[MaxBits]]].
@@ -2489,17 +2339,13 @@ private[graft] object GTabBloom {
     */
   def mightMatch(e: ManifestTable.FileEntry, c: String, schema: StructType,
       vs: Seq[Any]): Boolean =
-    e.stats.get(statKey(c)) match {
-      case None => true
-      case Some((kStr, b64)) =>
-        val k = kStr.toIntOption.getOrElse(return true)
+    e.stats.blooms.get(c).forall { case Sketch(k, b64) =>
+      schema.fields.find(_.name == c).forall { f =>
         val words = decode(b64)
-        val dt = schema.fields.find(_.name == c).map(_.dataType)
-          .getOrElse(return true)
-        vs.exists(v => keyOf(dt, v) match {
-          case Some(key) => BloomUtil.mightContain(words, key, k)
-          case None => true // unprobeable literal: cannot prove a miss
-        })
+        // an unprobeable literal cannot prove a miss
+        vs.exists(keyOf(f.dataType, _).forall(
+          BloomUtil.mightContain(words, _, k)))
+      }
     }
 }
 
@@ -2535,7 +2381,7 @@ private[graft] object GTabSkip {
   }
 
   /** EXACT partition-value pruning: a file single-valued on `c`
-    * (reserved `#part:c` key) is kept iff its value could satisfy the
+    * (a partition value in its stats) is kept iff its value could satisfy the
     * predicate — unlike zone maps this covers strings and null
     * semantics, and the check is equality on the codec encoding, not an
     * interval. Unknown shapes/literals keep the file (conservative, as
@@ -2543,9 +2389,8 @@ private[graft] object GTabSkip {
     */
   private def partKeep(e: ManifestTable.FileEntry, f: Filter,
       schema: StructType): Boolean = {
-    def pv(c: String): Option[(String, DataType)] =
-      e.stats.get(ManifestTable.partStatKey(c)).flatMap { case (enc, _) =>
-        schema.fields.find(_.name == c).map(x => (enc, x.dataType)) }
+    def pv(c: String): Option[(String, DataType)] = e.stats.parts.get(c)
+      .zip(schema.fields.find(_.name == c).map(_.dataType))
     def eq(c: String, v: Any): Boolean = pv(c) match {
       case Some((enc, dt)) =>
         ManifestTable.encodePartLiteral(v, dt) match {
@@ -2600,7 +2445,7 @@ private[graft] object GTabSkip {
 
   private def bounds(e: ManifestTable.FileEntry, c: String,
       schema: StructType): Option[(BigDecimal, BigDecimal)] =
-    e.stats.get(c).flatMap { case (lo, hi) =>
+    e.stats.zones.get(c).flatMap { case Zone(lo, hi) =>
       schema.fields.find(_.name == c).map(_.dataType) match {
         case Some(DoubleType) =>
           val (l, h) = (lo.toDouble, hi.toDouble)
@@ -2919,11 +2764,8 @@ private[graft] class GTabScan(path: String,
     ManifestTable.partitionColumnsOfFiles(kept, manifest.schema)
   private lazy val groups: Seq[(Seq[String], Seq[ManifestTable.FileEntry])] =
     if (partCols.isEmpty) Nil
-    else {
-      val ks = partCols.map(ManifestTable.partStatKey)
-      kept.groupBy(f => ks.map(f.stats(_)._1)).toSeq
-        .sortBy(_._1.mkString("\u0000"))
-    }
+    else kept.groupBy(f => partCols.map(f.stats.parts)).toSeq
+      .sortBy(_._1.mkString("\u0000"))
 
   /** The layout report that unlocks the storage-partitioned join: one
     * key-grouped partition per partition-value tuple over the identity
@@ -3283,17 +3125,8 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
     // still physically carry a since-dropped data column of the name;
     // parse it as the string it was, never a raw java.lang.String into
     // an InternalRow
-    if (!full.fieldNames.contains(n))
-      (s: String) => UTF8String.fromString(ManifestTable.unescape(s))
-    else full.fields(full.fieldIndex(n)).dataType match {
-      case BooleanType => (s: String) => java.lang.Boolean.parseBoolean(s)
-      case IntegerType => (s: String) => java.lang.Integer.parseInt(s)
-      case LongType => (s: String) => java.lang.Long.parseLong(s)
-      case DoubleType => (s: String) => java.lang.Double.parseDouble(s)
-      case StringType =>
-        (s: String) => UTF8String.fromString(ManifestTable.unescape(s))
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
+    ManifestTable.fieldParser(if (!full.fieldNames.contains(n)) StringType
+      else full.fields(full.fieldIndex(n)).dataType)
   }
 
   // merge-on-read: the deletion vector's sorted physical line ordinals

@@ -64,7 +64,7 @@ class AlterTableSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE $cat.db.rp RENAME COLUMN g TO grp")
     val m = ManifestTable.readManifest(s"$wh/db/rp").get
     assert(ManifestTable.partitionColumnsOf(m) == Seq("grp"),
-      "#part: keys must rename with the column")
+      "partition values must rename with the column")
     // the declared write-side spec followed: a new INSERT still
     // partitions (single-valued files on grp)
     spark.sql(s"INSERT INTO $cat.db.rp SELECT id + 100, grp FROM " +
@@ -171,10 +171,10 @@ class AlterTableSpec extends AnyFunSuite {
       .option("bloomColumns", "id").mode("append").save()
     spark.sql(s"ALTER TABLE $cat.db.rb RENAME COLUMN id TO ident")
     val m = ManifestTable.readManifest(s"$wh/db/rb").get
-    assert(m.files.forall(_.stats.contains("#bloom:ident")),
-      "bloom stats keys must rename with the column")
-    assert(m.files.forall(f => !f.stats.contains("#bloom:id") &&
-      !f.stats.contains("id")))
+    assert(m.files.forall(_.stats.blooms.contains("ident")),
+      "blooms must rename with the column")
+    assert(m.files.forall(f => !f.stats.blooms.contains("id") &&
+      !f.stats.zones.contains("id")))
     // hash-scattered layout: only the bloom can prune the point lookup
     val q = spark.sql(
       s"SELECT s FROM $cat.db.rb WHERE ident = 137")
@@ -196,7 +196,7 @@ class AlterTableSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.rd")
       .head().getLong(0) == 90)
     def dvs() = ManifestTable.readManifest(s"$wh/db/rd").get.files
-      .map(f => f.name -> f.stats.get("#dvp")).toMap
+      .map(f => f.name -> f.stats.dv).toMap
     val before = dvs()
     assert(before.values.exists(_.isDefined))
     spark.sql(s"ALTER TABLE $cat.db.rd RENAME COLUMN id TO ident")
@@ -250,5 +250,27 @@ class AlterTableSpec extends AnyFunSuite {
     assert(m.schema.fieldNames.contains("extra"))
     // the interleaved append's rows survived the schema commit
     assert(spark.read.format(Fmt).option("path", dir).load().count() == 20)
+  }
+
+  test("CREATE and RENAME refuse reserved stat-key and metadata names") {
+    // a column named like a reserved '#' stat key would have its zone
+    // map read as that key; `_file` would shadow the metadata column
+    Seq("`#dvp`", "`#sz`", "`#dv:x`").foreach { c =>
+      val e = intercept[Exception] {
+        spark.sql(s"CREATE TABLE $cat.db.rk_new (id BIGINT, $c BIGINT)")
+      }
+      assert(e.getMessage.contains("reserved"), e.getMessage)
+    }
+    mk("rk")
+    Seq("`#dvp`", "`#sz`", "_file").foreach { c =>
+      val e = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.rk RENAME COLUMN v TO $c")
+      }
+      assert(e.getMessage.contains("reserved"), e.getMessage)
+    }
+    assert(spark.sql(s"SELECT * FROM $cat.db.rk").columns.toSeq ==
+      Seq("id", "v", "s"))
+    assert(spark.sql(s"SELECT sum(v) FROM $cat.db.rk WHERE id >= 10")
+      .head().getLong(0) == (10 until 50).sum)
   }
 }

@@ -44,8 +44,8 @@ class BloomSkipSpec extends AnyFunSuite {
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.size == 8)
     // zone maps exist but overlap: every file spans most of [0, 3999]
-    assert(m.files.forall(f => f.stats("id")._2.toLong -
-      f.stats("id")._1.toLong > 3000))
+    assert(m.files.forall(f => f.stats.zones("id").hi.toLong -
+      f.stats.zones("id").lo.toLong > 3000))
     val eq = spark.read.format(Fmt).option("path", dir).load()
       .filter($"id" === 1234L)
     assert(eq.count() == 1)
@@ -93,7 +93,7 @@ class BloomSkipSpec extends AnyFunSuite {
     // rule, extended to compact in round 14)
     ManifestTable.compact(spark, dir, targetFiles = 2)
     val m = ManifestTable.readManifest(dir).get
-    assert(m.files.forall(_.stats.keys.exists(_.startsWith("#bloom:"))),
+    assert(m.files.forall(_.stats.blooms.nonEmpty),
       "compaction must carry the table's blooms through the rewrite")
     assert(spark.read.format(Fmt).option("path", dir).load()
       .filter($"id" === 1234L).count() == 1)
@@ -103,7 +103,7 @@ class BloomSkipSpec extends AnyFunSuite {
       .write.format(Fmt).option("path", dir).mode("overwrite").save()
     val m2 = ManifestTable.readManifest(dir).get
     assert(m2.files.forall(f =>
-      !f.stats.keys.exists(_.startsWith("#bloom:"))))
+      !f.stats.blooms.nonEmpty))
   }
 
   test("blooms sized per file keep 3,000-row files prunable") {
@@ -116,7 +116,7 @@ class BloomSkipSpec extends AnyFunSuite {
     assert(m.files.size == 8 && m.files.forall(_.rows > 2500))
     // 10+ bits per row: a 3,000-row file gets 32,768 bits, not 4,096
     assert(m.files.forall(f =>
-      GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
+      GTabBloom.decode(f.stats.blooms("id").words).length * 64 ==
         GTabBloom.bitsFor(f.rows)))
     Seq(7L, 1234L, 9999L, 17000L, 23999L).foreach { k =>
       val eq = spark.read.format(Fmt).option("path", dir).load()
@@ -149,10 +149,9 @@ class BloomSkipSpec extends AnyFunSuite {
     ManifestTable.compact(spark, dir, targetFiles = 2)
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.size == 2 && m.files.forall(f =>
-      GTabBloom.decode(f.stats("#bloom:id")._2).length * 64 ==
+      GTabBloom.decode(f.stats.blooms("id").words).length * 64 ==
         GTabBloom.bitsFor(f.rows)))
-    assert(graft.sources.CowOps.censusColumns(m, GTabBloom.KeyPrefix) ==
-      Seq("id"))
+    assert(graft.sources.CowOps.censusColumns(m)._1 == Seq("id"))
   }
 
   test("write-time validation: unknown column and unsupported type fail fast") {

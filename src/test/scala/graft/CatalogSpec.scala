@@ -61,7 +61,7 @@ class CatalogSpec extends AnyFunSuite {
     // every committed file is single-valued on g
     val m = ManifestTable.readManifest(s"$wh/db/pa").get
     assert(m.files.nonEmpty &&
-      m.files.forall(_.stats.contains("#part:g")))
+      m.files.forall(_.stats.parts.contains("g")))
     noBroadcast {
       val j = spark.sql(
         s"""SELECT a.g, count(*) AS n FROM $cat.db.pa a
@@ -425,7 +425,7 @@ class CatalogSpec extends AnyFunSuite {
       "SELECT /*+ REPARTITION(4, id) */ * FROM props_src")
     val dirT = s"$wh/db/props"
     val m = ManifestTable.readManifest(dirT).get
-    assert(m.files.nonEmpty && m.files.forall(_.stats.contains("#bloom:id")),
+    assert(m.files.nonEmpty && m.files.forall(_.stats.blooms.contains("id")),
       "every SQL-inserted file must carry the declared bloom")
     val q = spark.sql(s"SELECT * FROM $cat.db.props WHERE id = 7")
     assert(q.count() == 1)
@@ -441,7 +441,7 @@ class CatalogSpec extends AnyFunSuite {
       s"ALTER TABLE $cat.db.props SET TBLPROPERTIES('ndvColumns'='id')")
     spark.sql(s"INSERT INTO $cat.db.props VALUES (1000, 'x')")
     val m2 = ManifestTable.readManifest(dirT).get
-    assert(m2.files.exists(_.stats.contains("#ndv:id")),
+    assert(m2.files.exists(_.stats.ndvs.contains("id")),
       "the post-SET insert must carry the NDV sketch")
     // UNSET stops later writes from carrying it
     spark.sql(s"ALTER TABLE $cat.db.props UNSET TBLPROPERTIES('ndvColumns')")
@@ -450,7 +450,7 @@ class CatalogSpec extends AnyFunSuite {
     val newest = m3.files.map(_.name).toSet -- m2.files.map(_.name).toSet
     assert(newest.nonEmpty &&
       m3.files.filter(f => newest.contains(f.name))
-        .forall(!_.stats.contains("#ndv:id")))
+        .forall(!_.stats.ndvs.contains("id")))
     // a bad property fails the DDL, never the first INSERT
     val e = intercept[Exception](spark.sql(
       s"CREATE TABLE $cat.db.propbad (id BIGINT) " +
@@ -586,7 +586,7 @@ class CatalogSpec extends AnyFunSuite {
       "SELECT /*+ REPARTITION(4, id) */ * FROM adopt_src")
     val dirT = s"$wh/db/adopt"
     assert(ManifestTable.readManifest(dirT).get.files
-      .forall(f => !f.stats.contains("#bloom:id")))
+      .forall(f => !f.stats.blooms.contains("id")))
     // the property lands AFTER the data: no file carries a bloom yet, so
     // a file-derived-only rewrite config could never add one
     spark.sql(
@@ -594,7 +594,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql(s"CALL $cat.system.compact(`table` => 'db.adopt', " +
       "target_files => 4)")
     val m = ManifestTable.readManifest(dirT).get
-    assert(m.files.nonEmpty && m.files.forall(_.stats.contains("#bloom:id")),
+    assert(m.files.nonEmpty && m.files.forall(_.stats.blooms.contains("id")),
       "compaction must adopt the declared bloom onto every rewritten file")
     // and a COW rewrite adopts too: UPDATE one slice, its replacement
     // files carry the bloom
@@ -605,7 +605,7 @@ class CatalogSpec extends AnyFunSuite {
     val rewritten = m2.files.map(_.name).toSet -- m.files.map(_.name).toSet
     assert(rewritten.nonEmpty)
     assert(m2.files.filter(f => rewritten.contains(f.name)).forall(f =>
-      f.stats.contains("#bloom:id") && f.stats.contains("#ndv:id")),
+      f.stats.blooms.contains("id") && f.stats.ndvs.contains("id")),
       "a COW rewrite must adopt the declared structures")
   }
 }

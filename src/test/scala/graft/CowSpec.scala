@@ -43,7 +43,7 @@ class CowSpec extends AnyFunSuite {
     assert(r.filesRewritten == 2 && r.filesUntouched == 3)
     val after = ManifestTable.readManifest(dir).get
     val untouchedBefore = before.files.filter { f =>
-      val lo = f.stats("k")._1.toLong
+      val lo = f.stats.zones("k").lo.toLong
       lo >= 20 && lo < 80
     }.toSet
     assert(untouchedBefore.subsetOf(after.files.toSet),
@@ -92,8 +92,8 @@ class CowSpec extends AnyFunSuite {
     assert(!got.contains(25L) && !got.contains(0L) && got(5L) == "v5")
     // the fully-deleted range produced no replacement rows for [20,39]
     assert(ManifestTable.readManifest(dir).get.files.forall { f =>
-      val (lo, hi) = f.stats("k")
-      !(lo.toLong >= 20 && hi.toLong <= 39)
+      val z = f.stats.zones("k")
+      !(z.lo.toLong >= 20 && z.hi.toLong <= 39)
     })
   }
 
@@ -211,8 +211,8 @@ class CowSpec extends AnyFunSuite {
     val after = ManifestTable.readManifest(dir).get
     assert(after.files.map(f => (f.name, f.crc)).toSet ==
       before.files.map(f => (f.name, f.crc)).toSet)
-    assert(after.files.forall(_.stats.contains("#dvp")))
-    assert(after.files.map(_.stats("#dvp")._2.toLong).sum == 15)
+    assert(after.files.forall(_.stats.dv.isDefined))
+    assert(after.files.map(_.stats.dv.get.count).sum == 15)
     // read-back equals the anti-join
     val got = readAll(dir)
     assert(got.size == 100 - 15 && !got.contains(0L) && !got.contains(98L)
@@ -239,16 +239,16 @@ class CowSpec extends AnyFunSuite {
       ks =>
         CowOps.deleteMor(spark, dir, ks.toDF("k"), "k")
         ManifestTable.readManifest(dir).get.files.foreach { f =>
-          assert(f.stats.get("#dvp").forall(
-            _._1.split(";").length <= ManifestTable.DvPosChainMax))
+          assert(f.stats.dv.forall(
+            _.names.length <= ManifestTable.DvPosChainMax))
         }
     }
     val m = ManifestTable.readManifest(dir).get
     val dvs = m.files.flatMap(f =>
-      f.stats.get("#dvp").map(f.stats("k")._1 -> _)).toMap
+      f.stats.dv.map(f.stats.zones("k").lo -> _)).toMap
     assert(dvs.keySet == Set("0", "40"), s"vectored files: $dvs")
-    assert(dvs("0")._2 == "6" && dvs("40")._2 == "1")
-    assert(dvs("0")._1.split(";").length < 5, "the chain must have folded")
+    assert(dvs("0").count == 6 && dvs("40").count == 1)
+    assert(dvs("0").names.length < 5, "the chain must have folded")
     assert(readAll(dir).size == 93)
     // every chain member is manifest-referenced: vacuum must not reap it
     // while a retaining snapshot lives
@@ -257,7 +257,7 @@ class CowSpec extends AnyFunSuite {
     // compaction reads THROUGH the merge and drops every dv reference
     ManifestTable.compact(spark, dir, targetFiles = 2)
     val compacted = ManifestTable.readManifest(dir).get
-    assert(compacted.files.forall(!_.stats.contains("#dvp")))
+    assert(compacted.files.forall(!_.stats.dv.isDefined))
     val df = spark.read.format(Fmt).option("path", dir).load()
     assert(df.count() == 93)
     // the metadata-count fast path is restored post-compaction
@@ -283,7 +283,7 @@ class CowSpec extends AnyFunSuite {
     // affected ones gained a dv reference
     val beforeKeys = before.files.map(f => (f.name, f.crc)).toSet
     assert(beforeKeys.subsetOf(after.files.map(f => (f.name, f.crc)).toSet))
-    assert(after.files.exists(_.stats.contains("#dvp")))
+    assert(after.files.exists(_.stats.dv.isDefined))
     // read semantics equal the COW merge (whole-row upsert + insert)
     val cow = tmp()
     build(cow)
@@ -297,7 +297,7 @@ class CowSpec extends AnyFunSuite {
     // compaction materializes the whole MOR state away
     ManifestTable.compact(spark, dir, targetFiles = 2)
     assert(ManifestTable.readManifest(dir).get.files.forall(
-      !_.stats.contains("#dvp")))
+      !_.stats.dv.isDefined))
     assert(readAll(dir) == got)
   }
 
@@ -311,7 +311,8 @@ class CowSpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Paths.get(dir, "data", "dv-old.gdv"),
       "0\n")
     ManifestTable.commitReplace(dir, m.version, Set(f.name),
-      Seq(f.copy(stats = f.stats + ("#dv:k" -> ("dv-old.gdv", "1")))))
+      Seq(f.copy(stats =
+        f.stats.copy(rest = f.stats.rest + ("#dv:k" -> ("dv-old.gdv", "1"))))))
     val df = spark.read.format(Fmt).option("path", dir).load()
     Seq[() => Any](() => df.collect(), () => df.count()).foreach { read =>
       val e = intercept[IllegalStateException](read())
@@ -345,13 +346,13 @@ class CowSpec extends AnyFunSuite {
     // every bloom, rewritten or not, is sized from its own file's rows
     def sizedPerFile(): Boolean =
       ManifestTable.readManifest(dir).get.files.forall(f =>
-        f.stats.get("#bloom:k").exists(b => GTabBloom.decode(b._2).length *
+        f.stats.blooms.get("k").exists(b => GTabBloom.decode(b.words).length *
           64 == GTabBloom.bitsFor(f.rows)))
     assert(sizedPerFile())
     val r = CowOps.merge(spark, dir, Seq((5L, "U5")).toDF("k", "s"), "k")
     assert(r.filesRewritten == 1)
     val files = ManifestTable.readManifest(dir).get.files
-    assert(files.forall(_.stats.contains("#bloom:k")),
+    assert(files.forall(_.stats.blooms.contains("k")),
       "rewritten files must keep the table's bloom column")
     assert(sizedPerFile(), "rewritten blooms must be sized per file")
     // the rewritten file's bloom is live: a follow-up delete still

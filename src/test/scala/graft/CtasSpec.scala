@@ -115,8 +115,8 @@ class CtasSpec extends AnyFunSuite {
     }.get
     val m = graft.sources.ManifestTable.readManifest(tdir).get
     assert(m.files.nonEmpty &&
-      m.files.forall(f => f.stats.contains("#bloom:o_custkey") &&
-        f.stats.contains("#bloom:o_orderpriority")),
+      m.files.forall(f => f.stats.blooms.contains("o_custkey") &&
+        f.stats.blooms.contains("o_orderpriority")),
       "CTAS must apply the TBLPROPERTIES blooms to the staged write")
     // the combined range + bloom-equality predicate reads ONE file of 8
     val df = read()

@@ -58,13 +58,13 @@ class GTabExactSpec extends AnyFunSuite {
     // onto by SQL DELETE
     CowOps.deleteMor(spark, dir, Seq(-97L, 3L, 600L, 903L).toDF("id"), "id")
     val keyed = ManifestTable.readManifest(dir).get.files
-      .flatMap(f => f.stats.get("#dvp").map(f.name -> _._2.toLong)).toMap
+      .flatMap(f => f.stats.dv.map(f.name -> _.count)).toMap
     assert(keyed.values.sum == 3) // key 3 holds no row
     spark.sql(s"DELETE FROM $c.db.ex WHERE id % 13 = 0")
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.exists(!_.cols.contains("s")))
     assert(m.files.exists(f =>
-      keyed.get(f.name).exists(_ < f.stats("#dvp")._2.toLong)))
+      keyed.get(f.name).exists(_ < f.stats.dv.get.count)))
 
     val table = spark.read.format(Fmt).option("path", dir).load()
     val all = table.collect().toSeq

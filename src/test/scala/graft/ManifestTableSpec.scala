@@ -306,8 +306,8 @@ class ManifestTableSpec extends AnyFunSuite {
       .write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
     val m = ManifestTable.readManifest(dir).get
     assert(m.files.size == 8)
-    assert(m.files.forall(f => f.stats.contains("id") &&
-      f.stats.contains("x") && !f.stats.contains("s")),
+    assert(m.files.forall(f => f.stats.zones.contains("id") &&
+      f.stats.zones.contains("x") && !f.stats.zones.contains("s")),
       "numeric columns carry zone maps, strings never do")
     val df = readBack(dir).filter($"id" >= 1000L && $"id" < 1100L)
     assert(df.count() == 100)
@@ -336,9 +336,9 @@ class ManifestTableSpec extends AnyFunSuite {
       .coalesce(1)
       .write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
     val m = ManifestTable.readManifest(dir).get
-    assert(!m.files.head.stats.contains("x"),
+    assert(!m.files.head.stats.zones.contains("x"),
       "a NaN-containing file must not publish finite x bounds")
-    assert(m.files.head.stats.contains("id"))
+    assert(m.files.head.stats.zones.contains("id"))
     // NaN > 1e300 is TRUE under Spark's ordering — the file must be read
     val hit = readBack(dir).filter($"x" > 1e300).collect()
     assert(hit.map(_.getLong(0)).toSeq == Seq(2L))
@@ -482,5 +482,21 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(ManifestTable.vacuum(dir, graceMs = 0L, keepLast = 1).nonEmpty)
     assert(readBack(dir).select("s").as[String].collect().toSeq ==
       Seq("new"))
+  }
+
+  test("a DataFrame write refuses column names that collide with stat keys") {
+    // a zone map is stored under its column's bare name, beside the
+    // reserved '#' stat keys: a bigint column `#dvp` would be read back
+    // as a deletion-vector chain, `#sz` as the file's byte size
+    Seq("#dvp", "#sz", "#dv:x", "_file").foreach { c =>
+      val dir = tmp()
+      val e = intercept[Exception] {
+        (0 until 4).map(i => (i.toLong, i.toLong)).toDF("id", c)
+          .write.format(Fmt).option("path", dir).mode(SaveMode.Append)
+          .save()
+      }
+      assert(e.getMessage.contains("reserved"), e.getMessage)
+      assert(ManifestTable.readManifest(dir).isEmpty, c)
+    }
   }
 }

@@ -35,7 +35,8 @@ class MetadataTreeSpec extends AnyFunSuite {
   private def fakeEntries(from: Int, until: Int): Seq[ManifestTable.FileEntry] =
     (from until until).map { i =>
       ManifestTable.FileEntry(s"f-$i.gtab", 10, 0, Seq("id", "v"),
-        Map("id" -> ((i * 10L).toString, (i * 10L + 9).toString)))
+        graft.sources.FileStats(zones = Map("id" ->
+          graft.sources.Zone((i * 10L).toString, (i * 10L + 9).toString))))
     }
 
   private def freshDir(tag: String): String =
@@ -322,9 +323,9 @@ class MetadataTreeSpec extends AnyFunSuite {
     // entry holds one key; g = "0" for the first batch, "1" the second
     def batch(from: Int, until: Int, g: String) = (from until until).map {
       i => ManifestTable.FileEntry(s"h-$i.gtab", 1, 0, Seq("id", "g"),
-        Map("#bloom:id" ->
-          (graft.sources.GTabBloom.NumHashes.toString, bloomOf(i.toLong)),
-          "#part:g" -> (g, "")))
+        graft.sources.FileStats(blooms = Map("id" -> graft.sources.Sketch(
+          graft.sources.GTabBloom.NumHashes, bloomOf(i.toLong))),
+          parts = Map("g" -> g)))
     }
     ManifestTable.commitVersion(dir, schema3, batch(0, 150, "0"),
       keepPrevious = true)
@@ -351,7 +352,7 @@ class MetadataTreeSpec extends AnyFunSuite {
         Seq(EqualTo("g", "1"): Filter), m.schema))
     val decodedG = ManifestTable.shardDecodes.get() - b2
     assert(keptG.size == 150 &&
-      keptG.forall(_.stats.get("#part:g").exists(_._1 == "1")))
+      keptG.forall(_.stats.parts.get("g").contains("1")))
     assert(decodedG == 1,
       s"partition-valued shards must prune decodes: " +
         s"$decodedG of ${m.shards.size}")
@@ -434,7 +435,7 @@ class MetadataTreeSpec extends AnyFunSuite {
     val schema3 = StructType.fromDDL("id BIGINT, g STRING")
     def batch(from: Int, until: Int, g: String) = (from until until).map {
       i => ManifestTable.FileEntry(s"d-$i.gtab", 1, 0, Seq("id", "g"),
-        Map("#part:g" -> (g, "")))
+        graft.sources.FileStats(parts = Map("g" -> g)))
     }
     ManifestTable.commitVersion(dir, schema3, batch(0, 150, "0"),
       keepPrevious = true)
@@ -455,7 +456,7 @@ class MetadataTreeSpec extends AnyFunSuite {
       s"partition DELETE decoded $decoded of ${m.shards.size} shards")
     val m2 = ManifestTable.readManifest(dir).get
     assert(m2.nFiles == 150 &&
-      m2.files.forall(_.stats.get("#part:g").exists(_._1 == "1")))
+      m2.files.forall(_.stats.parts.get("g").contains("1")))
   }
 
   test("DML write-builder derivations answer from shard census keys " +
@@ -470,10 +471,10 @@ class MetadataTreeSpec extends AnyFunSuite {
     }
     def batch(from: Int, until: Int, g: String) = (from until until).map {
       i => ManifestTable.FileEntry(s"c-$i.gtab", 1, 0, Seq("id", "g"),
-        Map("#part:g" -> (g, ""),
-          "#bloom:id" ->
-            (graft.sources.GTabBloom.NumHashes.toString, bloomOf(i.toLong)),
-          "#ndv:id" -> ("64", bloomOf(i.toLong))))
+        graft.sources.FileStats(parts = Map("g" -> g),
+          blooms = Map("id" -> graft.sources.Sketch(
+            graft.sources.GTabBloom.NumHashes, bloomOf(i.toLong))),
+          ndvs = Map("id" -> graft.sources.Sketch(64, bloomOf(i.toLong)))))
     }
     ManifestTable.commitVersion(dir, schema3, batch(0, 150, "0"),
       keepPrevious = true)
@@ -484,16 +485,13 @@ class MetadataTreeSpec extends AnyFunSuite {
     val before = ManifestTable.shardDecodes.get()
     // the three questions every SQL DML write build asks
     assert(ManifestTable.partitionColumnsOf(m) == Seq("g"))
-    assert(graft.sources.CowOps.censusColumns(m,
-      graft.sources.GTabBloom.KeyPrefix) == Seq("id"))
-    assert(graft.sources.CowOps.censusColumns(m, ManifestTable.NdvPrefix) ==
-      Seq("id"))
+    assert(graft.sources.CowOps.censusColumns(m) == (Seq("id"), Seq("id")))
     assert(ManifestTable.shardDecodes.get() == before,
       "table-level config derivations must not decode a shard")
     // a mixed-spec table degrades the partition report, still decode-free
     ManifestTable.commitVersion(dir, schema3,
-      Seq(ManifestTable.FileEntry("plain.gtab", 1, 0, Seq("id", "g"),
-        Map.empty)), keepPrevious = true)
+      Seq(ManifestTable.FileEntry("plain.gtab", 1, 0, Seq("id", "g"))),
+      keepPrevious = true)
     val m2 = ManifestTable.readManifest(dir).get
     assert(ManifestTable.partitionColumnsOf(m2).isEmpty)
     assert(ManifestTable.shardDecodes.get() == before)

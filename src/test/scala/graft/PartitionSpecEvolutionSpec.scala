@@ -78,10 +78,9 @@ class PartitionSpecEvolutionSpec extends AnyFunSuite {
     val dir = s"$wh/db/ev"
     def partKeysOf(name: String): Set[String] =
       ManifestTable.readManifest(dir).get.files
-        .filter(_.name == name).head.stats.keySet
-        .filter(_.startsWith("#part:"))
+        .filter(_.name == name).head.stats.parts.keySet
     val oldFiles = ManifestTable.readManifest(dir).get.files.map(_.name)
-    assert(oldFiles.forall(f => partKeysOf(f) == Set("#part:g")))
+    assert(oldFiles.forall(f => partKeysOf(f) == Set("g")))
     // evolve the spec to h
     val out = spark.sql(
       "CALL gse.system.set_partition_spec(table => 'db.ev', " +
@@ -91,9 +90,9 @@ class PartitionSpecEvolutionSpec extends AnyFunSuite {
     val m = ManifestTable.readManifest(dir).get
     val newFiles = m.files.map(_.name).filterNot(oldFiles.contains)
     assert(newFiles.nonEmpty)
-    assert(newFiles.forall(f => partKeysOf(f) == Set("#part:h")),
+    assert(newFiles.forall(f => partKeysOf(f) == Set("h")),
       "post-evolution inserts must take the new spec")
-    assert(oldFiles.forall(f => partKeysOf(f) == Set("#part:g")),
+    assert(oldFiles.forall(f => partKeysOf(f) == Set("g")),
       "existing files keep their recorded layout")
     // rows all there, grouped correctly across the mix
     assert(spark.sql("SELECT count(*) FROM gse.db.ev").head()

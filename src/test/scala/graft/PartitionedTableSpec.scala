@@ -49,13 +49,12 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(back.orderBy("id").collect().toSeq ==
       df.orderBy("id").collect().toSeq)
     val m = ManifestTable.readManifest(dir).get
-    val key = "#part:g"
     assert(m.files.nonEmpty)
     m.files.foreach { f =>
-      assert(f.stats.contains(key), s"${f.name} lacks $key")
+      assert(f.stats.parts.contains("g"), s"${f.name} lacks a value for g")
     }
     // 7 groups, each value in its own file set
-    assert(m.files.map(_.stats(key)._1).distinct.sorted ==
+    assert(m.files.map(_.stats.parts("g")).distinct.sorted ==
       (0 until 7).map(_.toString).sorted)
   }
 
@@ -102,7 +101,7 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(one.count() == 100)
     val desc = one.queryExecution.executedPlan.toString
     val m = ManifestTable.readManifest(dir).get
-    val matching = m.files.count(_.stats("#part:lang")._1 == "lang-1")
+    val matching = m.files.count(_.stats.parts("lang") == "lang-1")
     assert(desc.contains(s"files=$matching/${m.files.size}"),
       s"expected files=$matching/${m.files.size} in:\n$desc")
     // IN prunes too
@@ -121,7 +120,7 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(read(dir).filter(col("g").isNull).count() == 30)
     assert(read(dir).filter(col("g").isNotNull).count() == 60)
     val m = ManifestTable.readManifest(dir).get
-    val nullFiles = m.files.count(_.stats("#part:g")._1 == "\\N")
+    val nullFiles = m.files.count(_.stats.parts("g") == "\\N")
     assert(nullFiles > 0, "null rows must land in their own file(s)")
     val pruned = read(dir).filter(col("g").isNull)
       .queryExecution.executedPlan.toString
@@ -233,13 +232,13 @@ class PartitionedTableSpec extends AnyFunSuite {
     val m = ManifestTable.readManifest(dirA).get
     assert(ManifestTable.partitionColumnsOf(m) == Seq("d", "h"))
     m.files.foreach { f =>
-      assert(f.stats.contains("#part:d") && f.stats.contains("#part:h"))
+      assert(f.stats.parts.contains("d") && f.stats.parts.contains("h"))
     }
     // per-column pruning composes: (d=1, h='h0') keeps 1 of 6 groups
     val one = read(dirA).filter(col("d") === 1 && col("h") === "h0")
     assert(one.count() == 40)
     val matching = m.files.count(f =>
-      f.stats("#part:d")._1 == "1" && f.stats("#part:h")._1 == "h0")
+      f.stats.parts("d") == "1" && f.stats.parts("h") == "h0")
     assert(one.queryExecution.executedPlan.toString
       .contains(s"files=$matching/${m.files.size}"))
     // tuple SPJ: join on BOTH partition columns plans exchange-free

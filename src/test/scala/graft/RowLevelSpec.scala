@@ -192,10 +192,10 @@ class RowLevelSpec extends AnyFunSuite {
       .write.format(Fmt).option("path", s"$wh/db/bl")
       .option("bloomColumns", "id").mode("append").save()
     assert(ManifestTable.readManifest(s"$wh/db/bl").get.files
-      .forall(_.stats.keys.exists(_.startsWith("#bloom:"))))
+      .forall(_.stats.blooms.nonEmpty))
     spark.sql(s"UPDATE $cat.db.bl SET s = 'upd' WHERE id % 10 = 3")
     val m = ManifestTable.readManifest(s"$wh/db/bl").get
-    assert(m.files.forall(_.stats.keys.exists(_.startsWith("#bloom:"))),
+    assert(m.files.forall(_.stats.blooms.nonEmpty),
       "rewritten files must carry the table's blooms")
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.bl WHERE s = 'upd'")
       .as[Long].head() == 10)
@@ -286,7 +286,7 @@ class RowLevelSpec extends AnyFunSuite {
     val after = ManifestTable.readManifest(dir).get
     // filesRewritten == 0: the data file name set is byte-identical
     assert(after.files.map(_.name).toSet == before.files.map(_.name).toSet)
-    assert(after.files.count(_.stats.contains("#dvp")) > 0)
+    assert(after.files.count(_.stats.dv.isDefined) > 0)
     val rows = spark.sql(s"SELECT id FROM $cat.db.mor1 ORDER BY id")
       .as[Long].collect()
     assert(rows.toSeq == (0 until 100).map(_.toLong).filter(_ % 7 != 0))
@@ -333,12 +333,12 @@ class RowLevelSpec extends AnyFunSuite {
       .as[Long].head() == expected)
     // one sidecar per entry (unioned successor, never a chain), and the
     // sidecar is a SHARED union — count reflects both deletes
-    val dvps = m.files.flatMap(_.stats.get("#dvp"))
+    val dvps = m.files.flatMap(_.stats.dv)
     assert(dvps.nonEmpty)
-    assert(m.files.forall(f => f.stats.count(_._1 == "#dvp") <= 1))
+    assert(m.files.forall(f => f.stats.dv.size <= 1))
     ManifestTable.compact(spark, dir, 2, clusterBy = Seq("id"))
     val mc = ManifestTable.readManifest(dir).get
-    assert(mc.files.forall(f => !f.stats.contains("#dvp")),
+    assert(mc.files.forall(f => !f.stats.dv.isDefined),
       "compaction must materialize position deletes away")
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.mor3")
       .as[Long].head() == expected)
@@ -401,7 +401,7 @@ class RowLevelSpec extends AnyFunSuite {
     merge("sparse2")
     val morM = ManifestTable.readManifest(morDir).get
     assert(morBefore.subsetOf(morM.files.map(_.name).toSet))
-    assert(morM.files.count(_.stats.contains("#dvp")) == 1,
+    assert(morM.files.count(_.stats.dv.isDefined) == 1,
       "only the one touched file should carry a position vector")
     Seq("sparse1", "sparse2").foreach { n =>
       val got = spark.sql(
@@ -440,7 +440,7 @@ class RowLevelSpec extends AnyFunSuite {
     // vanished and no position vector landed
     val m = ManifestTable.readManifest(dir).get
     assert(m.version == v0 + 1)
-    assert(m.files.forall(f => !f.stats.contains("#dvp")),
+    assert(m.files.forall(f => !f.stats.dv.isDefined),
       "a losing delta commit must leave no position vectors behind")
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.ccm1")
       .as[Long].head() == 105)
@@ -506,9 +506,9 @@ class RowLevelSpec extends AnyFunSuite {
     val v0 = ManifestTable.readManifest(dir).get.version
     def chainOf(): Seq[String] = {
       val f = ManifestTable.readManifest(dir).get.files
-        .filter(_.stats.contains("#dvp"))
+        .filter(_.stats.dv.isDefined)
       if (f.isEmpty) Nil
-      else f.head.stats("#dvp")._1.split(";").toSeq.filter(_.nonEmpty)
+      else f.head.stats.dv.get.names
     }
     val primes = Seq(3, 7, 11, 13, 17, 19)
     primes.zipWithIndex.foreach { case (p, i) =>
@@ -529,10 +529,10 @@ class RowLevelSpec extends AnyFunSuite {
     // least once; the stat still reads as ONE #dvp entry whose count is
     // the union cardinality
     val m = ManifestTable.readManifest(dir).get
-    val dv = m.files.flatMap(_.stats.get("#dvp"))
+    val dv = m.files.flatMap(_.stats.dv)
     assert(dv.size == 1)
     val expectDeleted = (0 until 200).count(id => primes.exists(id % _ == 0))
-    assert(dv.head._2.toLong == expectDeleted)
+    assert(dv.head.count == expectDeleted)
     // a pre-delete snapshot still reads every chain member it references
     assert(spark.sql(
         s"SELECT count(*) FROM $cat.db.chain1 VERSION AS OF $v0")
@@ -550,8 +550,8 @@ class RowLevelSpec extends AnyFunSuite {
     assert(rows("dk1") == rows("ds1") && rows("dk1").size == 85)
     // the same layout on both sides, so files pair up by zone map
     def counts(dir: String) = ManifestTable.readManifest(dir).get.files
-      .map(f => f.stats("id") -> f.stats.get("#dvp").map(_._2)).toMap
+      .map(f => f.stats.zones("id") -> f.stats.dv.map(_.count)).toMap
     assert(counts(key) == counts(sql) &&
-      counts(key).values.flatten.map(_.toLong).sum == 15, counts(key))
+      counts(key).values.flatten.sum == 15, counts(key))
   }
 }

@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * in graft/streaming/BatchCommit.scala, and each persisted index has one
   * (staged) append. Blooms keep one sizing rule (per file, no
   * `bloomBits` knob) and one double-hashing position step, BloomUtil's.
-  * gtab keeps one deletion-vector format, the `#dvp` position vectors.
+  * gtab keeps one deletion-vector format, the `#dvp` position vectors,
+  * and one codec for manifest stat keys: only sources/ManifestCodec.scala
+  * tests or spells a reserved `#` key; everything else reads typed
+  * entry fields.
   */
 class SessionSpec extends AnyFunSuite {
   private def sources(root: String) = {
@@ -72,5 +75,16 @@ class SessionSpec extends AnyFunSuite {
       .filter(p => valueDv.findFirstIn(Files.readString(p)).isDefined)
     assert(offenders.isEmpty,
       s"delete rows through #dvp position vectors, not a value-keyed format, in: ${offenders.mkString(", ")}")
+  }
+
+  test("gtab stat keys are parsed and built only in sources/ManifestCodec.scala") {
+    val own = Paths.get("src/main/scala/graft/sources/ManifestCodec.scala")
+    val statKey =
+      "startsWith\\(\"#(?!#)|\"#(bloom|ndv|part|dv|sz|nf|nbl|pall|pcols)".r
+    val offenders = sources("src/main/scala").filter(p => p != own &&
+      statKey.findFirstIn(Files.readString(p)).isDefined)
+    assert(Files.exists(own), s"$own moved: re-point this guard")
+    assert(offenders.isEmpty,
+      s"read manifest stats through FileStats/ShardRef fields, not '#' keys, in: ${offenders.mkString(", ")}")
   }
 }

@@ -90,9 +90,8 @@ class TableStatsSpec extends AnyFunSuite {
     (0 until 100).map(i => (i.toLong, s"r$i")).toDF("id", "s")
       .write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
     val m = ManifestTable.readManifest(dir).get
-    // simulate a pre-round-13 manifest: strip the #sz keys
-    val stripped = m.files.map(f =>
-      f.copy(stats = f.stats.filterNot(_._1 == "#sz")))
+    // simulate a pre-round-13 manifest: strip the byte sizes
+    val stripped = m.files.map(f => f.copy(stats = f.stats.copy(size = None)))
     ManifestTable.commitVersion(dir, m.schema, Nil, keepPrevious = false)
     ManifestTable.commitVersion(dir, m.schema, stripped,
       keepPrevious = false)
