@@ -16,9 +16,9 @@ final case class DvChain(names: Seq[String], count: Long)
 
 /** The facts a manifest entry records about its file (on a shard ref:
   * aggregated over its members). `rest` keeps, verbatim, each reserved
-  * key this build does not interpret (an old `#bloomrows` marker, a
-  * value-keyed `#dv:` vector, or a known key whose value would not
-  * re-encode to the same text), so decode-then-encode is byte-exact.
+  * key this build does not interpret: an old `#bloomrows` marker, a
+  * value-keyed `#dv:` vector, or the zone map of a column an older build
+  * let start with `#`.
   */
 final case class FileStats(
     zones: Map[String, Zone] = Map.empty,
@@ -38,12 +38,15 @@ final case class FileStats(
 
   def hasDv: Boolean = dv.isDefined || legacyDvs.nonEmpty
 
-  /** Column `from` renamed `to` in every per-column fact. */
+  /** Column `from` renamed `to` in every per-column fact. A `from`
+    * starting with `#` has its zone map in `rest`: renaming it to a legal
+    * name makes it a zone map again. */
   def renamed(from: String, to: String): FileStats = {
     def ren[V](m: Map[String, V]) =
       m.get(from).fold(m)(v => m - from + (to -> v))
-    copy(zones = ren(zones), blooms = ren(blooms), ndvs = ren(ndvs),
-      parts = ren(parts), rest = rest.map { case (k, v) =>
+    copy(zones = ren(zones) ++ rest.get(from).map { case (lo, hi) =>
+        to -> Zone(lo, hi) }, blooms = ren(blooms), ndvs = ren(ndvs),
+      parts = ren(parts), rest = (rest - from).map { case (k, v) =>
         val i = k.indexOf(':')
         (if (i > 0 && k.substring(i + 1) == from) k.take(i + 1) + to
         else k) -> v
@@ -72,6 +75,8 @@ private[graft] object ManifestCodec {
   private val NdvColsKey = "#ndvcols"
   private val ShardDvKey = "#dv"
   private val NameBloomKey = "#nbl"
+  private val ShardKeys = Set(NfKey, PColsKey, PAllKey, BloomColsKey,
+    NdvColsKey, ShardDvKey, NameBloomKey)
 
   private type Triple = (String, (String, String))
 
@@ -102,25 +107,18 @@ private[graft] object ManifestCodec {
 
   def parseShard(l: String): ShardRef = {
     val (e, ts) = fields(l, StructType(Nil))
-    val (own, member) = ts.partition(t => Set(NfKey, PColsKey, PAllKey,
-      BloomColsKey, NdvColsKey, ShardDvKey, NameBloomKey).contains(t._1))
+    val (own, member) = ts.partition(t => ShardKeys.contains(t._1))
     val kv = own.toMap
-    val stats = decode(member)
-    var rest = stats.rest
-    def take[T](key: String)(dec: ((String, String)) => Option[T]) =
-      kv.get(key).flatMap(v => dec(v).orElse { rest += key -> v; None })
-    def names(v: (String, String)) = {
-      val cs = v._1.split(",").toSeq.filter(_.nonEmpty).map(unescape)
-      Some(cs).filter(_ => v == ((cs.map(escape).mkString(","), "")))
-    }
+    // a name list is the first field (an older build's `#bloomcols`
+    // carried a bloom size in the second, which no reader uses)
+    def names(key: String) = kv.get(key).map(_._1.split(",").toSeq
+      .filter(_.nonEmpty).map(unescape))
     ShardRef(e.name, kv.get(NfKey).flatMap(_._1.toIntOption).getOrElse(0),
-      e.rows, e.crc, e.cols, stats,
-      pcols = take(PColsKey)(names(_).filter(_.nonEmpty)).getOrElse(Nil),
-      pall = take(PAllKey)(names), bloomCols = take(BloomColsKey)(names),
-      ndvCols = take(NdvColsKey)(names),
-      hasDv = take(ShardDvKey)(Some(_).filter(_ == (("1", "")))).nonEmpty,
-      nameBloom = take(NameBloomKey)(sketch))
-      .copy(stats = stats.copy(rest = rest))
+      e.rows, e.crc, e.cols, decode(member),
+      pcols = names(PColsKey).getOrElse(Nil), pall = names(PAllKey),
+      bloomCols = names(BloomColsKey), ndvCols = names(NdvColsKey),
+      hasDv = kv.contains(ShardDvKey),
+      nameBloom = kv.get(NameBloomKey).flatMap(sketch))
   }
 
   /** A line's name, rows, CRC and columns, and its stat triples. */
@@ -154,33 +152,24 @@ private[graft] object ManifestCodec {
       s.dv.map(d => DvKey -> (d.names.mkString(";"), d.count.toString)) ++
       s.rest
 
-  /** A known key decodes to its typed field only when that value encodes
-    * back to the same text; otherwise it stays in `rest`.
-    */
+  /** Known keys decode leniently: a count that does not parse reads as
+    * absent. Only keys this build does not know go to `rest`. */
   private def decode(ts: Seq[Triple]): FileStats =
     ts.foldLeft(FileStats()) { case (s, t @ (k, v @ (a, b))) =>
       def col(key: String) = k.substring(key.length)
-      (if (!k.startsWith("#"))
-        Some(s.copy(zones = s.zones + (k -> Zone(a, b))))
+      if (!k.startsWith("#")) s.copy(zones = s.zones + (k -> Zone(a, b)))
       else if (k.startsWith(BloomKey))
-        sketch(v).map(x => s.copy(blooms = s.blooms + (col(BloomKey) -> x)))
+        s.copy(blooms = s.blooms ++ sketch(v).map(col(BloomKey) -> _))
       else if (k.startsWith(NdvKey))
-        sketch(v).map(x => s.copy(ndvs = s.ndvs + (col(NdvKey) -> x)))
-      else if (k.startsWith(PartKey) && b.isEmpty)
-        Some(s.copy(parts = s.parts + (col(PartKey) -> a)))
-      else if (k == SizeKey && b.isEmpty)
-        canonical(a).map(n => s.copy(size = Some(n)))
-      else if (k == DvKey)
-        canonical(b).map(DvChain(a.split(";").toSeq, _))
-          .filter(d => d.names.forall(_.nonEmpty) &&
-            d.names.mkString(";") == a)
-          .map(d => s.copy(dv = Some(d)))
-      else None).getOrElse(s.copy(rest = s.rest + t))
+        s.copy(ndvs = s.ndvs ++ sketch(v).map(col(NdvKey) -> _))
+      else if (k.startsWith(PartKey))
+        s.copy(parts = s.parts + (col(PartKey) -> a))
+      else if (k == SizeKey) s.copy(size = a.toLongOption)
+      else if (k == DvKey) s.copy(dv = Some(DvChain(
+        a.split(";").toSeq.filter(_.nonEmpty), b.toLongOption.getOrElse(0L))))
+      else s.copy(rest = s.rest + t)
     }
 
   private def sketch(v: (String, String)): Option[Sketch] =
-    canonical(v._1).filter(_.isValidInt).map(k => Sketch(k.toInt, v._2))
-
-  private def canonical(s: String): Option[Long] =
-    s.toLongOption.filter(_.toString == s)
+    v._1.toIntOption.map(Sketch(_, v._2))
 }

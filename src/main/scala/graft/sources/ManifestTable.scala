@@ -718,7 +718,14 @@ object ManifestTable {
 
   /** Decode one partition value from its codec form. */
   private[sources] def decodePartValue(enc: String, dt: DataType): Any =
-    if (enc == Null) null else fieldParser(dt)(enc)
+    if (enc == Null) null
+    else dt match {
+      case BooleanType => java.lang.Boolean.parseBoolean(enc)
+      case IntegerType => java.lang.Integer.parseInt(enc)
+      case LongType => java.lang.Long.parseLong(enc)
+      case StringType => UTF8String.fromString(unescape(enc))
+      case other => throw new IllegalStateException(s"unreachable: $other")
+    }
 
   /** Encode a pushed-filter literal in the codec's form for EXACT
     * comparison against a partition value; None = unencodable literal
@@ -1510,29 +1517,6 @@ object ManifestTable {
   // ---- row codec (write side mirrors read side; both executor-local) ----
   private[sources] val Null = "\\N"
 
-  /** Field `i` of a row in its codec text (data files, partition values). */
-  private[sources] def fieldText(schema: StructType,
-      i: Int): InternalRow => String = {
-    val g: InternalRow => String = schema.fields(i).dataType match {
-      case BooleanType => r => String.valueOf(r.getBoolean(i))
-      case IntegerType => r => String.valueOf(r.getInt(i))
-      case LongType => r => String.valueOf(r.getLong(i))
-      case DoubleType => r => String.valueOf(r.getDouble(i))
-      case StringType => r => escape(r.getUTF8String(i).toString)
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
-    r => if (r.isNullAt(i)) Null else g(r)
-  }
-
-  /** The inverse of [[fieldText]] for a non-null field of type `dt`. */
-  private[sources] def fieldParser(dt: DataType): String => Any = dt match {
-    case BooleanType => java.lang.Boolean.parseBoolean
-    case IntegerType => java.lang.Integer.parseInt
-    case LongType => java.lang.Long.parseLong
-    case DoubleType => java.lang.Double.parseDouble
-    case StringType => s => UTF8String.fromString(unescape(s))
-    case other => throw new IllegalStateException(s"unreachable: $other")
-  }
   private[sources] def escape(s: String): String = {
     val b = new java.lang.StringBuilder(s.length + 8)
     var i = 0
@@ -1620,7 +1604,8 @@ object ManifestTable {
       // a zone map is keyed by its column's name: one named like a
       // reserved stat key would be read as that key
       require(!ManifestCodec.isReservedKey(f.name), s"column '${f.name}': " +
-        "names starting with '#' are reserved for manifest stat keys")
+        "names starting with '#' are reserved for manifest stat keys " +
+        "(RENAME COLUMN it to a name without '#')")
       f.dataType match {
         case BooleanType | IntegerType | LongType | DoubleType | StringType =>
         case other => throw new UnsupportedOperationException(
@@ -1968,8 +1953,20 @@ private[sources] class GTabPartitionedWriter(dir: String,
     bloomCols: Seq[String], partCols: Seq[String],
     ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
-  private val encs = partCols.map(c =>
-    ManifestTable.fieldText(schema, schema.fieldIndex(c)))
+  private val encs: Seq[InternalRow => String] = partCols.map { c =>
+    val ix = schema.fieldIndex(c)
+    val dt = schema.fields(ix).dataType
+    (r: InternalRow) =>
+      if (r.isNullAt(ix)) ManifestTable.Null
+      else dt match {
+        case BooleanType => String.valueOf(r.getBoolean(ix))
+        case IntegerType => String.valueOf(r.getInt(ix))
+        case LongType => String.valueOf(r.getLong(ix))
+        case StringType =>
+          ManifestTable.escape(r.getUTF8String(ix).toString)
+        case other => throw new IllegalStateException(s"unreachable: $other")
+      }
+  }
   private var seq = 0
   private var cur: GTabWriter = _
   private var curKey: Seq[String] = _
@@ -2140,7 +2137,18 @@ private[sources] class GTabWriter(dir: String, schema: StructType,
   }
 
   private val getters: Array[InternalRow => String] =
-    schema.fields.indices.map(ManifestTable.fieldText(schema, _)).toArray
+    schema.fields.zipWithIndex.map { case (f, i) =>
+      val g: InternalRow => String = f.dataType match {
+        case BooleanType => r => String.valueOf(r.getBoolean(i))
+        case IntegerType => r => String.valueOf(r.getInt(i))
+        case LongType => r => String.valueOf(r.getLong(i))
+        case DoubleType => r => String.valueOf(r.getDouble(i))
+        case StringType => r => ManifestTable.escape(r.getUTF8String(i).toString)
+        case other => throw new IllegalStateException(s"unreachable: $other")
+      }
+      (r: InternalRow) =>
+        if (r.isNullAt(i)) ManifestTable.Null else g(r)
+    }
 
   override def write(row: InternalRow): Unit = {
     val line = getters.map(_(row)).mkString("", "\t", "\n")
@@ -3125,8 +3133,17 @@ private[sources] class GTabReader(p: GTabPartition, full: StructType,
     // still physically carry a since-dropped data column of the name;
     // parse it as the string it was, never a raw java.lang.String into
     // an InternalRow
-    ManifestTable.fieldParser(if (!full.fieldNames.contains(n)) StringType
-      else full.fields(full.fieldIndex(n)).dataType)
+    if (!full.fieldNames.contains(n))
+      (s: String) => UTF8String.fromString(ManifestTable.unescape(s))
+    else full.fields(full.fieldIndex(n)).dataType match {
+      case BooleanType => (s: String) => java.lang.Boolean.parseBoolean(s)
+      case IntegerType => (s: String) => java.lang.Integer.parseInt(s)
+      case LongType => (s: String) => java.lang.Long.parseLong(s)
+      case DoubleType => (s: String) => java.lang.Double.parseDouble(s)
+      case StringType =>
+        (s: String) => UTF8String.fromString(ManifestTable.unescape(s))
+      case other => throw new IllegalStateException(s"unreachable: $other")
+    }
   }
 
   // merge-on-read: the deletion vector's sorted physical line ordinals

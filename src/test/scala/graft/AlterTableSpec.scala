@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ManifestTable
 
@@ -272,5 +273,32 @@ class AlterTableSpec extends AnyFunSuite {
       Seq("id", "v", "s"))
     assert(spark.sql(s"SELECT sum(v) FROM $cat.db.rk WHERE id >= 10")
       .head().getLong(0) == (10 until 50).sum)
+  }
+
+  test("a '#' column an older build accepted: writes name the fix, " +
+      "RENAME recovers its zone maps") {
+    val dir = mk("hk")
+    // what an older build wrote for a column `#n`: the schema and the
+    // files' column lists name it, and its zone map sits under `#n`
+    ManifestTable.commitSchema(dir, cur => (StructType(cur.schema.fields
+      .map(f => if (f.name == "v") f.copy(name = "#n") else f)),
+      _.map(f => f.copy(cols = f.cols.map(c => if (c == "v") "#n" else c),
+        stats = f.stats.renamed("v", "#n")))))
+    assert(ManifestTable.readManifest(dir).get.files.forall(f =>
+      !f.stats.zones.contains("#n") && f.stats.rest.contains("#n")))
+    val e = intercept[Exception] {
+      spark.sql(s"INSERT INTO $cat.db.hk VALUES (100, 100, 'x')")
+    }
+    assert(e.getMessage.contains("RENAME COLUMN"), e.getMessage)
+    spark.sql(s"ALTER TABLE $cat.db.hk RENAME COLUMN `#n` TO n")
+    assert(ManifestTable.readManifest(dir).get.files.forall(f =>
+      f.stats.zones.contains("n") && f.stats.rest.isEmpty))
+    val scan = spark.sql(s"SELECT n FROM $cat.db.hk WHERE n < 10")
+    assert(scan.collect().map(_.getInt(0)).sorted.toSeq == (0 until 10))
+    val desc = scan.queryExecution.executedPlan.toString
+    assert(desc.contains("files=1/2"), s"zone maps must prune again: $desc")
+    spark.sql(s"INSERT INTO $cat.db.hk VALUES (100, 100, 'x')")
+    assert(spark.sql(s"SELECT count(*) FROM $cat.db.hk").head().getLong(0)
+      == 51)
   }
 }
