@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over a near-duplicate pair graph — the step that
   * turns dedup PAIRS into dedup GROUPS (one representative document kept
@@ -10,57 +13,88 @@ import org.apache.spark.sql.functions._
   * without the closure a chain a~b~c dedups to two "groups" {a,b},{b,c}
   * that both survive a pairwise keep-one rule.
   *
-  * Algorithm: iterative min-label propagation with pointer jumping —
-  * each round every node takes the min label among itself and its
-  * neighbors (one edges-to-labels shuffle join + groupBy min), then
-  * label-of-label compression halves remaining chain length, giving
-  * O(log diameter) rounds instead of O(diameter). Labels live only on
-  * nodes that appear in a pair (the near-dup subgraph — at 100 TB that
+  * Every component is labelled with its minimum node id. Labels live only
+  * on nodes that appear in a pair (the near-dup subgraph — at 100 TB that
   * is orders of magnitude smaller than the corpus); singletons join back
-  * at the end with group_id = own id. Per round the lineage is cut with
-  * an eager localCheckpoint, the standard Spark iterative-algorithm
-  * shape (spark.ml KMeans does the same); block cleanup is handled by
-  * the ContextCleaner as superseded label frames go out of scope. On a
-  * real cluster the label frame would use a reliable checkpoint dir and
-  * the edge frame would be bucketed by both endpoints.
+  * in [[dedupGroups]] with group_id = own id.
+  *
+  * [[componentLabels]] cuts the pair frame once with
+  * [[Materialize.cutCounted]]: pair generation (LSH + verify) runs exactly
+  * once, and the cut's own job counts the edges. The count picks the path,
+  * the way AQE turns a join into a broadcast join:
+  *
+  *  - Driver path, when the graph fits `spark.sql.autoBroadcastJoinThreshold`:
+  *    the edge rows plus the label relation (at most 2 rows per edge), at
+  *    Spark's 24-byte estimate per (long, long) row, i.e. 72 bytes per
+  *    edge. The pairs are collected, union-find (union by min root, path
+  *    compression) labels every node on the driver, and the labels return
+  *    as a local relation, so the join in [[dedupGroups]] is a broadcast.
+  *    No distributed rounds. The threshold bounds driver memory: the
+  *    collected rows and the union-find map cost a few times their
+  *    estimate, about 50 MB at the 10 MB default (~145k edges).
+  *  - Round path, for larger graphs or a threshold of -1: min-label
+  *    propagation with pointer jumping. Each round every node takes the
+  *    min label among itself and its neighbors (one edges-to-labels
+  *    shuffle join + groupBy min), then label-of-label compression halves
+  *    the remaining chain length, giving O(log diameter) rounds. The edge
+  *    frame and each round's label frame are cut, so lineage stays one
+  *    round deep.
+  *
+  * Both paths reach the same fixpoint. `maxIter` bounds only the rounds;
+  * the driver path always converges.
   */
 object ConnectedComponents {
 
+  /** Spark's size estimate for one (long, long) row: an 8-byte null
+    * bitset plus two 8-byte fields.
+    */
+  private val RowBytes = 24L
+
   /** Component label (min node id in component) for every node that
     * appears in `pairs` (columns id_a, id_b). Output: (id, label).
-    *
-    * Round-19 A/B REJECTED: the designed single-join round (self-loop
-    * edges so neighbor-min over N(s) ∪ {s} is one join+aggregate, the
-    * old label carried out as max(dl WHERE d = s), the per-round
-    * labels-side left join gone). Jobs/round did drop (DbgCC 8 → 7)
-    * but end-to-end it measured consistently SLOWER — p90 interleaved
-    * pairs {2.17, 2.34, 2.05} vs {1.82, 1.75, 1.70} before, p92
-    * 6.36 vs 5.57 — because the near-dup graphs converge in 1-2 rounds:
-    * the one-time distinct + bigger edge checkpoint (self-loops ride
-    * every round's join) cost more than the single removed join saves.
-    * On a high-diameter graph (many rounds amortizing the build) the
-    * fused round would win; at this workload's clique-shaped components
-    * the three-join round stays.
     */
   def componentLabels(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").cast("long").as("s"),
-        col("id_b").cast("long").as("d"))
-      .union(pairs.select(col("id_b").cast("long").as("s"),
-        col("id_a").cast("long").as("d")))
-      // round-18: checkpoint the edge frame PRE-PARTITIONED on the
-      // per-round join key (localCheckpoint preserves the physical
-      // partitioning), so each round's neighbor-min join shuffles only
-      // the label frame — the edge side, the larger one on real
-      // graphs, moves zero bytes after round 0
+    val (cut, n) = Materialize.cutCounted(pairs.select(
+      col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b")))
+    val threshold = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // n edge rows plus at most 2n label rows
+    if (3 * n * RowBytes <= threshold) driverLabels(cut)
+    else roundLabels(cut, maxIter)
+  }
+
+  /** Union-find over the collected pairs; every root is its set's minimum
+    * id. A null endpoint is not a node.
+    */
+  private def driverLabels(cut: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var v = x
+      while (v != root) { val next = parent(v); parent(v) = root; v = next }
+      root
+    }
+    cut.collect().foreach { r =>
+      val roots = (0 to 1).filterNot(r.isNullAt).map(i => find(r.getLong(i)))
+      if (roots.size == 2 && roots(0) != roots(1)) parent(roots.max) = roots.min
+    }
+    val labels = parent.keys.toSeq.map(id => Row(id, find(id)))
+    cut.sparkSession.createDataFrame(labels.asJava,
+      StructType(Seq(StructField("id", LongType), StructField("label", LongType))))
+  }
+
+  /** Distributed min-label propagation with pointer jumping. */
+  private def roundLabels(cut: DataFrame, maxIter: Int): DataFrame = {
+    val edges = cut.select(col("a").as("s"), col("b").as("d"))
+      .union(cut.select(col("b").as("s"), col("a").as("d")))
+      // pre-partitioned on the per-round join key (localCheckpoint keeps
+      // the physical partitioning), so each round's neighbor-min join
+      // shuffles only the label frame
       .repartition(col("d"))
-      .transform(Materialize.cut(_)) // pair generation (LSH + verify) runs ONCE
-    // round-18: the label init IS the first neighbor-min round, fused —
-    // min(own id, min over neighbors) costs the same single exchange +
-    // aggregate the old `distinct()` init did (same key, same shuffle
-    // shape) but starts the loop one propagation ahead: a clique (the
-    // common near-dup component) converges on its first CHECK instead
-    // of its second round. Identical fixpoint — this is exactly round
-    // 0's neighbor-min applied to identity labels.
+      .transform(Materialize.cut(_))
+    // the label init is round 0's neighbor-min applied to identity labels:
+    // one exchange, like a distinct(), and a clique converges on its first
+    // check
     var labels = edges.groupBy(col("s"))
       .agg(least(col("s"), min(col("d"))).as("label"))
       .select(col("s").as("id"), col("label"))
@@ -72,7 +106,9 @@ object ConnectedComponents {
     var improving = 0
     var converged = false
     while (improving <= maxIter && !converged) {
-      // neighbor min: for each node s, the smallest label among N(s)
+      // neighbor min: for each node s, the smallest label among N(s). A
+      // fused single-join round (self-loop edges) measured slower, since
+      // near-dup graphs converge in 1-2 rounds; the three-join round stays.
       val nm = edges
         .join(labels.select(col("id").as("d"), col("label").as("dl")), "d")
         .groupBy(col("s").as("id")).agg(min("dl").as("nmin"))

@@ -1,12 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The engine's ONE way to eagerly materialize a shared intermediate
   * frame (round-19, verdict ask #9). Every operator/query-layer
   * lineage cut routes through here — the four hot paths the r18
   * verdict flagged (the minhash shingle frame, the
-  * connected-components edge/label frames, the e2e chain's fan-out
+  * connected-components pair frame — plus, on its round path only, the
+  * edge frame and one label frame per round — the e2e chain's fan-out
   * frames, p84's audio fingerprints) plus the rest of the
   * eager-materialization sites (PageRank/BpeTrainer/IncrementalDedup/
   * TextAnalysis/QualityClassifier/Mmr/Coreset/EvalMetrics/Packing) —
@@ -54,5 +56,14 @@ object Materialize {
       try df.checkpoint(eager = true)
       finally { df.unpersist(); () } // checkpoint files now carry the data
     } else df.localCheckpoint(eager = true)
+  }
+
+  /** [[cut]] plus the frame's row count, observed on the cut's own eager
+    * job: no second pass over the frame or its lineage.
+    */
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val out = cut(df.observe(rows, count(lit(1)).as("rows")))
+    (out, rows.get("rows").asInstanceOf[Long])
   }
 }

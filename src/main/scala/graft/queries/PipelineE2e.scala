@@ -49,7 +49,7 @@ object PipelineE2e {
     // side) and exactDeduped (pairs, groups' doc side, the keep-rep
     // join, and decontamination's two train reads) — are cut with an
     // eager localCheckpoint, the same lineage truncation
-    // componentLabels already uses per round (guide §5: materialize an
+    // componentLabels uses on its pair frame (guide §5: materialize an
     // intermediate that multiple branches recompute). Before: one
     // account.count() re-ran the scan+bloom prefix ~8x and the md5
     // groupBy ~3x (the r17 scan-budget pin recorded 30 documents
@@ -121,7 +121,8 @@ object PipelineE2e {
     //    derived from the ALREADY-COMPUTED components: calling
     //    leakageSafeSplit(withIds, nearPairs) would re-run the
     //    whole MinHash + label-propagation job a second time
-    //    (componentLabels checkpoints its RESULT, not its call);
+    //    (each componentLabels call cuts and labels its own pair
+    //    frame);
     //    group_id is identical either way (same edge set, same
     //    coalesce-to-own-id rule)
     lazy val withSplit: org.apache.spark.sql.DataFrame = withIds

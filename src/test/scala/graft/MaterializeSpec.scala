@@ -54,4 +54,18 @@ class MaterializeSpec extends AnyFunSuite {
       .filter(p => java.nio.file.Files.isRegularFile(p)).count()
     assert(wrote > 0, s"no reliable checkpoint files under $dir")
   }
+
+  test("cutCounted counts the rows its own job materializes, in both modes") {
+    val s2 = spark.newSession()
+    s2.conf.set(Materialize.ReliableKey, "true")
+    if (s2.sparkContext.getCheckpointDir.isEmpty)
+      s2.sparkContext.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    for (s <- Seq(spark, s2)) {
+      val (cut, n) = Materialize.cutCounted(s.range(0, 1000, 1, 3)
+        .filter("id % 7 = 0").toDF())
+      assert(n == 143)
+      assert(cut.count() == 143)
+    }
+  }
 }
